@@ -1,7 +1,8 @@
 """Dump ``explain("formatted")`` for every benched query to
-``plans/r06/<query>_<tag>.txt`` (guide §1: capture the plan shape —
-Exchange count, join strategy, PushedFilters/ReadSchema, codegen spans —
-before and after each optimization).
+``plans/r06/<query>_<tag>.txt``, a git-ignored directory (guide §1:
+capture the plan shape — Exchange count, join strategy,
+PushedFilters/ReadSchema, codegen spans — before and after each
+optimization).
 
 Usage: PYTHONHASHSEED=0 python BENCH/dump_plans.py <tag> [query ...]
   tag      'before' or 'after' (file suffix)

@@ -37,8 +37,10 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
+from pdf_extractor2_spark.session import default_cores, get_spark  # noqa: E402
+
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+DEFAULT_CPUS = default_cores()
 BENCH_DOCS = int(os.environ.get("SPARK_GRAFT_BENCH_DOCS", "200000"))
 SCALING_DOCS = int(os.environ.get("SPARK_GRAFT_SCALING_DOCS", "800000"))
 CACHE_ROOT = "/tmp/pex2_bench_cache"
@@ -175,8 +177,6 @@ def main_single(cores: int, sf_dir: str, n_docs: int, extract_only: bool) -> dic
     # inflate the small-cluster baseline
     if os.environ.get("PEX2_CPU_AFFINITY") == "1":
         os.sched_setaffinity(0, set(range(cores)))
-
-    from pdf_extractor2_spark.session import get_spark
 
     spark = get_spark(
         app_name=f"pex2-bench-{cores}", cores=cores,

@@ -27,10 +27,10 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 import __spark_entry__ as em  # noqa: E402
 from bench import GENERIC_QUERIES  # noqa: E402
-from pdf_extractor2_spark.session import get_spark  # noqa: E402
+from pdf_extractor2_spark.session import default_cores, get_spark  # noqa: E402
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+CPUS = default_cores()
 REPEATS = int(os.environ.get("PEX2_BENCH_REPEATS", "3"))
 
 

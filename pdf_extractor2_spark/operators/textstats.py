@@ -171,20 +171,6 @@ def bpe_token_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def bpe_token_stats_sql(table: str = "documents") -> str:
-    bpw = _f6(
-        f"CAST(len(regexp_extract_all(text, '{_BPE_PATTERN}')) AS DOUBLE)"
-        " / len(t)"
-    )
-    return f"""
-        SELECT doc_id,
-               CAST(len(regexp_extract_all(text, '{_BPE_PATTERN}')) AS BIGINT) AS n_bpe_tokens,
-               CAST(len(t) AS BIGINT) AS n_ws_tokens,
-               {bpw} AS bpe_per_word
-        FROM ({_BASE_SQL.format(table=table)})
-    """
-
-
 def top_tokens(spark: SparkSession, sf_dir: str, k: int = 30) -> DataFrame:
     """Corpus token frequencies: explode → hash aggregate → top-k
     (deterministic tie-break on the token)."""
@@ -197,44 +183,6 @@ def top_tokens(spark: SparkSession, sf_dir: str, k: int = 30) -> DataFrame:
         .orderBy(F.desc("n"), F.asc("token"))
         .limit(k)
     )
-
-
-def token_stats_sql(table: str = "documents") -> str:
-    return f"""
-        SELECT doc_id,
-               CAST(len(t) AS BIGINT) AS n_tokens,
-               CAST(len(list_distinct(t)) AS BIGINT) AS n_distinct_tokens,
-               CAST(length(text) AS BIGINT) AS n_chars_actual
-        FROM ({_BASE_SQL.format(table=table)})
-    """
-
-
-def quality_scores_sql(table: str = "documents") -> str:
-    sw = _f6(
-        "CAST(len(list_filter(t, x -> x IN ('the', 'a'))) AS DOUBLE) / len(t)"
-    )
-    return f"""
-        WITH s1 AS (SELECT *, {ML_SQL} AS ml
-                    FROM ({_BASE_SQL.format(table=table)}))
-        SELECT doc_id, lang,
-               {sw} AS stopword_ratio,
-               {_f6("ml")} AS mean_token_len,
-               CASE WHEN length(text) >= 200 AND len(t) >= 40
-                    THEN 'keep' ELSE 'drop' END AS quality_bucket
-        FROM s1
-    """
-
-
-def fingerprints_sql(table: str = "documents") -> str:
-    return f"""
-        SELECT doc_id,
-               list_reduce(
-                 list_prepend(CAST(0 AS BIGINT),
-                   [CAST(ascii(substr(text, i, 1)) AS BIGINT)
-                    for i in generate_series(1, length(text))]),
-                 (acc, c) -> (acc * 31 + c) % {MOD}) AS fingerprint
-        FROM ({_BASE_SQL.format(table=table)})
-    """
 
 
 def lang_id_sql(table: str = "documents") -> str:
@@ -303,17 +251,6 @@ def distinct_shingles_kmv_sql(table: str = "documents", k: int = KMV_K) -> str:
         SELECT n_exact_distinct, k_used, kth_min_h,
                {est} AS kmv_estimate
         FROM sk CROSS JOIN exact_ct
-    """
-
-
-def top_tokens_sql(table: str = "documents", k: int = 30) -> str:
-    return f"""
-        SELECT token, COUNT(*) AS n
-        FROM (SELECT unnest(string_split(text, ' ')) AS token FROM {table})
-        WHERE length(token) > 1
-        GROUP BY token
-        ORDER BY n DESC, token ASC
-        LIMIT {k}
     """
 
 

@@ -3,26 +3,25 @@
     spark.read.parquet(pages)                      # Iceberg in production
       .select("url", "html")                       # column-pruned scan
       .withColumn("bucket", pmod(xxhash64(url, SALT), P))
-      .repartition(P, "bucket")       # OPT-IN (resume lineage only —
-      .mapInPandas(extraction_kernel, RESULT_SCHEMA)   # default is
-                                      # shuffle-free scan → kernel)
+      .mapInPandas(extraction_kernel, RESULT_SCHEMA)   # shuffle-free
 
 One Arrow batch in → one result row per document out; per-document
 failures become failure *rows*, never task failures (app.py:180-186
 analogue).  The metrics side table is a Catalyst-native aggregation over
 the result set, one row per bucket (north_rule: per-partition lineage +
-success/failure metrics); resume anti-joins completed buckets.
+success/failure metrics).  The resumable job keys lineage by input
+file: its bucket is the file id, and a restart skips the files already
+recorded in the metrics table.
 
 Scale notes (100 TB / 10^12 docs):
-  * bucket count P is the unit of resume + skew spread; hash(url) with a
-    fixed salt spreads hot hosts across buckets deterministically (the
-    salt is a pure function of url — restart-stable);
+  * hash(url) with a fixed salt spreads hot hosts across buckets
+    deterministically (the salt is a pure function of url —
+    restart-stable);
   * the kernel is CPU-bound Python: throughput scales with executor
     cores as long as Arrow batches amortize IPC (maxRecordsPerBatch is
     bounded in session.py because html payloads are KB-sized);
-  * no driver-side collection anywhere; the only shuffle is the single
-    repartition by bucket (needed for deterministic resume lineage —
-    without resume, mapInPandas runs shuffle-free on scan partitions).
+  * no driver-side collection anywhere, and no shuffle: the kernel runs
+    straight on the scan splits, so the html payload never moves.
 """
 
 from __future__ import annotations
@@ -197,31 +196,22 @@ def with_bucket(pages: DataFrame, num_buckets: int) -> DataFrame:
     )
 
 
-def run_extract(
-    pages: DataFrame,
-    num_buckets: int = 64,
-    repartition: bool = False,
-) -> DataFrame:
-    """The extraction plan: prune columns → bucket → (optional shuffle) →
-    vectorized kernel.  Returns the results DataFrame (lazy).
+def run_extract(pages: DataFrame, num_buckets: int = 64) -> DataFrame:
+    """The extraction plan: prune columns → bucket → vectorized kernel.
+    Returns the results DataFrame (lazy).
 
-    Round-6 default flip (guide §2.4 "remove shuffles outright"):
-    ``repartition=False`` — the kernel runs straight on the scan splits,
-    so the html payload is never shuffled at all.  The bucket column is
-    still computed (deterministic url-hash lineage for consumers that
-    group by it); only the physical exchange is gone.  The shuffle is
-    needed ONLY when bucket-aligned task lineage matters (resume:
-    ``run_resumable`` repartitions explicitly).  Skew: scan splits are
-    bounded by ``spark.sql.files.maxPartitionBytes`` (8 MB in
-    session.py), so a corpus yields ≥ tens of splits per GB and the
-    pdf/html cost mix balances by LLN within each multi-thousand-doc
+    Shuffle-free (guide §2.4 "remove shuffles outright"): the kernel
+    runs straight on the scan splits, so the html payload is never
+    shuffled at all.  The bucket column is still computed
+    (deterministic url-hash lineage for consumers that group by it).
+    Skew: scan splits are bounded by ``spark.sql.files.maxPartitionBytes``
+    (8 MB in session.py), so a corpus yields ≥ tens of splits per GB and
+    the pdf/html cost mix balances by LLN within each multi-thousand-doc
     split.  Measured best-of-4 at 200k docs / local[32]: 14.6s vs 16.1s
-    with the shuffle — identical results (raw_json_bytes invariant)."""
+    with a bucket shuffle — identical results (raw_json_bytes
+    invariant)."""
     pruned = pages.select("url", "html")
-    bucketed = with_bucket(pruned, num_buckets)
-    if repartition:
-        bucketed = bucketed.repartition(num_buckets, "bucket")
-    return bucketed.mapInPandas(extraction_kernel, RESULT_SCHEMA)
+    return with_bucket(pruned, num_buckets).mapInPandas(extraction_kernel, RESULT_SCHEMA)
 
 
 def metrics_rollup(results: DataFrame, run_id: str) -> DataFrame:
@@ -244,46 +234,8 @@ def metrics_rollup(results: DataFrame, run_id: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# resumable job: results partitioned by bucket + completed-bucket anti-join
+# resumable job: lineage keyed by input file, restart set from metadata
 # ---------------------------------------------------------------------------
-
-def run_resumable(
-    spark: SparkSession,
-    pages: DataFrame,
-    output_path: str,
-    metrics_path: str,
-    run_id: str,
-    num_buckets: int = 64,
-) -> None:
-    """Idempotent bucket-at-a-time job (SURVEY.md §4 "Resumability").
-
-    Completed buckets are recorded in the metrics table; on restart the
-    pending set = all buckets ANTI JOIN completed buckets (broadcast —
-    the bucket list is tiny).  Result files are written under
-    ``bucket=<k>/`` partitions, so a re-run of a half-finished bucket
-    overwrites only that bucket's directory (dynamic partition overwrite).
-    """
-    completed: set[int] = set()
-    try:
-        prior = spark.read.parquet(metrics_path).where(F.col("run_id") == run_id)
-        completed = {r["bucket"] for r in prior.select("bucket").distinct().collect()}
-    except Exception:
-        pass  # no metrics yet — fresh run
-
-    bucketed = with_bucket(pages.select("url", "html"), num_buckets)
-    if completed:
-        bucketed = bucketed.where(~F.col("bucket").isin(sorted(completed)))
-
-    results = bucketed.repartition(num_buckets, "bucket").mapInPandas(
-        extraction_kernel, RESULT_SCHEMA
-    )
-
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    results.write.mode("overwrite").partitionBy("bucket").parquet(output_path)
-
-    done = spark.read.parquet(output_path)
-    metrics_rollup(done, run_id).write.mode("append").parquet(metrics_path)
-
 
 def list_input_files_iceberg(spark: SparkSession, table: str) -> list[str]:
     """Input data files from the Iceberg ``files`` snapshot-metadata
@@ -291,8 +243,7 @@ def list_input_files_iceberg(spark: SparkSession, table: str) -> list[str]:
     query (`SELECT file_path FROM <t>.files`), zero data bytes read, and
     the file set is pinned to the current snapshot (consistent resume
     even while writers append).  Requires an Iceberg catalog on the
-    session; select it with ``PEX2_ICEBERG_TABLE`` (see
-    ``run_resumable_by_file``)."""
+    session; select it with ``run_resumable_by_file(iceberg=True)``."""
     rows = spark.sql(f"SELECT file_path FROM {table}.files").collect()
     return sorted(r["file_path"] for r in rows)
 
@@ -335,6 +286,7 @@ def run_resumable_by_file(
     output_path: str,
     metrics_path: str,
     run_id: str,
+    iceberg: bool = False,
 ) -> None:
     """Shuffle-free resumable job: lineage is keyed by *input file*.
 
@@ -346,25 +298,20 @@ def run_resumable_by_file(
     travel as a small manifest DataFrame (at 10^7 files: read the
     Iceberg ``files`` table instead of ``createDataFrame``), never as
     ``create_map`` literals, so plan size is independent of file count.
-    This is the preferred production shape; the bucket-shuffle variant
-    (run_resumable) remains for url-hash-keyed lineage.
 
     Idempotence: results are written under ``bucket=<file_id>/``
     partitions (dynamic overwrite), so re-running a half-finished file
     replaces only that file's partition.
 
-    Feature flag: when ``PEX2_ICEBERG_TABLE`` names an Iceberg table,
-    the file list comes from that table's ``files`` snapshot-metadata
-    table instead of a filesystem listing (the production face — the
-    parquet listing is the sandbox stand-in, same O(#files) metadata
-    contract).
+    ``iceberg=True``: ``input_path`` is an Iceberg table name, and the
+    file list comes from that table's ``files`` snapshot-metadata table
+    instead of a filesystem listing (the production face — the parquet
+    listing is the sandbox stand-in, same O(#files) metadata contract).
     """
-    import os
     import posixpath
 
-    iceberg_table = os.environ.get("PEX2_ICEBERG_TABLE")
-    if iceberg_table:
-        all_files = list_input_files_iceberg(spark, iceberg_table)
+    if iceberg:
+        all_files = list_input_files_iceberg(spark, input_path)
     else:
         all_files = list_input_files(spark, input_path)
     file_ids = {posixpath.basename(p): i for i, p in enumerate(all_files)}

@@ -236,14 +236,6 @@ def events_user_activity(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def events_user_activity_sql() -> str:
-    return f"""
-        SELECT event_type, COUNT(DISTINCT user_id) AS n_users,
-               COUNT(*) AS n_events, {_r2("SUM(value)")} AS total_value
-        FROM events GROUP BY event_type
-    """
-
-
 def events_json_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Semi-structured projection: JSON field extraction + aggregate."""
     return (
@@ -255,15 +247,6 @@ def events_json_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.max("k").cast("long").alias("max_k"),
         )
     )
-
-
-def events_json_stats_sql() -> str:
-    return """
-        SELECT event_type,
-               CAST(SUM(CAST(json_extract_string(props, '$.k') AS BIGINT)) AS BIGINT) AS sum_k,
-               CAST(MAX(CAST(json_extract_string(props, '$.k') AS BIGINT)) AS BIGINT) AS max_k
-        FROM events GROUP BY event_type
-    """
 
 
 def events_profile(spark: SparkSession, sf_dir: str) -> DataFrame:

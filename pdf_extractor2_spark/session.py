@@ -4,8 +4,9 @@ Centralizes every scale-relevant config so tests, the benchmark and the
 ``spark-submit`` job share one tuning surface:
 
 * AQE on (runtime coalescing + skew handling);
-* Arrow on, with a bounded ``maxRecordsPerBatch`` because the ``html``
-  payload column is binary-heavy — batch memory ≈ batch_rows × avg payload
+* bounded Arrow batches (``mapInPandas`` always transfers via Arrow):
+  ``maxRecordsPerBatch`` plus a byte cap, because the ``html`` payload
+  column is binary-heavy — batch memory ≈ batch_rows × avg payload
   (SURVEY.md §4 "Spill/memory");
 * ``PYTHONHASHSEED=0`` pinned on python workers so the kernel's
   ``list(set(...))`` orderings match driver-side oracle goldens
@@ -32,15 +33,19 @@ from pyspark.sql import SparkSession
 DEFAULT_ARROW_BATCH_ROWS = 2048
 
 
+def default_cores() -> int:
+    """Local core count: ``SPARK_GRAFT_CPUS`` if set, else the host's."""
+    return int(os.environ.get("SPARK_GRAFT_CPUS", "0")) or (os.cpu_count() or 4)
+
+
 def get_spark(
     app_name: str = "pdf-extractor2-spark",
     cores: int | None = None,
     shuffle_partitions: int | None = None,
-    arrow_batch_rows: int = DEFAULT_ARROW_BATCH_ROWS,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
     if cores is None:
-        cores = int(os.environ.get("SPARK_GRAFT_CPUS", "0")) or (os.cpu_count() or 4)
+        cores = default_cores()
     if shuffle_partitions is None:
         shuffle_partitions = max(cores, 8)
 
@@ -78,9 +83,9 @@ def get_spark(
             "67108864",
         )
         .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config(
-            "spark.sql.execution.arrow.maxRecordsPerBatch", str(arrow_batch_rows)
+            "spark.sql.execution.arrow.maxRecordsPerBatch",
+            str(DEFAULT_ARROW_BATCH_ROWS),
         )
         # the BYTE bound (Spark 4) is the real memory guard for
         # binary-heavy payload columns: 16 MB per batch regardless of

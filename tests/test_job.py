@@ -122,36 +122,6 @@ def test_metrics_rollup(results):
     assert all(r["run_id"] == "test-run" for r in m)
 
 
-def test_resume(spark, tmp_path):
-    """Kill-after-k-buckets restart reprocesses only the remainder and the
-    final table is byte-identical to an uninterrupted run."""
-    from pdf_extractor2_spark.plans.extract_job import run_resumable, with_bucket
-
-    pages = corpus_df(spark, 60, seed=7, pdf_share=0.2, num_partitions=4).cache()
-    out = str(tmp_path / "results")
-    metrics = str(tmp_path / "metrics")
-
-    # simulate a prior partial run: process only buckets {0,1} then "crash"
-    partial = with_bucket(pages.select("url", "html"), 4).where(F.col("bucket") < 2)
-    partial_results = run_extract(partial.drop("bucket"), num_buckets=4)
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    partial_results.write.mode("overwrite").partitionBy("bucket").parquet(out)
-    metrics_rollup(spark.read.parquet(out), "run-A").write.mode("append").parquet(metrics)
-
-    # resume the same run_id: must only process buckets {2,3}
-    run_resumable(spark, pages, out, metrics, run_id="run-A", num_buckets=4)
-
-    resumed = spark.read.parquet(out)
-    assert resumed.count() == 60
-    assert resumed.select("url").distinct().count() == 60
-
-    # uninterrupted reference run
-    full = run_extract(pages, num_buckets=4)
-    a = sorted((r["url"], r["raw_json"]) for r in resumed.select("url", "raw_json").collect())
-    b = sorted((r["url"], r["raw_json"]) for r in full.select("url", "raw_json").collect())
-    assert a == b
-
-
 def test_hot_host_spreads_across_buckets(spark):
     """The corpus has one host carrying ~30% of urls (FIXTURES.md §1);
     bucketing on xxhash64(url) must spread it uniformly — no bucket may

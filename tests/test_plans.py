@@ -40,19 +40,16 @@ def test_extraction_scan_is_column_pruned(spark, sf_dir):
     assert "warc_ts" not in scan and "lang" not in scan, scan
 
 
-def test_extraction_has_single_exchange(spark, sf_dir):
-    """DEFAULT is shuffle-free (round 6: the html payload is never
-    shuffled — guide §2.4); the opt-in bucket repartition (resume
-    lineage) is exactly one exchange."""
+def test_extraction_is_shuffle_free(spark, sf_dir):
+    """The extraction plan has no exchange: the html payload is never
+    shuffled (guide §2.4)."""
     from pdf_extractor2_spark.plans.extract_job import run_extract
 
     pages = spark.read.parquet(sf_dir)
     import re
 
-    plan_free = _plan(run_extract(pages, num_buckets=4))
-    assert len(re.findall(r"\(\d+\) Exchange", plan_free)) == 0, plan_free
-    plan = _plan(run_extract(pages, num_buckets=4, repartition=True))
-    assert len(re.findall(r"\(\d+\) Exchange", plan)) == 1, plan
+    plan = _plan(run_extract(pages, num_buckets=4))
+    assert len(re.findall(r"\(\d+\) Exchange", plan)) == 0, plan
 
 
 def test_dimension_joins_are_broadcast(spark):

@@ -48,7 +48,6 @@ def test_spark_submit_end_to_end(spark, tmp_path):
         "--output", out,
         "--metrics", metrics,
         "--run-id", "submit-smoke",
-        "--buckets", "4",
     ]
     env = dict(os.environ, PYTHONHASHSEED="0")
     proc = subprocess.run(cmd, capture_output=True, text=True, env=env, timeout=420)
@@ -60,7 +59,12 @@ def test_spark_submit_end_to_end(spark, tmp_path):
     lineage = spark.read.parquet(metrics)
     assert lineage.where("run_id = 'submit-smoke'").count() >= 1
 
-    # resume with the same run-id: all buckets complete → writes nothing new
+    # resume with the same run-id: all files complete → writes nothing new,
+    # and the metrics table keeps exactly one row per input file
     proc2 = subprocess.run(cmd, capture_output=True, text=True, env=env, timeout=420)
     assert proc2.returncode == 0, proc2.stderr[-3000:]
     assert spark.read.parquet(out).count() == 30
+    lineage = spark.read.parquet(metrics)
+    dup = lineage.groupBy("run_id", "file_name").count().where("count > 1").collect()
+    assert dup == [], dup
+    assert lineage.agg({"n_docs": "sum"}).first()[0] == 30
