@@ -168,6 +168,9 @@ def clean_text(text: str | None) -> str:
     return _WS_RUN.sub(" ", str(text).strip())
 
 
+_CLEAN_MULTILINE_CACHE_MAX_CHARS = 2048
+
+
 def clean_multiline(text: str | None) -> str:
     """Normalize intra-line whitespace, keep single newlines (scraper.py:62-69).
 
@@ -176,17 +179,26 @@ def clean_multiline(text: str | None) -> str:
     docs with a 79% repeated-input rate — the classifier, name
     inference and role extraction all re-normalize the same cell/line
     strings within a document.  Returns an immutable str, so sharing
-    the cached object is safe."""
+    the cached object is safe.
+
+    Inputs over ``_CLEAN_MULTILINE_CACHE_MAX_CHARS`` skip the cache:
+    whole-document text blocks are unique per document, and the entry
+    bound alone would let a long-lived worker hold hundreds of MB."""
     if text is None or not text:
         return ""
-    return _clean_multiline_core(str(text))
+    text = str(text)
+    if len(text) > _CLEAN_MULTILINE_CACHE_MAX_CHARS:
+        return _clean_multiline_body(text)
+    return _clean_multiline_core(text)
 
 
-@lru_cache(maxsize=65536)
-def _clean_multiline_core(text: str) -> str:
+def _clean_multiline_body(text: str) -> str:
     out = text.strip()
     out = _SPACE_TAB_RUN.sub(" ", out)
     return _BLANK_LINE.sub("\n", out)
+
+
+_clean_multiline_core = lru_cache(maxsize=65536)(_clean_multiline_body)
 
 
 # --------------------------------------------------------------------------

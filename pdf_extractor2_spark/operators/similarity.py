@@ -16,6 +16,8 @@ DuckDB oracle hashes identically.
 
 from __future__ import annotations
 
+import functools
+
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from .dedup import round_half_up_expr
@@ -866,10 +868,9 @@ def ivf_assign_gemm(spark: SparkSession, sf_dir: str,
     idiom), and equality of the resulting assignment on real data is
     pinned by tests/test_ivf.py::test_gemm_assignment_matches_sql.
     This is the physical variant for 10^9-vector index builds: one
-    mapInPandas pass, centroids broadcast in the closure (C×D doubles —
-    KBs), zero shuffles."""
+    mapInPandas pass, centroids broadcast in the bound arguments (C×D
+    doubles — KBs), zero shuffles."""
     import numpy as np
-    import pandas as pd
 
     _, cents = _ivf_model(spark, sf_dir, n_cells)
     rows = sorted((r["cell"], r["cvec"]) for r in cents.collect())
@@ -877,18 +878,26 @@ def ivf_assign_gemm(spark: SparkSession, sf_dir: str,
     C = np.array([v for _, v in rows], dtype=np.float64)  # (C, D)
     c_norms = (C * C).sum(axis=1)  # (C,)
 
-    def assign(batches):
-        for pdf in batches:
-            if len(pdf) == 0:  # defensive: empty Arrow batch
-                continue
-            X = np.array(pdf["embedding"].tolist(), dtype=np.float64)  # (B, D)
-            scores = c_norms[None, :] - 2.0 * (X @ C.T)  # (B, C)
-            scores = np.floor(scores * 1e6 + 0.5) / 1e6
-            cells = cell_ids[np.argmin(scores, axis=1)]
-            yield pd.DataFrame({"vec_id": pdf["vec_id"], "cell": cells})
-
+    # a module-level body (not a closure) is pickled by reference, so the
+    # worker imports the package and gets its zip-cache guard
+    assign = functools.partial(_assign_cells_kernel, cell_ids, C, c_norms)
     emb = _emb(spark, sf_dir).select("vec_id", "embedding")
     return emb.mapInPandas(assign, "vec_id long, cell long")
+
+
+def _assign_cells_kernel(cell_ids, C, c_norms, batches):
+    """``ivf_assign_gemm``'s mapInPandas body: nearest centroid per vector."""
+    import numpy as np
+    import pandas as pd
+
+    for pdf in batches:
+        if len(pdf) == 0:  # defensive: empty Arrow batch
+            continue
+        X = np.array(pdf["embedding"].tolist(), dtype=np.float64)  # (B, D)
+        scores = c_norms[None, :] - 2.0 * (X @ C.T)  # (B, C)
+        scores = np.floor(scores * 1e6 + 0.5) / 1e6
+        cells = cell_ids[np.argmin(scores, axis=1)]
+        yield pd.DataFrame({"vec_id": pdf["vec_id"], "cell": cells})
 
 
 def ann_knn_join(spark: SparkSession, sf_dir: str,

@@ -224,7 +224,7 @@ class _Extractor(HTMLParser):
 
 _TAG_NAME_RE = re.compile(r"[a-zA-Z][a-zA-Z0-9\-]*")
 _RAW_TEXT_TAGS = ("script", "style", "template", "noscript")
-_NO_ATTRS: list = []  # shared empty attr list for attribute-free tags
+_NO_ATTRS: tuple = ()  # shared empty attrs for attribute-free tags
 
 
 def _scan(html: str, h: "_Extractor") -> None:
@@ -282,7 +282,7 @@ def _scan(html: str, h: "_Extractor") -> None:
         if closing:
             h.handle_endtag(name)
         else:
-            attrs = _NO_ATTRS  # shared: the handler never mutates attrs
+            attrs = _NO_ATTRS  # shared and immutable
             # m.end() == len(inner) ⇔ the tag carries no attribute text
             # at all — skip the three role-substring scans entirely
             if m.end() < len(inner) and (

@@ -169,3 +169,12 @@ def test_fuzz_parity(reference, text):
             assert sorted(mine) == sorted(ref), f"{ours}({text!r})"
         else:
             assert mine == ref, f"{ours}({text!r})"
+
+
+def test_clean_multiline_long_input_skips_cache():
+    text = "  Niels   Bohr \t Vej\n\n  \nline two  " * 100
+    assert len(text) > k._CLEAN_MULTILINE_CACHE_MAX_CHARS
+    size = k._clean_multiline_core.cache_info().currsize
+    out = k.clean_multiline(text)
+    assert k._clean_multiline_core.cache_info().currsize == size
+    assert out == k._clean_multiline_core(text)  # what the cached path returns
