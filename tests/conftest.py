@@ -34,6 +34,7 @@ def spark():
 
 @pytest.fixture(scope="session")
 def reference():
-    from oracle import load_reference
+    from oracle import load_reference, skip_if_reference_absent
 
+    skip_if_reference_absent()
     return load_reference()

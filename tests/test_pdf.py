@@ -230,3 +230,36 @@ def test_pdf_span_kinds_and_offsets():
     assert any(t == "KONTAKTER" for t in kinds.get("heading", []))
     assert any("Niels Bohr" in t for t in kinds.get("table_field", []))
     assert any("ByggeData" in t for t in kinds.get("paragraph", []))
+
+
+@pytest.mark.parametrize("idx", [20, 21], ids=["classic-xref", "xref-stream"])
+def test_two_page_spans_and_table_pages(idx):
+    """A document that overflows onto a second page: span offsets index
+    into the page texts joined by '\\n\\f\\n', and the ruled table drawn
+    on page 2 comes back as lattice and stream tables of page 2.  (Both
+    writer seeds draw the first table ruled.)"""
+    spec = _spec(idx, company_lines=["ByggeData A/S", "CVR: 12345678"],
+                 paragraphs=[f"Afsnit nummer {i} om byggeriet." for i in range(1, 55)],
+                 tables=[[["Navn", "Telefon", "Rolle"],
+                          ["Niels Bohr", "12 34 56 78", "Projektleder"],
+                          ["Mette Hansen", "22 33 44 55", "Byggeleder"],
+                          ["Jens Madsen", "23 45 67 89", "Murer"]]])
+    ir, spans, kind = payload_to_ir(render_pdf(spec))
+    assert kind == "pdf"
+    assert len(ir.page_texts) == 2
+    joined = "\n\f\n".join(ir.page_texts)
+    for s in spans:
+        assert joined[s["start"]: s["end"]] == s["text"], s
+    page2_start = len(ir.page_texts[0]) + 3
+    page2 = [s for s in spans if s["start"] >= page2_start]
+    assert page2[0]["start"] == page2_start
+    assert [s["text"] for s in page2][-4:] == [
+        "Navn Telefon Rolle",
+        "Niels Bohr 12 34 56 78 Projektleder",
+        "Mette Hansen 22 33 44 55 Byggeleder",
+        "Jens Madsen 23 45 67 89 Murer",
+    ]
+    assert [(t.page, len(t.grid)) for t in ir.lattice_tables] == [(2, 4)]
+    stream = [t for cfg in ir.stream_tables_by_config for t in cfg]
+    assert stream and {t.page for t in stream} == {2}
+    assert ir.stream_tables_by_config[0][0].grid == ir.lattice_tables[0].grid
