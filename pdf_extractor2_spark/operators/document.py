@@ -1,11 +1,11 @@
 """Per-document extraction orchestrator (SURVEY.md §2.11).
 
 One call = one corpus row.  Input is the parsed intermediate representation
-produced by the payload front-ends (sources/html_extract.py,
-sources/pdf_reader.py): per-page texts plus candidate grids from up to
-three extraction profiles.  Output is the reference-shaped result dict and
-its ``raw_json`` serialization — byte-identical to running the reference
-pipeline (``/root/reference/scraper.py:1160-1358``) on the same IR.
+built by the payload front-ends (sources/html_extract.py,
+sources/pdf_reader.py): per-page texts plus candidate grids from the two
+extraction profiles, lattice and stream.  Output is the reference-shaped
+result dict and its ``raw_json`` serialization — byte-identical to running
+the reference pipeline (``scraper.py:1160-1358``) on the same IR.
 
 The in-kernel "physical plan" replicated verbatim (it is deterministic
 model selection, not something Catalyst can express — SURVEY.md §4):
@@ -70,14 +70,17 @@ class CandidateTable:
 
 @dataclass
 class DocumentIR:
-    """Front-end output for one document — the kernel's entire input."""
+    """Front-end output for one document — the kernel's entire input.
+
+    The reference's third table source, pdfplumber, always yields []
+    (its cleanup raises under the pinned pandas; SURVEY.md §8 S4), so the
+    IR has no channel for it."""
 
     page_texts: list[str] = field(default_factory=list)
     lattice_tables: list[CandidateTable] = field(default_factory=list)
     # the four stream tolerance profiles, index-aligned with the
     # reference's config sweep (scraper.py:1192-1197)
     stream_tables_by_config: list[list[CandidateTable]] = field(default_factory=list)
-    plumber_tables: list[CandidateTable] = field(default_factory=list)
 
 
 # ---------------------------------------------------------------------------
@@ -325,14 +328,6 @@ def deduplicate_projects(projects: list[dict]) -> list[dict]:
 # table gathering: stream-config scoring + duplicate elimination
 # ---------------------------------------------------------------------------
 
-def _grids_equal(a: Grid, b: Grid) -> bool:
-    """Shape + cell-wise equality (np.array_equal analogue,
-    scraper.py:1229-1242)."""
-    if len(a) != len(b) or (a and b and len(a[0]) != len(b[0])):
-        return False
-    return a == b
-
-
 def _gather_tables(ir: DocumentIR) -> list[CandidateTable]:
     all_tables: list[CandidateTable] = []
 
@@ -358,15 +353,12 @@ def _gather_tables(ir: DocumentIR) -> list[CandidateTable]:
             best_score = score
             best_tables = config_tables
 
+    # duplicate elimination: list == is shape + cell-wise equality, the
+    # np.array_equal analogue (scraper.py:1229-1242)
     for t in best_tables:
         if t.grid and len(t.grid) > 2:
-            if not any(_grids_equal(existing.grid, t.grid) for existing in all_tables):
+            if not any(existing.grid == t.grid for existing in all_tables):
                 all_tables.append(t)
-
-    # pdfplumber profile (already shape-filtered by the front-end)
-    for t in ir.plumber_tables:
-        if not any(_grids_equal(existing.grid, t.grid) for existing in all_tables):
-            all_tables.append(t)
 
     return all_tables
 

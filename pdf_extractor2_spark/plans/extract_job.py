@@ -41,8 +41,9 @@ from typing import Iterable, Iterator
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
 
-from ..operators.document import CandidateTable, DocumentIR, parse_document, result_with_raw_json
+from ..operators.document import DocumentIR, parse_document, result_with_raw_json
 from ..sources.html_extract import extract_html
+from ..sources.pdf_reader import extract_pdf
 
 HASH_SALT = 42  # fixed xxhash64 seed: deterministic across restarts
 MAX_PAYLOAD_BYTES = 64 * 1024 * 1024  # document-size skew guard (failure row)
@@ -77,7 +78,8 @@ METRICS_SCHEMA = T.StructType([
 
 
 def payload_to_ir(payload: bytes | None) -> tuple[DocumentIR, list[dict], str]:
-    """Front-end dispatch: sniff payload bytes, parse, build the kernel IR.
+    """Front-end dispatch: validate, gunzip, then sniff the payload bytes
+    and hand them to the PDF or HTML front-end, which builds the kernel IR.
 
     Returns (ir, spans, payload_kind). Raises on unusable payloads — the
     batch loop converts exceptions into failure rows.
@@ -105,35 +107,8 @@ def payload_to_ir(payload: bytes | None) -> tuple[DocumentIR, list[dict], str]:
             raise ValueError("empty gzip payload")
 
     if payload[:5] == b"%PDF-":
-        from ..sources.pdf_reader import extract_pdf
-
-        parsed = extract_pdf(payload)
-        ir = DocumentIR(
-            page_texts=parsed.page_texts,
-            lattice_tables=[
-                CandidateTable(grid=g, page=p, method="lattice", accuracy=a)
-                for g, p, a in parsed.lattice_tables
-            ],
-            stream_tables_by_config=[
-                [
-                    CandidateTable(grid=g, page=p, method="stream", accuracy=a)
-                    for g, p, a in config_tables
-                ]
-                for config_tables in parsed.stream_tables_by_config
-            ],
-        )
-        return ir, parsed.spans, "pdf"
-
-    page = extract_html(payload)
-    ir = DocumentIR(
-        page_texts=[page.main_text],
-        lattice_tables=[
-            CandidateTable(grid=grid, page=1, method="lattice", accuracy=100.0)
-            for grid in page.tables
-            if grid and len(grid) > 2
-        ],
-    )
-    return ir, page.spans, "html"
+        return (*extract_pdf(payload), "pdf")
+    return (*extract_html(payload), "html")
 
 
 def _extract_one(url: str, payload, bucket) -> dict:
@@ -181,12 +156,14 @@ def _extract_one(url: str, payload, bucket) -> dict:
 
 
 def extraction_kernel(batches: Iterable[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    """mapInPandas kernel: Arrow batch of pages → batch of result rows."""
+    """mapInPandas kernel: Arrow batch of (url, html, bucket) pages →
+    batch of result rows.  Every plan that runs it supplies ``bucket``:
+    ``run_extract`` and the stream job via ``with_bucket``, the resumable
+    job from its file manifest."""
     for pdf in batches:
-        buckets = pdf["bucket"] if "bucket" in pdf.columns else pd.Series([None] * len(pdf))
         rows = [
             _extract_one(url, payload, bucket)
-            for url, payload, bucket in zip(pdf["url"], pdf["html"], buckets)
+            for url, payload, bucket in zip(pdf["url"], pdf["html"], pdf["bucket"])
         ]
         yield pd.DataFrame(rows)
 

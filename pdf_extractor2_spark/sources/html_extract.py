@@ -15,7 +15,11 @@ Pipeline per document:
      per line (deterministic, byte-stable);
   4. spans = [{kind, start, end, text}] offsets into the main text;
   5. every <table> (boilerplate or not) yields a rectangular grid for the
-     table classifiers (T1-T8) — the reference's lattice channel analogue.
+     table classifiers (T1-T8) on the IR's lattice channel (page 1,
+     accuracy 100.0) — the reference's lattice channel analogue.
+
+``extract_html`` returns the kernel's ``DocumentIR`` (one page: the main
+text) and the spans.
 
 Everything here is called from inside the Arrow UDF batch loop
 (plans/extract_job.py); per corpus row it runs once over a byte payload.
@@ -28,6 +32,7 @@ from dataclasses import dataclass, field
 from html import unescape
 from html.parser import HTMLParser
 
+from ..operators.document import CandidateTable, DocumentIR
 from ..operators.grids import Grid, normalize_grid
 
 _BLOCK_TAGS = frozenset(
@@ -88,14 +93,6 @@ class _Block:
 
 def _collapse(s: str) -> str:
     return " ".join(s.split())
-
-
-@dataclass
-class ExtractedPage:
-    title: str
-    main_text: str
-    spans: list[dict]
-    tables: list[Grid]
 
 
 class _Extractor(HTMLParser):
@@ -331,8 +328,9 @@ def decode_html_bytes(payload: bytes) -> str:
         return payload.decode("latin-1")
 
 
-def extract_html(payload: bytes | str, engine: str = "fast") -> ExtractedPage:
-    """Parse one HTML payload into main text, spans and table grids.
+def extract_html(payload: bytes | str, engine: str = "fast") -> tuple[DocumentIR, list[dict]]:
+    """Parse one HTML payload into the kernel IR (main text, table grids)
+    and the spans.
 
     ``engine='fast'`` uses the direct scanner (hot path); ``'stdlib'``
     drives html.parser.HTMLParser — kept for the equivalence test."""
@@ -385,5 +383,11 @@ def extract_html(payload: bytes | str, engine: str = "fast") -> ExtractedPage:
                 if cell:
                     _emit("table_field", cell)
 
-    main_text = "\n".join(pieces)
-    return ExtractedPage(title=title, main_text=main_text, spans=spans, tables=parser.tables)
+    ir = DocumentIR(
+        page_texts=["\n".join(pieces)],
+        lattice_tables=[
+            CandidateTable(grid=grid, page=1, method="lattice", accuracy=100.0)
+            for grid in parser.tables
+        ],
+    )
+    return ir, spans

@@ -12,12 +12,16 @@ No pdf library: this module implements, with the stdlib only,
      BT/ET, Tf, TL, Td, TD, Tm, T*, Tj, TJ, ' and the path operators
      m/l/S (ruling lines), producing positioned text runs per page;
   5. positional clustering:
-       * lines: runs grouped by y (tolerance-parameterized), sorted by x;
-       * page text: lines top-to-bottom, runs joined with single spaces;
+       * lines: runs grouped by y (tolerance-parameterized), sorted by x,
+         once per page per distinct row tolerance;
+       * page text and spans: the row-tolerance-2.0 lines top-to-bottom,
+         runs joined with single spaces;
        * "stream" table profile: whitespace-aligned column clustering at
          the reference's four tolerance configs (scraper.py:1192-1197) —
          the model-selection score picks the best config downstream;
        * "lattice" table profile: cell grids bounded by drawn rulings.
+
+``extract_pdf`` returns the kernel's ``DocumentIR`` and the text spans.
 
 Scope is bounded by the fixture writer (sources/pdf_writer.py) per
 FIXTURES.md §1b; unsupported constructs raise, which the extraction
@@ -29,9 +33,10 @@ from __future__ import annotations
 import re
 import zlib
 from bisect import bisect_right
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
-Grid = list[list[str]]
+from ..operators.document import CandidateTable, DocumentIR
+from ..operators.grids import Grid
 
 # the reference's camelot-stream tolerance sweep, re-expressed for our
 # clusterer: (row_tol, column_tol); config 0 = camelot defaults
@@ -585,11 +590,6 @@ def cluster_lines(runs: list[TextRun], row_tol: float) -> list[list[TextRun]]:
     return [sorted(line, key=lambda r: (r.x, -r.y)) for line in lines]
 
 
-def page_text_from_runs(runs: list[TextRun]) -> str:
-    lines = cluster_lines(runs, row_tol=2.0)
-    return "\n".join(" ".join(r.text for r in line) for line in lines)
-
-
 def _cluster_positions(xs: list[float], tol: float) -> list[float]:
     """Cluster sorted x positions; returns cluster centers (first member)."""
     centers: list[float] = []
@@ -599,13 +599,13 @@ def _cluster_positions(xs: list[float], tol: float) -> list[float]:
     return centers
 
 
-def stream_tables(runs: list[TextRun], row_tol: float, col_tol: float) -> list[Grid]:
-    """Whitespace-alignment table detection (camelot-stream profile):
-    consecutive multi-run lines form a region; columns are x clusters.
-    Single-run lines indented past the page's left margin are treated as
-    continuation lines (multi-line cells) and stay inside the region."""
-    lines = cluster_lines(runs, row_tol)
-    left_margin = min((r.x for r in runs), default=0.0)
+def stream_tables(lines: list[list[TextRun]], col_tol: float) -> list[Grid]:
+    """Whitespace-alignment table detection (camelot-stream profile) over
+    one page's clustered lines: consecutive multi-run lines form a
+    region; columns are x clusters.  Single-run lines indented past the
+    page's left margin are treated as continuation lines (multi-line
+    cells) and stay inside the region."""
+    left_margin = min((r.x for line in lines for r in line), default=0.0)
     tables: list[Grid] = []
     region: list[list[TextRun]] = []
 
@@ -698,55 +698,31 @@ def lattice_tables(runs: list[TextRun], segments: list[Segment]) -> list[Grid]:
 # front-end entry point
 # ---------------------------------------------------------------------------
 
-@dataclass
-class ExtractedPdf:
-    page_texts: list[str]
-    # (grid, page, accuracy)
-    lattice_tables: list[tuple[Grid, int, float]] = field(default_factory=list)
-    stream_tables_by_config: list[list[tuple[Grid, int, float]]] = field(
-        default_factory=list
-    )
-    spans: list[dict] = field(default_factory=list)
-
-
 def _accuracy(grid: Grid) -> float:
     total = sum(len(r) for r in grid)
     filled = sum(1 for r in grid for c in r if c)
     return round(100.0 * filled / total, 2) if total else 0.0
 
 
-def extract_pdf(payload: bytes) -> ExtractedPdf:
+def extract_pdf(payload: bytes) -> tuple[DocumentIR, list[dict]]:
+    """Parse one PDF payload into the kernel IR and its text spans.
+
+    Spans: one per non-empty text line, offsets into the page texts
+    joined by '\n\f\n' (the result table's main_text).  Kind taxonomy
+    per FIXTURES.md §4: heading = short ALL-CAPS line (KONTAKTER-style
+    section headers), table_field = line with ≥2 positioned runs (the
+    stream profile's table-row criterion), paragraph otherwise."""
     doc = PdfDocument(payload)
-    per_page: list[tuple[list[TextRun], list[Segment]]] = []
-    for page in doc.pages():
-        content = doc.page_content(page)
-        per_page.append(interpret_content(content))
-
-    page_texts = [page_text_from_runs(runs) for runs, _ in per_page]
-
-    lattice: list[tuple[Grid, int, float]] = []
-    for pno, (runs, segments) in enumerate(per_page, start=1):
-        for grid in lattice_tables(runs, segments):
-            lattice.append((grid, pno, _accuracy(grid)))
-
-    by_config: list[list[tuple[Grid, int, float]]] = []
-    for row_tol, col_tol in STREAM_CONFIGS:
-        config_tables: list[tuple[Grid, int, float]] = []
-        for pno, (runs, _) in enumerate(per_page, start=1):
-            for grid in stream_tables(runs, row_tol, col_tol):
-                config_tables.append((grid, pno, _accuracy(grid)))
-        by_config.append(config_tables)
-
-    # spans: one span per text line, offsets into the joined page text
-    # (pages separated by '\n\f\n' in the result table); kind taxonomy
-    # per FIXTURES.md §4, derived from the same line clustering the page
-    # text uses: heading = short ALL-CAPS line (KONTAKTER-style section
-    # headers), table_field = line with ≥2 positioned runs (the stream
-    # profile's table-row criterion), paragraph otherwise
+    ir = DocumentIR(stream_tables_by_config=[[] for _ in STREAM_CONFIGS])
     spans: list[dict] = []
     offset = 0
-    for runs, _segments in per_page:
-        for line_runs in cluster_lines(runs, row_tol=2.0):
+    for pno, page in enumerate(doc.pages(), start=1):
+        runs, segments = interpret_content(doc.page_content(page))
+        lines_by_tol = {tol: cluster_lines(runs, tol) for tol, _ in STREAM_CONFIGS}
+
+        # page text and spans use config 0's row tolerance (2.0)
+        texts: list[str] = []
+        for line_runs in lines_by_tol[2.0]:
             line = " ".join(r.text for r in line_runs)
             if line:
                 if len(line) < 40 and line.isupper():
@@ -758,12 +734,18 @@ def extract_pdf(payload: bytes) -> ExtractedPdf:
                 spans.append(
                     {"kind": kind, "start": offset, "end": offset + len(line), "text": line}
                 )
+            texts.append(line)
             offset += len(line) + 1
         offset += 2  # '\f\n' of the page separator minus counted '\n'
+        ir.page_texts.append("\n".join(texts))
 
-    return ExtractedPdf(
-        page_texts=page_texts,
-        lattice_tables=lattice,
-        stream_tables_by_config=by_config,
-        spans=spans,
-    )
+        for grid in lattice_tables(runs, segments):
+            ir.lattice_tables.append(
+                CandidateTable(grid=grid, page=pno, method="lattice", accuracy=_accuracy(grid))
+            )
+        for (row_tol, col_tol), config_tables in zip(STREAM_CONFIGS, ir.stream_tables_by_config):
+            for grid in stream_tables(lines_by_tol[row_tol], col_tol):
+                config_tables.append(
+                    CandidateTable(grid=grid, page=pno, method="stream", accuracy=_accuracy(grid))
+                )
+    return ir, spans

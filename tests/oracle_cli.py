@@ -28,7 +28,6 @@ def main() -> None:
                     int(k): [tuple(t) for t in v]
                     for k, v in d["stream_by_config"].items()
                 },
-                plumber_tables=[],
             )
         )
         result = dict(result)

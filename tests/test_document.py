@@ -62,7 +62,6 @@ def _run_both(ir: DocumentIR):
             i: [(t.grid, t.page, t.accuracy) for t in tables]
             for i, tables in enumerate(ir.stream_tables_by_config)
         },
-        plumber_tables=[],
     )
     return parse_document(ir), run_reference(oracle_doc)
 
@@ -183,8 +182,9 @@ def test_plumber_channel_is_dead_in_reference(reference):
     """Injecting pdfplumber tables into the reference changes nothing:
     its cleanup (scraper.py:967 ``df.replace(None, np.nan)``) raises
     TypeError under the pinned pandas, so the whole plumber source
-    yields [] — which is why the engine's DocumentIR plumber channel is
-    legitimately always empty (SURVEY.md §8 S4)."""
+    yields [] — which is why the engine's DocumentIR carries only the
+    lattice and stream channels, with no plumber channel at all
+    (SURVEY.md §8 S4)."""
     raw_tables = [[
         ["Navn", "Telefon", "Email"],
         ["Niels Bohr", "12 34 56 78", "n@b.dk"],

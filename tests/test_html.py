@@ -23,31 +23,34 @@ DOC = b"""<!DOCTYPE html><html><head><title>Byg &amp; Bo</title></head><body>
 
 
 def test_boilerplate_dropped():
-    page = extract_html(DOC)
-    assert "Forside" not in page.main_text
-    assert "Privatliv" not in page.main_text
+    ir, _ = extract_html(DOC)
+    assert len(ir.page_texts) == 1
+    assert "Forside" not in ir.page_texts[0]
+    assert "Privatliv" not in ir.page_texts[0]
 
 
 def test_main_content_kept_in_order():
-    page = extract_html(DOC)
-    lines = page.main_text.split("\n")
+    ir, _ = extract_html(DOC)
+    lines = ir.page_texts[0].split("\n")
     assert lines[0] == "Byg & Bo"  # title, entity decoded
     assert "Projektoversigt" in lines[1]
     assert lines.index("ByggeData A/S") < lines.index("CVR: 12345678")
 
 
 def test_span_offsets_are_exact():
-    page = extract_html(DOC)
-    for span in page.spans:
-        assert page.main_text[span["start"]: span["end"]] == span["text"]
-    kinds = {s["kind"] for s in page.spans}
+    ir, spans = extract_html(DOC)
+    for span in spans:
+        assert ir.page_texts[0][span["start"]: span["end"]] == span["text"]
+    kinds = {s["kind"] for s in spans}
     assert {"title", "heading", "paragraph", "table_field"} <= kinds
 
 
 def test_table_grid_recovered():
-    page = extract_html(DOC)
-    assert len(page.tables) == 1
-    grid = page.tables[0]
+    ir, _ = extract_html(DOC)
+    assert len(ir.lattice_tables) == 1
+    t = ir.lattice_tables[0]
+    assert (t.page, t.method, t.accuracy) == (1, "lattice", 100.0)
+    grid = t.grid
     assert grid[0] == ["Navn", "Telefon"]
     assert grid[1] == ["Niels Bohr", "12 34 56 78"]
     assert len(grid) == 3
@@ -58,30 +61,31 @@ def test_link_density_strips_link_farms():
     <p><a href="/1">one</a> <a href="/2">two</a> <a href="/3">three</a></p>
     <p>Normal paragraph with plenty of real text content here.</p>
     </article></body></html>"""
-    page = extract_html(doc)
-    assert "one two three" not in page.main_text
-    assert "Normal paragraph" in page.main_text
+    ir, _ = extract_html(doc)
+    assert "one two three" not in ir.page_texts[0]
+    assert "Normal paragraph" in ir.page_texts[0]
 
 
 def test_malformed_markup_tolerated():
     for payload in [b"<html><tr><td>x</html", b"<p>unclosed", b"", b"\x00\xffgarbage",
                     b"<table><tr><td>a<td>b</table>"]:
-        page = extract_html(payload)  # must not raise
-        assert page.main_text is not None
+        ir, _ = extract_html(payload)  # must not raise
+        assert len(ir.page_texts) == 1
 
 
 def test_br_preserves_multiline_cells():
     doc = b"<table><tr><td>12 34 56 78<br>98 76 54 32</td><td>x</td></tr><tr><td>a</td><td>b</td></tr></table>"
-    page = extract_html(doc)
-    assert page.tables, "table missing"
+    ir, _ = extract_html(doc)
+    assert ir.lattice_tables, "table missing"
     # <br> must keep both phone numbers in the cell
-    cell = page.tables[0][0][0]
+    cell = ir.lattice_tables[0].grid[0][0]
     assert "12 34 56 78" in cell and "98 76 54 32" in cell
 
 
 def test_scanner_equivalence():
     """The fast scanner and the stdlib HTMLParser path must produce
-    identical pages over the whole corpus + adversarial samples."""
+    identical (ir, spans) pairs over the whole corpus + adversarial
+    samples."""
     from pdf_extractor2_spark.sources.corpus import make_doc_spec, render_html
 
     samples = [DOC]
@@ -102,15 +106,13 @@ def test_scanner_equivalence():
     for payload in samples:
         fast = extract_html(payload, engine="fast")
         std = extract_html(payload, engine="stdlib")
-        assert fast.main_text == std.main_text, payload[:80]
-        assert fast.spans == std.spans, payload[:80]
-        assert fast.tables == std.tables, payload[:80]
+        assert fast == std, payload[:80]
 
     # intentional divergence on pathological markup: HTMLParser leaks an
     # unterminated comment as text ('< !-- ...'); the fast scanner drops
     # it — the cleaner behavior is the engine's spec
     leaky = b"<p>x</p><!-- unterminated"
-    assert extract_html(leaky, engine="fast").main_text == ""
+    assert extract_html(leaky, engine="fast")[0].page_texts == [""]
     # both paths must never raise on garbage
     for junk in [b"\x00\xff<", b"<", b"<>", b"</>", b"<p", b"&#xZZ;"]:
         extract_html(junk, engine="fast")
@@ -126,8 +128,29 @@ def test_role_attribute_boilerplate():
     <div role="main"><p>Mere rigtigt indhold der skal med.</p></div>
     </body></html>"""
     for engine in ("fast", "stdlib"):
-        page = extract_html(doc, engine=engine)
-        assert "Menu punkt" not in page.main_text, engine
-        assert "Copyright" not in page.main_text, engine
-        assert "Rigtigt indhold" in page.main_text, engine
-        assert "Mere rigtigt indhold" in page.main_text, engine
+        text = extract_html(doc, engine=engine)[0].page_texts[0]
+        assert "Menu punkt" not in text, engine
+        assert "Copyright" not in text, engine
+        assert "Rigtigt indhold" in text, engine
+        assert "Mere rigtigt indhold" in text, engine
+
+
+def test_two_row_tables_never_reach_the_classifiers():
+    """Every HTML grid goes on the lattice channel; the kernel's rows > 2
+    rule (scraper.py:1174-1186) then drops a two-row table, so it adds
+    no processed table and no extraction method."""
+    from pdf_extractor2_spark.operators.document import parse_document
+
+    rows = ["<tr><td>Navn</td><td>Telefon</td><td>Email</td></tr>",
+            "<tr><td>Niels Bohr</td><td>12 34 56 78</td><td>niels@inst.dk</td></tr>",
+            "<tr><td>Mette Hansen</td><td>87 65 43 21</td><td>mette@byg.dk</td></tr>"]
+    quality = {}
+    for n in (2, 3):
+        doc = "<p>ByggeData A/S</p><table>" + "".join(rows[:n]) + "</table>"
+        ir, _ = extract_html(doc.encode())
+        assert [len(t.grid) for t in ir.lattice_tables] == [n]
+        quality[n] = parse_document(ir)["quality"]
+    assert quality[2] == {"avg_confidence": 0.0, "tables_processed": 0,
+                          "extraction_methods": []}
+    assert quality[3]["tables_processed"] == 1
+    assert quality[3]["extraction_methods"] == ["lattice"]

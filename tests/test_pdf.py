@@ -74,8 +74,8 @@ def test_text_roundtrip(spec, variant):
                  section_lines=spec.section_lines, tables=spec.tables)
     payload = render_pdf(spec)
     assert payload[:5] == b"%PDF-"
-    parsed = extract_pdf(payload)
-    text = "\n".join(parsed.page_texts)
+    ir, _ = extract_pdf(payload)
+    text = "\n".join(ir.page_texts)
     for line in spec.company_lines + spec.paragraphs + spec.section_lines:
         assert line in text, line
     for grid in spec.tables:
@@ -93,21 +93,20 @@ def test_document_structure():
 
 
 def test_table_recovery():
-    parsed = extract_pdf(render_pdf(WITH_TABLE))
-    grids = [g for tables in parsed.stream_tables_by_config for g, _, _ in tables]
-    grids += [g for g, _, _ in parsed.lattice_tables]
+    ir, _ = extract_pdf(render_pdf(WITH_TABLE))
+    grids = [t.grid for tables in ir.stream_tables_by_config for t in tables]
+    grids += [t.grid for t in ir.lattice_tables]
     # at least one profile must recover the 4x5 structure
     assert any(len(g) == 4 and len(g[0]) == 5 for g in grids), grids
 
 
 def test_multiline_cell_becomes_continuation_row():
-    parsed = extract_pdf(render_pdf(MULTILINE_CELL))
     ir, spans, kind = payload_to_ir(render_pdf(MULTILINE_CELL))
     assert kind == "pdf"
     # the second phone must survive somewhere in the IR
     flat = json.dumps([t.grid for t in ir.lattice_tables]) + json.dumps(
-        [[t.grid for t in cfg] for t in [] ]
-    ) + json.dumps([[t.grid for t in cfg] for cfg in ir.stream_tables_by_config])
+        [[t.grid for t in cfg] for cfg in ir.stream_tables_by_config]
+    )
     assert "98 76 54 32" in flat
 
 
@@ -130,7 +129,6 @@ def test_kernel_parity_on_corpus_pdfs(reference, idx):
                 i: [(t.grid, t.page, t.accuracy) for t in tables]
                 for i, tables in enumerate(ir.stream_tables_by_config)
             },
-            plumber_tables=[],
         )
     )
     assert mine == theirs
@@ -179,8 +177,8 @@ def test_contents_array_multiple_streams():
         b"6 0 obj\n<< /Length %d >>\nstream\n%s\nendstream\nendobj\n" % (len(s2), s2),
     ]
     pdf = _minimal_pdf(blobs, b"", 2, b"[ 5 0 R 6 0 R ]")
-    parsed = extract_pdf(pdf)
-    assert parsed.page_texts == ["del et\ndel to"]
+    ir, _ = extract_pdf(pdf)
+    assert ir.page_texts == ["del et\ndel to"]
 
 
 def test_asciihex_filter():
@@ -189,7 +187,7 @@ def test_asciihex_filter():
     blob = (b"5 0 obj\n<< /Filter /ASCIIHexDecode /Length %d >>\nstream\n%s\nendstream\nendobj\n"
             % (len(hexed), hexed))
     pdf = _minimal_pdf([blob], b"", 1, b"5 0 R")
-    assert extract_pdf(pdf).page_texts == ["hex tekst"]
+    assert extract_pdf(pdf)[0].page_texts == ["hex tekst"]
 
 
 def test_incremental_update_prev_chain():
@@ -211,8 +209,8 @@ def test_incremental_update_prev_chain():
     upd += b"xref\n5 1\n%010d 00000 n \n" % new_obj_off
     upd += b"trailer\n<< /Size 6 /Root 1 0 R /Prev %d >>\nstartxref\n%d\n%%%%EOF\n" % (
         prev_xref, xref2)
-    parsed = extract_pdf(bytes(upd))
-    assert parsed.page_texts == ["nyere"]
+    ir, _ = extract_pdf(bytes(upd))
+    assert ir.page_texts == ["nyere"]
 
 
 def test_pdf_span_kinds_and_offsets():
@@ -221,10 +219,10 @@ def test_pdf_span_kinds_and_offsets():
                  tables=[[["Navn", "Telefon"],
                           ["Niels Bohr", "12 34 56 78"],
                           ["Mette Hansen", "22 33 44 55"]]])
-    parsed = extract_pdf(render_pdf(spec))
-    joined = "\n\f\n".join(parsed.page_texts)
+    ir, spans = extract_pdf(render_pdf(spec))
+    joined = "\n\f\n".join(ir.page_texts)
     kinds = {}
-    for s in parsed.spans:
+    for s in spans:
         assert joined[s["start"]: s["end"]] == s["text"], s
         kinds.setdefault(s["kind"], []).append(s["text"])
     assert any(t == "KONTAKTER" for t in kinds.get("heading", []))
