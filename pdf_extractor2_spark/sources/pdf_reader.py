@@ -715,13 +715,14 @@ def extract_pdf(payload: bytes) -> tuple[DocumentIR, list[dict]]:
     doc = PdfDocument(payload)
     ir = DocumentIR(stream_tables_by_config=[[] for _ in STREAM_CONFIGS])
     spans: list[dict] = []
-    offset = 0
+    page_start = 0
     for pno, page in enumerate(doc.pages(), start=1):
         runs, segments = interpret_content(doc.page_content(page))
         lines_by_tol = {tol: cluster_lines(runs, tol) for tol, _ in STREAM_CONFIGS}
 
         # page text and spans use config 0's row tolerance (2.0)
         texts: list[str] = []
+        offset = page_start
         for line_runs in lines_by_tol[2.0]:
             line = " ".join(r.text for r in line_runs)
             if line:
@@ -736,8 +737,8 @@ def extract_pdf(payload: bytes) -> tuple[DocumentIR, list[dict]]:
                 )
             texts.append(line)
             offset += len(line) + 1
-        offset += 2  # '\f\n' of the page separator minus counted '\n'
         ir.page_texts.append("\n".join(texts))
+        page_start += len(ir.page_texts[-1]) + 3  # the '\n\f\n' page separator
 
         for grid in lattice_tables(runs, segments):
             ir.lattice_tables.append(

@@ -261,3 +261,39 @@ def test_two_page_spans_and_table_pages(idx):
     stream = [t for cfg in ir.stream_tables_by_config for t in cfg]
     assert stream and {t.page for t in stream} == {2}
     assert ir.stream_tables_by_config[0][0].grid == ir.lattice_tables[0].grid
+
+
+def _pages_pdf(streams: list[bytes]) -> bytes:
+    """Classic-xref PDF with one page per raw content stream."""
+    n = len(streams)
+    kids = b" ".join(b"%d 0 R" % (3 + i) for i in range(n))
+    objs = {1: b"<< /Type /Catalog /Pages 2 0 R >>",
+            2: b"<< /Type /Pages /Count %d /Kids [ %s ] >>" % (n, kids)}
+    for i, content in enumerate(streams):
+        objs[3 + i] = b"<< /Type /Page /Parent 2 0 R /Contents %d 0 R >>" % (3 + n + i)
+        objs[3 + n + i] = b"<< /Length %d >>\nstream\n%s\nendstream" % (len(content), content)
+    out = bytearray(b"%PDF-1.4\n")
+    offsets = {}
+    for num in sorted(objs):
+        offsets[num] = len(out)
+        out += b"%d 0 obj\n" % num + objs[num] + b"\nendobj\n"
+    xref = len(out)
+    out += b"xref\n0 %d\n0000000000 65535 f \n" % (len(objs) + 1)
+    for num in sorted(objs):
+        out += b"%010d 00000 n \n" % offsets[num]
+    out += b"trailer\n<< /Size %d /Root 1 0 R >>\nstartxref\n%d\n%%%%EOF\n" % (
+        len(objs) + 1, xref)
+    return bytes(out)
+
+
+def test_span_offsets_after_an_empty_page():
+    """A page without text still sits between two '\\n\\f\\n' separators
+    of main_text, so the spans of the pages after it stay aligned."""
+    ir, spans = extract_pdf(_pages_pdf([
+        b"BT 1 0 0 1 40 800 Tm (side et) Tj ET",
+        b"",
+        b"BT 1 0 0 1 40 800 Tm (side tre) Tj ET",
+    ]))
+    assert ir.page_texts == ["side et", "", "side tre"]
+    joined = "\n\f\n".join(ir.page_texts)
+    assert [joined[s["start"]: s["end"]] for s in spans] == ["side et", "side tre"]
