@@ -708,7 +708,7 @@ def extract_pdf(payload: bytes) -> tuple[DocumentIR, list[dict]]:
     """Parse one PDF payload into the kernel IR and its text spans.
 
     Spans: one per non-empty text line, offsets into the page texts
-    joined by '\n\f\n' (the result table's main_text).  Kind taxonomy
+    joined by '\\n\\f\\n' (the result table's main_text).  Kind taxonomy
     per FIXTURES.md §4: heading = short ALL-CAPS line (KONTAKTER-style
     section headers), table_field = line with ≥2 positioned runs (the
     stream profile's table-row criterion), paragraph otherwise."""
