@@ -172,6 +172,7 @@ class Ref:
 
 
 _NUM_RE = re.compile(rb"^[+-]?(\d+\.?\d*|\.\d+)$")
+_NUM_START = b"+-.0123456789"
 
 
 def _parse_value(lx: _Lexer):
@@ -186,8 +187,12 @@ def _parse_value(lx: _Lexer):
 
 
 def _parse_value_tok(lx: _Lexer, tok: bytes):
-    if tok[0] == 0x2F:  # name
+    c = tok[0]
+    if c == 0x2F:  # name
         return ("name", tok[1:].decode("latin-1"))
+    if c in _NUM_START and _NUM_RE.match(tok):
+        # an integer here is not a reference: _VALUE tried `N G R` first
+        return float(tok) if b"." in tok else int(tok)
     if tok == b"<<":
         d = {}
         while True:
@@ -202,21 +207,22 @@ def _parse_value_tok(lx: _Lexer, tok: bytes):
                 continue
             lx.pos = m.end()
             key, num, gen, tok = m.group(1, 2, 3, 4)
-            if tok is None:
-                value = Ref(int(num), int(gen))
-            elif tok[0] == 0x2F:  # name
-                value = ("name", tok[1:].decode("latin-1"))
-            else:
-                value = _parse_value_tok(lx, tok)
+            value = Ref(int(num), int(gen)) if tok is None else _parse_value_tok(lx, tok)
             d[key[1:].decode("latin-1")] = value
     if tok == b"[":
         arr = []
         while True:
-            lx.skip_ws()
-            if lx.peek_bytes(1) == b"]":
-                lx.pos += 1
+            m = _VALUE.match(lx.data, lx.pos)
+            if m is None:
+                raise PdfError("eof")
+            lx.pos = m.end()
+            num, gen, tok = m.group(1, 2, 3)
+            if tok is None:
+                arr.append(Ref(int(num), int(gen)))
+            elif tok == b"]":
                 return arr
-            arr.append(_parse_value(lx))
+            else:
+                arr.append(_parse_value_tok(lx, tok))
     if tok == b"(":
         return lx.read_literal_string()
     if tok == b"<":
@@ -225,9 +231,6 @@ def _parse_value_tok(lx: _Lexer, tok: bytes):
         return tok == b"true"
     if tok == b"null":
         return None
-    if _NUM_RE.match(tok):
-        # an integer here is not a reference: _VALUE tried `N G R` first
-        return float(tok) if b"." in tok else int(tok)
     raise PdfError(f"unexpected token {tok!r}")
 
 
@@ -493,20 +496,23 @@ _NUM = rb"(?>[+-]?(?:\d+\.?\d*|\.\d+))"
 _OP_END = rb"(?![A-Za-z'\"*])"
 _PLAIN_LIT = rb"\(([^\\()]*)\)"
 _HEX_STR = rb"<([0-9A-Fa-f\s]*)>"
+# (the operation is named by the group that closes last: m.lastgroup)
 _FAST_OP = re.compile(
     _W + rb"(?:"
-    rb"(?P<tm>" + (_NUM + _W) * 4
-    + rb"(?P<tx>" + _NUM + rb")" + _W + rb"(?P<ty>" + _NUM + rb")" + _W + rb"Tm)"
-    rb"|(?P<td>(?P<dx>" + _NUM + rb")" + _W + rb"(?P<dy>" + _NUM + rb")" + _W
-    + rb"T(?:d|(?P<TD>D)))"
-    rb"|(?P<show>(?:\((?P<lit>[^\\()]*)\)|<(?P<hex>[0-9A-Fa-f\s]*)>)" + _W
+    # (string) Tj | <hex> Tj | (string) ' | <hex> '
+    rb"(?P<show>(?:\((?P<lit>[^\\()]*)\)|<(?P<hex>[0-9A-Fa-f\s]*)>)" + _W
     + rb"(?:Tj|(?P<quote>')))"
+    # [ strings and numbers ] TJ
     rb"|(?P<tj>\[(?P<parts>(?:" + _W + rb"(?:" + _NUM + rb"|\([^\\()]*\)|<[0-9A-Fa-f\s]*>))*+)"
     + _W + rb"\]" + _W + rb"TJ)"
-    rb"|(?P<rule>(?P<x0>" + _NUM + rb")" + _W + rb"(?P<y0>" + _NUM + rb")" + _W + rb"m" + _OP_END
-    + _W + rb"(?P<x1>" + _NUM + rb")" + _W + rb"(?P<y1>" + _NUM + rb")" + _W + rb"l" + _OP_END
-    + _W + rb"S)"
-    rb")" + _OP_END
+    # two numbers a b, then: Td | TD | m x1 y1 l S | c d x y Tm
+    rb"|(?P<a>" + _NUM + rb")" + _W + rb"(?P<b>" + _NUM + rb")" + _W + rb"(?:"
+    rb"(?P<td>T(?:d|(?P<TD>D)))"
+    rb"|(?P<rule>m" + _OP_END + _W + rb"(?P<x1>" + _NUM + rb")" + _W + rb"(?P<y1>" + _NUM + rb")"
+    + _W + rb"l" + _OP_END + _W + rb"S)"
+    rb"|(?P<tm>" + (_NUM + _W) * 2
+    + rb"(?P<tx>" + _NUM + rb")" + _W + rb"(?P<ty>" + _NUM + rb")" + _W + rb"Tm)"
+    rb"))" + _OP_END
 )
 # the strings of a fast-tier TJ array, in order
 _TJ_STRING = re.compile(_PLAIN_LIT + rb"|" + _HEX_STR)
@@ -537,12 +543,11 @@ def interpret_content(content: bytes) -> tuple[list[TextRun], list[Segment]]:
     pos, n = 0, len(content)
     arrays: list[list] = []  # nesting stack for [...] operands
     match = _CONTENT_TOK.match
-    fast = _FAST_OP.match
 
     while pos < n:
         if not stack and not arrays:
-            m = fast(content, pos)
-            if m is not None:
+            # fast tier: operation after operation, until one does not match
+            for m in iter(_FAST_OP.scanner(content, pos).match, None):
                 pos = m.end()
                 kind = m.lastgroup
                 if kind == "show":
@@ -555,8 +560,8 @@ def interpret_content(content: bytes) -> tuple[list[TextRun], list[Segment]]:
                 elif kind == "tm":
                     line_x, line_y = float(m.group("tx")), float(m.group("ty"))
                 elif kind == "td":
-                    dy = float(m.group("dy"))
-                    line_x += float(m.group("dx"))
+                    dy = float(m.group("b"))
+                    line_x += float(m.group("a"))
                     line_y += dy
                     if m.group("TD"):
                         leading = -dy
@@ -565,15 +570,16 @@ def interpret_content(content: bytes) -> tuple[list[TextRun], list[Segment]]:
                         t.group(1) if t.lastindex == 1 else _unhex(t.group(2))
                         for t in _TJ_STRING.finditer(m.group("parts"))
                     ))
-                else:  # rule: x0 y0 m x1 y1 l S
+                else:  # rule: a b m x1 y1 l S
                     pending_segments.append(Segment(
-                        float(m.group("x0")), float(m.group("y0")),
+                        float(m.group("a")), float(m.group("b")),
                         float(m.group("x1")), float(m.group("y1")),
                     ))
                     segments.extend(pending_segments)
                     pending_segments = []
                     path = []
-                continue
+            if pos >= n:
+                break
         m = match(content, pos)
         if m is None:
             break
