@@ -554,9 +554,7 @@ def interpret_content(content: bytes) -> tuple[list[TextRun], list[Segment]]:
                     s, h, quote = m.group("lit", "hex", "quote")
                     if quote:
                         line_y -= leading
-                    text = (_unhex(h) if s is None else s).decode("utf-8", errors="replace")
-                    if text:
-                        runs.append(TextRun(line_x, line_y, text))
+                    shown(_unhex(h) if s is None else s)
                 elif kind == "tm":
                     line_x, line_y = float(m.group("tx")), float(m.group("ty"))
                 elif kind == "td":

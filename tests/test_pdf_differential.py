@@ -38,7 +38,7 @@ def _outcome(fn, *args) -> str:
     not ==, so a NaN coordinate compares equal to itself)."""
     try:
         return repr(fn(*args))
-    except RecursionError:
+    except RecursionError:  # the depth at which it gives up differs between the parsers
         return "RecursionError"
     except Exception as exc:  # the kernel turns these into failure rows
         return f"{type(exc).__name__}: {exc}"
