@@ -38,6 +38,14 @@ import zlib
 
 HERE = os.path.dirname(os.path.abspath(__file__))
 MANIFEST = os.path.join(HERE, "golden", "pdf_manifest.txt")
+if os.path.dirname(HERE) not in sys.path:
+    sys.path.insert(0, os.path.dirname(HERE))
+
+from pdf_extractor2_spark.sources.corpus import make_doc_spec  # noqa: E402
+from pdf_extractor2_spark.sources.pdf_reader import (  # noqa: E402
+    PdfDocument, extract_pdf, interpret_content,
+)
+from pdf_extractor2_spark.sources.pdf_writer import render_pdf  # noqa: E402
 
 
 # ---------------------------------------------------------------------------
@@ -387,10 +395,6 @@ def cases() -> list[tuple[str, bytes]]:
         1: b"<< /Type /Catalog /Pages 2 0 R >>", 2: b"<< /Type /Pages /Count 0 /Kids [ ] >>"}))
 
     # -- writer documents: both xref kinds, several pages --------------------
-    sys.path.insert(0, os.path.dirname(HERE))
-    from pdf_extractor2_spark.sources.corpus import make_doc_spec
-    from pdf_extractor2_spark.sources.pdf_writer import render_pdf
-
     for idx in (20, 21):
         spec = make_doc_spec(idx, seed=42)
         spec.payload_kind = "pdf"
@@ -413,9 +417,6 @@ def _err(exc: Exception) -> str:
 
 
 def manifest_line(name: str, payload: bytes) -> str:
-    sys.path.insert(0, os.path.dirname(HERE))
-    from pdf_extractor2_spark.sources.pdf_reader import PdfDocument, extract_pdf, interpret_content
-
     try:
         ir, spans = extract_pdf(payload)
     except Exception as exc:  # the kernel turns these into failure rows
