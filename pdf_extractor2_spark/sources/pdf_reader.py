@@ -72,9 +72,11 @@ def _bounded_inflate(raw: bytes) -> bytes:
 
 # a regular character: not whitespace and not a delimiter
 _REGULAR = rb"[^\x00\t\n\x0c\r ()<>\[\]{}/%]"
-# whitespace and comments between tokens.  Atomic: a comment is always
-# skipped whole, so no backtrack can find a token (say `2 0 R`) inside it
-_SKIP = rb"(?:[\x00\t\n\x0c\r ]|%[^\r\n]*)*+"
+# whitespace and comments between tokens.  A comment must run to the end
+# of its line, so no backtrack can end it early and find a token (say
+# `2 0 R`) inside it; no token starts with whitespace or `%`, so a match
+# always skips all there is
+_SKIP = rb"[\x00\t\n\x0c\r ]*(?:%[^\r\n]*(?![^\r\n])[\x00\t\n\x0c\r ]*)*"
 _TOKEN_END = rb"(?!" + _REGULAR + rb")"
 _TOKEN_ALT = rb"(<<|>>|[\[\]<>(){}]|/" + _REGULAR + rb"*|" + _REGULAR + rb"+)"
 _SKIP_RE = re.compile(_SKIP)
@@ -85,8 +87,6 @@ _VALUE_ALT = (
     + rb"R" + _TOKEN_END + rb"|" + _TOKEN_ALT + rb")"
 )
 _VALUE = re.compile(_SKIP + _VALUE_ALT)
-# one dict entry: a name key (group 1), then a value as in _VALUE
-_ENTRY = re.compile(_SKIP + rb"(/" + _REGULAR + rb"*)" + _SKIP + _VALUE_ALT)
 _HEX_WS = re.compile(rb"\s")
 
 
@@ -175,18 +175,26 @@ _NUM_RE = re.compile(rb"^[+-]?(\d+\.?\d*|\.\d+)$")
 _NUM_START = b"+-.0123456789"
 
 
-def _parse_value(lx: _Lexer):
+def _read_value(lx: _Lexer) -> re.Match:
+    """Match one value at lx (an `N G R` reference or one token) and
+    move past it."""
     m = _VALUE.match(lx.data, lx.pos)
     if m is None:
         raise PdfError("eof")
     lx.pos = m.end()
+    return m
+
+
+def _parse_value(lx: _Lexer):
+    return _value(lx, _read_value(lx))
+
+
+def _value(lx: _Lexer, m: re.Match):
+    """The value a _VALUE match starts: the reference, or what its token
+    opens, read on from lx."""
     tok = m.group(3)
     if tok is None:
         return Ref(int(m.group(1)), int(m.group(2)))
-    return _parse_value_tok(lx, tok)
-
-
-def _parse_value_tok(lx: _Lexer, tok: bytes):
     c = tok[0]
     if c == 0x2F:  # name
         return ("name", tok[1:].decode("latin-1"))
@@ -196,33 +204,19 @@ def _parse_value_tok(lx: _Lexer, tok: bytes):
     if tok == b"<<":
         d = {}
         while True:
-            m = _ENTRY.match(lx.data, lx.pos)
-            if m is None:  # `>>`, a bad key, or no value before the end
-                key = lx.read_token()
-                if key == b">>":
-                    return d
-                if not key.startswith(b"/"):
-                    raise PdfError(f"bad dict key {key!r}")
-                d[key[1:].decode("latin-1")] = _parse_value(lx)
-                continue
-            lx.pos = m.end()
-            key, num, gen, tok = m.group(1, 2, 3, 4)
-            value = Ref(int(num), int(gen)) if tok is None else _parse_value_tok(lx, tok)
-            d[key[1:].decode("latin-1")] = value
+            key = lx.read_token()
+            if key == b">>":
+                return d
+            if not key.startswith(b"/"):
+                raise PdfError(f"bad dict key {key!r}")
+            d[key[1:].decode("latin-1")] = _parse_value(lx)
     if tok == b"[":
         arr = []
         while True:
-            m = _VALUE.match(lx.data, lx.pos)
-            if m is None:
-                raise PdfError("eof")
-            lx.pos = m.end()
-            num, gen, tok = m.group(1, 2, 3)
-            if tok is None:
-                arr.append(Ref(int(num), int(gen)))
-            elif tok == b"]":
+            m = _read_value(lx)
+            if m.group(3) == b"]":
                 return arr
-            else:
-                arr.append(_parse_value_tok(lx, tok))
+            arr.append(_value(lx, m))
     if tok == b"(":
         return lx.read_literal_string()
     if tok == b"<":
@@ -486,13 +480,16 @@ _CONTENT_TOK = re.compile(
 
 # fast tier: one compiled match per complete common operation.  Each
 # piece lexes exactly as _CONTENT_TOK would from the same position:
-# whitespace is the same class (content streams have no comments here),
-# numbers are atomic so `12` never splits into `1 2`, an operator may not
-# run on into more operator characters, and a literal takes this path
-# only without `\` or nested parentheses (read_literal_string handles
-# those, and any error they raise)
-_W = rb"[\x00\t\n\x0c\r ]*+"
-_NUM = rb"(?>[+-]?(?:\d+\.?\d*|\.\d+))"
+# whitespace is the same class (content streams have no comments here)
+# and no piece starts with it, a number may not run on into a digit or
+# `.` so `12` never splits into `1 2` (`1.5.3` goes to the generic tier),
+# an operator may not run on into more operator characters, and a
+# literal takes this path only without `\` or nested parentheses
+# (read_literal_string handles those, and any error they raise).  So
+# each piece matches in one way only, and a failed match backtracks in
+# linear time
+_W = rb"[\x00\t\n\x0c\r ]*"
+_NUM = rb"[+-]?(?:\d+(?:\.\d*)?|\.\d+)(?![\d.])"
 _OP_END = rb"(?![A-Za-z'\"*])"
 _PLAIN_LIT = rb"\(([^\\()]*)\)"
 _HEX_STR = rb"<([0-9A-Fa-f\s]*)>"
@@ -503,7 +500,7 @@ _FAST_OP = re.compile(
     rb"(?P<show>(?:\((?P<lit>[^\\()]*)\)|<(?P<hex>[0-9A-Fa-f\s]*)>)" + _W
     + rb"(?:Tj|(?P<quote>')))"
     # [ strings and numbers ] TJ
-    rb"|(?P<tj>\[(?P<parts>(?:" + _W + rb"(?:" + _NUM + rb"|\([^\\()]*\)|<[0-9A-Fa-f\s]*>))*+)"
+    rb"|(?P<tj>\[(?P<parts>(?:" + _W + rb"(?:" + _NUM + rb"|\([^\\()]*\)|<[0-9A-Fa-f\s]*>))*)"
     + _W + rb"\]" + _W + rb"TJ)"
     # two numbers a b, then: Td | TD | m x1 y1 l S | c d x y Tm
     rb"|(?P<a>" + _NUM + rb")" + _W + rb"(?P<b>" + _NUM + rb")" + _W + rb"(?:"

@@ -3,10 +3,15 @@ kernel byte-identity on PDF payloads."""
 
 from __future__ import annotations
 
+import importlib
 import json
+import pkgutil
+import re
+import sys
 
 import pytest
 
+import pdf_extractor2_spark
 from pdf_extractor2_spark.plans.extract_job import payload_to_ir
 from pdf_extractor2_spark.sources.corpus import DocSpec, make_doc_spec
 from pdf_extractor2_spark.sources.pdf_reader import PdfDocument, extract_pdf
@@ -297,3 +302,29 @@ def test_span_offsets_after_an_empty_page():
     assert ir.page_texts == ["side et", "", "side tre"]
     joined = "\n\f\n".join(ir.page_texts)
     assert [joined[s["start"]: s["end"]] for s in spans] == ["side et", "side tre"]
+
+
+@pytest.mark.skipif(sys.version_info < (3, 11), reason="importing the package compiled every pattern")
+def test_patterns_compile_on_the_oldest_supported_python():
+    """pyproject.toml declares Python >= 3.10, whose ``re`` has neither
+    possessive quantifiers nor atomic groups."""
+    from re import _constants, _parser
+
+    newer = {_constants.POSSESSIVE_REPEAT, _constants.ATOMIC_GROUP}
+
+    def uses_newer(sub) -> bool:
+        for op, av in sub.data:
+            if op in newer:
+                return True
+            for item in av if isinstance(av, (list, tuple)) else [av]:
+                for part in item if isinstance(item, (list, tuple)) else [item]:
+                    if isinstance(part, _parser.SubPattern) and uses_newer(part):
+                        return True
+        return False
+
+    found = []
+    for info in pkgutil.walk_packages(pdf_extractor2_spark.__path__, "pdf_extractor2_spark."):
+        for name, value in vars(importlib.import_module(info.name)).items():
+            if isinstance(value, re.Pattern) and uses_newer(_parser.parse(value.pattern, value.flags)):
+                found.append(f"{info.name}.{name}")
+    assert found == []

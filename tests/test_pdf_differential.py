@@ -20,6 +20,8 @@ from pdf_extractor2_spark.sources.pdf_reader import (
     PdfDocument,
     Segment,
     TextRun,
+    _Lexer,
+    _parse_value,
     cluster_lines,
     extract_pdf,
     interpret_content,
@@ -148,6 +150,32 @@ def test_mutated_documents(pool_pdfs):
             payload = _mutate(base, rng, _OBJECT_VOCAB + _CONTENT_VOCAB, alphabet)
         new, old = _outcome(extract_pdf, payload), _outcome(oracle.old_extract_pdf, payload)
         assert new == old, (i, payload)
+
+
+_OBJECT_BODIES = [
+    b"<< /Type /Page /Parent 2 0 R /Contents [ 5 0 R +6 0 R ] /MediaBox [0 0 595.3 842] "
+    b"/Resources << /Font << /F1 7 0 R >> >> % 8 0 R\n /K (a\\)b) /H <41 4> /B true /N null >>",
+    b"[ 1 % c\r 0 R 2 0 /Name -.5 [ ] << >> (x) ]",
+    b"<</Length 12 0 R/Filter/FlateDecode>>",
+]
+
+
+def test_object_values_cut_at_every_byte(pool_pdfs):
+    # a value that ends early, inside a dict or an array, at every byte;
+    # the document mutations above seldom reach an object's end of data
+    bodies = list(_OBJECT_BODIES)
+    for payload in pool_pdfs[:40]:
+        for chunk in payload.split(b" obj")[1:]:
+            body = chunk.split(b"endobj")[0].split(b"stream")[0]
+            if len(body) < 400:
+                bodies.append(body)
+    assert len(bodies) > 150
+    for body in bodies:
+        for cut in range(len(body) + 1):
+            data = body[:cut]
+            new = _outcome(lambda: _parse_value(_Lexer(data)))
+            old = _outcome(lambda: oracle.old_parse_value(oracle.OldLexer(data)))
+            assert new == old, data
 
 
 def _random_layout(rng: random.Random):

@@ -5,8 +5,9 @@ size is timed in-process, best of 3.
 
 Shapes: a k x k ruled grid with one run per cell (lattice cell
 assignment), a long content stream of fast-tier operations, an array
-whose ``[`` never closes (generic tier from the first token), and a long
-literal with no ``)``."""
+whose ``[`` never closes (generic tier from the first token), a long
+literal with no ``)``, and a number thousands of digits long that the
+fast tier reads and then rejects."""
 
 from __future__ import annotations
 
@@ -33,6 +34,7 @@ SHAPES = {
     "fast-ops": (400, lambda n: one_page(_fast_ops(n)), 4),
     "unclosed-array": (2000, lambda n: one_page(b"BT [ " + b"(a) 12 <41> " * n + b"TJ ET"), 4),
     "unclosed-literal": (4000, lambda n: one_page(b"BT 1 0 0 1 40 800 Tm (" + b"abc def " * n + b" Tj ET"), 4),
+    "long-number": (5000, lambda n: one_page(b"BT 1 " + b"7" * n + b".. Td ET"), 4),
 }
 
 
