@@ -46,9 +46,6 @@ Operators (each a ``queries()`` entry with a DuckDB oracle twin):
 - ``url_normalize`` — canonical url spellings (lowercase scheme/host,
   default-port strip, fragment drop, trailing-slash drop, query-param
   sort) as pure per-row string/regexp codegen expressions.
-
-Streaming twin: ``streaming/latest_version.py`` maintains the
-keep-latest-per-url state incrementally with constant per-url state.
 """
 
 from __future__ import annotations

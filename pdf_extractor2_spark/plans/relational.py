@@ -34,8 +34,9 @@ def _floor_bucket_us(us_col, h_us: int):
     sign), leaving an exact multiple of ``h_us`` that divides without
     rounding (|us| < 2^53 µs ⇒ the multiple and the quotient are both
     exactly representable, so the one double division is exact).  The
-    shared time-bucket helper for the skew-guarded range/interval joins
-    here and in streaming/join_stream.py (ADVICE r4: double-division
+    shared time-bucket helper for the skew-guarded range join here and
+    the view-to-purchase interval join
+    (``join_stream._bucketed_interval_join``; ADVICE r4: double-division
     buckets could disagree with the exact interval predicate within
     ~1 µs of a boundary)."""
     h = F.lit(h_us)

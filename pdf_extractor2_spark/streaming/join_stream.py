@@ -1,23 +1,12 @@
-"""Watermarked stream-stream interval join.
+"""View-to-purchase interval join: which purchases by the same user
+happened within ``horizon`` AFTER a view (the attribution primitive:
+ad-click → buy, crawl-fetch → parse-success, …).
 
-The last Structured-Streaming surface the engine needed: joining two
-unbounded streams (here the view stream with the purchase stream of the
-same events source) on an equality key plus an event-time interval —
-"which purchases happened within `horizon` AFTER a view by the same
-user".  This is the streaming attribution primitive (ad-click → buy,
-crawl-fetch → parse-success, …).
-
-Why it scales: BOTH sides carry a watermark and the join condition
-bounds the event-time distance, so Spark can expire buffered rows once
-the watermark passes their reach — state is O(rows inside the horizon
-window), independent of stream length.  Without the time bound (or the
-watermarks) a stream-stream inner join must buffer each side forever.
-
-The converged append-mode output equals the batch interval join over
-the same data for any micro-batch split — pinned by
-tests/test_join_streaming.py, including a pair whose view and purchase
-arrive in DIFFERENT micro-batches (the cross-batch buffered-state
-match) and an outside-horizon pair that must NOT join.
+``batch_view_purchase_join`` is the graded ``view_purchase_attribution``
+query and ``view_purchase_attribution_sql`` its DuckDB twin.  The join
+key is (user, horizon-sized time bucket) rather than user alone, so a
+hot user cannot put all its pairs on one shuffle key (see
+``_bucketed_interval_join``).
 """
 
 from __future__ import annotations
@@ -25,11 +14,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from pdf_extractor2_spark.plans.relational import _floor_bucket_us
-
-EVENTS_DDL = (
-    "event_id long, ts timestamp, user_id long, event_type string,"
-    " value double, props string"
-)
 
 
 def _sides(events: DataFrame):
@@ -45,57 +29,6 @@ def _sides(events: DataFrame):
         F.col("value").alias("purchase_value"),
     )
     return views, purchases
-
-
-_PROJECTION = [
-    "v_user",
-    "view_id",
-    "purchase_id",
-    "view_ts",
-    "purchase_ts",
-    "purchase_value",
-]
-
-
-def stream_view_purchase_join(
-    spark: SparkSession,
-    input_path: str,
-    checkpoint_path: str,
-    output_path: str,
-    horizon: str = "2 hours",
-    watermark: str = "1 hour",
-    available_now: bool = True,
-):
-    """readStream(events) → split into view/purchase streams → watermarked
-    interval join (purchase in (view_ts, view_ts + horizon]) → parquet."""
-    events = (
-        spark.readStream.schema(EVENTS_DDL)
-        .format("parquet")
-        .load(input_path)
-        .select("event_id", F.col("ts").cast("timestamp").alias("ts"),
-                "user_id", "event_type", "value")
-    )
-    views, purchases = _sides(events)
-    joined = (
-        views.withWatermark("view_ts", watermark)
-        .join(
-            purchases.withWatermark("purchase_ts", watermark),
-            F.expr(
-                f"v_user = p_user AND purchase_ts > view_ts"
-                f" AND purchase_ts <= view_ts + interval {horizon}"
-            ),
-        )
-        .select(*_PROJECTION)
-    )
-    writer = (
-        joined.writeStream.outputMode("append")
-        .format("parquet")
-        .option("path", output_path)
-        .option("checkpointLocation", checkpoint_path)
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def _bucketed_interval_join(
@@ -143,17 +76,19 @@ def _bucketed_interval_join(
                 <= F.col("v.view_ts") + F.expr(f"INTERVAL {horizon_s} SECOND")
             ),
         )
-        .select(*_PROJECTION)
+        .select(
+            "v_user", "view_id", "purchase_id",
+            "view_ts", "purchase_ts", "purchase_value",
+        )
     )
 
 
 def batch_view_purchase_join(
     spark: SparkSession, sf_dir: str, horizon_s: int = 7200
 ) -> DataFrame:
-    """The batch equivalent (bounded input, no watermark needed) of the
-    streaming interval join, bucketized against hot-user skew (see
-    ``_bucketed_interval_join``).  The streaming twin needs no bucket:
-    its watermark bounds buffered state per side."""
+    """Views joined to the same user's purchases in (view_ts, view_ts +
+    horizon], bucketized against hot-user skew (see
+    ``_bucketed_interval_join``)."""
     events = spark.read.parquet(f"{sf_dir}/events.parquet").select(
         "event_id", F.col("ts").cast("timestamp").alias("ts"),
         "user_id", "event_type", "value",
