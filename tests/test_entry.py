@@ -4,7 +4,9 @@ order-insensitive values)."""
 
 from __future__ import annotations
 
+import ast
 import math
+from pathlib import Path
 
 import duckdb
 import pytest
@@ -111,3 +113,68 @@ def test_no_unhashable_columns_in_driver_projections(spark):
             assert not isinstance(
                 f.dataType, (T.ArrayType, T.MapType, T.StructType)
             ), f"{name}.{f.name} is {f.dataType.simpleString()}"
+
+
+REPO = Path(__file__).resolve().parents[1]
+PACKAGE = "pdf_extractor2_spark"
+ENTRY_POINTS = [
+    REPO / "__spark_entry__.py",
+    REPO / "bench.py",
+    *sorted((REPO / "perfbench").glob("*.py")),
+    REPO / PACKAGE / "plans" / "submit.py",
+    REPO / PACKAGE / "serve.py",
+    REPO / PACKAGE / "streaming" / "stream_job.py",
+]
+
+
+def _module_name(path: Path) -> str:
+    parts = path.relative_to(REPO).with_suffix("").parts
+    return ".".join(parts[:-1] if parts[-1] == "__init__" else parts)
+
+
+def _module_file(name: str) -> Path | None:
+    base = REPO.joinpath(*name.split("."))
+    for path in (base.with_suffix(".py"), base / "__init__.py"):
+        if path.is_file():
+            return path
+    return None
+
+
+def _imported_names(path: Path):
+    """Dotted names ``path`` imports anywhere, function bodies included;
+    ``from a import b`` yields both ``a`` and ``a.b`` (b may be a module)."""
+    name = _module_name(path)
+    package = name if path.name == "__init__.py" else name.rpartition(".")[0]
+    for node in ast.walk(ast.parse(path.read_text(encoding="utf-8"))):
+        if isinstance(node, ast.Import):
+            yield from (alias.name for alias in node.names)
+        elif isinstance(node, ast.ImportFrom):
+            base = node.module or ""
+            if node.level:
+                anchor = package.split(".")[: package.count(".") + 2 - node.level]
+                base = ".".join(anchor + ([node.module] if node.module else []))
+            yield base
+            yield from (f"{base}.{alias.name}" for alias in node.names)
+
+
+def test_every_package_module_is_reached_from_an_entry_point():
+    """A module that no entry point imports (directly, through other
+    package modules, or inside a function) is code only its own tests
+    run: delete it with its tests rather than keep it."""
+    reached = set()
+    todo = list(ENTRY_POINTS)
+    while todo:
+        path = todo.pop()
+        if path in reached:
+            continue
+        reached.add(path)
+        for name in _imported_names(path):
+            parts = name.split(".")
+            for i in range(1, len(parts) + 1):
+                found = _module_file(".".join(parts[:i]))
+                if found is not None and found not in reached:
+                    todo.append(found)
+    modules = sorted((REPO / PACKAGE).rglob("*.py"))
+    unreached = [str(m.relative_to(REPO)) for m in modules if m not in reached]
+    assert modules
+    assert not unreached, unreached
