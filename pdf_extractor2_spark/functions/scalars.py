@@ -50,7 +50,14 @@ _PHONE_BARE = re.compile(r"\b(\d{8})\b")
 _PHONE_SEP = re.compile(r"[\s\-]")
 _PHONE_YEARLIKE = re.compile(r"(19|20)\d{2}")
 
+# the reference's pattern, kept as the oracle of ``_scan_emails``, which
+# matches the same addresses from its two halves
 _EMAIL = re.compile(r"\b[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Z|a-z]{2,}\b")
+_EMAIL_LOCAL_CHARS = frozenset(
+    "ABCDEFGHIJKLMNOPQRSTUVWXYZabcdefghijklmnopqrstuvwxyz0123456789._%+-"
+)
+_EMAIL_DOMAIN = re.compile(r"[A-Za-z0-9.-]+\.[A-Z|a-z]{2,}\b")
+_WORD_BOUNDARY = re.compile(r"\b")
 
 _BUDGET_PATTERNS = (
     re.compile(r"(\d+(?:[,.]\d+)?\s*(?:mia|mio)\.?\s*(?:kr)?)", re.IGNORECASE),
@@ -322,7 +329,38 @@ def extract_emails(text: str | None) -> list[str]:
     """
     if text is None or not text:
         return []
-    return list(set(_EMAIL.findall(str(text))))
+    s = str(text)
+    if "@" not in s:
+        return []
+    return list(set(_scan_emails(s)))
+
+
+def _scan_emails(s: str) -> list[str]:
+    """``_EMAIL.findall(s)`` in linear time.
+
+    The local part cannot contain ``@``, so a match starting anywhere in
+    a run of local-part characters runs to the end of that run, which
+    must be an ``@``; whether the domain matches depends on that ``@``
+    alone.  ``findall`` retries the domain from every ``\\b`` in the run
+    (quadratic in the run length); here each ``@`` tests its domain
+    once and the match starts at the leftmost ``\\b`` of the run that is
+    not before the previous match's end.
+    """
+    found = []
+    pos = 0
+    at = s.find("@")
+    while at != -1:
+        domain = _EMAIL_DOMAIN.match(s, at + 1)
+        if domain:
+            start = at
+            while start > pos and s[start - 1] in _EMAIL_LOCAL_CHARS:
+                start -= 1
+            boundary = _WORD_BOUNDARY.search(s, start, at)
+            if boundary and boundary.start() < at:
+                found.append(s[boundary.start():domain.end()])
+                pos = domain.end()
+        at = s.find("@", at + 1)  # a domain holds no "@"
+    return found
 
 
 # --------------------------------------------------------------------------

@@ -1,13 +1,15 @@
-"""Time envelope of the PDF front-end on shapes that stress it: the
-kernel's time on a payload grown 4x must grow less than 8x (linear
-reads about 4, quadratic 16; a ratio cancels the host's speed).  Each
-size is timed in-process, best of 3.
+"""Time envelope of the kernel on shapes that stress it: the kernel's
+time on a payload grown 4x must grow less than 8x (linear reads about
+4, quadratic 16; a ratio cancels the host's speed).  Each size is timed
+in-process, best of 3.
 
-Shapes: a k x k ruled grid with one run per cell (lattice cell
+PDF shapes: a k x k ruled grid with one run per cell (lattice cell
 assignment), a long content stream of fast-tier operations, an array
 whose ``[`` never closes (generic tier from the first token), a long
 literal with no ``)``, and a number thousands of digits long that the
-fast tier reads and then rejects."""
+fast tier reads and then rejects.  HTML shape: a paragraph of ``a.``
+runs ending in an ``@`` with no domain (every start in the run once
+scanned to the same ``@``)."""
 
 from __future__ import annotations
 
@@ -35,6 +37,7 @@ SHAPES = {
     "unclosed-array": (2000, lambda n: one_page(b"BT [ " + b"(a) 12 <41> " * n + b"TJ ET"), 4),
     "unclosed-literal": (4000, lambda n: one_page(b"BT 1 0 0 1 40 800 Tm (" + b"abc def " * n + b" Tj ET"), 4),
     "long-number": (5000, lambda n: one_page(b"BT 1 " + b"7" * n + b".. Td ET"), 4),
+    "email-run": (2000, lambda n: b"<p>" + b"a." * n + b"@</p>", 4),
 }
 
 

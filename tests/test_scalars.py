@@ -178,3 +178,38 @@ def test_clean_multiline_long_input_skips_cache():
     out = k.clean_multiline(text)
     assert k._clean_multiline_core.cache_info().currsize == size
     assert out == k._clean_multiline_core(text)  # what the cached path returns
+
+
+# ---------------------------------------------------------------------------
+# e-mail scanner vs the reference pattern (runs without the reference)
+# ---------------------------------------------------------------------------
+
+_EMAIL_SHAPES = [
+    "a." * 2000 + "@",
+    "a." * 2000 + "@ab.cd",
+    "x" * 3000 + "@ab.cd",
+    "x@ab.cd.ef@gh.ij",
+    "x@ab.cd@ef.gh",
+    "æ.@ab.cd",
+    ".@ab.cd",
+    "a@b.c|d",
+    "a@b.cd|",
+    "a@b|.cd ok@x.yz",
+    "@" * 50 + "a@b.cd",
+    "a@" * 500 + "b.cd",
+    "a.b@c.d.ef-g.hi jens.hansen@firma.dk, tlf 12 34 56 78",
+]
+
+
+@pytest.mark.parametrize("alphabet", ["ab.@-_ %Z1|", "ab.@-_ %Z1|æ\n+"])
+def test_email_scanner_matches_reference_pattern(alphabet):
+    import random
+
+    rng = random.Random(20240)
+    texts = [
+        "".join(rng.choice(alphabet) for _ in range(rng.randint(0, 40)))
+        for _ in range(20000)
+    ]
+    for text in texts + _EMAIL_SHAPES:
+        assert k._scan_emails(text) == k._EMAIL.findall(text), repr(text[:80])
+        assert k.extract_emails(text) == list(set(k._EMAIL.findall(text)))
