@@ -73,10 +73,15 @@ def get_spark(
         )
         # * shuffled-hash over sort-merge for equi-joins whose build
         #   side fits a per-partition hash map: skips two sorts per
-        #   join (LSH band/self joins, posting-list joins); the AQE
-        #   rewrite threshold bounds the build partition at 64 MB, well
-        #   inside executor memory at any corpus scale (bigger
-        #   partitions keep sort-merge and its graceful spill)
+        #   join (LSH band/self joins, posting-list joins).  The 64 MB
+        #   threshold below bounds the build partition only on the AQE
+        #   sort-merge → shuffled-hash rewrite (bigger partitions keep
+        #   sort-merge and its graceful spill).  With this flag off the
+        #   STATIC planner also picks shuffled-hash, from Catalyst size
+        #   estimates (build side < autoBroadcastJoinThreshold ×
+        #   numShufflePartitions), with no per-partition bound: a
+        #   mis-estimated or skewed build partition can run out of
+        #   memory where sort-merge would have spilled
         .config("spark.sql.join.preferSortMergeJoin", "false")
         .config(
             "spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold",
