@@ -150,8 +150,9 @@ def _imported_names(path: Path):
             yield from (alias.name for alias in node.names)
         elif isinstance(node, ast.ImportFrom):
             base = node.module or ""
-            if node.level:
-                anchor = package.split(".")[: package.count(".") + 2 - node.level]
+            if node.level:  # relative: level 1 is the package itself
+                parts = package.split(".")
+                anchor = parts[: len(parts) + 1 - node.level]
                 base = ".".join(anchor + ([node.module] if node.module else []))
             yield base
             yield from (f"{base}.{alias.name}" for alias in node.names)
