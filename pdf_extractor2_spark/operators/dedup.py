@@ -990,8 +990,8 @@ def _kgram_duck(k: int) -> str:
     return f"list_distinct([{elems} for i in generate_series(1, len(t) - {k - 1})])"
 
 
-def duplicate_span_stats(spark: SparkSession, sf_dir: str, k: int = 8,
-                         with_trim: bool = True) -> DataFrame:
+def duplicate_span_stats(spark: SparkSession, sf_dir: str,
+                         k: int = 8) -> DataFrame:
     """Per-document duplicated-span fraction: the share of a document's
     distinct k-token windows (k=8 — long enough that a shared window is
     verbatim copied text, the signal suffix-array substring dedup à la
@@ -1004,15 +1004,24 @@ def duplicate_span_stats(spark: SparkSession, sf_dir: str, k: int = 8,
     than silently vanishing (downstream "drop high-dup docs" joins must
     see an explicit zero, not a missing row).
 
-    Round 5 (``with_trim``, default): the row also carries the REMOVAL
-    columns from ``trim_duplicate_spans`` — n_tokens / n_kept_tokens /
-    trimmed_len / trimmed_digest — and BOTH families derive from ONE
-    positional window stream off one persisted base (review finding:
-    the first fold exploded + hashed every window twice); the stats
-    columns are then distinct-sid aggregates over that stream, provably
-    the same values (n_spans = # distinct window texts per doc, dup
-    gate = window text in ≥ 2 docs), pinned equal to the legacy
-    ``with_trim=False`` computation by tests/test_trim_spans.py.
+    The row also carries the substring-dedup REMOVAL (Lee et al.'s
+    "Deduplicating Training Data Makes Language Models Better", the
+    suffix-array substring dedup): every token covered by ANY k-token
+    window whose text occurs in at least one other document is deleted,
+    and the exact cleaned text is proved cross-engine via its digest —
+    ``n_tokens``, ``n_kept_tokens``, ``trimmed_len`` (chars) and
+    ``trimmed_digest`` (md5 of the cleaned text: the full trimmed
+    corpus, verifiable without shipping text through the driver
+    compare).  BOTH families derive from ONE positional window stream
+    off one persisted base; the stats columns are distinct-sid
+    aggregates over that stream (n_spans = # distinct window texts per
+    doc, dup gate = window text in ≥ 2 docs).
+
+    The window key is ``md5(window text)`` — NOT the 56-bit rolling sid
+    the report-only operators use: removal mutates the deliverable
+    corpus, and at 10^12 windows a 2^56 space makes birthday collisions
+    — silently deleting UNIQUE text — statistically certain, where
+    2^128 keeps them at ~1e-14.
 
     Plan: ONE persisted base scan feeds the doc_id universe, the token
     stream, and the (doc_id, pos, window-key) stream; the stream feeds
@@ -1020,31 +1029,13 @@ def duplicate_span_stats(spark: SparkSession, sf_dir: str, k: int = 8,
     skew-safe; the per-doc distinct totals; the coverage join back).
     The joins stream hot windows through hash joins — no posting-list
     arrays materialize anywhere, so there is nothing for a boilerplate
-    window to OOM."""
-    if not with_trim:
-        _scoped_clear()
-        base = _scoped_persist(
-            _spread(spark, _docs(spark, sf_dir).select("doc_id", "text"))
-            .select("doc_id", F.expr(_TOKS_NN_EXPR).alias("toks"))
-        )
-        raw = _scoped_persist(
-            base.select("doc_id", F.explode(F.expr(_kgram_spark(k))).alias("shingle"))
-            .select("doc_id", F.expr(_SID_EXPR).alias("sid"))
-        )
-        dup_sids = (
-            raw.groupBy("sid")
-            .agg(F.count("*").alias("df"))
-            .where(F.col("df") >= 2)
-            .select("sid")
-        )
-        per_doc = raw.groupBy("doc_id").agg(F.count("*").alias("n_spans"))
-        dup_per_doc = (
-            raw.join(dup_sids, "sid")
-            .groupBy("doc_id")
-            .agg(F.count("*").alias("n_dup_spans"))
-        )
-        return _span_stats_assemble(base, per_doc, dup_per_doc)
-
+    window to OOM.  Removal plan, at 100-TB scale: positional windows
+    are ONE guarded transform+explode (no Spark descending-``sequence``
+    trap — the ``n < k`` guard returns an empty array); covered
+    positions explode ×k off the streamed join; the cleaned text is
+    rebuilt per document from a sorted (pos, token) collect — bounded by
+    single-document length, the same row-size envelope every other
+    per-doc operator already assumes."""
     base, wins, dup_sids = _span_streams(spark, sf_dir, k)
     docsid = wins.select("doc_id", "sid").distinct()
     per_doc = docsid.groupBy("doc_id").agg(F.count("*").alias("n_spans"))
@@ -1053,14 +1044,8 @@ def duplicate_span_stats(spark: SparkSession, sf_dir: str, k: int = 8,
         .groupBy("doc_id")
         .agg(F.count("*").alias("n_dup_spans"))
     )
-    stats = _span_stats_assemble(base, per_doc, dup_per_doc)
-    return stats.join(_trim_from(base, wins, dup_sids, k), "doc_id")
-
-
-def _span_stats_assemble(base: DataFrame, per_doc: DataFrame,
-                         dup_per_doc: DataFrame) -> DataFrame:
     frac = round_half_up_expr("CAST(n_dup_spans AS DOUBLE) / n_spans", 6)
-    return (
+    stats = (
         base.select("doc_id")
         .join(per_doc, "doc_id", "left")
         .join(dup_per_doc, "doc_id", "left")
@@ -1074,40 +1059,7 @@ def _span_stats_assemble(base: DataFrame, per_doc: DataFrame,
             F.expr(f"case when n_spans = 0 then CAST(0 AS DOUBLE) else {frac} end"),
         )
     )
-
-
-def trim_duplicate_spans(spark: SparkSession, sf_dir: str,
-                         k: int = 8) -> DataFrame:
-    """Substring-level dedup REMOVAL — the operation `duplicate_span_
-    stats` only reports (Lee et al.'s "Deduplicating Training Data
-    Makes Language Models Better", the suffix-array substring dedup):
-    delete every token covered by ANY k-token window whose text occurs
-    in at least one other document, and prove the exact cleaned text
-    cross-engine via its digest.
-
-    Output per document (every document appears): ``n_tokens``,
-    ``n_kept_tokens``, ``trimmed_len`` (chars), ``trimmed_digest``
-    (md5 of the cleaned text — the full trimmed corpus, verifiable
-    without shipping text through the driver compare).
-
-    Plan, at 100-TB scale: positional windows are ONE guarded
-    transform+explode (no Spark descending-``sequence`` trap — the
-    ``n < k`` guard returns an empty array); "window text occurs in
-    ≥ 2 docs" is a two-level (sid, doc) → sid aggregate, partial-
-    aggregable and hot-gram-safe (a boilerplate gram arrives at its
-    reducer as per-partition partials, never a posting list); covered
-    positions explode ×k off the streamed join; the cleaned text is
-    rebuilt per document from a sorted (pos, token) collect — bounded
-    by single-document length, the same row-size envelope every other
-    per-doc operator already assumes.
-
-    The window key is ``md5(window text)`` — NOT the 56-bit rolling
-    sid the report-only operators use (review finding: removal mutates
-    the deliverable corpus, and at 10^12 windows a 2^56 space makes
-    birthday collisions — silently deleting UNIQUE text — statistically
-    certain, where 2^128 keeps them at ~1e-14)."""
-    base, wins, dup_sids = _span_streams(spark, sf_dir, k)
-    return _trim_from(base, wins, dup_sids, k)
+    return stats.join(_trim_from(base, wins, dup_sids, k), "doc_id")
 
 
 def _span_streams(spark: SparkSession, sf_dir: str, k: int):
@@ -1192,12 +1144,11 @@ def _trim_sql_ctes(k: int) -> str:
     """The trim pipeline as a WITH-list fragment over an existing CTE
     ``toks(doc_id, t)``; names tw_-prefixed so it composes with the
     span-stats CTEs; ends with ``trim_doc(doc_id, n_tokens,
-    n_kept_tokens, trimmed_len, trimmed_digest)``.  SINGLE source —
-    embedded by both ``trim_duplicate_spans_sql`` and
-    ``duplicate_span_stats_sql`` (whose fold also derives its stats
-    columns from ``tw_ds``/``tw_dup``, mirroring the shared Spark
-    stream).  Window key = md5(window text) — collision-safe for the
-    removal path (see ``trim_duplicate_spans``)."""
+    n_kept_tokens, trimmed_len, trimmed_digest)``, embedded by
+    ``duplicate_span_stats_sql`` (whose stats columns also derive from
+    ``tw_ds``/``tw_dup``, mirroring the shared Spark stream).  Window
+    key = md5(window text) — collision-safe for the removal path (see
+    ``duplicate_span_stats``)."""
     elems = " || ' ' || ".join(f"t[i+{j}]" for j in range(k))
     return f"""
         tw_wins AS (SELECT doc_id,
@@ -1231,46 +1182,10 @@ def _trim_sql_ctes(k: int) -> str:
                      FROM toks b LEFT JOIN tw_kept w USING (doc_id))"""
 
 
-def trim_duplicate_spans_sql(table: str = "documents", k: int = 8) -> str:
-    return f"""
-        WITH toks AS ({_TOKS_NN_SQL.format(table=table)}),
-        {_trim_sql_ctes(k)}
-        SELECT doc_id, n_tokens, n_kept_tokens, trimmed_len, trimmed_digest
-        FROM trim_doc
-    """
-
-
-def duplicate_span_stats_sql(table: str = "documents", k: int = 8,
-                             with_trim: bool = True) -> str:
+def duplicate_span_stats_sql(table: str = "documents", k: int = 8) -> str:
     frac = round_half_up_expr("CAST(n_dup_spans AS DOUBLE) / n_spans", 6)
-    stats_ctes = f"""
-        ex AS (SELECT doc_id, unnest(CASE WHEN len(t) < {k} THEN []
-                                          ELSE {_kgram_duck(k)} END) AS shingle
-               FROM toks),
-        ids AS (SELECT doc_id, {_SID_SQL} AS sid FROM ex),
-        dup_sids AS (SELECT sid FROM ids GROUP BY sid HAVING COUNT(*) >= 2),
-        per_doc AS (SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS n_spans
-                    FROM ids GROUP BY 1),
-        dup_per_doc AS (SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS n_dup_spans
-                        FROM ids JOIN dup_sids USING (sid) GROUP BY 1),
-        span_doc AS (
-          SELECT doc_id, n_spans, n_dup_spans,
-                 CASE WHEN n_spans = 0 THEN CAST(0 AS DOUBLE)
-                      ELSE {frac} END AS dup_span_frac
-          FROM (SELECT b.doc_id,
-                       COALESCE(p.n_spans, 0) AS n_spans,
-                       COALESCE(d.n_dup_spans, 0) AS n_dup_spans
-                FROM (SELECT doc_id FROM toks) b
-                LEFT JOIN per_doc p USING (doc_id)
-                LEFT JOIN dup_per_doc d USING (doc_id)))"""
-    if not with_trim:
-        return f"""
-        WITH toks AS ({_TOKS_NN_SQL.format(table=table)}),
-        {stats_ctes}
-        SELECT doc_id, n_spans, n_dup_spans, dup_span_frac FROM span_doc
-    """
-    # the fold's stats columns derive from the SAME window stream as the
-    # trim (tw_ds / tw_dup), mirroring the shared Spark plan
+    # the stats columns derive from the SAME window stream as the trim
+    # (tw_ds / tw_dup), mirroring the shared Spark plan
     return f"""
         WITH toks AS ({_TOKS_NN_SQL.format(table=table)}),
         {_trim_sql_ctes(k)},

@@ -4,10 +4,13 @@ Two search paths:
   * brute-force cosine top-k — the exact baseline: broadcast the query
     vector, JVM-side ``zip_with``/``aggregate`` dot products (no Python),
     one narrow pass over the table;
-  * IVF-style bucketed search — the scale path: restrict the scan to the
-    query's coarse cell (here the ``label`` column stands in for the
-    quantizer assignment), cutting the candidate set by the number of
-    lists; same exact arithmetic inside the cell.
+  * IVF search — the scale path: a deterministic k-means quantizer
+    partitions the vectors into cells stored as separate partitions, and
+    a query scans only its nearest cells, cutting the candidate set by
+    the number of lists; same exact arithmetic inside the cells.
+
+Near-duplicate pairs (banded hyperplane-LSH) and SemDeDup pruning build
+on the same dot products and the same quantizer.
 
 All floats are promoted to double before accumulation (sequential list
 order in both engines) and similarities are rounded to 4 decimals so the
@@ -15,8 +18,6 @@ DuckDB oracle hashes identically.
 """
 
 from __future__ import annotations
-
-import functools
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
@@ -137,10 +138,9 @@ def _ivf_model(
 
 
 def _ivf_model_from(
-    emb: DataFrame, n_cells: int = N_IVF_CELLS, n_iters: int = 1
+    emb: DataFrame, n_cells: int = N_IVF_CELLS
 ) -> tuple[DataFrame, DataFrame]:
-    """Deterministic k-means quantizer (``n_iters`` Lloyd iterations,
-    default 1 — the graded contract's setting):
+    """Deterministic k-means quantizer (one Lloyd iteration):
 
       1. seeds = the embeddings of the ``n_cells`` lowest vec_ids (fixed,
          no RNG — restart- and engine-stable);
@@ -152,43 +152,31 @@ def _ivf_model_from(
 
     Returns (assignments (vec_id, cell), centroids (cell, cvec)).
     Every step is a broadcast join or a hash aggregate — the same plan
-    runs at 10^9 vectors (assignment cost n·C dot products; real systems
-    block it as GEMM inside a pandas UDF, same shape).
+    runs at 10^9 vectors (assignment cost n·C dot products).
 
     Takes the embeddings FRAME (not a path) so multi-branch callers —
-    ``semdedup``, the ``dedup_embedding_cosine`` fold — can pass their
-    one persisted scan and keep the single-FileScan plan shape.
-
-    ``n_iters > 1`` repeats assign→update before the final assignment —
-    the recall knob measured in BENCH/BASELINE.md (extra iterations
-    tighten cells, raising probe-1 recall at zero query-time cost; each
-    iteration is the same broadcast-join + hash-aggregate pair, so the
-    build cost is linear in T with unchanged plan shape)."""
-    cents = emb.where(F.col("vec_id") < n_cells).select(
+    the ``dedup_embedding_cosine`` fold, ``training_corpus_filter`` —
+    can pass their one persisted scan and keep the single-FileScan plan
+    shape.  More Lloyd iterations were measured (BENCH/BASELINE.md) and
+    left probe-1 recall nearly unchanged (0.364 at T=1 vs 0.396 at T=5
+    on sf0.1), so the quantizer takes one."""
+    seeds = emb.where(F.col("vec_id") < n_cells).select(
         F.col("vec_id").cast("int").alias("cell"), F.col("embedding").alias("cvec")
     )
-    for _ in range(n_iters):
-        a = _assign_cells(emb, cents)
-        cents = (
-            a.join(emb, "vec_id")
-            .select("cell", F.posexplode("embedding").alias("pos", "val"))
-            .groupBy("cell", "pos")
-            .agg(F.expr(_r6("avg(cast(val as double))")).alias("cval"))
-            .groupBy("cell")
-            .agg(
-                F.expr(
-                    "transform(array_sort(collect_list(struct(pos, cval))),"
-                    " s -> s.cval)"
-                ).alias("cvec")
-            )
+    cents = (
+        _assign_cells(emb, seeds).join(emb, "vec_id")
+        .select("cell", F.posexplode("embedding").alias("pos", "val"))
+        .groupBy("cell", "pos")
+        .agg(F.expr(_r6("avg(cast(val as double))")).alias("cval"))
+        .groupBy("cell")
+        .agg(
+            F.expr(
+                "transform(array_sort(collect_list(struct(pos, cval))),"
+                " s -> s.cval)"
+            ).alias("cvec")
         )
+    )
     return _assign_cells(emb, cents), cents
-
-
-def ivf_cell_assignments(
-    spark: SparkSession, sf_dir: str, n_cells: int = N_IVF_CELLS
-) -> DataFrame:
-    return _ivf_model(spark, sf_dir, n_cells)[0]
 
 
 def build_ivf_index(
@@ -273,13 +261,6 @@ def ann_ivf_topk(
     )
 
 
-def ann_ivf_multiprobe(
-    spark: SparkSession, sf_dir: str, query_vec_id: int = 0, k: int = 5,
-) -> DataFrame:
-    """IVF with 3 probe cells — the recall knob exercised."""
-    return ann_ivf_topk(spark, sf_dir, query_vec_id=query_vec_id, k=k, n_probe=3)
-
-
 def ann_ivf(spark: SparkSession, sf_dir: str, query_vec_id: int = 0,
             k: int = 5) -> DataFrame:
     """The IVF search at BOTH probe settings as one driver row —
@@ -313,59 +294,39 @@ def ann_ivf(spark: SparkSession, sf_dir: str, query_vec_id: int = 0,
 # cluster, colliding less at the same recall).
 N_SIG_BANDS = 9
 BAND_DIMS = 7
-PROBE_H1 = True
-
-
-def embedding_near_dup_pairs(
-    spark: SparkSession, sf_dir: str, threshold: float = 0.35,
-    n_bands: int = N_SIG_BANDS, band_dims: int = BAND_DIMS,
-    probe_h1: bool = PROBE_H1,
-) -> DataFrame:
-    """Embedding-cosine near-duplicate pairs, banded hyperplane-LSH:
-    the sign pattern of the first ``n_bands*band_dims`` components is
-    split into ``n_bands`` bands of ``band_dims`` sign bits; candidates
-    are pairs agreeing on ≥1 whole band (the same banding idea as
-    MinHash-LSH), exact cosine is computed only for candidates.
-
-    ``probe_h1=True`` (the default since round 5) adds Hamming-1
-    MULTIPROBE: one side additionally emits every 1-bit flip of each
-    band key, so a pair whose band keys differ in a single sign bit
-    still collides — the standard multiprobe-LSH trick for recovering
-    pairs that straddle one hyperplane.  Measured on sf0.1 against
-    all-pairs ground truth (BENCH/neardup_recall_sweep.py, curve in
-    BENCH/BASELINE.md): the round-4 default (8 bands × 5 bits, no
-    probe) recalled 0.546 of true cos≥0.35 pairs at 22% of all-pairs
-    cost; the new default (9 × 7 + H1) recalls 0.872 at 44% — and 1.0
-    for every pair above cos 0.55 (the production near-dup regime).
-    Axis signs beat Rademacher random-projection bits on this corpus
-    (measured 0.80-0.81 recall at HIGHER cost for 16-20 rproj bands —
-    the cluster structure is axis-aligned).
-
-    Candidate count still scales with bucket collisions, never n²; the
-    recall/cost knobs are (n_bands, band_dims, probe_h1).
-
-    Plan shape: the embeddings scan is persisted and referenced four
-    times from the cache (band side a, band side b, exact-score side a,
-    exact-score side b) — ONE FileScan of the vector table per query,
-    where the round-2 8-band union re-scanned it 16× (pinned by
-    tests/test_plans.py::test_embedding_near_dup_scans_embeddings_once).
-    The bands are a single explode projection, not an n_bands-way
-    union; the H1 probes are a second explode over the band frame (the
-    probe side grows band_dims+1×, the build side does not)."""
-    from .dedup import _scoped_clear, _scoped_persist
-
-    _scoped_clear()
-    emb = _scoped_persist(_emb(spark, sf_dir))
-    return _near_dup_pairs_from(emb, threshold, n_bands, band_dims, probe_h1)
 
 
 def _near_dup_pairs_from(
     emb: DataFrame, threshold: float, n_bands: int, band_dims: int,
-    probe_h1: bool = PROBE_H1,
 ) -> DataFrame:
-    """Core of the banded hyperplane-LSH near-dup join over an
-    ALREADY-PERSISTED embeddings frame (every branch — band a/b,
-    exact-score a/b — reads the caller's cache)."""
+    """Embedding-cosine near-duplicate pairs, banded hyperplane-LSH,
+    over an ALREADY-PERSISTED embeddings frame (every branch — band
+    a/b, exact-score a/b — reads the caller's cache, so the query keeps
+    ONE FileScan of the vector table; pinned by
+    tests/test_plans.py::test_embedding_near_dup_scans_embeddings_once).
+
+    The sign pattern of the first ``n_bands*band_dims`` components is
+    split into ``n_bands`` bands of ``band_dims`` sign bits; candidates
+    are pairs agreeing on ≥1 whole band (the same banding idea as
+    MinHash-LSH), exact cosine is computed only for candidates.  One
+    side additionally emits every 1-bit flip of each band key
+    (Hamming-1 MULTIPROBE), so a pair whose band keys differ in a
+    single sign bit still collides — the standard multiprobe-LSH trick
+    for pairs that straddle one hyperplane.  Measured on sf0.1 against
+    all-pairs ground truth (BENCH/neardup_recall_sweep.py, curve in
+    BENCH/BASELINE.md): 8 bands × 5 bits without the probe recalled
+    0.546 of true cos≥0.35 pairs at 22% of all-pairs cost; the default
+    9 × 7 + H1 recalls 0.872 at 44% — and 1.0 for every pair above cos
+    0.55 (the production near-dup regime).  Axis signs beat Rademacher
+    random-projection bits on this corpus (0.80-0.81 recall at HIGHER
+    cost for 16-20 rproj bands — the cluster structure is
+    axis-aligned).
+
+    Candidate count scales with bucket collisions, never n²; the
+    recall/cost knobs are (n_bands, band_dims).  The bands are a single
+    explode projection, not an n_bands-way union; the H1 probes are a
+    second explode over the band frame (the probe side grows
+    band_dims+1×, the build side does not)."""
     band_structs = [
         F.struct(
             F.lit(j).alias("band"),
@@ -382,21 +343,16 @@ def _near_dup_pairs_from(
         "vec_id", F.explode(F.array(*band_structs)).alias("bk")
     ).select("vec_id", F.col("bk.band").alias("band"), F.col("bk.key").alias("key"))
 
-    if probe_h1:
-        flips = bands.select(
-            "vec_id", "band",
-            F.explode(F.expr(
-                f"transform(sequence(1, {band_dims}), f -> concat("
-                "substring(key, 1, f - 1),"
-                " case when substring(key, f, 1) = '1' then '0' else '1' end,"
-                " substring(key, f + 1)))"
-            )).alias("key"),
-        )
-        probed = bands.unionByName(flips)
-    else:
-        probed = bands
-
-    a, b = probed.alias("a"), bands.alias("b")
+    flips = bands.select(
+        "vec_id", "band",
+        F.explode(F.expr(
+            f"transform(sequence(1, {band_dims}), f -> concat("
+            "substring(key, 1, f - 1),"
+            " case when substring(key, f, 1) = '1' then '0' else '1' end,"
+            " substring(key, f + 1)))"
+        )).alias("key"),
+    )
+    a, b = bands.unionByName(flips).alias("a"), bands.alias("b")
     cand = (
         a.join(
             b,
@@ -501,47 +457,29 @@ def _semdedup_parts_from(
     return cells, pairs
 
 
-def semdedup(
-    spark: SparkSession, sf_dir: str, tau: float = SEMDEDUP_TAU,
-    n_cells: int = N_IVF_CELLS,
-) -> DataFrame:
-    """Standalone SemDeDup pass (see ``_semdedup_from``): one persisted
-    embeddings scan feeds the quantizer's three reads and the pair
-    join's two sides."""
-    from .dedup import _scoped_clear, _scoped_persist
-
-    _scoped_clear()
-    emb = _scoped_persist(_emb(spark, sf_dir))
-    return _semdedup_from(emb, tau, n_cells)
-
-
 def embedding_near_dup_labeled(
     spark: SparkSession, sf_dir: str, threshold: float = 0.35,
     n_bands: int = N_SIG_BANDS, band_dims: int = BAND_DIMS,
-    probe_h1: bool = PROBE_H1, with_semdedup: bool = True,
     tau: float = SEMDEDUP_TAU,
 ) -> DataFrame:
-    """Near-dup pairs enriched with each side's label and the label's
-    centroid-norm profile (``label_centroid_norms``) — one driver row
-    grading BOTH the banded-LSH pair search and the per-label norm
-    aggregate.  All five branches (bands a/b, exact-score a/b, labels,
-    norms) read the ONE persisted embeddings scan; the per-label norm
-    table is label-count-sized, so its two joins broadcast at any
-    corpus scale.
-
-    ``with_semdedup=True`` (round-5 fold) additionally runs the
-    SemDeDup pass (``_semdedup_from`` — same persisted scan) and tags
-    each pair side with its k-means cell and keep/prune verdict
-    (``cell_a``, ``sd_keep_a``, ``cell_b``, ``sd_keep_b``), so the
-    graded row covers cluster assignment and cluster-scoped semantic
-    pruning on exactly the rows where pruning is interesting: the
-    near-duplicate pairs.  ``with_semdedup=False`` is the round-4
-    shape, pinned equal by tests/test_semdedup.py."""
+    """Near-dup pairs (``_near_dup_pairs_from``) enriched with each
+    side's label and the label's centroid-norm profile (vector count,
+    mean L2 norm) — one driver row grading BOTH the banded-LSH pair
+    search and the per-label norm aggregate.  It also runs the SemDeDup
+    pass (``_semdedup_from``) and tags each pair side with its k-means
+    cell and keep/prune verdict (``cell_a``, ``sd_keep_a``, ``cell_b``,
+    ``sd_keep_b``), so the row covers cluster assignment and
+    cluster-scoped semantic pruning on exactly the rows where pruning
+    is interesting: the near-duplicate pairs.  Every branch (bands a/b,
+    exact-score a/b, labels, norms, quantizer, prune join) reads the
+    ONE persisted embeddings scan; the per-label norm table is
+    label-count-sized, so its two joins broadcast at any corpus
+    scale."""
     from .dedup import _scoped_clear, _scoped_persist
 
     _scoped_clear()
     emb = _scoped_persist(_emb(spark, sf_dir))
-    pairs = _near_dup_pairs_from(emb, threshold, n_bands, band_dims, probe_h1)
+    pairs = _near_dup_pairs_from(emb, threshold, n_bands, band_dims)
 
     labels = emb.select("vec_id", "label")
     norm = _DOT.format(a="embedding", b="embedding")
@@ -574,12 +512,6 @@ def embedding_near_dup_labeled(
         .join(F.broadcast(na_), "label_a")
         .join(F.broadcast(nb_), "label_b")
     )
-    base_cols = [
-        "vec_a", "vec_b", "cos_sim", "label_a", "label_b",
-        "n_vecs_a", "mean_norm_a", "n_vecs_b", "mean_norm_b",
-    ]
-    if not with_semdedup:
-        return out.select(*base_cols)
     # NOT persisted, deliberately: caching sd plans its subtree under
     # the InMemoryRelation (no adaptive re-planning), which measured 3x
     # slower than just executing it (5.6s vs 1.9s sf0.1).  The cells
@@ -595,14 +527,15 @@ def embedding_near_dup_labeled(
         F.col("sd_keep").alias("sd_keep_b"),
     )
     return out.join(sa, "vec_a").join(sb, "vec_b").select(
-        *base_cols, "cell_a", "sd_keep_a", "cell_b", "sd_keep_b"
+        "vec_a", "vec_b", "cos_sim", "label_a", "label_b",
+        "n_vecs_a", "mean_norm_a", "n_vecs_b", "mean_norm_b",
+        "cell_a", "sd_keep_a", "cell_b", "sd_keep_b",
     )
 
 
 def embedding_near_dup_pairs_sql(
     table: str = "embeddings", threshold: float = 0.35,
     n_bands: int = N_SIG_BANDS, band_dims: int = BAND_DIMS,
-    probe_h1: bool = PROBE_H1,
 ) -> str:
     band_selects = "\nUNION ALL\n".join(
         f"""SELECT vec_id, {j} AS band,
@@ -612,23 +545,19 @@ def embedding_near_dup_pairs_sql(
             FROM {table}"""
         for j in range(n_bands)
     )
-    if probe_h1:
-        probed = f"""
-            SELECT vec_id, band, key FROM bands
-            UNION ALL
-            SELECT vec_id, band,
-                   substr(key, 1, f - 1)
-                     || (CASE WHEN substr(key, f, 1) = '1' THEN '0' ELSE '1' END)
-                     || substr(key, f + 1) AS key
-            FROM bands, generate_series(1, {band_dims}) g(f)"""
-    else:
-        probed = "SELECT vec_id, band, key FROM bands"
     dot = _DOT_SQL.format(a="ea.embedding", b="eb.embedding")
     na = _DOT_SQL.format(a="ea.embedding", b="ea.embedding")
     nb = _DOT_SQL.format(a="eb.embedding", b="eb.embedding")
     return f"""
         WITH bands AS ({band_selects}),
-        probed AS ({probed}),
+        probed AS (
+          SELECT vec_id, band, key FROM bands
+          UNION ALL
+          SELECT vec_id, band,
+                 substr(key, 1, f - 1)
+                   || (CASE WHEN substr(key, f, 1) = '1' THEN '0' ELSE '1' END)
+                   || substr(key, f + 1) AS key
+          FROM bands, generate_series(1, {band_dims}) g(f)),
         cand AS (
           SELECT DISTINCT a.vec_id AS vec_a, b.vec_id AS vec_b
           FROM probed a JOIN bands b
@@ -640,20 +569,6 @@ def embedding_near_dup_pairs_sql(
         JOIN {table} eb ON eb.vec_id = vec_b
         WHERE {_r4(f"({dot}) / (sqrt({na}) * sqrt({nb}))")} >= {threshold}
     """
-
-
-def label_centroid_norms(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-label vector counts and mean L2 norm (rounded)."""
-    emb = _emb(spark, sf_dir)
-    norm = _DOT.format(a="embedding", b="embedding")
-    return (
-        emb.withColumn("norm", F.expr(f"sqrt({norm})"))
-        .groupBy("label")
-        .agg(
-            F.count("*").alias("n_vecs"),
-            F.expr(_r4("avg(norm)")).alias("mean_norm"),
-        )
-    )
 
 
 # ---------------------------------------------------------------------------
@@ -685,49 +600,37 @@ def ann_cosine_topk_sql(table: str = "embeddings", query_vec_id: int = 0, k: int
     """
 
 
-def _ivf_model_ctes_sql(table: str, n_cells: int, dims: int,
-                        n_iters: int = 1) -> str:
-    """The deterministic ``n_iters``-Lloyd-step quantizer as a CTE chain
-    (ends at ``a2`` = final (vec_id, cell) and ``cvecs`` = final
-    centroids — stable names every composer references), shared by the
-    IVF search oracle and the SemDeDup oracle: same seeds, same rounded
-    assignment scores, same rounded per-dim centroid means, same
-    tie-breaks — so the cell partitioning is identical across engines
-    and across the oracles.  Iterations unroll as one (assign, update)
-    CTE pair each."""
+def _ivf_model_ctes_sql(table: str, n_cells: int, dims: int) -> str:
+    """The deterministic one-Lloyd-step quantizer as a CTE chain (ends
+    at ``a2`` = final (vec_id, cell) and ``cvecs`` = final centroids —
+    stable names every composer references), shared by the IVF search
+    oracle and the SemDeDup oracle: same seeds, same rounded assignment
+    scores, same rounded per-dim centroid means, same tie-breaks — so
+    the cell partitioning is identical across engines and across the
+    oracles."""
     score = _r6(
         "list_dot_product(cvec, cvec) - 2 * list_dot_product(v, cvec)"
     )
-    parts = [f"""e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM {table}),
-        cvecs0 AS (SELECT CAST(vec_id AS INT) AS cell, v AS cvec FROM e
-                  WHERE vec_id < {n_cells})"""]
-    for i in range(1, n_iters + 1):
-        # iteration CTEs carry an it_ prefix so they can never collide
-        # with the stable exported names (a2, cvecs) at any n_iters
-        parts.append(f"""
-        it_s{i} AS (SELECT vec_id, cell, {score} AS score
-               FROM e CROSS JOIN cvecs{i - 1}),
-        it_a{i} AS (SELECT vec_id, cell FROM (
+
+    def nearest(cents: str) -> str:
+        return f"""(SELECT vec_id, cell FROM (
                  SELECT vec_id, cell,
                         row_number() OVER (PARTITION BY vec_id
                                            ORDER BY score, cell) AS rn
-                 FROM it_s{i}) WHERE rn = 1),
-        it_cent{i} AS (SELECT cell, i, {_r6('AVG(v[i])')} AS cval
-                 FROM it_a{i} JOIN e USING (vec_id)
+                 FROM (SELECT vec_id, cell, {score} AS score
+                       FROM e CROSS JOIN {cents})) WHERE rn = 1)"""
+
+    return f"""e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM {table}),
+        it_seeds AS (SELECT CAST(vec_id AS INT) AS cell, v AS cvec FROM e
+                     WHERE vec_id < {n_cells}),
+        it_a AS {nearest("it_seeds")},
+        it_cent AS (SELECT cell, i, {_r6('AVG(v[i])')} AS cval
+                 FROM it_a JOIN e USING (vec_id)
                  CROSS JOIN generate_series(1, {dims}) t(i)
                  GROUP BY cell, i),
-        cvecs{i} AS (SELECT cell, list(cval ORDER BY i) AS cvec
-                     FROM it_cent{i} GROUP BY cell)""")
-    parts.append(f"""
-        cvecs AS (SELECT * FROM cvecs{n_iters}),
-        sf AS (SELECT vec_id, cell, {score} AS score
-               FROM e CROSS JOIN cvecs),
-        a2 AS (SELECT vec_id, cell FROM (
-                 SELECT vec_id, cell,
-                        row_number() OVER (PARTITION BY vec_id
-                                           ORDER BY score, cell) AS rn
-                 FROM sf) WHERE rn = 1)""")
-    return ",".join(parts)
+        cvecs AS (SELECT cell, list(cval ORDER BY i) AS cvec
+                  FROM it_cent GROUP BY cell),
+        a2 AS {nearest("cvecs")}"""
 
 
 def _semdedup_parts_sql_ctes(table: str = "embeddings",
@@ -753,7 +656,7 @@ def _semdedup_parts_sql_ctes(table: str = "embeddings",
 
 def semdedup_sql(table: str = "embeddings", tau: float = SEMDEDUP_TAU,
                  n_cells: int = N_IVF_CELLS, dims: int = EMB_DIMS) -> str:
-    """DuckDB twin of ``semdedup``: identical quantizer CTEs
+    """DuckDB twin of ``_semdedup_from``: identical quantizer CTEs
     (``_ivf_model_ctes_sql``), identical rounded-cosine prune predicate,
     identical lowest-id-wins keep rule."""
     return f"""
@@ -790,11 +693,6 @@ def ann_ivf_topk_sql(table: str = "embeddings", query_vec_id: int = 0, k: int = 
     """
 
 
-def ann_ivf_multiprobe_sql(table: str = "embeddings", query_vec_id: int = 0,
-                           k: int = 5) -> str:
-    return ann_ivf_topk_sql(table, query_vec_id, k, n_probe=3)
-
-
 def ann_ivf_sql(table: str = "embeddings", query_vec_id: int = 0,
                 k: int = 5) -> str:
     return f"""
@@ -803,7 +701,7 @@ def ann_ivf_sql(table: str = "embeddings", query_vec_id: int = 0,
         ) s
         UNION ALL
         SELECT CAST(3 AS INTEGER) AS n_probe, s.* FROM (
-          {ann_ivf_multiprobe_sql(table, query_vec_id, k)}
+          {ann_ivf_topk_sql(table, query_vec_id, k, n_probe=3)}
         ) s
     """
 
@@ -811,36 +709,28 @@ def ann_ivf_sql(table: str = "embeddings", query_vec_id: int = 0,
 def embedding_near_dup_labeled_sql(
     table: str = "embeddings", threshold: float = 0.35,
     n_bands: int = N_SIG_BANDS, band_dims: int = BAND_DIMS,
-    probe_h1: bool = PROBE_H1, with_semdedup: bool = True,
     tau: float = SEMDEDUP_TAU,
 ) -> str:
-    pairs = embedding_near_dup_pairs_sql(
-        table, threshold, n_bands, band_dims, probe_h1
-    )
+    pairs = embedding_near_dup_pairs_sql(table, threshold, n_bands, band_dims)
     norms = label_centroid_norms_sql(table)
-    sd_cte = sd_cols = sd_joins = ""
-    if with_semdedup:
-        # bound ONCE as a named CTE — inlining the derived table twice
-        # would make DuckDB evaluate the quantizer + quadratic prune
-        # twice (no CSE across derived tables)
-        sd_cte = f"WITH sd AS ({semdedup_sql(table, tau)})"
-        sd_cols = """,
-               sa.cell AS cell_a, sa.sd_keep AS sd_keep_a,
-               sb.cell AS cell_b, sb.sd_keep AS sd_keep_b"""
-        sd_joins = """
-        JOIN sd sa ON sa.vec_id = p.vec_a
-        JOIN sd sb ON sb.vec_id = p.vec_b"""
+    # sd bound ONCE as a named CTE — inlining the derived table twice
+    # would make DuckDB evaluate the quantizer + quadratic prune twice
+    # (no CSE across derived tables)
     return f"""
-        {sd_cte}
+        WITH sd AS ({semdedup_sql(table, tau)})
         SELECT p.vec_a, p.vec_b, p.cos_sim,
                la.label AS label_a, lb.label AS label_b,
                na.n_vecs AS n_vecs_a, na.mean_norm AS mean_norm_a,
-               nb.n_vecs AS n_vecs_b, nb.mean_norm AS mean_norm_b{sd_cols}
+               nb.n_vecs AS n_vecs_b, nb.mean_norm AS mean_norm_b,
+               sa.cell AS cell_a, sa.sd_keep AS sd_keep_a,
+               sb.cell AS cell_b, sb.sd_keep AS sd_keep_b
         FROM ({pairs}) p
         JOIN {table} la ON la.vec_id = p.vec_a
         JOIN {table} lb ON lb.vec_id = p.vec_b
         JOIN ({norms}) na ON na.label = la.label
-        JOIN ({norms}) nb ON nb.label = lb.label{sd_joins}
+        JOIN ({norms}) nb ON nb.label = lb.label
+        JOIN sd sa ON sa.vec_id = p.vec_a
+        JOIN sd sb ON sb.vec_id = p.vec_b
     """
 
 
@@ -851,53 +741,6 @@ def label_centroid_norms_sql(table: str = "embeddings") -> str:
                {_r4(f"AVG(sqrt({norm}))")} AS mean_norm
         FROM {table} GROUP BY label
     """
-
-
-def ivf_assign_gemm(spark: SparkSession, sf_dir: str,
-                    n_cells: int = N_IVF_CELLS) -> DataFrame:
-    """Quantizer assignment as one BLAS GEMM per Arrow batch — the scale
-    path `_ivf_model`'s docstring promises, as code: scores for a batch
-    of vectors against all C centroids are ``||c||² − 2·X@Cᵀ`` computed
-    by numpy (vectorized, no per-row Python), argmin ties broken to the
-    lowest cell id (numpy argmin picks the first occurrence; centroids
-    are ordered by cell).
-
-    The SQL assignment folds each dot product sequentially while BLAS
-    sums pairwise/blocked, so raw doubles can differ in the last ulps —
-    both paths therefore round scores to 6 decimals (the same floor
-    idiom), and equality of the resulting assignment on real data is
-    pinned by tests/test_ivf.py::test_gemm_assignment_matches_sql.
-    This is the physical variant for 10^9-vector index builds: one
-    mapInPandas pass, centroids broadcast in the bound arguments (C×D
-    doubles — KBs), zero shuffles."""
-    import numpy as np
-
-    _, cents = _ivf_model(spark, sf_dir, n_cells)
-    rows = sorted((r["cell"], r["cvec"]) for r in cents.collect())
-    cell_ids = np.array([c for c, _ in rows], dtype=np.int64)
-    C = np.array([v for _, v in rows], dtype=np.float64)  # (C, D)
-    c_norms = (C * C).sum(axis=1)  # (C,)
-
-    # a module-level body (not a closure) is pickled by reference, so the
-    # worker imports the package and gets its zip-cache guard
-    assign = functools.partial(_assign_cells_kernel, cell_ids, C, c_norms)
-    emb = _emb(spark, sf_dir).select("vec_id", "embedding")
-    return emb.mapInPandas(assign, "vec_id long, cell long")
-
-
-def _assign_cells_kernel(cell_ids, C, c_norms, batches):
-    """``ivf_assign_gemm``'s mapInPandas body: nearest centroid per vector."""
-    import numpy as np
-    import pandas as pd
-
-    for pdf in batches:
-        if len(pdf) == 0:  # defensive: empty Arrow batch
-            continue
-        X = np.array(pdf["embedding"].tolist(), dtype=np.float64)  # (B, D)
-        scores = c_norms[None, :] - 2.0 * (X @ C.T)  # (B, C)
-        scores = np.floor(scores * 1e6 + 0.5) / 1e6
-        cells = cell_ids[np.argmin(scores, axis=1)]
-        yield pd.DataFrame({"vec_id": pdf["vec_id"], "cell": cells})
 
 
 def ann_knn_join(spark: SparkSession, sf_dir: str,

@@ -19,11 +19,11 @@ P56 = 72_057_594_037_927_931  # shared 56-bit fold modulus (operators/dedup.py)
 KMV_K = 256
 
 # ---------------------------------------------------------------------------
-# shared per-row expression fragments — SINGLE source for the standalone
-# operators AND the fused profiles (doc_profile here, host_profile in
-# webcorpus.py), so tuning a threshold can never desynchronize a fused
-# row from its source operator.  Spark fragments read columns
-# (text, toks, ml); DuckDB fragments read (text, t, ml).
+# shared per-row expression fragments — SINGLE source for the fused
+# profiles (doc_profile here, host_profile in webcorpus.py) and their
+# DuckDB twins, so tuning a threshold can never desynchronize two rows
+# or two engines.  Spark fragments read columns (text, toks, ml); DuckDB
+# fragments read (text, t, ml).
 # ---------------------------------------------------------------------------
 
 # mean token length: the O(tokens) fold — project ONCE as `ml`, then
@@ -34,7 +34,7 @@ ML_EXPR = (
 )
 ML_SQL = "CAST(list_sum(list_transform(t, x -> length(x))) AS DOUBLE) / len(t)"
 
-# the C4 kept-gate conjunction (quality_gates/doc_profile/host_profile)
+# the C4 kept-gate conjunction (doc_profile/host_profile)
 KEPT_EXPR = (
     "size(toks) >= 50 AND ml >= CAST(3 AS DOUBLE)"
     " AND ml <= CAST(10 AS DOUBLE)"
@@ -48,7 +48,7 @@ KEPT_SQL = (
     " AND NOT contains(text, '{')"
 )
 
-# distinct-3-gram count (repetition_stats/doc_profile)
+# distinct-3-gram count (doc_profile's Gopher repetition signal)
 D3_EXPR = (
     "case when size(toks) < 3 then 0 else size(array_distinct("
     "transform(sequence(0, size(toks) - 3), i -> concat_ws(' ',"
@@ -86,54 +86,6 @@ _BASE_SQL = (
 )
 
 
-def token_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-document token counts (whitespace tokenization)."""
-    return _docs_nn(spark, sf_dir).select(
-        "doc_id",
-        F.expr("cast(size(toks) as long)").alias("n_tokens"),
-        F.expr("cast(size(array_distinct(toks)) as long)").alias(
-            "n_distinct_tokens"
-        ),
-        F.expr("cast(length(text) as long)").alias("n_chars_actual"),
-    )
-
-
-def quality_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Heuristic document quality: stopword ratio + mean token length +
-    char-per-token density (length/punct/stopword family, SURVEY scope).
-    Ratios use the shared half-up idiom (a ratio of small integers can
-    land exactly on x.xxxxxx5)."""
-    return (
-        _docs_nn(spark, sf_dir)
-        .withColumn("ml", F.expr(ML_EXPR))
-        .select(
-            "doc_id",
-            "lang",
-            F.expr(_f6(
-                "cast(size(filter(toks, t -> t in ('the', 'a'))) as double)"
-                " / size(toks)"
-            )).alias("stopword_ratio"),
-            F.expr(_f6("ml")).alias("mean_token_len"),
-            F.expr(
-                "case when length(text) >= 200 and size(toks) >= 40"
-                " then 'keep' else 'drop' end"
-            ).alias("quality_bucket"),
-        )
-    )
-
-
-def fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Deterministic rolling-hash document fingerprint:
-    fold (acc*31 + ascii(char)) mod 1e9+7 over the full text."""
-    return _docs_nn(spark, sf_dir).select(
-        "doc_id",
-        F.expr(
-            f"aggregate(transform(split(text, ''), c -> ascii(c)),"
-            f" 0L, (acc, c) -> (acc * 31 + c) % {MOD})"
-        ).alias("fingerprint"),
-    )
-
-
 def lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
     """N-gram/stopword language heuristic: score English function words
     vs corpus-neutral tokens; emits predicted vs labelled language."""
@@ -147,42 +99,9 @@ def lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+# BPE-ish sub-word pre-tokenizer (GPT-2-style family) for doc_profile's
+# n_bpe_tokens: conservative char classes shared by Java regex and RE2
 _BPE_PATTERN = "[A-Za-z]+|[0-9]+|[^A-Za-z0-9 ]"
-
-
-def bpe_token_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """BPE-ish sub-word tokenization (GPT-2-style pre-tokenizer family,
-    conservative char classes shared by Java regex and RE2): counts per
-    document plus the whitespace/bpe ratio."""
-    return (
-        _docs_nn(spark, sf_dir)
-        .withColumn(
-            "nbpe",
-            F.expr(
-                f"cast(size(regexp_extract_all(text, '{_BPE_PATTERN}', 0)) as long)"
-            ),
-        )
-        .select(
-            "doc_id",
-            F.col("nbpe").alias("n_bpe_tokens"),
-            F.expr("cast(size(toks) as long)").alias("n_ws_tokens"),
-            F.expr(_f6("CAST(nbpe AS DOUBLE) / size(toks)")).alias("bpe_per_word"),
-        )
-    )
-
-
-def top_tokens(spark: SparkSession, sf_dir: str, k: int = 30) -> DataFrame:
-    """Corpus token frequencies: explode → hash aggregate → top-k
-    (deterministic tie-break on the token)."""
-    return (
-        _docs(spark, sf_dir)
-        .select(F.explode(F.expr("split(text, ' ')")).alias("token"))
-        .where(F.length("token") > 1)
-        .groupBy("token")
-        .agg(F.count("*").alias("n"))
-        .orderBy(F.desc("n"), F.asc("token"))
-        .limit(k)
-    )
 
 
 def lang_id_sql(table: str = "documents") -> str:
@@ -254,178 +173,12 @@ def distinct_shingles_kmv_sql(table: str = "documents", k: int = KMV_K) -> str:
     """
 
 
-# ---------------------------------------------------------------------------
-# round 3: repetition / quality-gate / per-group heavy-hitter operators
-# (the Gopher/C4 filter family a pretraining pipeline runs corpus-wide)
-# ---------------------------------------------------------------------------
-
 def _f6(x: str) -> str:
     """Cross-engine round-half-up to 6 decimals (ratios of small
     integers DO land on exact binary halfway points, e.g. 1/128) — the
     shared idiom from operators/dedup.py."""
     return round_half_up_expr(x, 6)
 
-
-def repetition_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-document repetition signals (the Gopher repetition-filter
-    family): duplicate-3-gram fraction and top-token mass fraction.
-    Highly repetitive documents (boilerplate, SEO spam, generation
-    loops) score near 1 and are dropped by downstream quality gates.
-
-    Plan: one tokenize projection persisted (two consumers: the per-row
-    3-gram arithmetic and the exploded token-frequency aggregate), one
-    hash aggregate per doc-token, one per-doc aggregate, one join —
-    every stage partial-aggregable, nothing quadratic, no windows."""
-    from .dedup import _scoped_clear, _scoped_persist
-
-    _scoped_clear()
-    d = _scoped_persist(_docs_nn(spark, sf_dir).select("doc_id", "toks"))
-    n3 = "greatest(size(toks) - 2, 0)"
-    grams = d.select(
-        "doc_id",
-        F.expr(f"cast({n3} as long)").alias("n_3grams"),
-        F.expr(f"cast({D3_EXPR} as long)").alias("n_distinct_3grams"),
-    )
-    per_doc = (
-        d.select("doc_id", F.explode("toks").alias("tk"))
-        .groupBy("doc_id", "tk")
-        .agg(F.count("*").alias("c"))
-        .groupBy("doc_id")
-        .agg(
-            F.sum("c").cast("long").alias("n_tokens"),
-            F.max("c").cast("long").alias("top_c"),
-        )
-    )
-    dup_frac = _f6(
-        "CAST(1 AS DOUBLE) - CAST(n_distinct_3grams AS DOUBLE) / n_3grams"
-    )
-    top_frac = _f6("CAST(top_c AS DOUBLE) / n_tokens")
-    return per_doc.join(grams, "doc_id").select(
-        "doc_id",
-        "n_tokens",
-        "n_3grams",
-        "n_distinct_3grams",
-        F.expr(
-            f"case when n_3grams = 0 then CAST(0 AS DOUBLE) else {dup_frac} end"
-        ).alias("dup_3gram_frac"),
-        F.expr(top_frac).alias("top_token_frac"),
-    )
-
-
-def repetition_stats_sql(table: str = "documents") -> str:
-    dup_frac = _f6("CAST(1 AS DOUBLE) - CAST(n_distinct_3grams AS DOUBLE) / n_3grams")
-    top_frac = _f6("CAST(top_c AS DOUBLE) / n_tokens")
-    return f"""
-        WITH toks AS (SELECT doc_id, t FROM ({_BASE_SQL.format(table=table)})),
-        grams AS (SELECT doc_id,
-                         CAST(GREATEST(len(t) - 2, 0) AS BIGINT) AS n_3grams,
-                         CAST({D3_SQL} AS BIGINT) AS n_distinct_3grams
-                  FROM toks),
-        tok AS (SELECT doc_id, unnest(t) AS tk FROM toks),
-        cnt AS (SELECT doc_id, tk, COUNT(*) AS c FROM tok GROUP BY 1, 2),
-        per_doc AS (SELECT doc_id, CAST(SUM(c) AS BIGINT) AS n_tokens,
-                           CAST(MAX(c) AS BIGINT) AS top_c
-                    FROM cnt GROUP BY 1)
-        SELECT p.doc_id, n_tokens, n_3grams, n_distinct_3grams,
-               CASE WHEN n_3grams = 0 THEN CAST(0 AS DOUBLE)
-                    ELSE {dup_frac} END AS dup_3gram_frac,
-               {top_frac} AS top_token_frac
-        FROM per_doc p JOIN grams g USING (doc_id)
-    """
-
-
-def quality_gates(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """C4-style boolean quality gates per document: minimum word count,
-    sane mean word length, no 'lorem ipsum', no curly braces (code/
-    template leakage); ``kept`` is their conjunction.  Pure per-row
-    Spark-SQL expressions — whole-stage codegen, embarrassingly
-    parallel, the exact shape that filters 10^12 docs in one pass.
-
-    The mean-word-length band compares the RAW double (identical in
-    both engines: integer sum / integer count); only the reported
-    column is rounded.  The token-length fold is projected ONCE (``ml``)
-    and every gate references the projection — inlining it would run
-    the O(tokens) fold three times per row in codegen.
-
-    ``text`` is coalesced to '' BEFORE tokenizing (mirrored in the
-    oracle SQL): on a non-ANSI session ``size(split(NULL))`` returns -1
-    (spark.sql.legacy.sizeOfNull) while DuckDB's ``len(NULL)`` is NULL —
-    the guard makes parity independent of the session's ANSI flag."""
-    d = _docs_nn(spark, sf_dir).withColumn("ml", F.expr(ML_EXPR))
-    return d.select(
-        "doc_id",
-        "lang",
-        F.expr("cast(size(toks) as long)").alias("n_words"),
-        F.expr(_f6("ml")).alias("mean_word_len"),
-        F.expr("size(toks) >= 50").alias("has_min_words"),
-        F.expr(
-            "ml >= CAST(3 AS DOUBLE) AND ml <= CAST(10 AS DOUBLE)"
-        ).alias("word_len_ok"),
-        F.expr("NOT contains(lower(text), 'lorem ipsum')").alias("no_lorem"),
-        F.expr("NOT contains(text, '{')").alias("no_brace"),
-        F.expr(KEPT_EXPR).alias("kept"),
-    )
-
-
-def quality_gates_sql(table: str = "documents") -> str:
-    return f"""
-        WITH s1 AS (SELECT *, {ML_SQL} AS ml
-                    FROM ({_BASE_SQL.format(table=table)}))
-        SELECT doc_id, lang,
-               CAST(len(t) AS BIGINT) AS n_words,
-               {_f6("ml")} AS mean_word_len,
-               len(t) >= 50 AS has_min_words,
-               ml >= CAST(3 AS DOUBLE)
-                 AND ml <= CAST(10 AS DOUBLE) AS word_len_ok,
-               NOT contains(lower(text), 'lorem ipsum') AS no_lorem,
-               NOT contains(text, '{{') AS no_brace,
-               {KEPT_SQL} AS kept
-        FROM s1
-    """
-
-
-def top_tokens_by_lang(spark: SparkSession, sf_dir: str, k: int = 5) -> DataFrame:
-    """Per-language heavy hitters: explode → (lang, token) hash aggregate
-    → per-lang top-k via row_number (deterministic tie-break on the
-    token).  The window partitions by lang over the ALREADY-aggregated
-    frequency table — its input is |vocab per lang| rows, not corpus
-    rows, so the sort under the window is bounded at any corpus size."""
-    from pyspark.sql import Window
-
-    freq = (
-        _docs(spark, sf_dir)
-        .select("lang", F.explode(F.expr("split(text, ' ')")).alias("token"))
-        .where(F.length("token") > 1)
-        .groupBy("lang", "token")
-        .agg(F.count("*").alias("n"))
-    )
-    w = Window.partitionBy("lang").orderBy(F.desc("n"), F.asc("token"))
-    return (
-        freq.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("lang", "token", "n", F.col("rank").cast("int").alias("rank"))
-    )
-
-
-def top_tokens_by_lang_sql(table: str = "documents", k: int = 5) -> str:
-    return f"""
-        WITH freq AS (
-          SELECT lang, token, COUNT(*) AS n
-          FROM (SELECT lang, unnest(string_split(text, ' ')) AS token FROM {table})
-          WHERE length(token) > 1
-          GROUP BY 1, 2),
-        ranked AS (
-          SELECT lang, token, n,
-                 CAST(row_number() OVER (PARTITION BY lang
-                                         ORDER BY n DESC, token ASC) AS INTEGER) AS rank
-          FROM freq)
-        SELECT lang, token, n, rank FROM ranked WHERE rank <= {k}
-    """
-
-
-# ---------------------------------------------------------------------------
-# round 4: consolidated driver rows (SURVEY.md §2 coverage per graded query)
-# ---------------------------------------------------------------------------
 
 # ---------------------------------------------------------------------------
 # CCNet-style n-gram LM perplexity (VERDICT r4 next #1)
@@ -627,22 +380,11 @@ def _ppx_scores(base: DataFrame) -> DataFrame:
     )
 
 
-def lm_perplexity(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Standalone entry for the bigram-LM perplexity scorer (see
-    ``_ppx_scores``); the graded driver row is the ``doc_profile``
-    fold, pinned equal to this by tests/test_ppx.py."""
-    from .dedup import _scoped_clear, _scoped_persist
-
-    _scoped_clear()
-    base = _scoped_persist(_docs_nn(spark, sf_dir).select("doc_id", "toks"))
-    return _ppx_scores(base)
-
-
 def _ppx_sql_ctes(base: str) -> str:
     """The DuckDB twin of ``_ppx_scores`` as a WITH-list fragment over
     an existing CTE ``base`` providing (doc_id, t); ends with
     ``ppx_doc(doc_id, n_bigrams, sum_logp_milli)``.  SINGLE source —
-    embedded by both ``lm_perplexity_sql`` and ``doc_profile_sql``."""
+    embedded by ``doc_profile_sql`` and ``dedup.training_corpus_filter_sql``."""
     s_all = _lnrat_milli("COALESCE(b.cb, 0) + 1", "COALESCE(c.cp, 0) + v")
     return f"""
         ppx_raw AS (
@@ -683,16 +425,6 @@ def _ppx_sql_ctes(base: str) -> str:
           FROM ppx_scored GROUP BY doc_id)"""
 
 
-def lm_perplexity_sql(table: str = "documents") -> str:
-    return f"""
-        WITH base AS ({_BASE_SQL.format(table=table)}),
-        {_ppx_sql_ctes("base")}
-        SELECT doc_id, n_bigrams, sum_logp_milli,
-               {round_half_up_expr(_PPX_MEAN, 4)} AS log_ppx
-        FROM ppx_doc
-    """
-
-
 def doc_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The per-document text-analysis profile as ONE fused pass: token
     counts, quality heuristics, rolling-hash fingerprint, language-ID,
@@ -701,16 +433,15 @@ def doc_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     top-token mass (one exploded hash aggregate joined back on doc_id).
 
     This is the production shape for corpus-wide profiling at 10^12
-    docs: where the individual operators of this module each re-scan
-    and re-tokenize, the fused plan scans ONCE, tokenizes ONCE (the
-    persisted ``base`` projection feeds the per-row branch and the
-    token-frequency branch), and ships one wide row per document.
-    Pinned single-FileScan by tests/test_plans.py; pinned equal,
-    column-for-column, to the individual operators by
-    tests/test_textstats_edge.py::test_doc_profile_matches_individual_ops.
+    docs: the plan scans ONCE, tokenizes ONCE (the persisted ``base``
+    projection feeds the per-row branch, the token-frequency branch and
+    the perplexity model), and ships one wide row per document.  Pinned
+    single-FileScan by tests/test_plans.py.  The mean-token-length gate
+    compares the RAW double (identical in both engines: integer sum /
+    integer count); only the reported column is rounded.
 
     ``text`` is coalesced to '' before any tokenize (ANSI-flag-
-    independent parity — see ``quality_gates``)."""
+    independent parity — see ``_docs_nn``)."""
     from .dedup import _scoped_clear, _scoped_persist
 
     _scoped_clear()
@@ -779,10 +510,8 @@ def doc_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("dup_3gram_frac"),
         F.expr(top_frac).alias("top_token_frac"),
     )
-    # round-5 fold: CCNet-style bigram-LM perplexity (the one standard
-    # LLM-curation signal the profile lacked) — trained/scored off the
-    # SAME persisted base, joined back per doc; pinned equal to the
-    # standalone lm_perplexity by tests/test_ppx.py
+    # CCNet-style bigram-LM perplexity — trained/scored off the SAME
+    # persisted base, joined back per doc
     return fused.join(_ppx_scores(base), "doc_id")
 
 

@@ -18,10 +18,11 @@ Operators (each a ``queries()`` entry with a DuckDB oracle twin):
   twice.  No reference counterpart (the reference processes one
   document per request, app.py:72-135); this is the corpus-level
   operation its per-document pipeline plugs into.
-- ``host_stats`` — per-host corpus profile (doc/url counts, char mass,
-  corpus share).  The denominator joins in via a broadcast of the
-  1-row global aggregate — NOT an unpartitioned window, which would
-  funnel every row through a single reducer at scale.
+- ``host_profile`` — per-host corpus profile (doc/url counts, char
+  mass, corpus share, C4-gate survival, host-graph PageRank).  The
+  denominator joins in via a broadcast of the 1-row global aggregate —
+  NOT an unpartitioned window, which would funnel every row through a
+  single reducer at scale.
 - ``pii_stats`` — email/phone detection + scrub accounting per page:
   pure JVM regexp expressions (whole-stage codegen, no Python), the
   patterns chosen to behave identically under Java regex (Spark) and
@@ -154,56 +155,6 @@ def latest_page_version_sql(table: str = "documents") -> str:
 
 
 # ---------------------------------------------------------------------------
-# per-host corpus profile
-# ---------------------------------------------------------------------------
-
-def host_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-host doc/url counts, character mass, and share of the corpus.
-
-    The global denominator is a 1-row aggregate broadcast into a
-    map-side join — never an unpartitioned window (which would shuffle
-    the whole per-host table through one reducer at 10^8 hosts).
-
-    The web projection feeds BOTH the per-host aggregate and the global
-    denominator — persisted (scoped) so the documents scan runs once
-    (single-FileScan pinned in tests/test_plans.py)."""
-    _scoped_clear()
-    web = _scoped_persist(_web(spark, sf_dir))
-    per_host = web.groupBy("host").agg(
-        F.count("*").cast("long").alias("n_docs"),
-        F.countDistinct("url").cast("long").alias("n_urls"),
-        F.sum("n_chars").cast("long").alias("total_chars"),
-    )
-    total = web.agg(F.count("*").cast("double").alias("corpus_docs"))
-    share = round_half_up_expr(
-        "CAST(n_docs AS DOUBLE) / corpus_docs", 6
-    )
-    return (
-        per_host.crossJoin(F.broadcast(total))
-        .select(
-            "host", "n_docs", "n_urls", "total_chars",
-            F.expr(share).alias("docs_share"),
-        )
-    )
-
-
-def host_stats_sql(table: str = "documents") -> str:
-    share = round_half_up_expr("CAST(n_docs AS DOUBLE) / corpus_docs", 6)
-    return f"""
-        WITH web AS ({_web_sql(table)}),
-        per_host AS (
-          SELECT host,
-                 CAST(COUNT(*) AS BIGINT) AS n_docs,
-                 CAST(COUNT(DISTINCT url) AS BIGINT) AS n_urls,
-                 CAST(SUM(n_chars) AS BIGINT) AS total_chars
-          FROM web GROUP BY host),
-        total AS (SELECT CAST(COUNT(*) AS DOUBLE) AS corpus_docs FROM web)
-        SELECT host, n_docs, n_urls, total_chars, {share} AS docs_share
-        FROM per_host CROSS JOIN total
-    """
-
-
-# ---------------------------------------------------------------------------
 # PII detection / scrub accounting
 # ---------------------------------------------------------------------------
 
@@ -315,203 +266,6 @@ def lang_confusion_sql(table: str = "documents") -> str:
     """
 
 
-def host_quality_report(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-host corpus curation view: how much of each host's output
-    survives the C4-family quality gates, and how long its documents
-    run — THE practical question a crawl curator asks ("which hosts
-    produce junk?").  Composes ``textstats.quality_gates`` with the
-    deterministic host derivation; one hash aggregate over the gated
-    stream (gate columns are per-row codegen, sums/counts are
-    partial-aggregable — a 10^8-page host reduces map-side)."""
-    from .textstats import quality_gates
-
-    qg = quality_gates(spark, sf_dir).select(
-        F.expr(_HOST_EXPR).alias("host"),
-        "n_words",
-        F.col("kept").cast("long").alias("kept_i"),
-    )
-    rate = round_half_up_expr("CAST(n_kept AS DOUBLE) / n_docs", 6)
-    mean_words = round_half_up_expr("CAST(sum_words AS DOUBLE) / n_docs", 2)
-    return (
-        qg.groupBy("host")
-        .agg(
-            F.count("*").cast("long").alias("n_docs"),
-            F.sum("kept_i").cast("long").alias("n_kept"),
-            F.sum("n_words").cast("long").alias("sum_words"),
-        )
-        .select(
-            "host", "n_docs", "n_kept",
-            F.expr(rate).alias("kept_rate"),
-            F.expr(mean_words).alias("mean_words"),
-        )
-    )
-
-
-def host_quality_report_sql(table: str = "documents") -> str:
-    from .textstats import quality_gates_sql
-
-    rate = round_half_up_expr("CAST(n_kept AS DOUBLE) / n_docs", 6)
-    mean_words = round_half_up_expr("CAST(sum_words AS DOUBLE) / n_docs", 2)
-    return f"""
-        WITH qg AS ({quality_gates_sql(table)}),
-        hosted AS (SELECT {_HOST_SQL} AS host, n_words,
-                          CASE WHEN kept THEN 1 ELSE 0 END AS kept_i
-                   FROM qg),
-        agg AS (SELECT host,
-                       CAST(COUNT(*) AS BIGINT) AS n_docs,
-                       CAST(SUM(kept_i) AS BIGINT) AS n_kept,
-                       CAST(SUM(n_words) AS BIGINT) AS sum_words
-                FROM hosted GROUP BY host)
-        SELECT host, n_docs, n_kept, {rate} AS kept_rate,
-               {mean_words} AS mean_words
-        FROM agg
-    """
-
-
-# --- incremental view maintenance: per-host stats under recrawl upserts ----
-
-def incremental_host_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Incremental maintenance of per-host (n_urls, total_chars) under
-    a recrawl batch — the 100-TB pattern where you do NOT re-aggregate
-    10^12 pages because 10^8 arrived: the maintained aggregate is
-    ``old_host_stats ⊕ delta``, where the delta RETRACTS the replaced
-    capture's contribution and ADDS the new one.
-
-    Era derivation matches ``snapshot_diff`` (doc_id % 2): era 0 is the
-    old snapshot (latest capture per url), era 1 the arriving batch
-    (its own latest per url).  Per url the batch either (a) introduces
-    a new url (+new), (b) supersedes the old capture when strictly
-    newer (−old +new), or (c) is stale (older than what the snapshot
-    holds — dropped, no delta).  All delta terms are per-(host) SUMs —
-    partial-aggregable, so a host with 10^8 updated urls folds
-    map-side; the merge with the old stats is one host-keyed outer
-    join of two |hosts|-sized tables.
-
-    Output per host: maintained ``n_urls``/``total_chars`` plus the
-    batch-audit counters ``n_added``/``n_updated``/``n_stale``.
-    tests/test_webcorpus.py pins the maintained numbers equal to a
-    direct recompute over latest-per-url across both eras — the IVM
-    path and the full-recompute path must agree exactly."""
-    web = _docs(spark, sf_dir).select(
-        "n_chars",
-        F.expr(_URL_EXPR).alias("url"),
-        F.expr(_HOST_EXPR).alias("host"),
-        F.expr(_WARC_EXPR).alias("warc_epoch"),
-        (F.col("doc_id") % 2).alias("era"),
-    )
-    _scoped_clear()
-    # one pass builds BOTH eras' latest-per-url tables
-    latest = _scoped_persist(
-        web.groupBy("era", "url").agg(
-            F.min("host").alias("host"),  # host is a function of url
-            F.expr("max_by(n_chars, warc_epoch)").alias("chars"),
-            F.max("warc_epoch").alias("epoch"),
-        )
-    )
-    base = latest.where(F.col("era") == 0).select(
-        "url", "host",
-        F.col("chars").alias("old_chars"), F.col("epoch").alias("old_epoch"),
-    )
-    batch = latest.where(F.col("era") == 1).select(
-        "url", F.col("host").alias("bhost"),
-        F.col("chars").alias("new_chars"), F.col("epoch").alias("new_epoch"),
-    )
-    old_stats = base.groupBy("host").agg(
-        F.count("*").cast("long").alias("n_urls"),
-        F.sum("old_chars").cast("long").alias("total_chars"),
-    )
-    j = base.join(batch, "url", "full_outer").select(
-        F.coalesce(F.col("host"), F.col("bhost")).alias("host"),
-        F.expr(
-            "case when old_epoch is null then 'added'"
-            " when new_epoch is null then 'kept'"
-            " when new_epoch > old_epoch then 'updated'"
-            " else 'stale' end"
-        ).alias("kind"),
-        F.expr(
-            "case when old_epoch is null then new_chars"
-            " when new_epoch is null then cast(0 as bigint)"
-            " when new_epoch > old_epoch then new_chars - old_chars"
-            " else cast(0 as bigint) end"
-        ).alias("d_chars"),
-    )
-    delta = j.groupBy("host").agg(
-        F.expr("sum(case when kind = 'added' then 1 else 0 end)")
-        .cast("long").alias("n_added"),
-        F.expr("sum(case when kind = 'updated' then 1 else 0 end)")
-        .cast("long").alias("n_updated"),
-        F.expr("sum(case when kind = 'stale' then 1 else 0 end)")
-        .cast("long").alias("n_stale"),
-        F.sum("d_chars").cast("long").alias("d_chars"),
-    )
-    return (
-        old_stats.join(delta, "host", "full_outer")
-        .select(
-            "host",
-            F.expr("coalesce(n_urls, 0) + coalesce(n_added, 0)")
-            .cast("long").alias("n_urls"),
-            F.expr("coalesce(total_chars, 0) + coalesce(d_chars, 0)")
-            .cast("long").alias("total_chars"),
-            F.expr("coalesce(n_added, 0)").cast("long").alias("n_added"),
-            F.expr("coalesce(n_updated, 0)").cast("long").alias("n_updated"),
-            F.expr("coalesce(n_stale, 0)").cast("long").alias("n_stale"),
-        )
-    )
-
-
-def incremental_host_stats_sql(table: str = "documents") -> str:
-    return f"""
-        WITH ivm_web AS (
-          SELECT n_chars, {_URL_SQL} AS url, {_HOST_SQL} AS host,
-                 {_WARC_SQL} AS warc_epoch, doc_id % 2 AS era
-          FROM {table}),
-        ivm_latest AS (
-          SELECT era, url, MIN(host) AS host,
-                 arg_max(n_chars, warc_epoch) AS chars,
-                 MAX(warc_epoch) AS epoch
-          FROM ivm_web GROUP BY era, url),
-        ivm_base AS (SELECT url, host, chars AS old_chars, epoch AS old_epoch
-                     FROM ivm_latest WHERE era = 0),
-        ivm_batch AS (SELECT url, host AS bhost, chars AS new_chars,
-                             epoch AS new_epoch
-                      FROM ivm_latest WHERE era = 1),
-        ivm_old AS (SELECT host, CAST(COUNT(*) AS BIGINT) AS n_urls,
-                           CAST(SUM(old_chars) AS BIGINT) AS total_chars
-                    FROM ivm_base GROUP BY host),
-        ivm_j AS (
-          SELECT COALESCE(b.host, n.bhost) AS host,
-                 CASE WHEN b.old_epoch IS NULL THEN 'added'
-                      WHEN n.new_epoch IS NULL THEN 'kept'
-                      WHEN n.new_epoch > b.old_epoch THEN 'updated'
-                      ELSE 'stale' END AS kind,
-                 CASE WHEN b.old_epoch IS NULL THEN n.new_chars
-                      WHEN n.new_epoch IS NULL THEN CAST(0 AS BIGINT)
-                      WHEN n.new_epoch > b.old_epoch
-                        THEN n.new_chars - b.old_chars
-                      ELSE CAST(0 AS BIGINT) END AS d_chars
-          FROM ivm_base b FULL OUTER JOIN ivm_batch n USING (url)),
-        ivm_delta AS (
-          SELECT host,
-                 CAST(SUM(CASE WHEN kind = 'added' THEN 1 ELSE 0 END) AS BIGINT)
-                   AS n_added,
-                 CAST(SUM(CASE WHEN kind = 'updated' THEN 1 ELSE 0 END) AS BIGINT)
-                   AS n_updated,
-                 CAST(SUM(CASE WHEN kind = 'stale' THEN 1 ELSE 0 END) AS BIGINT)
-                   AS n_stale,
-                 CAST(SUM(d_chars) AS BIGINT) AS d_chars
-          FROM ivm_j GROUP BY host)
-        SELECT COALESCE(o.host, d.host) AS host,
-               CAST(COALESCE(o.n_urls, 0) + COALESCE(d.n_added, 0) AS BIGINT)
-                 AS n_urls,
-               CAST(COALESCE(o.total_chars, 0) + COALESCE(d.d_chars, 0) AS BIGINT)
-                 AS total_chars,
-               CAST(COALESCE(d.n_added, 0) AS BIGINT) AS n_added,
-               CAST(COALESCE(d.n_updated, 0) AS BIGINT) AS n_updated,
-               CAST(COALESCE(d.n_stale, 0) AS BIGINT) AS n_stale
-        FROM ivm_old o FULL OUTER JOIN ivm_delta d ON o.host = d.host
-    """
-
-
 # --- host-graph PageRank (crawl prioritization) ----------------------------
 
 PR_SCALE = 1_000_000_000          # ranks live in integer 1e-9 units
@@ -537,11 +291,17 @@ def _pr_edges_sql():
     return src, dst
 
 
-def host_pagerank(spark: SparkSession, sf_dir: str,
-                  n_iters: int = PR_ITERS) -> DataFrame:
+def _pagerank_ranks(docs: DataFrame, n_iters: int = PR_ITERS) -> DataFrame:
     """Host-graph PageRank — the crawl-prioritization signal (which
     hosts does the rest of the web point at): ``n_iters`` power
-    iterations over the document-derived host link graph.
+    iterations over the document-derived host link graph, returned as
+    (host, pagerank_e9).
+
+    ``docs`` is any frame carrying ``doc_id`` — ``host_profile`` passes
+    its ALREADY-PERSISTED per-row projection, so the graph derives off
+    that cache instead of a second corpus scan (the same
+    frame-parameterization as ``similarity._ivf_model_from``); the
+    caller owns the scoped-cache clear.
 
     EXACT integer arithmetic throughout (ranks scaled to ``PR_SCALE``,
     damping α = 85/100 as integer multiply-then-floor-divide, per-edge
@@ -559,26 +319,12 @@ def host_pagerank(spark: SparkSession, sf_dir: str,
     on host; on a real cluster an iteration count > ~10 wants the
     dedup_groups checkpoint cadence (operators/dedup.py) to truncate
     lineage — at the graded T=5 the plain nested plan is fine."""
-    _scoped_clear()
-    return _pagerank_ranks(spark, sf_dir, n_iters)
-
-
-def _pagerank_ranks(spark: SparkSession, sf_dir: str,
-                    n_iters: int = PR_ITERS,
-                    docs: DataFrame | None = None) -> DataFrame:
-    """Rank computation WITHOUT the scoped-cache clear — composable from
-    multi-branch queries (``host_profile``) that own the cache scope.
-    Pass ``docs`` (any frame carrying ``doc_id``, typically the
-    caller's ALREADY-PERSISTED projection) to derive the graph off an
-    existing cache instead of a second corpus scan — the same
-    frame-parameterization as ``similarity._ivf_model_from``."""
     src, dst = _pr_edges_spark()
     base_total = (PR_ALPHA_DEN - PR_ALPHA_NUM) * PR_SCALE // PR_ALPHA_DEN
-    source = _docs(spark, sf_dir) if docs is None else docs
     # persisted: feeds the edge aggregate AND both union legs of the
-    # node set — one doc_id-pruned scan (or cache read) instead of three
+    # node set — one cache read instead of three
     web = _scoped_persist(
-        source.select(
+        docs.select(
             F.expr(f"cast({src} as bigint)").alias("src"),
             F.expr(f"cast({dst} as bigint)").alias("dst"),
         )
@@ -670,18 +416,16 @@ def host_pagerank_sql(table: str = "documents",
 
 
 def host_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-host corpus profile AND curation view fused into ONE
-    aggregate (round-4 consolidation of ``host_stats`` +
-    ``host_quality_report``): doc/url counts, char mass, corpus share,
-    C4-gate survival rate, and mean document length — one persisted
+    """Per-host corpus profile AND curation view as ONE aggregate:
+    doc/url counts, char mass, corpus share, C4-gate survival rate,
+    mean document length and host-graph PageRank — one persisted
     per-row projection (gate columns are per-row codegen), one hash
-    aggregate keyed on host, one broadcast of the 1-row denominator.
-    Strictly cheaper than running the two source queries separately
-    (they each re-scanned and re-tokenized); pinned single-FileScan in
-    tests/test_plans.py.  Per-column semantics are the source queries',
-    verbatim — the gate and mean-length fragments are the SAME module
-    constants quality_gates/doc_profile build from (textstats.KEPT_EXPR
-    / ML_EXPR), and equality is pinned by tests/test_webcorpus.py."""
+    aggregate keyed on host, one broadcast of the 1-row denominator —
+    never an unpartitioned window, which would funnel every row through
+    a single reducer at 10^8 hosts.  Pinned single-FileScan in
+    tests/test_plans.py.  The gate and mean-length fragments are the
+    SAME module constants doc_profile builds from (textstats.KEPT_EXPR
+    / ML_EXPR)."""
     from .textstats import KEPT_EXPR, ML_EXPR
 
     _scoped_clear()
@@ -712,11 +456,10 @@ def host_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     share = round_half_up_expr("CAST(n_docs AS DOUBLE) / corpus_docs", 6)
     rate = round_half_up_expr("CAST(n_kept AS DOUBLE) / n_docs", 6)
     mean_words = round_half_up_expr("CAST(sum_words AS DOUBLE) / n_docs", 2)
-    # round 5: + crawl-prioritization signal — the host-graph PageRank
-    # (one broadcastable |hosts|-row join; _pagerank_ranks shares this
-    # query's cache scope AND its persisted per-row projection — the
-    # graph derives off the cache, keeping the single-FileScan shape)
-    pr = _pagerank_ranks(spark, sf_dir, docs=rows)
+    # the host-graph PageRank: one broadcastable |hosts|-row join;
+    # _pagerank_ranks shares this query's cache scope AND its persisted
+    # per-row projection, keeping the single-FileScan shape
+    pr = _pagerank_ranks(rows)
     return (
         per_host.crossJoin(F.broadcast(total))
         .join(pr, "host")

@@ -66,17 +66,6 @@ RESULT_SCHEMA = T.StructType([
     T.StructField("kernel_ms", T.DoubleType(), True),
 ])
 
-METRICS_SCHEMA = T.StructType([
-    T.StructField("run_id", T.StringType(), False),
-    T.StructField("bucket", T.IntegerType(), True),
-    T.StructField("n_docs", T.LongType(), True),
-    T.StructField("n_success", T.LongType(), True),
-    T.StructField("n_failure", T.LongType(), True),
-    T.StructField("first_error", T.StringType(), True),
-    T.StructField("kernel_ms", T.DoubleType(), True),
-])
-
-
 def payload_to_ir(payload: bytes | None) -> tuple[DocumentIR, list[dict], str]:
     """Front-end dispatch: validate, gunzip, then sniff the payload bytes
     and hand them to the PDF or HTML front-end, which builds the kernel IR.

@@ -224,39 +224,11 @@ def top_orders_sql(k: int = 20) -> str:
     """
 
 
-def events_user_activity(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Distinct aggregation (dedup analogue D1-D4 at corpus scale)."""
-    return (
-        _t(spark, sf_dir, "events")
-        .groupBy("event_type")
-        .agg(
-            F.countDistinct("user_id").alias("n_users"),
-            F.count("*").alias("n_events"),
-            F.expr(_r2("SUM(value)")).alias("total_value"),
-        )
-    )
-
-
-def events_json_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Semi-structured projection: JSON field extraction + aggregate."""
-    return (
-        _t(spark, sf_dir, "events")
-        .withColumn("k", F.get_json_object("props", "$.k").cast("long"))
-        .groupBy("event_type")
-        .agg(
-            F.sum("k").cast("long").alias("sum_k"),
-            F.max("k").cast("long").alias("max_k"),
-        )
-    )
-
-
 def events_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-event-type activity profile (round-4 consolidation of
-    ``events_user_activity`` + ``events_json_stats``): distinct users,
-    event counts, value mass, and the JSON-extracted ``k`` aggregates —
-    ONE hash aggregate where the two source queries each scanned and
-    shuffled separately.  Column semantics are the source queries',
-    verbatim."""
+    """Per-event-type activity profile: distinct users, event counts,
+    value mass (distinct aggregation, the dedup analogue at corpus
+    scale), and the JSON-extracted ``k`` aggregates (semi-structured
+    projection) — ONE hash aggregate."""
     return (
         _t(spark, sf_dir, "events")
         .withColumn("k", F.get_json_object("props", "$.k").cast("long"))
@@ -889,6 +861,10 @@ def conversion_funnel_sql() -> str:
 # a long multilingual tail — the shape of every published LLM mix.
 MIX_WEIGHTS: dict[str, int] = {"en": 4, "fr": 2, "es": 2, "de": 1, "zh": 1}
 
+# fixed training-sequence length (tokens): token_budget_sample reports
+# where each selected document starts in the packed sequence stream
+SEQ_LEN = 512
+
 
 def _bucket_budget_case(weights: dict[str, int] | None, budget_tokens: int,
                         n_buckets: int) -> str:
@@ -1002,128 +978,6 @@ def token_budget_sample_sql(budget_tokens: int = 12_000, n_buckets: int = 8,
           WHERE bucket_budget IS NOT NULL)
         WHERE cum_tokens <= bucket_budget
     """
-
-
-SEQ_LEN = 512  # fixed training-sequence length (tokens) for packing
-
-
-def pack_sequences(spark: SparkSession, sf_dir: str,
-                   seq_len: int = SEQ_LEN,
-                   n_buckets: int = 8,
-                   weights: dict[str, int] | None = MIX_WEIGHTS,
-                   budget_tokens: int = 12_000) -> DataFrame:
-    """Sequence packing — the LLM-pretraining primitive downstream of the
-    mix: concatenate the selected documents (deterministic hash order,
-    same LCG order as ``token_budget_sample``) into one token stream per
-    (lang, bucket) and chunk it into fixed ``seq_len`` sequences;
-    documents CROSS sequence boundaries (standard concat-then-chunk
-    packing), so a document spanning several sequences emits one row per
-    overlapped sequence with its token span.
-
-    Output: (lang, bucket, doc_id, seq_id, start_in_seq, n_toks) — one
-    row per document × overlapped sequence, all integer arithmetic:
-    a document occupying stream positions [cum−n, cum) overlaps
-    sequences floor((cum−n)/L) … floor((cum−1)/L); the explode is over
-    that per-document range (bounded by doc_len/L + 1, never corpus-
-    sized).  Skew shape is ``token_budget_sample``'s: the cumulative
-    window partitions by (lang, hash bucket) — no single-reducer
-    language — and sequence ids are local to (lang, bucket), so packing
-    shards scale horizontally exactly like the mix itself."""
-    sel = token_budget_sample(spark, sf_dir, budget_tokens=budget_tokens,
-                              n_buckets=n_buckets, weights=weights)
-    return (
-        sel.where(F.col("n_tokens") > 0)
-        .withColumn("first_seq", F.expr(f"(cum_tokens - n_tokens) div {seq_len}"))
-        .withColumn("last_seq", F.expr(f"(cum_tokens - 1) div {seq_len}"))
-        .select(
-            "lang", "bucket", "doc_id", "n_tokens", "cum_tokens",
-            F.explode(
-                F.expr("sequence(first_seq, last_seq)")
-            ).alias("seq_id"),
-        )
-        .select(
-            "lang", "bucket", "doc_id",
-            F.col("seq_id").cast("long").alias("seq_id"),
-            # this doc's span inside THIS sequence
-            F.expr(
-                f"cast(greatest(cum_tokens - n_tokens, seq_id * {seq_len})"
-                f" - seq_id * {seq_len} as long)"
-            ).alias("start_in_seq"),
-            F.expr(
-                f"cast(least(cum_tokens, (seq_id + 1) * {seq_len})"
-                f" - greatest(cum_tokens - n_tokens, seq_id * {seq_len})"
-                " as long)"
-            ).alias("n_toks"),
-        )
-    )
-
-
-def pack_sequences_sql(seq_len: int = SEQ_LEN, n_buckets: int = 8,
-                       weights: dict[str, int] | None = MIX_WEIGHTS,
-                       budget_tokens: int = 12_000) -> str:
-    sel = token_budget_sample_sql(budget_tokens=budget_tokens,
-                                  n_buckets=n_buckets, weights=weights)
-    return f"""
-        WITH sel AS ({sel}),
-        spans AS (
-          SELECT lang, bucket, doc_id, n_tokens, cum_tokens,
-                 (cum_tokens - n_tokens) // {seq_len} AS first_seq,
-                 (cum_tokens - 1) // {seq_len} AS last_seq
-          FROM sel WHERE n_tokens > 0),
-        -- generate_series with column bounds is only usable as a
-        -- list expression (the table function rejects lateral column
-        -- parameters), so explode via unnest in the SELECT list
-        exploded AS (
-          SELECT lang, bucket, doc_id, n_tokens, cum_tokens,
-                 unnest(generate_series(first_seq, last_seq)) AS seq_id
-          FROM spans)
-        SELECT lang, bucket, doc_id,
-               CAST(seq_id AS BIGINT) AS seq_id,
-               CAST(greatest(cum_tokens - n_tokens, seq_id * {seq_len})
-                    - seq_id * {seq_len} AS BIGINT) AS start_in_seq,
-               CAST(least(cum_tokens, (seq_id + 1) * {seq_len})
-                    - greatest(cum_tokens - n_tokens, seq_id * {seq_len})
-                 AS BIGINT) AS n_toks
-        FROM exploded
-    """
-
-
-def feasible_mixture_budget(spark: SparkSession, sf_dir: str,
-                            weights: dict[str, int] | None = None,
-                            headroom_num: int = 1,
-                            headroom_den: int = 1) -> int:
-    """Largest total token budget whose weighted per-language shares are
-    all satisfiable by the corpus WITHOUT upsampling: with S = Σw, a
-    total budget T needs ``T·w/S`` tokens of each weighted language, so
-    T* = min over languages of ``avail_lang · S // w_lang`` (language
-    missing from the corpus → 0: an infeasible mixture is a loud zero,
-    not a silently reshaped mix).  Pure integer arithmetic; optional
-    ``headroom_num/den`` scales the result down (e.g. 9/10 leaves 10%
-    slack for the prefix-truncation undershoot of atomic documents).
-
-    One aggregate pass producing |languages| rows — bounded metadata,
-    so the driver-side collect is legitimate at any corpus scale (the
-    same contract as the IVF probe-cell collect).  Feed the result to
-    ``token_budget_sample(budget_tokens=...)`` for a self-sizing mix."""
-    if weights is None:
-        weights = MIX_WEIGHTS
-    if not weights:
-        return 0  # an empty mixture is loudly infeasible, same as a
-        #           missing language — not a ValueError
-    total_w = sum(weights.values())
-    rows = (
-        _t(spark, sf_dir, "documents")
-        .where(F.col("lang").isin(*weights))
-        .groupBy("lang")
-        .agg(F.expr(
-            "cast(sum(size(split(coalesce(text, ''), ' '))) as long)"
-        ).alias("avail"))
-        .collect()
-    )
-    avail = {r["lang"]: r["avail"] for r in rows}
-    t_star = min(avail.get(lang, 0) * total_w // w
-                 for lang, w in weights.items())
-    return t_star * headroom_num // headroom_den
 
 
 def salted_join_user_segments(spark: SparkSession, sf_dir: str,

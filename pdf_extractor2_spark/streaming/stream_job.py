@@ -16,10 +16,9 @@ backfills; remove it for continuous tailing.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, SparkSession
 
 from ..plans.extract_job import (
-    METRICS_SCHEMA,
     RESULT_SCHEMA,
     extraction_kernel,
     metrics_rollup,

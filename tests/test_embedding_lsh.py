@@ -19,6 +19,25 @@ SF_DIR = "/root/testdata/sf0.01"
 THRESHOLD = 0.35
 
 
+def _pairs(spark, n_bands=similarity.N_SIG_BANDS,
+           band_dims=similarity.BAND_DIMS):
+    """{(vec_a, vec_b)} the graded near-dup search finds over one
+    persisted embeddings scan."""
+    from pdf_extractor2_spark.operators.dedup import (
+        _scoped_clear,
+        _scoped_persist,
+    )
+
+    _scoped_clear()
+    emb = _scoped_persist(similarity._emb(spark, SF_DIR))
+    return {
+        (r["vec_a"], r["vec_b"])
+        for r in similarity._near_dup_pairs_from(
+            emb, THRESHOLD, n_bands, band_dims
+        ).collect()
+    }
+
+
 @pytest.fixture(scope="module")
 def truth():
     t = pq.read_table(f"{SF_DIR}/embeddings.parquet")
@@ -39,17 +58,9 @@ def test_banded_recall_beats_monolithic_block(spark, truth):
     truth_pairs, n = truth
     assert truth_pairs, "ground truth must be non-empty at sf0.01"
 
-    banded = {
-        (r["vec_a"], r["vec_b"])
-        for r in similarity.embedding_near_dup_pairs(spark, SF_DIR, THRESHOLD).collect()
-    }
+    banded = _pairs(spark)
     # single monolithic block = 1 band of n_bands*band_dims sign bits
-    mono = {
-        (r["vec_a"], r["vec_b"])
-        for r in similarity.embedding_near_dup_pairs(
-            spark, SF_DIR, THRESHOLD, n_bands=1, band_dims=8
-        ).collect()
-    }
+    mono = _pairs(spark, n_bands=1, band_dims=8)
     # LSH never invents pairs: everything returned is true (exact cosine
     # re-check inside buckets)
     assert banded <= truth_pairs and mono <= truth_pairs
@@ -68,33 +79,9 @@ def test_default_config_recall_floor(spark, truth):
     curve in BENCH/BASELINE.md, sweep in
     BENCH/neardup_recall_sweep.py)."""
     truth_pairs, n = truth
-    found = {
-        (r["vec_a"], r["vec_b"])
-        for r in similarity.embedding_near_dup_pairs(
-            spark, SF_DIR, THRESHOLD
-        ).collect()
-    }
+    found = _pairs(spark)
     assert found <= truth_pairs  # exact re-scoring: precision 1.0
     assert len(found) / len(truth_pairs) >= 0.8, len(found) / len(truth_pairs)
-
-
-def test_h1_probe_strictly_widens_candidates(spark, truth):
-    """The multiprobe must be the thing buying the recall: switching it
-    off under the same banding must find strictly fewer true pairs."""
-    truth_pairs, _ = truth
-    with_probe = {
-        (r["vec_a"], r["vec_b"])
-        for r in similarity.embedding_near_dup_pairs(
-            spark, SF_DIR, THRESHOLD, probe_h1=True
-        ).collect()
-    }
-    without = {
-        (r["vec_a"], r["vec_b"])
-        for r in similarity.embedding_near_dup_pairs(
-            spark, SF_DIR, THRESHOLD, probe_h1=False
-        ).collect()
-    }
-    assert without < with_probe
 
 
 def test_banded_candidates_are_a_fraction_of_all_pairs(spark, truth):

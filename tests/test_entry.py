@@ -140,20 +140,26 @@ def _module_file(name: str) -> Path | None:
     return None
 
 
+def _from_base(node: ast.ImportFrom, path: Path) -> str:
+    """The absolute module a ``from ... import`` statement in ``path``
+    imports from."""
+    if not node.level:
+        return node.module or ""
+    name = _module_name(path)
+    package = name if path.name == "__init__.py" else name.rpartition(".")[0]
+    parts = package.split(".")
+    anchor = parts[: len(parts) + 1 - node.level]  # level 1 is the package
+    return ".".join(anchor + ([node.module] if node.module else []))
+
+
 def _imported_names(path: Path):
     """Dotted names ``path`` imports anywhere, function bodies included;
     ``from a import b`` yields both ``a`` and ``a.b`` (b may be a module)."""
-    name = _module_name(path)
-    package = name if path.name == "__init__.py" else name.rpartition(".")[0]
     for node in ast.walk(ast.parse(path.read_text(encoding="utf-8"))):
         if isinstance(node, ast.Import):
             yield from (alias.name for alias in node.names)
         elif isinstance(node, ast.ImportFrom):
-            base = node.module or ""
-            if node.level:  # relative: level 1 is the package itself
-                parts = package.split(".")
-                anchor = parts[: len(parts) + 1 - node.level]
-                base = ".".join(anchor + ([node.module] if node.module else []))
+            base = _from_base(node, path)
             yield base
             yield from (f"{base}.{alias.name}" for alias in node.names)
 
@@ -178,4 +184,115 @@ def test_every_package_module_is_reached_from_an_entry_point():
     modules = sorted((REPO / PACKAGE).rglob("*.py"))
     unreached = [str(m.relative_to(REPO)) for m in modules if m not in reached]
     assert modules
+    assert not unreached, unreached
+
+
+# Definitions no entry point reaches on purpose, each with its reason.
+UNREACHED_OK = {
+    ("pdf_extractor2_spark.functions.scalars", "_EMAIL"):
+        "the reference pattern test_scalars' differential test compares against",
+    ("pdf_extractor2_spark.sources.corpus", "generate_rows"):
+        "generates the corpus tests/kernel_golden.py pins",
+    ("pdf_extractor2_spark.serve", "serve_background"):
+        "starts the server test_serve drives",
+}
+ROOT_DEFINITIONS = [("pdf_extractor2_spark.streaming.stream_job", "stream_extract")]
+
+
+def _scope(path: Path):
+    """(definitions, statements, bindings) of one file: top-level def,
+    class and assignment nodes by name; the other module-level statements;
+    and what each imported name (anywhere in the file) refers to, either a
+    module name or a (module, name) pair."""
+    tree = ast.parse(path.read_text(encoding="utf-8"))
+    defs, stmts, binds = {}, [], {}
+    for node in tree.body:
+        if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
+            defs[node.name] = node
+        elif isinstance(node, (ast.Assign, ast.AnnAssign)):
+            targets = node.targets if isinstance(node, ast.Assign) else [node.target]
+            names = [n.id for t in targets for n in ast.walk(t) if isinstance(n, ast.Name)]
+            defs.update(dict.fromkeys(names, node))
+        else:
+            stmts.append(node)
+    for node in ast.walk(tree):
+        if isinstance(node, ast.Import):
+            for alias in node.names:
+                top = alias.name.partition(".")[0]  # `import a.b` binds a
+                binds[alias.asname or top] = alias.name if alias.asname else top
+        elif isinstance(node, ast.ImportFrom):
+            base = _from_base(node, path)
+            for alias in node.names:
+                sub = f"{base}.{alias.name}"
+                binds[alias.asname or alias.name] = (
+                    sub if _module_file(sub) else (base, alias.name)
+                )
+    return defs, stmts, binds
+
+
+def _references(module: str, node, defs, binds):
+    """(module, name) pairs the code under ``node`` names, through a bare
+    name or an attribute of an imported module."""
+
+    def resolve(expr):
+        if isinstance(expr, ast.Name):
+            if expr.id in defs:
+                return (module, expr.id)
+            return binds.get(expr.id)
+        if isinstance(expr, ast.Attribute):
+            base = resolve(expr.value)
+            if isinstance(base, str):
+                sub = f"{base}.{expr.attr}"
+                return sub if _module_file(sub) else (base, expr.attr)
+        return None
+
+    for sub in ast.walk(node):
+        target = resolve(sub) if isinstance(sub, (ast.Name, ast.Attribute)) else None
+        if isinstance(target, tuple):
+            yield target
+
+
+def test_every_package_definition_is_reached_from_an_entry_point():
+    """Module-level twin of the module guard: a top-level function, class
+    or constant that no entry point reaches (through module-level code or
+    other reached definitions) is code only tests run; delete it, or give
+    it a reason in ``UNREACHED_OK``."""
+    files = {_module_name(p): p for p in (REPO / PACKAGE).rglob("*.py")}
+    files.update({_module_name(p): p for p in ENTRY_POINTS})
+    scopes = {m: _scope(p) for m, p in files.items()}
+    entry = {_module_name(p) for p in ENTRY_POINTS if PACKAGE not in p.parts}
+
+    todo = [(m, s) for m, (_, stmts, _) in scopes.items() for s in stmts]
+    todo += [(m, d) for m in entry for d in scopes[m][0].values()]
+    todo += [(m, scopes[m][0][n]) for m, n in ROOT_DEFINITIONS]
+    reached, seen = set(ROOT_DEFINITIONS), set()
+    while todo:
+        module, node = todo.pop()
+        if id(node) in seen:
+            continue
+        seen.add(id(node))
+        defs, _, binds = scopes[module]
+        for target in _references(module, node, defs, binds):
+            # follow re-exports until the pair names a definition
+            while target[0] in scopes and target[1] not in scopes[target[0]][0]:
+                nxt = scopes[target[0]][2].get(target[1])
+                if not isinstance(nxt, tuple):
+                    break
+                target = nxt
+            if target in reached or target[0] not in scopes:
+                continue
+            reached.add(target)
+            if target[1] in scopes[target[0]][0]:
+                todo.append((target[0], scopes[target[0]][0][target[1]]))
+
+    unreached = sorted(
+        f"{m}.{n}"
+        for m, (defs, _, _) in scopes.items()
+        if m.startswith(PACKAGE)
+        for n in defs
+        if not (n.startswith("__") and n.endswith("__"))
+        and (m, n) not in reached
+        and (m, n) not in UNREACHED_OK
+    )
+    assert len(scopes) > len(ENTRY_POINTS)
     assert not unreached, unreached

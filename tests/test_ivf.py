@@ -12,8 +12,6 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import functions as F
-
 from pdf_extractor2_spark.operators import similarity
 
 SF_DIR = "/root/testdata/sf0.001"
@@ -57,12 +55,13 @@ def test_ivf_multiprobe_recall_at_least_single_probe(spark):
     one = {r["vec_id"] for r in
            similarity.ann_ivf_topk(spark, SF_DIR, query_vec_id=0, k=5).collect()}
     three = {r["vec_id"] for r in
-             similarity.ann_ivf_multiprobe(spark, SF_DIR, query_vec_id=0, k=5).collect()}
+             similarity.ann_ivf_topk(spark, SF_DIR, query_vec_id=0, k=5,
+                                     n_probe=3).collect()}
     assert len(three & brute) >= len(one & brute)
 
 
 def test_ivf_cells_partition_all_vectors(spark):
-    cells = similarity.ivf_cell_assignments(spark, SF_DIR)
+    cells = similarity._ivf_model(spark, SF_DIR)[0]
     emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
     n = emb.count()
     assert cells.count() == n  # every vector gets exactly one cell
@@ -72,37 +71,12 @@ def test_ivf_cells_partition_all_vectors(spark):
     assert {r["cell"] for r in dist} <= set(range(similarity.N_IVF_CELLS))
 
 
-def test_gemm_assignment_matches_sql(spark):
-    """The Arrow-batched GEMM assignment (the 10^9-vector build path)
-    must produce exactly the SQL quantizer's cells on real data, at
-    both test scale factors."""
-    from pdf_extractor2_spark.operators.similarity import (
-        ivf_assign_gemm,
-        ivf_cell_assignments,
-    )
-
-    for sf in ("/root/testdata/sf0.001", "/root/testdata/sf0.01"):
-        sql_cells = {
-            r["vec_id"]: r["cell"] for r in ivf_cell_assignments(spark, sf).collect()
-        }
-        gemm_cells = {
-            r["vec_id"]: r["cell"] for r in ivf_assign_gemm(spark, sf).collect()
-        }
-        assert len(sql_cells) == len(gemm_cells) and sql_cells
-        assert {k: int(v) for k, v in sql_cells.items()} == {
-            k: int(v) for k, v in gemm_cells.items()
-        }, sf
-
-
 def test_multi_iteration_quantizer_parity_and_exactness(spark):
-    """Round 5b: the quantizer generalizes to n_iters Lloyd steps with
-    bit-identical Spark/DuckDB assignments at any T (the unrolled-CTE
-    oracle pattern for iterative ML), and the n_probe = n_cells
-    endpoint stays exact regardless of T.  Measured on sf0.1 the extra
-    iterations leave probe-1 recall nearly unchanged (0.364 at T=1 vs
-    0.396 at T=5 — the one-step quantizer already lands balanced
-    cells on this corpus; curve in BENCH/BASELINE.md), so the graded
-    contract stays at T=1."""
+    """Spark and the CTE-chain DuckDB oracle assign bit-identical
+    cells with the one-Lloyd-step quantizer the graded rows use.  More
+    steps were measured on sf0.1 and left probe-1 recall nearly
+    unchanged (0.364 at T=1 vs 0.396 at T=5; curve in
+    BENCH/BASELINE.md), so the quantizer takes one."""
     import duckdb
 
     from pdf_extractor2_spark.operators import similarity as S
@@ -111,14 +85,8 @@ def test_multi_iteration_quantizer_parity_and_exactness(spark):
     con = duckdb.connect()
     con.execute("CREATE VIEW embeddings AS SELECT * FROM "
                 f"read_parquet('{SF_DIR}/embeddings.parquet')")
-    for t in (1, 3):
-        got = sorted(tuple(r) for r in
-                     S._ivf_model_from(emb, n_iters=t)[0].collect())
-        want = sorted(con.execute(
-            f"WITH {S._ivf_model_ctes_sql('embeddings', S.N_IVF_CELLS, S.EMB_DIMS, t)} "
-            "SELECT vec_id, cell FROM a2").fetchall())
-        assert got == want and got, t
-    # T=3 assignments genuinely move vs T=1 (the iterations do refine)
-    t1 = dict(S._ivf_model_from(emb, n_iters=1)[0].collect())
-    t3 = dict(S._ivf_model_from(emb, n_iters=3)[0].collect())
-    assert t1 != t3 and set(t1) == set(t3)
+    got = sorted(tuple(r) for r in S._ivf_model_from(emb)[0].collect())
+    want = sorted(con.execute(
+        f"WITH {S._ivf_model_ctes_sql('embeddings', S.N_IVF_CELLS, S.EMB_DIMS)} "
+        "SELECT vec_id, cell FROM a2").fetchall())
+    assert got == want and got

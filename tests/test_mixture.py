@@ -1,11 +1,10 @@
 """Weighted data-mixing extension of token_budget_sample (round 5):
 target-mixture budgets per language, even-split back-compat pin,
-zero-weight language dropping, and cross-engine parity.
+zero-weight language dropping, cross-engine parity, and an independent
+Python model of the selection and its packing origin.
 """
 
 from __future__ import annotations
-
-import duckdb
 
 from pdf_extractor2_spark.plans import relational
 
@@ -77,96 +76,38 @@ def test_zero_weight_language_dropped(spark):
     assert rows and {r["lang"] for r in rows} == {"en"}
 
 
-def test_feasible_mixture_budget(spark):
-    """T* is the exact integer min over languages of avail·S/w, the
-    budget is achievable (every weighted language can fill its share),
-    and one unit more would overshoot some language's supply."""
-    import duckdb
-
-    con = duckdb.connect()
-    con.execute(
-        "CREATE VIEW documents AS SELECT * FROM "
-        f"read_parquet('{SF01}/documents.parquet')"
-    )
-    avail = dict(con.execute(
-        "SELECT lang, CAST(SUM(len(string_split(coalesce(text,''),' '))) "
-        "AS BIGINT) FROM documents GROUP BY lang"
-    ).fetchall())
-    w = relational.MIX_WEIGHTS
-    s = sum(w.values())
-    want = min(avail[l] * s // wl for l, wl in w.items())
-    got = relational.feasible_mixture_budget(spark, SF01)
-    assert got == want
-    for lang, wl in w.items():
-        assert got * wl // s <= avail[lang]          # feasible
-    assert any((want + s) * wl // s > avail[lang]    # and maximal
-               for lang, wl in w.items())
-    # headroom scales down exactly
-    assert relational.feasible_mixture_budget(
-        spark, SF01, headroom_num=9, headroom_den=10
-    ) == want * 9 // 10
-
-
-def test_feasible_budget_missing_language_is_zero(spark):
-    assert relational.feasible_mixture_budget(
-        spark, SF01, weights={"en": 1, "xx": 1}
-    ) == 0
-
-
-def test_pack_sequences_parity(spark):
-    from parity import assert_parity
-
-    assert_parity(relational.pack_sequences(spark, SF_DIR),
-                  relational.pack_sequences_sql(), SF_DIR)
-    assert_parity(relational.pack_sequences(spark, SF01, seq_len=64),
-                  relational.pack_sequences_sql(seq_len=64), SF01)
-
-
-def test_pack_sequences_invariants(spark):
-    """Concat-then-chunk semantics: per doc the spans reassemble the
-    whole document; per (lang, bucket) shard every sequence except the
-    last is exactly full; spans within a sequence tile without overlap;
-    documents genuinely cross sequence boundaries at seq_len=64."""
-    sl = 64
-    rows = relational.pack_sequences(spark, SF01, seq_len=sl).collect()
-    sel = {r["doc_id"]: r for r in
-           relational.token_budget_sample(spark, SF01).collect()}
-
-    by_doc: dict[int, int] = {}
-    by_seq: dict[tuple, list] = {}
-    for r in rows:
-        by_doc[r["doc_id"]] = by_doc.get(r["doc_id"], 0) + r["n_toks"]
-        by_seq.setdefault((r["lang"], r["bucket"], r["seq_id"]), []).append(r)
-    assert by_doc == {d: s["n_tokens"] for d, s in sel.items()
-                      if s["n_tokens"] > 0}
-
-    shard_max = {}
-    for (lang, bucket, seq), srs in by_seq.items():
-        spans = sorted((r["start_in_seq"], r["n_toks"]) for r in srs)
-        pos = spans[0][0]
-        for st, n in spans:
-            assert st == pos  # no gap, no overlap
-            pos = st + n
-        assert pos <= sl
-        key = (lang, bucket)
-        shard_max[key] = max(shard_max.get(key, -1), seq)
-    for (lang, bucket, seq), srs in by_seq.items():
-        filled = sum(r["n_toks"] for r in srs)
-        first = min(r["start_in_seq"] for r in srs)
-        if seq < shard_max[(lang, bucket)]:
-            assert first + filled == sl, (lang, bucket, seq)  # full
-    assert sum(1 for d in by_doc
-               if len([r for r in rows if r["doc_id"] == d]) > 1) > 0
-
-
 def test_fold_packing_origin_matches_pack_sequences(spark):
-    """token_budget_sample's (seq_id, seq_start) columns are exactly the
-    first span pack_sequences emits for that document."""
-    first = {}
-    for r in relational.pack_sequences(spark, SF01).collect():
-        cur = first.get(r["doc_id"])
-        if cur is None or r["seq_id"] < cur[0]:
-            first[r["doc_id"]] = (r["seq_id"], r["start_in_seq"])
-    for s in relational.token_budget_sample(spark, SF01).collect():
-        if s["n_tokens"] > 0:
-            assert (s["seq_id"], s["seq_start"]) == first[s["doc_id"]], s
+    """An independent Python model of the mix and of concat-then-chunk
+    packing: per (lang, hash bucket) shard, documents in LCG hash order
+    are taken while the running token total fits the shard budget, and
+    each lands at stream offset ``cum - n``, i.e. in sequence
+    ``(cum - n) // SEQ_LEN`` at position ``(cum - n) % SEQ_LEN``.  The
+    selection and its (seq_id, seq_start) columns must match exactly,
+    and some documents must start past the first sequence."""
+    import pyarrow.parquet as pq
+
+    budget, n_buckets, sl = 12_000, 8, relational.SEQ_LEN
+    w = relational.MIX_WEIGHTS
+    total_w = sum(w.values())
+    docs = pq.read_table(f"{SF01}/documents.parquet",
+                         columns=["doc_id", "lang", "text"]).to_pylist()
+    shards: dict[tuple, list] = {}
+    for d in docs:
+        if d["lang"] in w:
+            h = (d["doc_id"] * 1103515245 + 12345) % 2147483647
+            n = len((d["text"] or "").split(" "))
+            shards.setdefault((d["lang"], d["doc_id"] % n_buckets), []).append(
+                (h, d["doc_id"], n))
+    want = {}
+    for (lang, _), rows in shards.items():
+        cap = (budget * w[lang] // total_w) // n_buckets
+        cum = 0
+        for _, doc_id, n in sorted(rows):
+            cum += n
+            if cum <= cap:
+                want[doc_id] = ((cum - n) // sl, (cum - n) % sl)
+
+    got = {r["doc_id"]: (r["seq_id"], r["seq_start"])
+           for r in relational.token_budget_sample(spark, SF01).collect()}
+    assert got == want
+    assert any(seq > 0 for seq, _ in got.values())

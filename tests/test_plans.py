@@ -159,8 +159,16 @@ def test_dedup_plans_have_no_cartesian_product(spark):
     product — candidate pairs come from inverted-index or bucket joins."""
     from pdf_extractor2_spark.operators import dedup, similarity
 
-    for fn in (dedup.jaccard_pairs, dedup.minhash_lsh_pairs,
-               similarity.embedding_near_dup_pairs):
+    def near_dup_pairs(spark, sf_dir):
+        # the pair search alone: the graded row adds the IVF quantizer,
+        # whose tiny centroid table is a deliberate broadcast cross join
+        dedup._scoped_clear()
+        emb = dedup._scoped_persist(similarity._emb(spark, sf_dir))
+        return similarity._near_dup_pairs_from(
+            emb, 0.35, similarity.N_SIG_BANDS, similarity.BAND_DIMS
+        )
+
+    for fn in (dedup.jaccard_pairs, dedup.minhash_lsh_pairs, near_dup_pairs):
         plan = _plan(fn(spark, "/root/testdata/sf0.001"))
         assert "CartesianProduct" not in plan, fn.__name__
         assert "BroadcastNestedLoopJoin" not in plan, fn.__name__
@@ -192,13 +200,16 @@ def test_minhash_lsh_scans_documents_once(spark):
 
 
 def test_embedding_near_dup_scans_embeddings_once(spark):
-    """Same shape as the minhash pin: the banded hyperplane-LSH query
-    references embeddings from four branches (band a/b, exact-score a/b);
-    all must read the one persisted scan — at 10^9 vectors re-reading
-    the vector table 16× is the difference between a pass and a re-shard."""
-    from pdf_extractor2_spark.operators.similarity import embedding_near_dup_pairs
+    """Same shape as the minhash pin: the graded near-dup row references
+    embeddings from band a/b, exact-score a/b, labels, norms, the IVF
+    quantizer and the SemDeDup prune join; all must read the one
+    persisted scan — at 10^9 vectors re-reading the vector table 16× is
+    the difference between a pass and a re-shard."""
+    from pdf_extractor2_spark.operators.similarity import (
+        embedding_near_dup_labeled,
+    )
 
-    plan = _plan(embedding_near_dup_pairs(spark, "/root/testdata/sf0.001"))
+    plan = _plan(embedding_near_dup_labeled(spark, "/root/testdata/sf0.001"))
     assert "embeddings.parquet" in plan
     assert _unique_parquet_scans(plan) == 1, plan
     assert "InMemoryTableScan" in plan, plan
@@ -317,13 +328,13 @@ def test_duplicate_span_stats_scans_documents_once(spark):
 
 
 def test_consolidated_driver_rows_scan_once(spark):
-    """The round-4 fused driver rows must keep the single-scan shape of
-    their source operators: doc_profile (7 per-doc ops, one persisted
+    """The fused driver rows keep the single-scan shape: doc_profile
+    (every per-doc signal and the perplexity model off one persisted
     tokenize), top_tokens (global + per-lang from one persisted freq
-    aggregate), host_profile (stats + quality from one persisted per-row
-    projection), labeled embedding near-dup (pairs + labels + norms from
-    one persisted vector scan)."""
-    from pdf_extractor2_spark.operators import similarity, textstats, webcorpus
+    aggregate), host_profile (stats + quality + PageRank from one
+    persisted per-row projection).  The near-dup row has its own pin,
+    test_embedding_near_dup_scans_embeddings_once."""
+    from pdf_extractor2_spark.operators import textstats, webcorpus
 
     for fn, table, n_scans in (
         (textstats.doc_profile, "documents", 1),
@@ -331,8 +342,6 @@ def test_consolidated_driver_rows_scan_once(spark):
         # back to 1 in round 5b: the PageRank subtree derives its graph
         # off the SAME persisted per-row projection (review fix)
         (webcorpus.host_profile, "documents", 1),
-        (similarity.embedding_near_dup_labeled, "embeddings", 1),
-        (similarity.semdedup, "embeddings", 1),
     ):
         plan = _plan(fn(spark, "/root/testdata/sf0.001"))
         assert f"{table}.parquet" in plan, fn.__name__
@@ -341,13 +350,13 @@ def test_consolidated_driver_rows_scan_once(spark):
 
 
 def test_multibranch_webcorpus_queries_scan_documents_once(spark):
-    """ADVICE r3: host_stats/lang_confusion/url_normalize/snapshot_diff
-    reference a shared subtree from two branches — each must persist it
-    (scoped) so the documents scan (and the per-row work above it)
-    executes exactly once per query."""
+    """ADVICE r3: lang_confusion/url_normalize/snapshot_diff reference a
+    shared subtree from two branches — each must persist it (scoped) so
+    the documents scan (and the per-row work above it) executes exactly
+    once per query (host_profile: test_consolidated_driver_rows_scan_once)."""
     from pdf_extractor2_spark.operators import webcorpus
 
-    for fn in (webcorpus.host_stats, webcorpus.lang_confusion,
+    for fn in (webcorpus.lang_confusion,
                webcorpus.url_normalize, webcorpus.snapshot_diff):
         plan = _plan(fn(spark, "/root/testdata/sf0.001"))
         assert "documents.parquet" in plan, fn.__name__

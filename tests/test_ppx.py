@@ -1,8 +1,9 @@
-"""CCNet-style bigram-LM perplexity scorer (VERDICT r4 next #1):
-cross-engine parity on adversarial texts, fold-equals-standalone
-pinning, plan shape (single scan, no window over corpus rows), and a
-semantic sanity check that in-distribution text scores lower
-log-perplexity than gibberish."""
+"""CCNet-style bigram-LM perplexity scorer (VERDICT r4 next #1), graded
+as the ``n_bigrams``/``sum_logp_milli``/``log_ppx`` columns of
+``doc_profile``: cross-engine parity on adversarial texts, a pure-Python
+model of the scorer, plan shape (single scan, no window over corpus
+rows), and a semantic sanity check that in-distribution text scores
+lower log-perplexity than gibberish."""
 
 from __future__ import annotations
 
@@ -14,6 +15,18 @@ import pytest
 from pdf_extractor2_spark.operators import textstats
 
 from test_textstats_edge import EDGE_TEXTS, _compare
+
+PPX_COLS = ("doc_id", "n_bigrams", "sum_logp_milli", "log_ppx")
+
+
+def ppx_scores(spark, sf_dir):
+    """The perplexity columns of the graded ``doc_profile`` row."""
+    return textstats.doc_profile(spark, sf_dir).select(*PPX_COLS)
+
+
+def ppx_scores_sql():
+    return (f"SELECT {', '.join(PPX_COLS)}"
+            f" FROM ({textstats.doc_profile_sql()})")
 
 
 @pytest.fixture(scope="module")
@@ -34,30 +47,52 @@ def edge_dir(tmp_path_factory):
 
 def test_lm_perplexity_edge_parity(spark, edge_dir):
     """NULL text, empty tokens, unicode, single-token docs — the
-    standalone scorer must hash-match its DuckDB twin on all of them
-    (the doc_profile fold gets the same coverage via
-    test_textstats_edge.py::test_doc_profile_edge_parity)."""
-    _compare(spark, edge_dir,
-             textstats.lm_perplexity(spark, edge_dir),
-             textstats.lm_perplexity_sql())
+    scorer's columns must hash-match the DuckDB twin on all of them."""
+    _compare(spark, edge_dir, ppx_scores(spark, edge_dir), ppx_scores_sql())
 
 
 def test_doc_profile_fold_matches_standalone(spark):
-    """The graded row is the doc_profile fold; its ppx columns must be
-    EXACTLY the standalone operator's output (same persisted-base
-    tokenization, same model)."""
+    """The graded ppx columns on sf0.001 equal a standalone pure-Python
+    bigram LM: train on doc_id % 5 == 0, keep the top-512 train tokens
+    (ties by token), map the rest to <unk>, score every (prev, cur)
+    pair from <s> with add-one smoothing as integer milli-nats."""
+    import math
+    from collections import Counter
+
     sf = "/root/testdata/sf0.001"
-    fold = {
-        r["doc_id"]: (r["n_bigrams"], r["sum_logp_milli"], r["log_ppx"])
-        for r in textstats.doc_profile(spark, sf)
-        .select("doc_id", "n_bigrams", "sum_logp_milli", "log_ppx")
-        .collect()
-    }
-    alone = {
-        r["doc_id"]: (r["n_bigrams"], r["sum_logp_milli"], r["log_ppx"])
-        for r in textstats.lm_perplexity(spark, sf).collect()
-    }
-    assert fold == alone and len(fold) == 500
+    t = pq.read_table(f"{sf}/documents.parquet", columns=["doc_id", "text"])
+    bos, unk = "<s>", "<unk>"
+    pairs = {}
+    for d, text in zip(t.column("doc_id").to_pylist(), t.column("text").to_pylist()):
+        toks = (text or "").split(" ")
+        pairs[d] = list(zip([bos] + toks[:-1], toks))
+    train = [p for d, ps in pairs.items() if d % textstats.PPX_TRAIN_MOD == 0
+             for p in ps]
+    freq = Counter(cur for _, cur in train)
+    vocab = {tok for tok, _ in sorted(freq.items(), key=lambda tc: (-tc[1], tc[0]))
+             [:textstats.PPX_VOCAB_K]}
+
+    def mapped(prev, cur):
+        return (prev if prev == bos or prev in vocab else unk,
+                cur if cur in vocab else unk)
+
+    big = Counter(mapped(*p) for p in train)
+    ctx = Counter()
+    for (prev, _), c in big.items():
+        ctx[prev] += c
+    v = len({cur for _, cur in big}) + 1
+    want = {}
+    for d, ps in pairs.items():
+        milli = 0
+        for p in ps:
+            prev, cur = mapped(*p)
+            milli += math.floor(
+                math.log((big[(prev, cur)] + 1) / (ctx[prev] + v)) * 1000 + 0.5)
+        mean = -milli / (len(ps) * 1000)
+        want[d] = (len(ps), milli, math.floor(mean * 10 ** 4 + 0.5) / 10 ** 4)
+
+    got = {r["doc_id"]: tuple(r)[1:] for r in ppx_scores(spark, sf).collect()}
+    assert got == want and len(got) == 500
 
 
 def test_ppx_plan_shape(spark):
@@ -68,7 +103,7 @@ def test_ppx_plan_shape(spark):
     frame)."""
     from test_plans import _plan, _unique_parquet_scans
 
-    plan = _plan(textstats.lm_perplexity(spark, "/root/testdata/sf0.001"))
+    plan = _plan(ppx_scores(spark, "/root/testdata/sf0.001"))
     assert _unique_parquet_scans(plan) == 1, plan
     assert "Window" not in plan, plan
     assert "TakeOrdered" in plan, plan
@@ -96,7 +131,7 @@ def test_ppx_orders_in_distribution_before_gibberish(spark, tmp_path):
     pq.write_table(table, str(tmp_path / "documents.parquet"))
     got = {
         r["doc_id"]: r["log_ppx"]
-        for r in textstats.lm_perplexity(spark, str(tmp_path)).collect()
+        for r in ppx_scores(spark, str(tmp_path)).collect()
     }
     assert got[1] < got[2], got
 
@@ -106,8 +141,6 @@ def test_ppx_orders_in_distribution_before_gibberish(spark, tmp_path):
         f" read_parquet('{tmp_path}/documents.parquet')"
     )
     want = {
-        d: l for d, _, _, l in con.execute(
-            textstats.lm_perplexity_sql()
-        ).fetchall()
+        d: l for d, _, _, l in con.execute(ppx_scores_sql()).fetchall()
     }
     assert got == want

@@ -54,9 +54,9 @@ def _quartile_bands(vals):
 
 
 def test_corpus_filter_band_composition(spark):
-    """kept(with_ppx) == kept(without) ⋈ lm_perplexity WHERE band ≠
-    'tail', where the band is the exact corpus-wide quartile of the
-    standalone scorer's numbers (recomputed independently in Python) —
+    """kept(with_ppx) == kept(without) ⋈ doc_profile.log_ppx WHERE
+    band ≠ 'tail', where the band is the exact corpus-wide quartile of
+    the graded scorer's numbers (recomputed independently in Python) —
     and the sf0.001 corpus genuinely populates all three bands."""
     base = {
         r["doc_id"]: r["n_exact_dups"]
@@ -66,7 +66,8 @@ def test_corpus_filter_band_composition(spark):
     }
     scores = {
         r["doc_id"]: r["log_ppx"]
-        for r in textstats.lm_perplexity(spark, SF).collect()
+        for r in textstats.doc_profile(spark, SF)
+        .select("doc_id", "log_ppx").collect()
     }
     band = _quartile_bands(list(scores.values()))
     assert {band(v) for v in scores.values()} == {"head", "middle", "tail"}

@@ -15,7 +15,7 @@ import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
 
-from pdf_extractor2_spark.operators import textstats
+from test_ppx import ppx_scores, ppx_scores_sql
 
 WORDS = (
     ["the", "a", "of", "and", "to", "in", "is", "it", "was", "for"]
@@ -60,16 +60,14 @@ def test_ppx_random_corpus_parity(spark, tmp_path, seed):
     pq.write_table(table, str(d / "documents.parquet"))
 
     got = sorted(
-        tuple(r) for r in textstats.lm_perplexity(spark, str(d)).collect()
+        tuple(r) for r in ppx_scores(spark, str(d)).collect()
     )
     con = duckdb.connect()
     con.execute(
         f"CREATE VIEW documents AS SELECT * FROM"
         f" read_parquet('{d}/documents.parquet')"
     )
-    want = sorted(tuple(r) for r in con.execute(
-        textstats.lm_perplexity_sql()
-    ).fetchall())
+    want = sorted(tuple(r) for r in con.execute(ppx_scores_sql()).fetchall())
     assert len(got) == 300
     assert got == want, next(
         (a, b) for a, b in zip(got, want) if a != b

@@ -1,8 +1,12 @@
-"""Cross-engine parity of the round-3 text operators on adversarial
-texts — empty strings, consecutive spaces (empty tokens), unicode,
+"""Cross-engine parity of the graded text rows (``doc_profile``,
+``top_tokens``, ``duplicate_span_stats``, ``token_budget_sample``) on
+adversarial texts — empty strings, consecutive spaces (empty tokens), unicode,
 halfway-rounding ratios (1/128 = 0.0078125 rounds differently under
 Spark round() vs DuckDB round(); the operators use the floor idiom),
-single-token docs, and fully-repeated documents."""
+single-token docs, and fully-repeated documents.  The quality-gate and
+repetition checks compare just their columns of ``doc_profile``, so a
+failure names the signal that moved; doc_profile and top_tokens are
+also checked against pure-Python computations."""
 
 from __future__ import annotations
 
@@ -76,28 +80,37 @@ def _compare(spark, edge_dir, spark_df, sql):
     assert a  # non-empty
 
 
-def test_repetition_stats_edge_parity(spark, edge_dir):
+def _compare_doc_profile(spark, edge_dir, cols):
+    """``_compare`` on a projection of doc_profile and its twin."""
     from pdf_extractor2_spark.operators import textstats
 
     _compare(spark, edge_dir,
-             textstats.repetition_stats(spark, edge_dir),
-             textstats.repetition_stats_sql())
+             textstats.doc_profile(spark, edge_dir).select(*cols),
+             f"SELECT {', '.join(cols)} FROM ({textstats.doc_profile_sql()})")
+
+
+def test_repetition_stats_edge_parity(spark, edge_dir):
+    _compare_doc_profile(spark, edge_dir, (
+        "doc_id", "n_tokens", "n_3grams", "n_distinct_3grams",
+        "dup_3gram_frac", "top_token_frac",
+    ))
 
 
 def test_quality_gates_edge_parity(spark, edge_dir):
-    from pdf_extractor2_spark.operators import textstats
-
-    _compare(spark, edge_dir,
-             textstats.quality_gates(spark, edge_dir),
-             textstats.quality_gates_sql())
+    _compare_doc_profile(spark, edge_dir, (
+        "doc_id", "lang", "n_tokens", "mean_token_len", "has_min_words",
+        "word_len_ok", "no_lorem", "no_brace", "kept",
+    ))
 
 
 def test_top_tokens_by_lang_edge_parity(spark, edge_dir):
     from pdf_extractor2_spark.operators import textstats
 
     _compare(spark, edge_dir,
-             textstats.top_tokens_by_lang(spark, edge_dir),
-             textstats.top_tokens_by_lang_sql())
+             textstats.top_tokens_combined(spark, edge_dir)
+             .where("lang != '*'"),
+             f"SELECT * FROM ({textstats.top_tokens_combined_sql()})"
+             " WHERE lang != '*'")
 
 
 def test_doc_profile_edge_parity(spark, edge_dir):
@@ -117,68 +130,78 @@ def test_top_tokens_combined_edge_parity(spark, edge_dir):
 
 
 def test_doc_profile_matches_individual_ops(spark, edge_dir):
-    """The fused doc_profile is the SAME logic as the seven individual
-    per-doc operators — column-for-column equal on the adversarial edge
-    corpus, so the fused driver row keeps grading the originals."""
+    """Every per-row doc_profile column against its own pure-Python
+    computation on the adversarial edge corpus — an oracle independent
+    of both engine texts, so a misconception they share cannot hide."""
+    import re
+    from collections import Counter
+
     from pdf_extractor2_spark.operators import textstats
 
-    prof = {
-        r["doc_id"]: r.asDict()
-        for r in textstats.doc_profile(spark, edge_dir).collect()
-    }
+    def f6(x):  # the engines' shared half-up rounding
+        return math.floor(x * 1e6 + 0.5) / 1e6
+
+    def expected(text):
+        text = text or ""
+        toks = text.split(" ")
+        n, ml = len(toks), sum(map(len, toks)) / len(toks)
+        nbpe = len(re.findall(textstats._BPE_PATTERN, text))
+        fp = 0
+        for c in text:
+            fp = (fp * 31 + ord(c)) % textstats.MOD
+        n3 = max(n - 2, 0)
+        d3 = len({" ".join(toks[i:i + 3]) for i in range(n3)})
+        gates = (n >= 50, 3 <= ml <= 10, "lorem ipsum" not in text.lower(),
+                 "{" not in text)
+        return {
+            "n_tokens": n, "n_distinct_tokens": len(set(toks)),
+            "n_chars_actual": len(text),
+            "stopword_ratio": f6(sum(t in ("the", "a") for t in toks) / n),
+            "mean_token_len": f6(ml),
+            "quality_bucket": "keep" if len(text) >= 200 and n >= 40 else "drop",
+            "fingerprint": fp,
+            "pred_lang": ("en" if sum(t in ("the", "a", "of") for t in toks) * 10
+                          >= n else "und"),
+            "n_bpe_tokens": nbpe, "bpe_per_word": f6(nbpe / n),
+            "has_min_words": gates[0], "word_len_ok": gates[1],
+            "no_lorem": gates[2], "no_brace": gates[3], "kept": all(gates),
+            "n_3grams": n3, "n_distinct_3grams": d3,
+            "dup_3gram_frac": f6(1 - d3 / n3) if n3 else 0.0,
+            "top_token_frac": f6(max(Counter(toks).values()) / n),
+        }
+
+    prof = {r["doc_id"]: r.asDict()
+            for r in textstats.doc_profile(spark, edge_dir).collect()}
     assert len(prof) == len(EDGE_TEXTS)
-
-    def check(df, mapping):
-        for r in df.collect():
-            p = prof[r["doc_id"]]
-            for op_col, prof_col in mapping.items():
-                assert _norm(r[op_col]) == _norm(p[prof_col]), (
-                    op_col, r["doc_id"], r[op_col], p[prof_col]
-                )
-
-    check(textstats.token_stats(spark, edge_dir),
-          {"n_tokens": "n_tokens", "n_distinct_tokens": "n_distinct_tokens",
-           "n_chars_actual": "n_chars_actual"})
-    check(textstats.quality_scores(spark, edge_dir),
-          {"lang": "lang", "stopword_ratio": "stopword_ratio",
-           "mean_token_len": "mean_token_len",
-           "quality_bucket": "quality_bucket"})
-    check(textstats.fingerprints(spark, edge_dir),
-          {"fingerprint": "fingerprint"})
-    check(textstats.lang_id(spark, edge_dir), {"pred_lang": "pred_lang"})
-    check(textstats.bpe_token_stats(spark, edge_dir),
-          {"n_bpe_tokens": "n_bpe_tokens", "n_ws_tokens": "n_tokens",
-           "bpe_per_word": "bpe_per_word"})
-    check(textstats.quality_gates(spark, edge_dir),
-          {"n_words": "n_tokens", "mean_word_len": "mean_token_len",
-           "has_min_words": "has_min_words", "word_len_ok": "word_len_ok",
-           "no_lorem": "no_lorem", "no_brace": "no_brace", "kept": "kept"})
-    check(textstats.repetition_stats(spark, edge_dir),
-          {"n_tokens": "n_tokens", "n_3grams": "n_3grams",
-           "n_distinct_3grams": "n_distinct_3grams",
-           "dup_3gram_frac": "dup_3gram_frac",
-           "top_token_frac": "top_token_frac"})
+    for doc_id, text in enumerate(EDGE_TEXTS):
+        for col, want in expected(text).items():
+            assert prof[doc_id][col] == want, (doc_id, col, prof[doc_id][col], want)
 
 
 def test_top_tokens_combined_matches_parts(spark, edge_dir):
-    """The per-lang slice equals top_tokens_by_lang; the global slice
-    (lang='*') carries the same (token, n) set as the standalone global
-    top_tokens."""
+    """Both parts against an independent Python count: the per-lang
+    slice is each language's top 5 and the global slice (lang='*') the
+    corpus top 30 of whitespace tokens longer than one character,
+    ranked by count then token."""
+    from collections import Counter
+
     from pdf_extractor2_spark.operators import textstats
 
-    combined = textstats.top_tokens_combined(spark, edge_dir).collect()
-    by_lang = sorted(
-        tuple(r) for r in textstats.top_tokens_by_lang(spark, edge_dir).collect()
-    )
-    got_lang = sorted(
-        (r["lang"], r["token"], r["n"], r["rank"])
-        for r in combined if r["lang"] != "*"
-    )
-    assert got_lang == by_lang and got_lang
+    def ranked(counts, k):
+        top = sorted(counts.items(), key=lambda tn: (-tn[1], tn[0]))[:k]
+        return [(tok, n, rank) for rank, (tok, n) in enumerate(top, 1)]
 
-    glob = {(r["token"], r["n"]) for r in textstats.top_tokens(spark, edge_dir).collect()}
-    got_glob = {(r["token"], r["n"]) for r in combined if r["lang"] == "*"}
-    assert got_glob == glob and got_glob
+    by_lang: dict[str, Counter] = {}
+    for i, text in enumerate(EDGE_TEXTS):
+        toks = [t for t in (text or "").split(" ") if len(t) > 1]
+        by_lang.setdefault(["en", "de", "fr"][i % 3], Counter()).update(toks)
+    want = {(lang, *r) for lang, c in by_lang.items() for r in ranked(c, 5)}
+    want |= {("*", *r) for r in ranked(sum(by_lang.values(), Counter()), 30)}
+
+    got = {tuple(r) for r in
+           textstats.top_tokens_combined(spark, edge_dir)
+           .select("lang", "token", "n", "rank").collect()}
+    assert got == want and any(r[0] == "*" for r in got)
 
 
 def test_duplicate_span_stats_edge_parity(spark, edge_dir):

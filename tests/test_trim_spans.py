@@ -1,13 +1,15 @@
-"""Round-5: substring-level dedup REMOVAL (`trim_duplicate_spans`) —
-the Lee-et-al. operation `duplicate_span_stats` only reported.
+"""Substring-level dedup REMOVAL — the Lee-et-al. trim carried by the
+four trim columns of the graded `duplicate_span_stats` row.
 
 Pins: exact hand-computed removal semantics on a crafted corpus,
-cross-engine parity (fixture + sf0.001), the graded-row fold identity,
-and NULL/short-text robustness."""
+cross-engine parity (fixture + sf0.001), the whole row on sf0.001 and a
+fuzz against an independent Python model, and NULL/short-text
+robustness."""
 
 from __future__ import annotations
 
 import hashlib
+from collections import Counter
 
 import duckdb
 import pyarrow as pa
@@ -17,6 +19,17 @@ import pytest
 from pdf_extractor2_spark.operators import dedup
 
 SF = "/root/testdata/sf0.001"
+TRIM_COLS = ("doc_id", "n_tokens", "n_kept_tokens", "trimmed_len",
+             "trimmed_digest")
+
+
+def _trim(spark, path):
+    return dedup.duplicate_span_stats(spark, path).select(*TRIM_COLS)
+
+
+def _trim_sql():
+    return (f"SELECT {', '.join(TRIM_COLS)}"
+            f" FROM ({dedup.duplicate_span_stats_sql()})")
 
 
 def _write(tmp_path, rows):
@@ -46,7 +59,7 @@ def test_trim_semantics_hand_computed(spark, tmp_path):
     path = _write(tmp_path, [(0, d0), (1, d1), (2, d2)])
 
     got = {r["doc_id"]: r for r in
-           dedup.trim_duplicate_spans(spark, path).collect()}
+           _trim(spark, path).collect()}
     want0 = "one two three four five six"
     want1 = "seven eight nine ten"
     assert got[0]["n_tokens"] == 14 and got[0]["n_kept_tokens"] == 6
@@ -70,7 +83,7 @@ def test_trim_overlapping_windows_union_coverage(spark, tmp_path):
         (3, None),
     ])
     got = {r["doc_id"]: r for r in
-           dedup.trim_duplicate_spans(spark, path).collect()}
+           _trim(spark, path).collect()}
     assert got[0]["n_tokens"] == 12 and got[0]["n_kept_tokens"] == 2
     assert got[0]["trimmed_digest"] == hashlib.md5(b"pre post").hexdigest()
     assert got[1]["n_kept_tokens"] == 0
@@ -80,35 +93,16 @@ def test_trim_overlapping_windows_union_coverage(spark, tmp_path):
     assert got[3]["trimmed_digest"] == hashlib.md5(b"").hexdigest()
 
     assert sorted(tuple(r) for r in
-                  dedup.trim_duplicate_spans(spark, path).collect()) \
-        == _duck(path, dedup.trim_duplicate_spans_sql())
+                  _trim(spark, path).collect()) \
+        == _duck(path, _trim_sql())
 
 
 def test_trim_parity_sf0001(spark):
     got = sorted(tuple(r) for r in
-                 dedup.trim_duplicate_spans(spark, SF).collect())
-    want = _duck("/root/testdata/sf0.001", dedup.trim_duplicate_spans_sql())
+                 _trim(spark, SF).collect())
+    want = _duck("/root/testdata/sf0.001", _trim_sql())
     assert got == want and len(got) == 500
     assert any(r[2] < r[1] for r in got)  # the corpus has real removals
-
-
-def test_span_stats_fold_matches_standalone(spark):
-    """The graded row (with_trim default) == stats(with_trim=False)
-    ⋈ trim standalone, column for column; and the fold hash-matches
-    its own combined SQL twin."""
-    fold = sorted(tuple(r) for r in
-                  dedup.duplicate_span_stats(spark, SF).collect())
-    stats = {r["doc_id"]: tuple(r) for r in
-             dedup.duplicate_span_stats(spark, SF, with_trim=False).collect()}
-    trim = {r["doc_id"]: tuple(r)[1:] for r in
-            dedup.trim_duplicate_spans(spark, SF).collect()}
-    want = sorted(stats[d] + trim[d] for d in stats)
-    assert fold == want and len(fold) == 500
-    assert fold == _duck("/root/testdata/sf0.001",
-                         dedup.duplicate_span_stats_sql())
-    legacy = sorted(stats[d] for d in stats)
-    assert legacy == _duck("/root/testdata/sf0.001",
-                           dedup.duplicate_span_stats_sql(with_trim=False))
 
 
 def _trim_reference(docs: dict[int, str], k: int = 8):
@@ -132,6 +126,35 @@ def _trim_reference(docs: dict[int, str], k: int = 8):
         out[d] = (len(ts), len(kept), len(trimmed),
                   hashlib.md5(trimmed.encode()).hexdigest())
     return out
+
+
+def test_span_stats_fold_matches_standalone(spark):
+    """The whole graded row on sf0.001 equals a standalone Python model:
+    the span-stats columns (distinct k-token windows per doc, how many
+    of them occur in another doc, their rounded share) next to the trim
+    columns of ``_trim_reference``."""
+    import math
+
+    import pyarrow.parquet as pq
+
+    k = 8
+    t = pq.read_table(f"{SF}/documents.parquet", columns=["doc_id", "text"])
+    docs = dict(zip(t.column("doc_id").to_pylist(), t.column("text").to_pylist()))
+    wins = {}
+    for d, text in docs.items():
+        toks = (text or "").split(" ")
+        wins[d] = {" ".join(toks[i:i + k]) for i in range(len(toks) - k + 1)}
+    ndocs = Counter(w for ws in wins.values() for w in ws)
+    trim = _trim_reference(docs, k)
+    want = set()
+    for d, ws in wins.items():
+        n_dup = sum(ndocs[w] >= 2 for w in ws)
+        frac = math.floor(n_dup / len(ws) * 1e6 + 0.5) / 1e6 if ws else 0.0
+        want.add((d, len(ws), n_dup, frac, *trim[d]))
+
+    got = {tuple(r) for r in dedup.duplicate_span_stats(spark, SF).collect()}
+    assert got == want and len(got) == 500
+    assert any(r[2] for r in got)  # the corpus has duplicated spans
 
 
 @pytest.mark.parametrize("seed", [3, 13])
@@ -166,8 +189,8 @@ def test_trim_fuzz_vs_python_reference(spark, tmp_path, seed):
     want = _trim_reference(docs)
     got = {r["doc_id"]: (r["n_tokens"], r["n_kept_tokens"],
                          r["trimmed_len"], r["trimmed_digest"])
-           for r in dedup.trim_duplicate_spans(spark, path).collect()}
+           for r in _trim(spark, path).collect()}
     assert got == want
     assert sorted((d, *v) for d, v in got.items()) \
-        == _duck(path, dedup.trim_duplicate_spans_sql())
+        == _duck(path, _trim_sql())
     assert any(v[1] < v[0] for v in got.values())  # fuzz planted real dups

@@ -127,22 +127,22 @@ def test_pii_stats_plan_is_shuffle_free(spark):
 
 
 # ---------------------------------------------------------------------------
-# host_stats
+# host_profile
 # ---------------------------------------------------------------------------
 
 def test_host_stats_shares_sum_to_one(spark, tmp_path):
     rows = [(i, f"doc number {i} words") for i in range(21)]
     _write_docs(tmp_path, rows)
-    out = webcorpus.host_stats(spark, str(tmp_path)).collect()
+    out = webcorpus.host_profile(spark, str(tmp_path)).collect()
     assert len(out) == 7  # hosts 0..6
     assert sum(r["n_docs"] for r in out) == 21
     # shares are rounded to 6dp before summing → within 7 half-ulps of 1
     assert abs(sum(r["docs_share"] for r in out) - 1.0) < 5e-6
 
     _parity(
-        webcorpus.host_stats(spark, str(tmp_path)),
+        webcorpus.host_profile(spark, str(tmp_path)),
         _duck(tmp_path),
-        webcorpus.host_stats_sql(),
+        webcorpus.host_profile_sql(),
     )
 
 
@@ -151,7 +151,7 @@ def test_host_stats_denominator_is_broadcast_not_window(spark):
 
     buf = io.StringIO()
     with contextlib.redirect_stdout(buf):
-        webcorpus.host_stats(spark, "/root/testdata/sf0.001").explain("formatted")
+        webcorpus.host_profile(spark, "/root/testdata/sf0.001").explain("formatted")
     plan = buf.getvalue()
     assert "BroadcastNestedLoopJoin" in plan or "BroadcastExchange" in plan, plan
     assert "Window" not in plan, plan
@@ -265,13 +265,11 @@ def test_webcorpus_random_parity(spark, tmp_path):
     con = _duck(tmp_path)
     for fn, sql in [
         (webcorpus.latest_page_version, webcorpus.latest_page_version_sql()),
-        (webcorpus.host_stats, webcorpus.host_stats_sql()),
         (webcorpus.pii_stats, webcorpus.pii_stats_sql()),
         (webcorpus.crawl_corpus_snapshot, webcorpus.crawl_corpus_snapshot_sql()),
         (webcorpus.snapshot_diff, webcorpus.snapshot_diff_sql()),
         (webcorpus.url_normalize, webcorpus.url_normalize_sql()),
         (webcorpus.lang_confusion, webcorpus.lang_confusion_sql()),
-        (webcorpus.host_quality_report, webcorpus.host_quality_report_sql()),
         (webcorpus.host_profile, webcorpus.host_profile_sql()),
         (webcorpus.benchmark_contamination, webcorpus.benchmark_contamination_sql()),
     ]:
@@ -279,22 +277,42 @@ def test_webcorpus_random_parity(spark, tmp_path):
 
 
 def test_host_profile_matches_source_queries(spark):
-    """The fused host_profile (round-4 consolidation) carries exactly
-    the columns of host_stats ⊕ host_quality_report, value-for-value."""
+    """host_profile's host-stats and quality-report columns on sf0.001
+    against a pure-Python computation of each: doc/url counts, char
+    mass and corpus share per host, and the C4-gate survivors and mean
+    length per host."""
+    import math
+
     sf = "/root/testdata/sf0.001"
-    prof = {r["host"]: r.asDict() for r in webcorpus.host_profile(spark, sf).collect()}
-    stats = {r["host"]: r.asDict() for r in webcorpus.host_stats(spark, sf).collect()}
-    qual = {
-        r["host"]: r.asDict()
-        for r in webcorpus.host_quality_report(spark, sf).collect()
-    }
-    assert set(prof) == set(stats) == set(qual) and prof
-    for host, p in prof.items():
-        s, q = stats[host], qual[host]
-        assert (p["n_docs"], p["n_urls"], p["total_chars"], p["docs_share"]) == (
-            s["n_docs"], s["n_urls"], s["total_chars"], s["docs_share"])
-        assert (p["n_docs"], p["n_kept"], p["kept_rate"], p["mean_words"]) == (
-            q["n_docs"], q["n_kept"], q["kept_rate"], q["mean_words"])
+    t = pq.read_table(f"{sf}/documents.parquet",
+                      columns=["doc_id", "text", "n_chars"]).to_pylist()
+
+    def half_up(x, d):
+        return math.floor(x * 10 ** d + 0.5) / 10 ** d
+
+    hosts: dict[str, list] = {}
+    for r in t:
+        toks = (r["text"] or "").split(" ")
+        ml = sum(map(len, toks)) / len(toks)
+        kept = (len(toks) >= 50 and 3 <= ml <= 10
+                and "lorem ipsum" not in (r["text"] or "").lower()
+                and "{" not in (r["text"] or ""))
+        hosts.setdefault(f"host{r['doc_id'] % webcorpus.N_HOSTS}.example", []).append(
+            (r["doc_id"] % webcorpus.N_PATHS, r["n_chars"], kept, len(toks)))
+    want = {}
+    for host, rows in hosts.items():
+        n, n_kept = len(rows), sum(k for _, _, k, _ in rows)
+        want[host] = (
+            n, len({p for p, _, _, _ in rows}), sum(c for _, c, _, _ in rows),
+            half_up(n / len(t), 6), n_kept, half_up(n_kept / n, 6),
+            half_up(sum(w for *_, w in rows) / n, 2),
+        )
+
+    cols = ("n_docs", "n_urls", "total_chars", "docs_share", "n_kept",
+            "kept_rate", "mean_words")
+    got = {r["host"]: tuple(r[c] for c in cols)
+           for r in webcorpus.host_profile(spark, sf).collect()}
+    assert got == want and len(got) == webcorpus.N_HOSTS
 
 
 # ---------------------------------------------------------------------------
@@ -309,16 +327,16 @@ def test_host_quality_report_semantics(spark, tmp_path):
     bad = "lorem ipsum " + " ".join(["word"] * 48)
     rows = [(7 * i, good) for i in range(3)] + [(1 + 7 * i, bad) for i in range(2)]
     _write_docs(tmp_path, rows)
-    out = {r["host"]: r for r in webcorpus.host_quality_report(spark, str(tmp_path)).collect()}
+    out = {r["host"]: r for r in webcorpus.host_profile(spark, str(tmp_path)).collect()}
     assert out["host0.example"]["n_docs"] == 3
     assert out["host0.example"]["kept_rate"] == 1.0
     assert out["host1.example"]["kept_rate"] == 0.0
     assert out["host0.example"]["mean_words"] == 50.0
 
     _parity(
-        webcorpus.host_quality_report(spark, str(tmp_path)),
+        webcorpus.host_profile(spark, str(tmp_path)),
         _duck(tmp_path),
-        webcorpus.host_quality_report_sql(),
+        webcorpus.host_profile_sql(),
     )
 
 
@@ -527,7 +545,7 @@ def test_host_pagerank_parity_and_python_reference(spark):
 
     sf = "/root/testdata/sf0.001"
     got = sorted((r["host"], r["pagerank_e9"])
-                 for r in webcorpus.host_pagerank(spark, sf).collect())
+                 for r in webcorpus.host_profile(spark, sf).collect())
     con = duckdb.connect()
     con.execute("CREATE VIEW documents AS SELECT * FROM "
                 f"read_parquet('{sf}/documents.parquet')")
@@ -565,103 +583,12 @@ def test_host_pagerank_parity_and_python_reference(spark):
 
 
 def test_host_profile_carries_standalone_pagerank(spark):
+    """Deriving the link graph off host_profile's persisted per-row
+    projection ranks exactly as deriving it off a fresh documents scan."""
     sf = "/root/testdata/sf0.001"
-    alone = {r["host"]: r["pagerank_e9"]
-             for r in webcorpus.host_pagerank(spark, sf).collect()}
+    webcorpus._scoped_clear()
+    alone = {r["host"]: r["pagerank_e9"] for r in
+             webcorpus._pagerank_ranks(webcorpus._docs(spark, sf)).collect()}
     fold = {r["host"]: r["pagerank_e9"]
             for r in webcorpus.host_profile(spark, sf).collect()}
     assert fold == alone and fold
-
-
-# ---------------------------------------------------------------------------
-# incremental view maintenance (round 5)
-# ---------------------------------------------------------------------------
-
-def test_incremental_host_stats_equals_full_recompute(spark):
-    """The IVM path (old snapshot stats ⊕ retraction/addition delta)
-    must equal a direct re-aggregation over latest-per-url across both
-    eras — exactly, host by host — and the batch must genuinely
-    exercise all three delta kinds on this corpus."""
-    import duckdb
-
-    sf = "/root/testdata/sf0.001"
-    got = {r["host"]: (r["n_urls"], r["total_chars"])
-           for r in webcorpus.incremental_host_stats(spark, sf).collect()}
-    con = duckdb.connect()
-    con.execute("CREATE VIEW documents AS SELECT * FROM "
-                f"read_parquet('{sf}/documents.parquet')")
-    want = dict(con.execute(f"""
-        WITH web AS (SELECT n_chars, {webcorpus._URL_SQL} AS url,
-                            {webcorpus._HOST_SQL} AS host,
-                            {webcorpus._WARC_SQL} AS warc_epoch
-                     FROM documents),
-        latest AS (SELECT url, MIN(host) AS host,
-                          arg_max(n_chars, warc_epoch) AS chars
-                   FROM web GROUP BY url)
-        SELECT host, (CAST(COUNT(*) AS BIGINT), CAST(SUM(chars) AS BIGINT))
-        FROM latest GROUP BY host
-    """).fetchall())
-    assert got == want and got
-
-    audit = {r["host"]: (r["n_added"], r["n_updated"], r["n_stale"])
-             for r in webcorpus.incremental_host_stats(spark, sf).collect()}
-    # at sf0.001 every url has captures in BOTH eras (175 is odd, so a
-    # url's doc_ids alternate parity) — 'added' needs the crafted
-    # fixture below; updates and stale batch rows both occur here
-    assert sum(u for _, u, _ in audit.values()) > 0
-    assert sum(s for _, _, s in audit.values()) > 0
-
-
-def test_incremental_host_stats_all_delta_kinds(spark, tmp_path):
-    """Crafted doc_ids exercising every delta kind: 0+175 same url,
-    batch newer (updated); 3 odd-only (added); 1+176 same url, batch
-    OLDER (stale -> old capture kept); 4 even-only (kept).  Maintained
-    stats hand-checked, and the DuckDB twin agrees on the fixture."""
-    import duckdb
-
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    ids = [0, 175, 3, 1, 176, 4]
-    pq.write_table(pa.table({
-        "doc_id": pa.array(ids, pa.int64()),
-        "text": pa.array([f"doc {d}" for d in ids], pa.string()),
-        "lang": pa.array(["en"] * len(ids), pa.string()),
-        "source": pa.array(["t"] * len(ids), pa.string()),
-        "n_chars": pa.array([10 * (i + 1) for i in range(len(ids))], pa.int64()),
-    }), str(tmp_path / "documents.parquet"))
-
-    rows = {r["host"]: r for r in
-            webcorpus.incremental_host_stats(spark, str(tmp_path)).collect()}
-    # host indices: doc%7 -> 0,0:(0,175) ; 3 ; 1,1:(1,176) ; 4
-    h = lambda i: f"host{i}.example"
-    assert rows[h(0)]["n_updated"] == 1 and rows[h(0)]["n_added"] == 0
-    assert rows[h(0)]["total_chars"] == 20            # 175's capture (20) replaced 0's (10)
-    assert rows[h(3)]["n_added"] == 1 and rows[h(3)]["total_chars"] == 30
-    assert rows[h(1)]["n_stale"] == 1 and rows[h(1)]["n_updated"] == 0
-    assert rows[h(1)]["total_chars"] == 50            # 176's newer era-0 capture kept
-    assert rows[h(4)]["n_added"] == rows[h(4)]["n_updated"] == rows[h(4)]["n_stale"] == 0
-    assert rows[h(4)]["total_chars"] == 60
-
-    con = duckdb.connect()
-    con.execute("CREATE VIEW documents AS SELECT * FROM "
-                f"read_parquet('{tmp_path}/documents.parquet')")
-    want = sorted(tuple(r) for r in
-                  con.execute(webcorpus.incremental_host_stats_sql()).fetchall())
-    got = sorted(tuple(r) for r in
-                 webcorpus.incremental_host_stats(spark, str(tmp_path)).collect())
-    assert got == want
-
-
-def test_incremental_host_stats_duckdb_parity(spark):
-    sf = "/root/testdata/sf0.001"
-    import duckdb
-
-    con = duckdb.connect()
-    con.execute("CREATE VIEW documents AS SELECT * FROM "
-                f"read_parquet('{sf}/documents.parquet')")
-    got = sorted(tuple(r) for r in
-                 webcorpus.incremental_host_stats(spark, sf).collect())
-    want = sorted(tuple(r) for r in
-                  con.execute(webcorpus.incremental_host_stats_sql()).fetchall())
-    assert got == want and got
