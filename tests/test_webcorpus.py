@@ -585,10 +585,12 @@ def test_host_pagerank_parity_and_python_reference(spark):
 def test_host_profile_carries_standalone_pagerank(spark):
     """Deriving the link graph off host_profile's persisted per-row
     projection ranks exactly as deriving it off a fresh documents scan."""
+    from pdf_extractor2_spark.operators.dedup import _docs, _scoped_clear
+
     sf = "/root/testdata/sf0.001"
-    webcorpus._scoped_clear()
+    _scoped_clear()
     alone = {r["host"]: r["pagerank_e9"] for r in
-             webcorpus._pagerank_ranks(webcorpus._docs(spark, sf)).collect()}
+             webcorpus._pagerank_ranks(_docs(spark, sf)).collect()}
     fold = {r["host"]: r["pagerank_e9"]
             for r in webcorpus.host_profile(spark, sf).collect()}
     assert fold == alone and fold
