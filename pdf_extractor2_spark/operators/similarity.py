@@ -281,38 +281,39 @@ def ann_ivf(spark: SparkSession, sf_dir: str, query_vec_id: int = 0,
 
 # measured recall/cost curve at sf0.01 vs ground truth (cos >= 0.35),
 # exact same banding arithmetic run in DuckDB (n=500, 124,750 pairs,
-# 272 true near-dups; n_bands*band_dims must stay <= EMB_DIMS):
+# 272 true near-dups; N_SIG_BANDS*BAND_DIMS must stay <= EMB_DIMS):
 #   8x5  -> recall 0.53 @ 22% of all pairs   (default)
 #   12x5 -> recall 0.67 @ 32%
 #   12x4 -> recall 0.87 @ 54%
 #   16x4 -> recall 0.96 @ 65%
 # (the round-1 monolithic 8-bit block sat at recall 0.026)
 # More bands buy recall linearly in scored pairs; at larger n raise
-# band_dims (bucket count is 2^band_dims) to keep per-bucket collision
+# BAND_DIMS (bucket count is 2^BAND_DIMS) to keep per-bucket collision
 # counts bounded — these synthetic embeddings are near-uniform, so the
 # candidate fractions above are a worst case (real near-dup corpora
 # cluster, colliding less at the same recall).
 N_SIG_BANDS = 9
 BAND_DIMS = 7
+# the graded near-dup cosine floor
+NEAR_DUP_COS = 0.35
 
 
-def _near_dup_pairs_from(
-    emb: DataFrame, threshold: float, n_bands: int, band_dims: int,
-) -> DataFrame:
+def _near_dup_pairs_from(emb: DataFrame) -> DataFrame:
     """Embedding-cosine near-duplicate pairs, banded hyperplane-LSH,
     over an ALREADY-PERSISTED embeddings frame (every branch — band
     a/b, exact-score a/b — reads the caller's cache, so the query keeps
     ONE FileScan of the vector table; pinned by
     tests/test_plans.py::test_embedding_near_dup_scans_embeddings_once).
 
-    The sign pattern of the first ``n_bands*band_dims`` components is
-    split into ``n_bands`` bands of ``band_dims`` sign bits; candidates
-    are pairs agreeing on ≥1 whole band (the same banding idea as
-    MinHash-LSH), exact cosine is computed only for candidates.  One
-    side additionally emits every 1-bit flip of each band key
-    (Hamming-1 MULTIPROBE), so a pair whose band keys differ in a
-    single sign bit still collides — the standard multiprobe-LSH trick
-    for pairs that straddle one hyperplane.  Measured on sf0.1 against
+    The sign pattern of the first ``N_SIG_BANDS*BAND_DIMS`` components
+    is split into ``N_SIG_BANDS`` bands of ``BAND_DIMS`` sign bits;
+    candidates are pairs agreeing on ≥1 whole band (the same banding
+    idea as MinHash-LSH), exact cosine (≥ ``NEAR_DUP_COS``) is computed
+    only for candidates.  One side additionally emits every 1-bit flip
+    of each band key (Hamming-1 MULTIPROBE), so a pair whose band keys
+    differ in a single sign bit still collides — the standard
+    multiprobe-LSH trick for pairs that straddle one hyperplane.
+    Measured on sf0.1 against
     all-pairs ground truth (BENCH/neardup_recall_sweep.py, curve in
     BENCH/BASELINE.md): 8 bands × 5 bits without the probe recalled
     0.546 of true cos≥0.35 pairs at 22% of all-pairs cost; the default
@@ -322,22 +323,22 @@ def _near_dup_pairs_from(
     cost for 16-20 rproj bands — the cluster structure is
     axis-aligned).
 
-    Candidate count scales with bucket collisions, never n²; the
-    recall/cost knobs are (n_bands, band_dims).  The bands are a single
-    explode projection, not an n_bands-way union; the H1 probes are a
-    second explode over the band frame (the probe side grows
-    band_dims+1×, the build side does not)."""
+    Candidate count scales with bucket collisions, never n²; recall and
+    cost are set by (N_SIG_BANDS, BAND_DIMS).  The bands are a single
+    explode projection, not an N_SIG_BANDS-way union; the H1 probes are
+    a second explode over the band frame (the probe side grows
+    BAND_DIMS+1×, the build side does not)."""
     band_structs = [
         F.struct(
             F.lit(j).alias("band"),
             F.expr(
                 "concat_ws('', transform(slice(embedding, {start}, {d}),"
                 " x -> case when x >= 0 then '1' else '0' end))".format(
-                    start=j * band_dims + 1, d=band_dims
+                    start=j * BAND_DIMS + 1, d=BAND_DIMS
                 )
             ).alias("key"),
         )
-        for j in range(n_bands)
+        for j in range(N_SIG_BANDS)
     ]
     bands = emb.select(
         "vec_id", F.explode(F.array(*band_structs)).alias("bk")
@@ -346,7 +347,7 @@ def _near_dup_pairs_from(
     flips = bands.select(
         "vec_id", "band",
         F.explode(F.expr(
-            f"transform(sequence(1, {band_dims}), f -> concat("
+            f"transform(sequence(1, {BAND_DIMS}), f -> concat("
             "substring(key, 1, f - 1),"
             " case when substring(key, f, 1) = '1' then '0' else '1' end,"
             " substring(key, f + 1)))"
@@ -374,7 +375,7 @@ def _near_dup_pairs_from(
     return (
         cand.join(ea, "vec_a").join(eb, "vec_b")
         .withColumn("cos_sim", F.expr(_r4(f"({dot}) / (nrm_a * nrm_b)")))
-        .where(F.col("cos_sim") >= threshold)
+        .where(F.col("cos_sim") >= NEAR_DUP_COS)
         .select("vec_a", "vec_b", "cos_sim")
     )
 
@@ -457,11 +458,7 @@ def _semdedup_parts_from(
     return cells, pairs
 
 
-def embedding_near_dup_labeled(
-    spark: SparkSession, sf_dir: str, threshold: float = 0.35,
-    n_bands: int = N_SIG_BANDS, band_dims: int = BAND_DIMS,
-    tau: float = SEMDEDUP_TAU,
-) -> DataFrame:
+def embedding_near_dup_labeled(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Near-dup pairs (``_near_dup_pairs_from``) enriched with each
     side's label and the label's centroid-norm profile (vector count,
     mean L2 norm) — one driver row grading BOTH the banded-LSH pair
@@ -479,7 +476,7 @@ def embedding_near_dup_labeled(
 
     _scoped_clear()
     emb = _scoped_persist(_emb(spark, sf_dir))
-    pairs = _near_dup_pairs_from(emb, threshold, n_bands, band_dims)
+    pairs = _near_dup_pairs_from(emb)
 
     labels = emb.select("vec_id", "label")
     norm = _DOT.format(a="embedding", b="embedding")
@@ -517,7 +514,7 @@ def embedding_near_dup_labeled(
     # slower than just executing it (5.6s vs 1.9s sf0.1).  The cells
     # frame inside _semdedup_from IS persisted, so the two sd references
     # below re-run only the cheap prune join, not the quantizer.
-    sd = _semdedup_from(emb, tau)
+    sd = _semdedup_from(emb)
     sa = sd.select(
         F.col("vec_id").alias("vec_a"), F.col("cell").alias("cell_a"),
         F.col("sd_keep").alias("sd_keep_a"),
@@ -533,17 +530,14 @@ def embedding_near_dup_labeled(
     )
 
 
-def embedding_near_dup_pairs_sql(
-    table: str = "embeddings", threshold: float = 0.35,
-    n_bands: int = N_SIG_BANDS, band_dims: int = BAND_DIMS,
-) -> str:
+def embedding_near_dup_pairs_sql(table: str = "embeddings") -> str:
     band_selects = "\nUNION ALL\n".join(
         f"""SELECT vec_id, {j} AS band,
                list_aggregate([CASE WHEN embedding[i] >= 0 THEN '1' ELSE '0' END
-                               for i in generate_series({j * band_dims + 1}, {(j + 1) * band_dims})],
+                               for i in generate_series({j * BAND_DIMS + 1}, {(j + 1) * BAND_DIMS})],
                               'string_agg', '') AS key
             FROM {table}"""
-        for j in range(n_bands)
+        for j in range(N_SIG_BANDS)
     )
     dot = _DOT_SQL.format(a="ea.embedding", b="eb.embedding")
     na = _DOT_SQL.format(a="ea.embedding", b="ea.embedding")
@@ -557,7 +551,7 @@ def embedding_near_dup_pairs_sql(
                  substr(key, 1, f - 1)
                    || (CASE WHEN substr(key, f, 1) = '1' THEN '0' ELSE '1' END)
                    || substr(key, f + 1) AS key
-          FROM bands, generate_series(1, {band_dims}) g(f)),
+          FROM bands, generate_series(1, {BAND_DIMS}) g(f)),
         cand AS (
           SELECT DISTINCT a.vec_id AS vec_a, b.vec_id AS vec_b
           FROM probed a JOIN bands b
@@ -567,7 +561,7 @@ def embedding_near_dup_pairs_sql(
         FROM cand
         JOIN {table} ea ON ea.vec_id = vec_a
         JOIN {table} eb ON eb.vec_id = vec_b
-        WHERE {_r4(f"({dot}) / (sqrt({na}) * sqrt({nb}))")} >= {threshold}
+        WHERE {_r4(f"({dot}) / (sqrt({na}) * sqrt({nb}))")} >= {NEAR_DUP_COS}
     """
 
 
@@ -706,18 +700,14 @@ def ann_ivf_sql(table: str = "embeddings", query_vec_id: int = 0,
     """
 
 
-def embedding_near_dup_labeled_sql(
-    table: str = "embeddings", threshold: float = 0.35,
-    n_bands: int = N_SIG_BANDS, band_dims: int = BAND_DIMS,
-    tau: float = SEMDEDUP_TAU,
-) -> str:
-    pairs = embedding_near_dup_pairs_sql(table, threshold, n_bands, band_dims)
+def embedding_near_dup_labeled_sql(table: str = "embeddings") -> str:
+    pairs = embedding_near_dup_pairs_sql(table)
     norms = label_centroid_norms_sql(table)
     # sd bound ONCE as a named CTE — inlining the derived table twice
     # would make DuckDB evaluate the quantizer + quadratic prune twice
     # (no CSE across derived tables)
     return f"""
-        WITH sd AS ({semdedup_sql(table, tau)})
+        WITH sd AS ({semdedup_sql(table)})
         SELECT p.vec_a, p.vec_b, p.cos_sim,
                la.label AS label_a, lb.label AS label_b,
                na.n_vecs AS n_vecs_a, na.mean_norm AS mean_norm_a,

@@ -707,45 +707,12 @@ def stratified_sample_sql(per_lang: int = 20) -> str:
     """
 
 
-def _funnel_per_user_window(ev: DataFrame) -> DataFrame:
-    """Per-user stage times via three stacked whole-partition window
-    MINs — ONE exchange, but WindowExec buffers each user's rows."""
-    w = Window.partitionBy("user_id")
-    t_view = F.min(
-        F.when(F.col("event_type") == "view", F.col("epoch"))
-    ).over(w)
-    staged1 = ev.withColumn("t_view", t_view)
-    t_click = F.min(
-        F.when(
-            (F.col("event_type") == "click") & (F.col("epoch") > F.col("t_view")),
-            F.col("epoch"),
-        )
-    ).over(w)
-    staged2 = staged1.withColumn("t_click", t_click)
-    t_purch = F.min(
-        F.when(
-            (F.col("event_type") == "purchase") & (F.col("epoch") > F.col("t_click")),
-            F.col("epoch"),
-        )
-    ).over(w)
-    return (
-        staged2.withColumn("t_purch", t_purch)
-        .groupBy("user_id")
-        .agg(
-            F.first("t_view").alias("t_view"),
-            F.first("t_click").alias("t_click"),
-            F.first("t_purch").alias("t_purch"),
-        )
-    )
-
-
 def _funnel_per_user_agg_join(ev: DataFrame) -> DataFrame:
     """Per-user stage times as a 3-step aggregate→join chain: each
     stage is a conditional MIN hash aggregate (partial-aggregable — a
     bot user's 10^8 events reduce map-side) joined back to the event
     stream to gate the next stage.  Never buffers a user's rows, at the
-    cost of shuffling the events table three times — the hot-user-safe
-    physical variant of the identical logical funnel."""
+    cost of shuffling the events table three times."""
     t_view = (
         ev.where(F.col("event_type") == "view")
         .groupBy("user_id")
@@ -773,9 +740,7 @@ def _funnel_per_user_agg_join(ev: DataFrame) -> DataFrame:
     )
 
 
-def conversion_funnel(
-    spark: SparkSession, sf_dir: str, hot_user_safe: bool = True
-) -> DataFrame:
+def conversion_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Ordered-sequence funnel (view → click → purchase): per user,
     which prefix of the funnel they completed IN ORDER, then one
     corpus-level summary row.
@@ -787,33 +752,22 @@ def conversion_funnel(
     exists).  Each stage's filter depends on the previous stage's
     per-user result, so one aggregate pass cannot express it.
 
-    Two physical variants of the identical logical funnel (equality
-    pinned by tests/test_funnel.py):
+    The plan is the 3-step aggregate→join chain
+    (``_funnel_per_user_agg_join``): partial-aggregable conditional
+    MINs that never buffer a user's rows, at the cost of shuffling the
+    events table three times.  A one-exchange plan of stacked
+    ``PARTITION BY user_id`` window MINs would sort and buffer each
+    user's rows in WindowExec, which a bot user with 10^8 events turns
+    into one skewed task; the window-free plan is pinned by
+    tests/test_funnel.py.
 
-    * DEFAULT (``hot_user_safe=True``, flipped in round 5 per VERDICT
-      r4 #2): the 3-step aggregate→join chain
-      (``_funnel_per_user_agg_join``) — partial-aggregable conditional
-      MINs that never buffer a user's rows, at the cost of shuffling
-      the events table three times.  Safe when a bot user can hold
-      10^8 events — a caller should not have to know about skew to get
-      the plan that survives it.
-    * ``hot_user_safe=False``: three stacked whole-partition window
-      MINs (``PARTITION BY user_id``, no ORDER BY) — ONE exchange, but
-      WindowExec groups partitions with a Sort(user_id) and buffers
-      each user's rows (spilling past a threshold).  Opt in when
-      events-per-user is known session-bounded and the two extra
-      shuffles dominate.
-
-    The DuckDB oracle runs the window MINs."""
+    The DuckDB oracle runs those window MINs, so it shares no plan with
+    this one."""
     ev = _t(spark, sf_dir, "events").select(
         "user_id", "event_type",
         F.col("ts").cast("timestamp").cast("double").alias("epoch"),
     )
-    per_user = (
-        _funnel_per_user_agg_join(ev) if hot_user_safe
-        else _funnel_per_user_window(ev)
-    )
-    return per_user.agg(
+    return _funnel_per_user_agg_join(ev).agg(
         F.count("*").cast("long").alias("n_users"),
         F.sum(F.col("t_view").isNotNull().cast("long")).alias("n_view"),
         F.sum(F.col("t_click").isNotNull().cast("long")).alias("n_view_click"),
@@ -866,7 +820,7 @@ MIX_WEIGHTS: dict[str, int] = {"en": 4, "fr": 2, "es": 2, "de": 1, "zh": 1}
 SEQ_LEN = 512
 
 
-def _bucket_budget_case(weights: dict[str, int] | None, budget_tokens: int,
+def _bucket_budget_case(weights: dict[str, int], budget_tokens: int,
                         n_buckets: int) -> str:
     """Shared CASE-expression text (identical in Spark and DuckDB) that
     maps ``lang`` to its per-(lang, bucket) token budget.  All division
@@ -874,8 +828,6 @@ def _bucket_budget_case(weights: dict[str, int] | None, budget_tokens: int,
     literals — no cross-engine arithmetic to diverge.  Languages absent
     from ``weights`` get NULL, i.e. weight 0: they are dropped from the
     mix entirely."""
-    if weights is None:
-        return f"CAST({budget_tokens // n_buckets} AS BIGINT)"
     total = sum(weights.values())
     whens = " ".join(
         f"WHEN lang = '{lang}' THEN "
@@ -888,7 +840,7 @@ def _bucket_budget_case(weights: dict[str, int] | None, budget_tokens: int,
 def token_budget_sample(spark: SparkSession, sf_dir: str,
                         budget_tokens: int = 12_000,
                         n_buckets: int = 8,
-                        weights: dict[str, int] | None = MIX_WEIGHTS) -> DataFrame:
+                        weights: dict[str, int] = MIX_WEIGHTS) -> DataFrame:
     """Deterministic token-budget sampling (the "data mixing" primitive:
     build a training mix by taking documents per language until a token
     budget is hit).  Documents are consumed in pseudo-random hash order
@@ -901,17 +853,16 @@ def token_budget_sample(spark: SparkSession, sf_dir: str,
     adding or removing one document never reshuffles which other
     documents are selected).
 
-    ``weights`` (round-5) turns the even split into a TARGET MIXTURE:
-    each language's share of ``budget_tokens`` is ``w_lang / Σw`` (the
-    data-mixing knob every published LLM corpus recipe exposes —
-    en-heavy head, weighted multilingual tail), computed exactly in
-    Python and embedded as integer literals in both engine texts
-    (``_bucket_budget_case``).  Languages not in the map are dropped
-    (weight 0).  ``weights=None`` is the round-4 even split, pinned by
-    tests/test_mixture.py.  The output gains the ``bucket_budget``
-    column so a selection is auditable against its target.
+    ``weights`` sets a TARGET MIXTURE: each language's share of
+    ``budget_tokens`` is ``w_lang / Σw`` (the data-mixing knob every
+    published LLM corpus recipe exposes — en-heavy head, weighted
+    multilingual tail), computed exactly in Python and embedded as
+    integer literals in both engine texts (``_bucket_budget_case``).
+    Languages not in the map are dropped (weight 0).  The output
+    carries the ``bucket_budget`` column so a selection is auditable
+    against its target.
 
-    Skew-aware by construction: the per-language budget is split evenly
+    Skew-aware by construction: each language's budget is split evenly
     over ``n_buckets`` hash buckets and the cumulative-sum window
     partitions by (lang, bucket) — no task ever sorts more than
     1/n_buckets of one language, where a naive per-lang window would
@@ -956,7 +907,7 @@ def token_budget_sample(spark: SparkSession, sf_dir: str,
 
 
 def token_budget_sample_sql(budget_tokens: int = 12_000, n_buckets: int = 8,
-                            weights: dict[str, int] | None = MIX_WEIGHTS) -> str:
+                            weights: dict[str, int] = MIX_WEIGHTS) -> str:
     case = _bucket_budget_case(weights, budget_tokens, n_buckets)
     _sl = SEQ_LEN
     return f"""

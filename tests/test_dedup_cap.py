@@ -191,50 +191,31 @@ def test_chain_is_a_path(spark, path_chain_dir):
 
 def test_pointer_jumping_converges_where_plain_cannot(spark, path_chain_dir):
     """On a diameter-39 component, min-label propagation moves the
-    minimum ONE hop per sweep — plain propagation at max_iters=8 must
-    raise (the auto default would too: its switch-on point IS sweep 8).
-    Pointer jumping doubles reach per sweep (2^k - 1 hops after k
-    sweeps), so the same budget converges, and to the correct single
-    component."""
-    with pytest.raises(RuntimeError, match="did not reach a fixpoint"):
-        dedup.dedup_groups(
-            spark, path_chain_dir, threshold=0.1, max_iters=8,
-            pointer_jumping=False,
-        )
+    minimum ONE hop per sweep, so plain propagation needs 39 sweeps.
+    After ``_AUTO_PJ_AFTER`` (8) unconverged sweeps the loop adds the
+    pointer-jumping shortcut, which doubles reach per sweep: the chain
+    still raises at max_iters=8, but converges within 18 sweeps (8 +
+    O(log 40)) to the DuckDB recursive-CTE fixpoint, one component."""
     with pytest.raises(RuntimeError, match="did not reach a fixpoint"):
         dedup.dedup_groups(spark, path_chain_dir, threshold=0.1, max_iters=8)
 
-    got = {
-        r["doc_id"]: r["group_id"]
-        for r in dedup.dedup_groups(
-            spark, path_chain_dir, threshold=0.1, max_iters=8, pointer_jumping=True
-        ).collect()
-    }
-    assert got == {i: 0 for i in range(CHAIN_N)}
-
-
-def test_auto_pointer_jumping_converges_under_default_entrypoint(
-    spark, path_chain_dir
-):
-    """VERDICT r4 #6: the DEFAULT call path (the one ``queries()`` uses
-    — no pointer_jumping argument) must survive a surprise long-chain
-    corpus: after ``_AUTO_PJ_AFTER`` unconverged plain sweeps the
-    shortcut switches on and the diameter-39 chain converges inside a
-    budget where forced-plain propagation must raise (plain needs 39
-    sweeps; auto needs 8 + O(log 40) ≈ 14)."""
     budget = 18
-    with pytest.raises(RuntimeError, match="did not reach a fixpoint"):
-        dedup.dedup_groups(
-            spark, path_chain_dir, threshold=0.1, max_iters=budget,
-            pointer_jumping=False,
-        )
-    got = {
-        r["doc_id"]: r["group_id"]
+    assert budget < CHAIN_N - 1  # fewer sweeps than the diameter
+    got = sorted(
+        tuple(r)
         for r in dedup.dedup_groups(
             spark, path_chain_dir, threshold=0.1, max_iters=budget
         ).collect()
-    }
-    assert got == {i: 0 for i in range(CHAIN_N)}
+    )
+    con = duckdb.connect()
+    con.execute(
+        "CREATE VIEW documents AS SELECT * FROM "
+        f"read_parquet('{path_chain_dir}/documents.parquet')"
+    )
+    want = sorted(
+        tuple(r) for r in con.execute(dedup.dedup_groups_sql(threshold=0.1)).fetchall()
+    )
+    assert got == want == [(i, 0) for i in range(CHAIN_N)]
 
 
 def test_reliable_checkpoint_matches_default(spark, path_chain_dir, tmp_path):
@@ -272,30 +253,18 @@ def test_reliable_checkpoint_matches_default(spark, path_chain_dir, tmp_path):
     assert len(written) == 1, written
 
 
-def test_pointer_jumping_matches_default_on_real_data(spark):
-    sf = "/root/testdata/sf0.001"
-    a = sorted(
-        tuple(r) for r in dedup.dedup_groups(spark, sf).collect()
-    )
-    b = sorted(
-        tuple(r)
-        for r in dedup.dedup_groups(spark, sf, pointer_jumping=True).collect()
-    )
-    assert a == b and a
-
-
 def test_dedup_groups_frees_sweep_checkpoints(spark, path_chain_dir):
     """Every sweep's label snapshot is localCheckpoint'ed (lineage
     truncation) and must be freed deterministically once superseded —
     ``DataFrame.unpersist()`` is a no-op on checkpointed frames, so a
     leak here leaves up to max_iters label snapshots in executor
-    storage.  Only the returned result's own checkpoint may remain."""
+    storage.  Only the returned result's own checkpoint may remain.
+    The 18-sweep budget runs both plain and shortcut sweeps (the
+    shortcut also persists an intermediate frame per sweep)."""
     from pdf_extractor2_spark.operators.dedup import _persistent_rdd_ids
 
     before = _persistent_rdd_ids(spark)
-    out = dedup.dedup_groups(
-        spark, path_chain_dir, threshold=0.1, max_iters=8, pointer_jumping=True
-    )
+    out = dedup.dedup_groups(spark, path_chain_dir, threshold=0.1, max_iters=18)
     assert out.count() == CHAIN_N
     # the scoped jaccard caches legitimately outlive the call (released
     # on the NEXT dedup query's entry) — release them before measuring,

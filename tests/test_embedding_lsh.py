@@ -16,11 +16,9 @@ import pytest
 from pdf_extractor2_spark.operators import similarity
 
 SF_DIR = "/root/testdata/sf0.01"
-THRESHOLD = 0.35
 
 
-def _pairs(spark, n_bands=similarity.N_SIG_BANDS,
-           band_dims=similarity.BAND_DIMS):
+def _pairs(spark):
     """{(vec_a, vec_b)} the graded near-dup search finds over one
     persisted embeddings scan."""
     from pdf_extractor2_spark.operators.dedup import (
@@ -32,9 +30,7 @@ def _pairs(spark, n_bands=similarity.N_SIG_BANDS,
     emb = _scoped_persist(similarity._emb(spark, SF_DIR))
     return {
         (r["vec_a"], r["vec_b"])
-        for r in similarity._near_dup_pairs_from(
-            emb, THRESHOLD, n_bands, band_dims
-        ).collect()
+        for r in similarity._near_dup_pairs_from(emb).collect()
     }
 
 
@@ -46,7 +42,7 @@ def truth():
     norms = np.linalg.norm(E, axis=1)
     C = (E @ E.T) / np.outer(norms, norms)
     iu = np.triu_indices(len(E), 1)
-    keep = np.round(C[iu], 4) >= THRESHOLD
+    keep = np.round(C[iu], 4) >= similarity.NEAR_DUP_COS
     pairs = {
         (int(min(a, b)), int(max(a, b)))
         for a, b in zip(vec_ids[iu[0][keep]], vec_ids[iu[1][keep]])
@@ -54,16 +50,28 @@ def truth():
     return pairs, len(E)
 
 
+def _monolithic_block(truth_pairs):
+    """numpy model of the round-1 blocker: one block of the first 8 sign
+    bits, probed at Hamming distance 1, then the exact cosine re-check
+    (membership in the all-pairs truth set)."""
+    t = pq.read_table(f"{SF_DIR}/embeddings.parquet")
+    E = np.array(t.column("embedding").to_pylist(), dtype=np.float64)
+    key = dict(zip(t.column("vec_id").to_pylist(), E[:, :8] >= 0))
+    return {
+        (a, b) for a, b in truth_pairs
+        if np.count_nonzero(key[a] != key[b]) <= 1
+    }
+
+
 def test_banded_recall_beats_monolithic_block(spark, truth):
     truth_pairs, n = truth
     assert truth_pairs, "ground truth must be non-empty at sf0.01"
 
     banded = _pairs(spark)
-    # single monolithic block = 1 band of n_bands*band_dims sign bits
-    mono = _pairs(spark, n_bands=1, band_dims=8)
+    mono = _monolithic_block(truth_pairs)
     # LSH never invents pairs: everything returned is true (exact cosine
     # re-check inside buckets)
-    assert banded <= truth_pairs and mono <= truth_pairs
+    assert banded <= truth_pairs
 
     recall_banded = len(banded) / len(truth_pairs)
     recall_mono = len(mono) / len(truth_pairs)

@@ -230,26 +230,46 @@ def _scope(path: Path):
     return defs, stmts, binds
 
 
+def _resolve(module: str, expr, defs, binds):
+    """What a bare name or an attribute of an imported module in
+    ``module`` refers to: a module name, a (module, name) pair, or None."""
+    if isinstance(expr, ast.Name):
+        if expr.id in defs:
+            return (module, expr.id)
+        return binds.get(expr.id)
+    if isinstance(expr, ast.Attribute):
+        base = _resolve(module, expr.value, defs, binds)
+        if isinstance(base, str):
+            sub = f"{base}.{expr.attr}"
+            return sub if _module_file(sub) else (base, expr.attr)
+    return None
+
+
 def _references(module: str, node, defs, binds):
     """(module, name) pairs the code under ``node`` names, through a bare
     name or an attribute of an imported module."""
-
-    def resolve(expr):
-        if isinstance(expr, ast.Name):
-            if expr.id in defs:
-                return (module, expr.id)
-            return binds.get(expr.id)
-        if isinstance(expr, ast.Attribute):
-            base = resolve(expr.value)
-            if isinstance(base, str):
-                sub = f"{base}.{expr.attr}"
-                return sub if _module_file(sub) else (base, expr.attr)
-        return None
-
     for sub in ast.walk(node):
-        target = resolve(sub) if isinstance(sub, (ast.Name, ast.Attribute)) else None
+        target = (_resolve(module, sub, defs, binds)
+                  if isinstance(sub, (ast.Name, ast.Attribute)) else None)
         if isinstance(target, tuple):
             yield target
+
+
+def _follow(scopes, target):
+    """Follow re-exports until the (module, name) pair names a definition."""
+    while target[0] in scopes and target[1] not in scopes[target[0]][0]:
+        nxt = scopes[target[0]][2].get(target[1])
+        if not isinstance(nxt, tuple):
+            break
+        target = nxt
+    return target
+
+
+def _package_scopes():
+    """{module: _scope(file)} over the package and the entry points."""
+    files = {_module_name(p): p for p in (REPO / PACKAGE).rglob("*.py")}
+    files.update({_module_name(p): p for p in ENTRY_POINTS})
+    return files, {m: _scope(p) for m, p in files.items()}
 
 
 def test_every_package_definition_is_reached_from_an_entry_point():
@@ -257,9 +277,7 @@ def test_every_package_definition_is_reached_from_an_entry_point():
     or constant that no entry point reaches (through module-level code or
     other reached definitions) is code only tests run; delete it, or give
     it a reason in ``UNREACHED_OK``."""
-    files = {_module_name(p): p for p in (REPO / PACKAGE).rglob("*.py")}
-    files.update({_module_name(p): p for p in ENTRY_POINTS})
-    scopes = {m: _scope(p) for m, p in files.items()}
+    _, scopes = _package_scopes()
     entry = {_module_name(p) for p in ENTRY_POINTS if PACKAGE not in p.parts}
 
     todo = [(m, s) for m, (_, stmts, _) in scopes.items() for s in stmts]
@@ -273,12 +291,7 @@ def test_every_package_definition_is_reached_from_an_entry_point():
         seen.add(id(node))
         defs, _, binds = scopes[module]
         for target in _references(module, node, defs, binds):
-            # follow re-exports until the pair names a definition
-            while target[0] in scopes and target[1] not in scopes[target[0]][0]:
-                nxt = scopes[target[0]][2].get(target[1])
-                if not isinstance(nxt, tuple):
-                    break
-                target = nxt
+            target = _follow(scopes, target)
             if target in reached or target[0] not in scopes:
                 continue
             reached.add(target)
@@ -296,3 +309,66 @@ def test_every_package_definition_is_reached_from_an_entry_point():
     )
     assert len(scopes) > len(ENTRY_POINTS)
     assert not unreached, unreached
+
+
+# Boolean switches no package or entry-point call sets on purpose, each
+# with its reason.
+SWITCHES_OK = {
+    ("pdf_extractor2_spark.operators.dedup", "dedup_groups", "reliable_checkpoint"):
+        "cluster fault-recovery mode: safety code a local run never needs",
+    ("pdf_extractor2_spark.streaming.stream_job", "stream_extract", "available_now"):
+        "the stream entry point's trigger mode, a deployment setting",
+}
+
+
+def _bool_switches(fn):
+    """{name: positional slot or None} of ``fn``'s parameters whose
+    default is a literal True or False."""
+    args = fn.args
+    pos = args.posonlyargs + args.args
+    pairs = [*zip(pos, [None] * (len(pos) - len(args.defaults)) + args.defaults),
+             *zip(args.kwonlyargs, args.kw_defaults)]
+    return {
+        arg.arg: (i if i < len(pos) else None)
+        for i, (arg, d) in enumerate(pairs)
+        if isinstance(d, ast.Constant) and isinstance(d.value, bool)
+    }
+
+
+def test_every_boolean_switch_is_set_by_package_code():
+    """A parameter of a top-level package function whose default is a
+    literal True/False is a switch.  Some call in package code or in an
+    entry point must pass it, by keyword or by position; otherwise only
+    tests reach its other branch — delete the branch and the parameter,
+    or give it a reason in ``SWITCHES_OK``."""
+    files, scopes = _package_scopes()
+    switches = {
+        (m, name): _bool_switches(node)
+        for m, (defs, _, _) in scopes.items() if m.startswith(PACKAGE)
+        for name, node in defs.items()
+        if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef))
+    }
+    switches = {k: v for k, v in switches.items() if v}
+    passed = set()
+    for m, path in files.items():
+        defs, _, binds = scopes[m]
+        for call in ast.walk(ast.parse(path.read_text(encoding="utf-8"))):
+            if not isinstance(call, ast.Call):
+                continue
+            target = _resolve(m, call.func, defs, binds)
+            target = _follow(scopes, target) if isinstance(target, tuple) else None
+            if target not in switches:
+                continue
+            starred = any(isinstance(a, ast.Starred) for a in call.args)
+            kws = {k.arg for k in call.keywords}
+            for name, slot in switches[target].items():
+                if (name in kws or None in kws or starred
+                        or (slot is not None and slot < len(call.args))):
+                    passed.add((*target, name))
+
+    found = {(*k, name) for k, v in switches.items() for name in v}
+    assert set(SWITCHES_OK) <= found, set(SWITCHES_OK) - found
+    unset = sorted(f"{m}.{fn}({name}=)" for m, fn, name in found - passed
+                   if (m, fn, name) not in SWITCHES_OK)
+    assert found
+    assert not unset, unset

@@ -1,7 +1,7 @@
 """Weighted data-mixing extension of token_budget_sample (round 5):
-target-mixture budgets per language, even-split back-compat pin,
-zero-weight language dropping, cross-engine parity, and an independent
-Python model of the selection and its packing origin.
+target-mixture budgets per language, zero-weight language dropping,
+cross-engine parity, and an independent Python model of the selection
+and its packing origin.
 """
 
 from __future__ import annotations
@@ -24,25 +24,6 @@ def test_mixture_default_parity(spark):
     _assert_parity(
         relational.token_budget_sample(spark, SF_DIR), SF_DIR,
         relational.token_budget_sample_sql(),
-    )
-
-
-def test_even_split_is_round4_behaviour(spark):
-    """weights=None must reproduce the round-4 even split: with the r4
-    default budget (60k), every (lang,bucket) budget is 7500 and the
-    whole sf0.01 corpus fits — the 500-row selection CORRECTNESS_r04
-    recorded — and it stays parity-green."""
-    df = relational.token_budget_sample(
-        spark, SF01, budget_tokens=60_000, weights=None
-    )
-    rows = df.collect()
-    assert len(rows) == 500
-    assert {r["bucket_budget"] for r in rows} == {7500}
-    _assert_parity(
-        relational.token_budget_sample(spark, SF_DIR, budget_tokens=60_000,
-                                       weights=None),
-        SF_DIR,
-        relational.token_budget_sample_sql(budget_tokens=60_000, weights=None),
     )
 
 

@@ -164,9 +164,7 @@ def test_dedup_plans_have_no_cartesian_product(spark):
         # whose tiny centroid table is a deliberate broadcast cross join
         dedup._scoped_clear()
         emb = dedup._scoped_persist(similarity._emb(spark, sf_dir))
-        return similarity._near_dup_pairs_from(
-            emb, 0.35, similarity.N_SIG_BANDS, similarity.BAND_DIMS
-        )
+        return similarity._near_dup_pairs_from(emb)
 
     for fn in (dedup.jaccard_pairs, dedup.minhash_lsh_pairs, near_dup_pairs):
         plan = _plan(fn(spark, "/root/testdata/sf0.001"))
@@ -304,19 +302,16 @@ def test_training_corpus_filter_scans_documents_once(spark):
     """The composed filter references the quality-filtered table from
     two branches (exact-dedup aggregate + survivors join) and the
     shingle stream from three — all must read persisted scans: ONE
-    FileScan of documents per query (and, since the round-5 semantic
-    stage, exactly one more for embeddings — two unique scans total)."""
+    FileScan each of documents and embeddings (the semantic stage), two
+    unique scans total.  No Window over corpus rows (the ppx vocabulary
+    is a TakeOrdered)."""
     from pdf_extractor2_spark.operators.dedup import training_corpus_filter
-
-    plan = _plan(training_corpus_filter(
-        spark, "/root/testdata/sf0.001", with_semdedup=False
-    ))
-    assert "documents.parquet" in plan
-    assert _unique_parquet_scans(plan) == 1, plan
 
     plan = _plan(training_corpus_filter(spark, "/root/testdata/sf0.001"))
     assert "documents.parquet" in plan and "embeddings.parquet" in plan
     assert _unique_parquet_scans(plan) == 2, plan
+    assert "Window" not in plan, plan
+    assert "TakeOrdered" in plan, plan
 
 
 def test_duplicate_span_stats_scans_documents_once(spark):

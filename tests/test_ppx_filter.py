@@ -1,9 +1,11 @@
-"""Round-5 composition: training_corpus_filter's perplexity-band stage
-(CCNet-complete pipeline: gate → exact dedup → near-dedup → ppx band).
+"""training_corpus_filter, the composed pipeline: gate → exact dedup →
+near-dedup → ppx band → SemDeDup.
 
-Pins (a) cross-engine parity of the composed default, (b) the
-compositional identity kept_with_ppx == kept_without ∩ band≠tail,
-(c) NULL-text robustness, (d) plan shape on the default path.
+Pins (a) cross-engine parity, (b) the stage-4 identity kept ==
+stage-3 survivors ∩ band≠tail, with the survivors taken from the DuckDB
+oracle's CTEs, (c) NULL-text robustness, (d) stage 5 as SemDeDup over
+the stage-4 survivors.  Corpora with no embedding rows pass every
+document through stage 5 with sd_cell = -1, which isolates stages 1-4.
 """
 
 from __future__ import annotations
@@ -14,26 +16,47 @@ import pytest
 
 from pdf_extractor2_spark.operators import dedup, textstats
 
-from test_textstats_edge import _compare
-
 SF = "/root/testdata/sf0.001"
 
 
-def test_corpus_filter_ppx_parity(spark):
-    """The graded default (with_ppx=True) must hash-match its DuckDB
-    twin — rows, columns, and the band labels."""
-    _compare(spark, SF,
-             dedup.training_corpus_filter(spark, SF, with_semdedup=False),
-             dedup.training_corpus_filter_sql(with_semdedup=False))
+def _write_no_embeddings(path):
+    """An embeddings table with sf0.001's schema and no rows."""
+    pq.write_table(pa.table({
+        "vec_id": pa.array([], pa.int64()),
+        "embedding": pa.array([], pa.list_(pa.float32())),
+        "label": pa.array([], pa.int32()),
+    }), str(path / "embeddings.parquet"))
 
 
-def test_corpus_filter_legacy_parity(spark):
-    """The with_ppx=False path (the r4 graded row) must still match its
-    own twin — the rework of the shared base (coalesced text, projected
-    toks) must not move a single row."""
-    _compare(spark, SF,
-             dedup.training_corpus_filter(spark, SF, with_ppx=False, with_semdedup=False),
-             dedup.training_corpus_filter_sql(with_ppx=False, with_semdedup=False))
+@pytest.fixture(scope="module")
+def docs_only(tmp_path_factory):
+    """sf0.001's documents with an empty embeddings table."""
+    import shutil
+
+    d = tmp_path_factory.mktemp("tcf_docs_only")
+    shutil.copy(f"{SF}/documents.parquet", d / "documents.parquet")
+    _write_no_embeddings(d)
+    return str(d)
+
+
+def _filter_no_embeddings(spark, sf_dir):
+    """{doc_id: (n_exact_dups, log_ppx, ppx_band)} of the graded filter
+    over a corpus with no embedding rows; every row must carry the
+    unembedded sentinel."""
+    rows = dedup.training_corpus_filter(spark, sf_dir).collect()
+    assert {r["sd_cell"] for r in rows} <= {-1}
+    return {r["doc_id"]: (r["n_exact_dups"], r["log_ppx"], r["ppx_band"])
+            for r in rows}
+
+
+def test_corpus_filter_ppx_parity(spark, docs_only):
+    """Stages 1-4 on sf0.001's documents hash-match the DuckDB twin —
+    rows, columns, and the band labels."""
+    _compare_with_embeddings(
+        spark, docs_only,
+        dedup.training_corpus_filter(spark, docs_only),
+        dedup.training_corpus_filter_sql(),
+    )
 
 
 def _quartile_bands(vals):
@@ -53,17 +76,21 @@ def _quartile_bands(vals):
                       "middle" if x <= t_mid else "tail")
 
 
-def test_corpus_filter_band_composition(spark):
-    """kept(with_ppx) == kept(without) ⋈ doc_profile.log_ppx WHERE
-    band ≠ 'tail', where the band is the exact corpus-wide quartile of
-    the graded scorer's numbers (recomputed independently in Python) —
-    and the sf0.001 corpus genuinely populates all three bands."""
-    base = {
-        r["doc_id"]: r["n_exact_dups"]
-        for r in dedup.training_corpus_filter(
-            spark, SF, with_ppx=False, with_semdedup=False
-        ).collect()
-    }
+def test_corpus_filter_band_composition(spark, docs_only):
+    """kept == stage-3 survivors ⋈ doc_profile.log_ppx WHERE band ≠
+    'tail', where the survivors come from the oracle's CTEs and the band
+    is the exact corpus-wide quartile of the graded scorer's numbers
+    (recomputed independently in Python) — and the sf0.001 corpus
+    genuinely populates all three bands."""
+    import duckdb
+
+    con = duckdb.connect()
+    con.execute(f"CREATE VIEW documents AS SELECT * FROM"
+                f" read_parquet('{SF}/documents.parquet')")
+    base = dict(con.execute(
+        f"WITH {dedup._tcf_kept_sql_ctes()} SELECT doc_id, n_exact_dups"
+        " FROM exact_kept WHERE doc_id NOT IN (SELECT doc_id FROM near_dropped)"
+    ).fetchall())
     scores = {
         r["doc_id"]: r["log_ppx"]
         for r in textstats.doc_profile(spark, SF)
@@ -75,10 +102,7 @@ def test_corpus_filter_band_composition(spark):
         d: (n, scores[d], band(scores[d]))
         for d, n in base.items() if band(scores[d]) != "tail"
     }
-    got = {
-        r["doc_id"]: (r["n_exact_dups"], r["log_ppx"], r["ppx_band"])
-        for r in dedup.training_corpus_filter(spark, SF, with_semdedup=False).collect()
-    }
+    got = _filter_no_embeddings(spark, docs_only)
     assert got == want and got
     assert len(got) < len(base)  # the tail drop is not a no-op
 
@@ -103,15 +127,17 @@ def test_corpus_filter_null_text(spark, tmp_path):
         "lang": pa.array([r[2] for r in rows], pa.string()),
     })
     pq.write_table(table, str(tmp_path / "documents.parquet"))
+    _write_no_embeddings(tmp_path)
 
-    got = {r["doc_id"]: r for r in
-           dedup.training_corpus_filter(spark, str(tmp_path), with_semdedup=False).collect()}
+    got = _filter_no_embeddings(spark, str(tmp_path))
     assert 3 not in got and 4 not in got and 1 not in got
-    assert 0 in got and got[0]["n_exact_dups"] == 2
-    assert all(r["ppx_band"] in ("head", "middle") for r in got.values())
-    _compare(spark, str(tmp_path),
-             dedup.training_corpus_filter(spark, str(tmp_path), with_semdedup=False),
-             dedup.training_corpus_filter_sql(with_semdedup=False))
+    assert 0 in got and got[0][0] == 2
+    assert all(band in ("head", "middle") for _, _, band in got.values())
+    _compare_with_embeddings(
+        spark, str(tmp_path),
+        dedup.training_corpus_filter(spark, str(tmp_path)),
+        dedup.training_corpus_filter_sql(),
+    )
 
 
 @pytest.mark.parametrize("seed", [7, 19, 31])
@@ -119,7 +145,8 @@ def test_corpus_filter_random_corpus_parity(spark, tmp_path, seed):
     """Randomized campaign for the composed filter: corpora with
     planted exact duplicates, mutated near-duplicates, gate-failers,
     NULL/empty text — the full gate → exact → near → quartile-band
-    pipeline must hash-match DuckDB exactly.  The quartile thresholds
+    pipeline must hash-match DuckDB exactly (no embedding rows, so
+    stage 5 keeps everything with sd_cell = -1).  The quartile thresholds
     make every band depend on EVERY document's score, so a single
     cross-engine score disagreement anywhere shifts band membership
     and fails the compare — the strongest parity stress in the file."""
@@ -157,30 +184,18 @@ def test_corpus_filter_random_corpus_parity(spark, tmp_path, seed):
     p = tmp_path / f"tcf{seed}"
     p.mkdir()
     pq.write_table(table, str(p / "documents.parquet"))
+    _write_no_embeddings(p)
 
     got = sorted(tuple(r) for r in
-                 dedup.training_corpus_filter(spark, str(p),
-                                              with_semdedup=False).collect())
+                 dedup.training_corpus_filter(spark, str(p)).collect())
     con = duckdb.connect()
-    con.execute(f"CREATE VIEW documents AS SELECT * FROM"
-                f" read_parquet('{p}/documents.parquet')")
+    for t in ("documents", "embeddings"):
+        con.execute(f"CREATE VIEW {t} AS SELECT * FROM"
+                    f" read_parquet('{p}/{t}.parquet')")
     want = sorted(tuple(r) for r in
-                  con.execute(dedup.training_corpus_filter_sql(
-                      with_semdedup=False)).fetchall())
+                  con.execute(dedup.training_corpus_filter_sql()).fetchall())
     assert got == want, next((a, b) for a, b in zip(got, want) if a != b)
     assert got  # corpora are built to keep at least one gate-passer
-
-
-def test_corpus_filter_plan_default_path(spark):
-    """Default (ppx+semdedup) plan: ONE FileScan each of documents and
-    embeddings, no Window over corpus rows (vocab is TakeOrdered),
-    model joins broadcast."""
-    from test_plans import _plan, _unique_parquet_scans
-
-    plan = _plan(dedup.training_corpus_filter(spark, SF))
-    assert _unique_parquet_scans(plan) == 2, plan
-    assert "Window" not in plan, plan
-    assert "TakeOrdered" in plan, plan
 
 
 def _compare_with_embeddings(spark, sf_dir, spark_df, sql):
@@ -201,21 +216,17 @@ def test_corpus_filter_semdedup_parity(spark):
     )
 
 
-def test_corpus_filter_semdedup_composition(spark):
+def test_corpus_filter_semdedup_composition(spark, docs_only):
     """Stage 5 is SemDeDup restricted to the stage-4 survivors: a kept
     doc is dropped iff some LOWER-id KEPT doc shares a within-cell
     cos≥τ pair with it (recomputed here from the pair table directly);
-    survivors carry their quantizer cell."""
+    survivors carry their quantizer cell.  The stage-4 survivors are
+    the filter's output over the same documents with no embeddings."""
     import duckdb
 
     from pdf_extractor2_spark.operators import similarity
 
-    before = {
-        r["doc_id"]: (r["n_exact_dups"], r["log_ppx"], r["ppx_band"])
-        for r in dedup.training_corpus_filter(
-            spark, SF, with_semdedup=False
-        ).collect()
-    }
+    before = _filter_no_embeddings(spark, docs_only)
     con = duckdb.connect()
     con.execute("CREATE VIEW embeddings AS SELECT * FROM "
                 f"read_parquet('{SF}/embeddings.parquet')")
@@ -242,10 +253,11 @@ def test_corpus_filter_semdedup_composition(spark):
 
 
 def test_corpus_filter_semdedup_spares_orphaned_groups(spark, tmp_path):
-    """Review regression: when a duplicate group's lowest-id member was
+    """Regression: when a duplicate group's lowest-id member was
     already dropped by an earlier stage (here the quality gate), the
     surviving member must NOT be semantically pruned — full-corpus
-    verdicts would delete every copy of that content."""
+    verdicts would delete every copy of that content.  Three documents
+    put none in the ppx tail quartile, so stage 4 keeps both."""
     import numpy as np
     import pyarrow as pa
     import pyarrow.parquet as pq
@@ -272,12 +284,12 @@ def test_corpus_filter_semdedup_spares_orphaned_groups(spark, tmp_path):
     }), str(tmp_path / "embeddings.parquet"))
 
     got = {r["doc_id"] for r in dedup.training_corpus_filter(
-        spark, str(tmp_path), with_ppx=False).collect()}
+        spark, str(tmp_path)).collect()}
     assert got == {0, 20}
     _compare_with_embeddings(
         spark, str(tmp_path),
-        dedup.training_corpus_filter(spark, str(tmp_path), with_ppx=False),
-        dedup.training_corpus_filter_sql(with_ppx=False),
+        dedup.training_corpus_filter(spark, str(tmp_path)),
+        dedup.training_corpus_filter_sql(),
     )
 
 
