@@ -59,8 +59,8 @@ def test_funnel_plan_has_no_window(spark):
     import contextlib
     import io
 
+    sf = "/root/testdata/sf0.001"
     buf = io.StringIO()
     with contextlib.redirect_stdout(buf):
-        relational.conversion_funnel(spark, "/root/testdata/sf0.001").explain(
-            "formatted")
+        relational.conversion_funnel(spark, sf).explain("formatted")
     assert "Window" not in buf.getvalue()
