@@ -303,15 +303,14 @@ def test_training_corpus_filter_scans_documents_once(spark):
     two branches (exact-dedup aggregate + survivors join) and the
     shingle stream from three — all must read persisted scans: ONE
     FileScan each of documents and embeddings (the semantic stage), two
-    unique scans total.  No Window over corpus rows (the ppx vocabulary
-    is a TakeOrdered)."""
+    unique scans total.  The ppx stage's shape (no Window, TakeOrdered
+    vocabulary) is pinned in
+    test_ppx_filter::test_corpus_filter_plan_default_path."""
     from pdf_extractor2_spark.operators.dedup import training_corpus_filter
 
     plan = _plan(training_corpus_filter(spark, "/root/testdata/sf0.001"))
     assert "documents.parquet" in plan and "embeddings.parquet" in plan
     assert _unique_parquet_scans(plan) == 2, plan
-    assert "Window" not in plan, plan
-    assert "TakeOrdered" in plan, plan
 
 
 def test_duplicate_span_stats_scans_documents_once(spark):

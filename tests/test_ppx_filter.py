@@ -198,6 +198,17 @@ def test_corpus_filter_random_corpus_parity(spark, tmp_path, seed):
     assert got  # corpora are built to keep at least one gate-passer
 
 
+def test_corpus_filter_plan_default_path(spark):
+    """The ppx stage's plan shape: no Window over corpus rows, the
+    vocabulary cut is a TakeOrdered.  The scan count is pinned in
+    test_plans::test_training_corpus_filter_scans_documents_once."""
+    from test_plans import _plan
+
+    plan = _plan(dedup.training_corpus_filter(spark, SF))
+    assert "Window" not in plan, plan
+    assert "TakeOrdered" in plan, plan
+
+
 def _compare_with_embeddings(spark, sf_dir, spark_df, sql):
     """Both corpus views registered (the semantic stage reads
     embeddings); the shared comparator carries the float-norm guard."""
