@@ -198,6 +198,64 @@ def test_corpus_filter_random_corpus_parity(spark, tmp_path, seed):
     assert got  # corpora are built to keep at least one gate-passer
 
 
+def test_corpus_filter_near_dup_floor(spark, tmp_path):
+    """Stage 3's Jaccard floor, pinned at 0.5 from both sides.  Each
+    pair (a, a+1) has 62 distinct tokens a side (60 shingles) and shares
+    its first m tokens (m - 2 shingles), so Jaccard = (m-2)/(122-m):
+    m = 42 gives exactly 0.5, m = 43 gives 41/79 = 0.518987, m = 41
+    gives 39/81 = 0.481481.  The lower-id docs sit in the ppx train
+    slice (doc_id % 5 == 0) and the padding docs are out-of-vocabulary
+    gibberish, so the padding, not the pairs, holds the worst
+    perplexity; every doc clears the quality gate."""
+    import random
+
+    import duckdb
+
+    rows = []
+    for a, m in ((0, 42), (5, 43), (10, 41)):
+        toks = [f"p{a}w{i}" for i in range(62)]
+        rows.append((a, " ".join(toks)))
+        rows.append((a + 1, " ".join(toks[:m] + [f"p{a}v{i}" for i in range(62 - m)])))
+    rng = random.Random(5)
+    for d in (2, 3, 4, 7, 8, 9):
+        rows.append((d, " ".join(
+            "".join(rng.choice("bcdfghjklmnpqrstvwxz") for _ in range(7))
+            for _ in range(45))))
+    assert all(len(t) >= 200 and len(t.split(" ")) >= 40 for _, t in rows)
+    pq.write_table(pa.table({
+        "doc_id": pa.array([r[0] for r in rows], pa.int64()),
+        "text": pa.array([r[1] for r in rows], pa.string()),
+        "lang": pa.array(["en"] * len(rows), pa.string()),
+    }), str(tmp_path / "documents.parquet"))
+    _write_no_embeddings(tmp_path)
+    path = str(tmp_path)
+
+    pairs = {(0, 1): 0.5, (5, 6): 0.518987, (10, 11): 0.481481}
+    con = duckdb.connect()
+    con.execute("CREATE VIEW documents AS SELECT * FROM"
+                f" read_parquet('{path}/documents.parquet')")
+    for threshold in (0.4, 0.5):
+        want = {(a, b, j) for (a, b), j in pairs.items() if j >= threshold}
+        got = {tuple(r) for r in
+               dedup.jaccard_pairs(spark, path, threshold=threshold).collect()}
+        assert got == want
+        assert set(con.execute(dedup.jaccard_pairs_sql(threshold=threshold))
+                   .fetchall()) == want
+    near_dropped = {d for (d,) in con.execute(
+        f"WITH {dedup._tcf_kept_sql_ctes()} SELECT doc_id FROM near_dropped"
+    ).fetchall()}
+    assert near_dropped == {1, 6}
+
+    kept = _filter_no_embeddings(spark, path)
+    pair_docs = {d for p in pairs for d in p}
+    assert pair_docs & set(kept) == pair_docs - {1, 6}
+    _compare_with_embeddings(
+        spark, path,
+        dedup.training_corpus_filter(spark, path),
+        dedup.training_corpus_filter_sql(),
+    )
+
+
 def test_corpus_filter_plan_default_path(spark):
     """The ppx stage's plan shape: no Window over corpus rows, the
     vocabulary cut is a TakeOrdered.  The scan count is pinned in
