@@ -12,6 +12,13 @@ cross product anywhere, so the shapes scale:
     LSH candidate pairs join on (band, key);
   * simhash: 16-bit sign-aggregated projection, grouped by signature.
 
+One Jaccard pair-scoring path per engine: ``_sids`` turns a (doc_id,
+toks) frame into the (doc_id, sid) shingle stream and ``_jaccard_from``
+scores (doc_a, doc_b, jaccard) from it; in DuckDB ``_SIDS_SQL_CTES`` and
+``_jaccard_sql_ctes`` are the same two steps as WITH-list fragments.
+``jaccard_pairs``, ``dedup_groups`` and ``training_corpus_filter`` (and
+their oracle twins) all call them.
+
 Determinism note: shingle ids are NOT a dictionary (a global sort/
 row_number would serialize on one task at scale).  Each shingle hashes
 inline to a 56-bit rolling hash — pure arithmetic both engines compute
@@ -35,6 +42,10 @@ ROWS_PER_BAND = 4
 # from the similarity universe entirely (intersections AND set sizes), so
 # the semantics stay self-consistent and the DuckDB oracle mirrors exactly.
 MAX_SHINGLE_DF = 100
+# near-duplicate floor: a pair whose rounded shingle Jaccard reaches it
+JACCARD_FLOOR = 0.5
+# window length, in tokens, of duplicate_span_stats
+SPAN_K = 8
 # deterministic permutation constants, shared verbatim with the oracle SQL
 HASH_A = [(1103515245 * (i + 1)) % P31 for i in range(N_HASHES)]
 HASH_B = [(12345 * (i + 1) + 711) % P31 for i in range(N_HASHES)]
@@ -74,17 +85,20 @@ _TOKS_NN_EXPR = "split(coalesce(text, ''), ' ')"
 _TOKS_NN_SQL = (
     "SELECT doc_id, string_split(coalesce(text, ''), ' ') AS t FROM {table}"
 )
-_SHINGLE_EXPR = (
-    "case when size(toks) < 3 then array()"
-    " else array_distinct(transform(sequence(0, size(toks) - 3),"
-    " i -> concat_ws(' ', element_at(toks, i + 1),"
-    " element_at(toks, i + 2), element_at(toks, i + 3)))) end"
-)
 
-_SHINGLE_SQL = (
-    "list_distinct([t[i] || ' ' || t[i+1] || ' ' || t[i+2]"
-    " for i in generate_series(1, len(t) - 2)])"
-)
+
+def _kgram_spark(k: int) -> str:
+    elems = ", ".join(f"element_at(toks, i + {j + 1})" for j in range(k))
+    return (
+        f"case when size(toks) < {k} then array()"
+        f" else array_distinct(transform(sequence(0, size(toks) - {k}),"
+        f" i -> concat_ws(' ', {elems}))) end"
+    )
+
+
+def _kgram_duck(k: int) -> str:
+    elems = " || ' ' || ".join(f"t[i+{j}]" for j in range(k))
+    return f"list_distinct([{elems} for i in generate_series(1, len(t) - {k - 1})])"
 
 
 def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -134,12 +148,25 @@ def _spread(spark: SparkSession, df: DataFrame) -> DataFrame:
     return df
 
 
-def _shingled(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """(doc_id, shingle) exploded distinct 3-gram shingles."""
+def _sids(toks: DataFrame) -> DataFrame:
+    """(doc_id, toks) → (doc_id, sid): each distinct 3-token shingle
+    hashed inline to its 56-bit id — no vocabulary, no global sort, no
+    join; the plan is explode → project."""
     return (
+        toks.select("doc_id", F.explode(F.expr(_kgram_spark(3))).alias("shingle"))
+        .select("doc_id", F.expr(_SID_EXPR).alias("sid"))
+    )
+
+
+def _with_shingle_ids(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """``_sids`` over every document.
+
+    Consumers that reference this from multiple join branches wrap it in
+    ``_scoped_persist`` (Catalyst does not CSE identical subtrees across
+    self-joins, so without it the tokenize + fold runs once per branch)."""
+    return _sids(
         _spread(spark, _docs(spark, sf_dir).select("doc_id", "text"))
         .select("doc_id", F.expr(_TOKS_EXPR).alias("toks"))
-        .select("doc_id", F.explode(F.expr(_SHINGLE_EXPR)).alias("shingle"))
     )
 
 
@@ -193,20 +220,14 @@ def _pairs_from_groups(ok: DataFrame) -> DataFrame:
     )
 
 
-def jaccard_pairs(
-    spark: SparkSession, sf_dir: str, threshold: float = 0.5,
-    max_df: int = MAX_SHINGLE_DF,
-) -> DataFrame:
-    """Exact n-gram Jaccard near-dup pairs via inverted posting lists —
-    the standard scalable set-similarity join (no cross product): group
-    shingles into per-sid doc lists (stop shingles with df > max_df
-    dropped — prefix filtering), explode bounded candidate pairs, count
-    shared shingles per pair, then score against per-doc set sizes.
-    Three hash aggregates and two small joins; no self-join shuffle of
-    the full edge list, and no key can fan out more than C(max_df, 2)."""
-    _scoped_clear()
-    raw = _scoped_persist(_with_shingle_ids(spark, sf_dir))
-    ok = _scoped_persist(_groups_from(raw, max_df))
+def _jaccard_from(raw: DataFrame, threshold: float) -> DataFrame:
+    """(doc_a, doc_b, jaccard) for every pair of ``raw``'s documents
+    whose rounded shingle Jaccard is ≥ ``threshold`` — THE Spark pair
+    scorer, fed a (doc_id, sid) stream (``_sids``).  ``raw`` and the
+    posting lists are scoped-persisted (each feeds two branches); the
+    per-doc sizes run lazily, as persisting them measured slower."""
+    raw = _scoped_persist(raw)
+    ok = _scoped_persist(_groups_from(raw, MAX_SHINGLE_DF))
     sizes = (
         ok.select(F.explode("docs").alias("doc_id"))
         .groupBy("doc_id").agg(F.count("*").alias("n_shingles"))
@@ -231,14 +252,18 @@ def jaccard_pairs(
     )
 
 
-def _with_shingle_ids(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """(doc_id, sid): inline 56-bit deterministic shingle hash — no
-    vocabulary, no global sort, no join; the plan is explode → project.
-
-    Consumers that reference this from multiple join branches wrap it in
-    ``_scoped_persist`` (Catalyst does not CSE identical subtrees across
-    self-joins, so without it the tokenize + fold runs once per branch)."""
-    return _shingled(spark, sf_dir).select("doc_id", F.expr(_SID_EXPR).alias("sid"))
+def jaccard_pairs(spark: SparkSession, sf_dir: str,
+                  threshold: float = JACCARD_FLOOR) -> DataFrame:
+    """Exact n-gram Jaccard near-dup pairs via inverted posting lists —
+    the standard scalable set-similarity join (no cross product): group
+    shingles into per-sid doc lists (stop shingles with
+    df > MAX_SHINGLE_DF dropped — prefix filtering), explode bounded
+    candidate pairs, count shared shingles per pair, then score against
+    per-doc set sizes (``_jaccard_from``).  Three hash aggregates and
+    two small joins; no self-join shuffle of the full edge list, and no
+    key can fan out more than C(MAX_SHINGLE_DF, 2)."""
+    _scoped_clear()
+    return _jaccard_from(_with_shingle_ids(spark, sf_dir), threshold)
 
 
 def minhash_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -389,7 +414,8 @@ def _delete_ckpt_files(spark: SparkSession, path: str) -> None:
 _AUTO_PJ_AFTER = 8
 
 
-def dedup_groups(spark: SparkSession, sf_dir: str, threshold: float = 0.5,
+def dedup_groups(spark: SparkSession, sf_dir: str,
+                 threshold: float = JACCARD_FLOOR,
                  max_iters: int = 50,
                  reliable_checkpoint: bool = False,
                  checkpoint_every: int = 5,
@@ -601,13 +627,13 @@ def dedup_groups(spark: SparkSession, sf_dir: str, threshold: float = 0.5,
         free_pending()
 
 
-def dedup_groups_sql(table: str = "documents", threshold: float = 0.5,
-                     max_df: int = MAX_SHINGLE_DF) -> str:
+def dedup_groups_sql(table: str = "documents",
+                     threshold: float = JACCARD_FLOOR) -> str:
     """Recursive-CTE transitive closure, min per reachable set — the
     exact fixpoint the propagation loop converges to."""
-    pairs_query = jaccard_pairs_sql(table, threshold, max_df)
     return f"""
-        WITH RECURSIVE pairs AS (SELECT * FROM ({pairs_query}) q),
+        WITH RECURSIVE {_ids_sql(table)},
+        {_jaccard_sql_ctes(threshold)},
         edges AS (SELECT doc_a AS s, doc_b AS d FROM pairs
                   UNION ALL SELECT doc_b, doc_a FROM pairs),
         reach AS (
@@ -634,38 +660,48 @@ def exact_dedup_summary_sql(table: str = "documents") -> str:
     """
 
 
-def _shingled_sql(table: str) -> str:
+# ``_sids`` as a WITH-list fragment over an existing ``toks(doc_id, t)``
+# CTE, ending in ``ids(doc_id, sid)``
+_SIDS_SQL_CTES = f"""
+        ex AS (SELECT doc_id, unnest({_kgram_duck(3)}) AS shingle FROM toks),
+        ids AS (SELECT doc_id, {_SID_SQL} AS sid FROM ex)"""
+
+
+def _ids_sql(table: str) -> str:
+    """WITH-list fragment: ``toks`` over every row of ``table``, then
+    ``_SIDS_SQL_CTES`` (the ``_with_shingle_ids`` twin)."""
     return f"""
-        WITH toks AS (SELECT doc_id, string_split(text, ' ') AS t FROM {table}),
-        ex AS (SELECT doc_id, unnest({_SHINGLE_SQL}) AS shingle FROM toks)
-    """
+        toks AS (SELECT doc_id, string_split(text, ' ') AS t FROM {table}),
+        {_SIDS_SQL_CTES}"""
 
 
-def jaccard_pairs_sql(table: str = "documents", threshold: float = 0.5,
-                      max_df: int = MAX_SHINGLE_DF) -> str:
+def _jaccard_sql_ctes(threshold: float) -> str:
+    """``_jaccard_from`` as a WITH-list fragment over an existing
+    ``ids(doc_id, sid)`` CTE: ``hot`` (stop shingles), ``capped``,
+    ``sizes``, ``inter`` and ``pairs(doc_a, doc_b, jaccard)``."""
     jac = round_half_up_expr("CAST(inter AS DOUBLE) / (sa.n + sb.n - inter)", 6)
     return f"""
-        {_ids_sql(table)},
-        hot AS (SELECT sid FROM ids GROUP BY sid HAVING COUNT(*) > {max_df}),
+        hot AS (SELECT sid FROM ids GROUP BY sid HAVING COUNT(*) > {MAX_SHINGLE_DF}),
         capped AS (SELECT * FROM ids WHERE sid NOT IN (SELECT sid FROM hot)),
         sizes AS (SELECT doc_id, COUNT(*) AS n FROM capped GROUP BY 1),
         inter AS (
           SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, COUNT(*) AS inter
           FROM capped a JOIN capped b ON a.sid = b.sid AND a.doc_id < b.doc_id
-          GROUP BY 1, 2)
-        SELECT doc_a, doc_b,
-               {jac} AS jaccard
-        FROM inter
-        JOIN sizes sa ON sa.doc_id = doc_a
-        JOIN sizes sb ON sb.doc_id = doc_b
-        WHERE {jac} >= {threshold}
-    """
+          GROUP BY 1, 2),
+        pairs AS (
+          SELECT doc_a, doc_b, {jac} AS jaccard
+          FROM inter
+          JOIN sizes sa ON sa.doc_id = doc_a
+          JOIN sizes sb ON sb.doc_id = doc_b
+          WHERE {jac} >= {threshold})"""
 
 
-def _ids_sql(table: str) -> str:
+def jaccard_pairs_sql(table: str = "documents",
+                      threshold: float = JACCARD_FLOOR) -> str:
     return f"""
-        {_shingled_sql(table)},
-        ids AS (SELECT doc_id, {_SID_SQL} AS sid FROM ex)
+        WITH {_ids_sql(table)},
+        {_jaccard_sql_ctes(threshold)}
+        SELECT doc_a, doc_b, jaccard FROM pairs
     """
 
 
@@ -685,7 +721,7 @@ def minhash_lsh_pairs_sql(table: str = "documents") -> str:
         for j in range(N_BANDS)
     )
     return f"""
-        {_ids_sql(table)},
+        WITH {_ids_sql(table)},
         sig AS (SELECT doc_id, {mins} FROM ids GROUP BY doc_id),
         bands AS ({band_selects})
         SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, CAST(COUNT(*) AS BIGINT) AS n_bands
@@ -701,7 +737,7 @@ def simhash_sql(table: str = "documents") -> str:
     )
     sig = " + ".join(f"CASE WHEN s{k} >= 0 THEN {2**k} ELSE 0 END" for k in range(16))
     return f"""
-        {_ids_sql(table)},
+        WITH {_ids_sql(table)},
         hs AS (SELECT doc_id, ({HASH_A[0]} * (sid % {P31}) + {HASH_B[0]}) % {P31} AS h FROM ids),
         bits AS (SELECT doc_id, {sums} FROM hs GROUP BY doc_id)
         SELECT doc_id, CAST({sig} AS BIGINT) AS simhash FROM bits
@@ -719,9 +755,10 @@ def training_corpus_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
       1. quality gate: drop short/thin documents;
       2. exact dedup: keep the lowest doc_id per content digest;
       3. near-dedup: among surviving docs, drop the higher doc_id of any
-         pair with shingle-Jaccard ≥ 0.5 (stop shingles with
-         df > MAX_SHINGLE_DF removed first — prefix filtering, same as
-         ``jaccard_pairs``, so no single shuffle key fans out O(df²));
+         pair with shingle-Jaccard ≥ JACCARD_FLOOR (calls ``_sids`` and
+         ``_jaccard_from``, the scorer of ``jaccard_pairs``: stop
+         shingles with df > MAX_SHINGLE_DF removed first, so no single
+         shuffle key fans out O(df²));
       4. perplexity band: score every document against the bigram LM
          trained on the deterministic held-out slice
          (``textstats._ppx_scores``), split the corpus into CCNet-style
@@ -784,27 +821,10 @@ def training_corpus_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     survivors = _spread(spark, docs.join(exact_kept, "doc_id", "left_semi"))
-    raw = _scoped_persist(
-        survivors.select("doc_id", F.explode(F.expr(_SHINGLE_EXPR)).alias("shingle"))
-        .select("doc_id", F.expr(_SID_EXPR).alias("sid"))
+    near_dropped = (
+        _jaccard_from(_sids(survivors), JACCARD_FLOOR)
+        .select(F.col("doc_b").alias("doc_id")).distinct()
     )
-    ok = _scoped_persist(_groups_from(raw, MAX_SHINGLE_DF))
-    sizes = (
-        ok.select(F.explode("docs").alias("doc_id"))
-        .groupBy("doc_id").agg(F.count("*").alias("n"))
-    )
-    near_pairs = (
-        _pairs_from_groups(ok)
-        .groupBy("doc_a", "doc_b")
-        .agg(F.count("*").alias("inter"))
-        .join(sizes.withColumnRenamed("doc_id", "doc_a").withColumnRenamed("n", "na"), "doc_a")
-        .join(sizes.withColumnRenamed("doc_id", "doc_b").withColumnRenamed("n", "nb"), "doc_b")
-        .where(
-            F.expr(round_half_up_expr("CAST(inter AS DOUBLE) / (na + nb - inter)", 6))
-            >= 0.5
-        )
-    )
-    near_dropped = near_pairs.select(F.col("doc_b").alias("doc_id")).distinct()
 
     # the near-dedup survivor set is one of the overlapped legs below
     # AND feeds the band join — persist it so the band join reads the
@@ -877,14 +897,14 @@ def training_corpus_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _tcf_kept_sql_ctes(table: str = "documents") -> str:
     """Stages 1-4 of ``training_corpus_filter`` as a WITH-list fragment
-    over ``table``: ``exact_kept`` (stage 2), ``near_dropped`` (stage 3)
-    and ``ppx_banded`` (stage 4's scores), ending with
+    over ``table``: ``exact_kept`` (stage 2), ``near_dropped`` (stage 3,
+    the ``doc_b`` side of ``_jaccard_sql_ctes``' pairs) and
+    ``ppx_banded`` (stage 4's scores), ending with
     ``tcf_kept(doc_id, n_exact_dups, log_ppx, ppx_band)``."""
     from .textstats import (
         _BASE_SQL, _PPX_MEAN, _ppx_band_sql_ctes, _ppx_sql_ctes,
     )
 
-    jac = round_half_up_expr("CAST(COUNT(*) AS DOUBLE) / (sa.n + sb.n - COUNT(*))", 6)
     return f"""
         base AS ({_BASE_SQL.format(table=table)}),
         quality AS (
@@ -895,18 +915,9 @@ def _tcf_kept_sql_ctes(table: str = "documents") -> str:
           FROM quality GROUP BY md5(text)),
         toks AS (SELECT doc_id, t FROM quality
                  WHERE doc_id IN (SELECT doc_id FROM exact_kept)),
-        ex AS (SELECT doc_id, unnest({_SHINGLE_SQL}) AS shingle FROM toks),
-        ids AS (SELECT doc_id, {_SID_SQL} AS sid FROM ex),
-        hot AS (SELECT sid FROM ids GROUP BY sid HAVING COUNT(*) > {MAX_SHINGLE_DF}),
-        capped AS (SELECT * FROM ids WHERE sid NOT IN (SELECT sid FROM hot)),
-        sizes AS (SELECT doc_id, COUNT(*) AS n FROM capped GROUP BY 1),
-        near_dropped AS (
-          SELECT DISTINCT b.doc_id
-          FROM capped a JOIN capped b ON a.sid = b.sid AND a.doc_id < b.doc_id
-          JOIN sizes sa ON sa.doc_id = a.doc_id
-          JOIN sizes sb ON sb.doc_id = b.doc_id
-          GROUP BY a.doc_id, b.doc_id, sa.n, sb.n
-          HAVING {jac} >= 0.5),
+        {_SIDS_SQL_CTES},
+        {_jaccard_sql_ctes(JACCARD_FLOOR)},
+        near_dropped AS (SELECT DISTINCT doc_b AS doc_id FROM pairs),
         {_ppx_sql_ctes("base")},
         ppx AS (SELECT doc_id, {round_half_up_expr(_PPX_MEAN, 4)} AS log_ppx
                 FROM ppx_doc),
@@ -940,28 +951,14 @@ def training_corpus_filter_sql(table: str = "documents") -> str:
 # round 3: span-level duplication (the substring-dedup family signal)
 # ---------------------------------------------------------------------------
 
-def _kgram_spark(k: int) -> str:
-    elems = ", ".join(f"element_at(toks, i + {j + 1})" for j in range(k))
-    return (
-        f"case when size(toks) < {k} then array()"
-        f" else array_distinct(transform(sequence(0, size(toks) - {k}),"
-        f" i -> concat_ws(' ', {elems}))) end"
-    )
-
-
-def _kgram_duck(k: int) -> str:
-    elems = " || ' ' || ".join(f"t[i+{j}]" for j in range(k))
-    return f"list_distinct([{elems} for i in generate_series(1, len(t) - {k - 1})])"
-
-
-def duplicate_span_stats(spark: SparkSession, sf_dir: str,
-                         k: int = 8) -> DataFrame:
+def duplicate_span_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-document duplicated-span fraction: the share of a document's
-    distinct k-token windows (k=8 — long enough that a shared window is
-    verbatim copied text, the signal suffix-array substring dedup à la
-    Lee et al. extracts) that occur in at least one OTHER document.
-    Training pipelines drop or trim documents whose duplicated-span
-    fraction is high even when whole-document near-dup misses them.
+    distinct k-token windows (k = SPAN_K — long enough that a shared
+    window is verbatim copied text, the signal suffix-array substring
+    dedup à la Lee et al. extracts) that occur in at least one OTHER
+    document.  Training pipelines drop or trim documents whose
+    duplicated-span fraction is high even when whole-document near-dup
+    misses them.
 
     Every document appears in the output — a doc shorter than k tokens
     has zero windows and reports (n_spans=0, dup_span_frac=0) rather
@@ -1000,7 +997,7 @@ def duplicate_span_stats(spark: SparkSession, sf_dir: str,
     rebuilt per document from a sorted (pos, token) collect — bounded by
     single-document length, the same row-size envelope every other
     per-doc operator already assumes."""
-    base, wins, dup_sids = _span_streams(spark, sf_dir, k)
+    base, wins, dup_sids = _span_streams(spark, sf_dir)
     docsid = wins.select("doc_id", "sid").distinct()
     per_doc = docsid.groupBy("doc_id").agg(F.count("*").alias("n_spans"))
     dup_per_doc = (
@@ -1023,10 +1020,10 @@ def duplicate_span_stats(spark: SparkSession, sf_dir: str,
             F.expr(f"case when n_spans = 0 then CAST(0 AS DOUBLE) else {frac} end"),
         )
     )
-    return stats.join(_trim_from(base, wins, dup_sids, k), "doc_id")
+    return stats.join(_trim_from(base, wins, dup_sids), "doc_id")
 
 
-def _span_streams(spark: SparkSession, sf_dir: str, k: int):
+def _span_streams(spark: SparkSession, sf_dir: str):
     """The shared span plumbing: persisted NULL-coalesced (doc_id,
     toks) base; persisted positional window stream (doc_id, pos,
     sid=md5(window text)); and the collision-safe duplicated-key set
@@ -1037,10 +1034,10 @@ def _span_streams(spark: SparkSession, sf_dir: str, k: int):
         _spread(spark, _docs(spark, sf_dir).select("doc_id", "text"))
         .select("doc_id", F.expr(_TOKS_NN_EXPR).alias("toks"))
     )
-    elems = ", ".join(f"element_at(toks, i + {j})" for j in range(k))
+    elems = ", ".join(f"element_at(toks, i + {j})" for j in range(SPAN_K))
     pos_wins = (
-        f"case when size(toks) < {k} then array()"
-        f" else transform(sequence(1, size(toks) - {k - 1}),"
+        f"case when size(toks) < {SPAN_K} then array()"
+        f" else transform(sequence(1, size(toks) - {SPAN_K - 1}),"
         f" i -> struct(i AS pos, concat_ws(' ', {elems}) AS g)) end"
     )
     wins = _scoped_persist(
@@ -1059,11 +1056,11 @@ def _span_streams(spark: SparkSession, sf_dir: str, k: int):
     return base, wins, dup_sids
 
 
-def _trim_from(base: DataFrame, wins: DataFrame, dup_sids: DataFrame,
-               k: int) -> DataFrame:
+def _trim_from(base: DataFrame, wins: DataFrame, dup_sids: DataFrame) -> DataFrame:
     covered = (
         wins.join(dup_sids, "sid")
-        .select("doc_id", F.explode(F.expr(f"sequence(pos, pos + {k - 1})")).alias("cov"))
+        .select("doc_id",
+                F.explode(F.expr(f"sequence(pos, pos + {SPAN_K - 1})")).alias("cov"))
         .distinct()
     )
     tokens = base.select(
@@ -1104,7 +1101,7 @@ def _trim_from(base: DataFrame, wins: DataFrame, dup_sids: DataFrame,
     )
 
 
-def _trim_sql_ctes(k: int) -> str:
+def _trim_sql_ctes() -> str:
     """The trim pipeline as a WITH-list fragment over an existing CTE
     ``toks(doc_id, t)``; names tw_-prefixed so it composes with the
     span-stats CTEs; ends with ``trim_doc(doc_id, n_tokens,
@@ -1113,11 +1110,11 @@ def _trim_sql_ctes(k: int) -> str:
     ``tw_ds``/``tw_dup``, mirroring the shared Spark stream).  Window
     key = md5(window text) — collision-safe for the removal path (see
     ``duplicate_span_stats``)."""
-    elems = " || ' ' || ".join(f"t[i+{j}]" for j in range(k))
+    elems = " || ' ' || ".join(f"t[i+{j}]" for j in range(SPAN_K))
     return f"""
         tw_wins AS (SELECT doc_id,
                            unnest([{{'p': i, 'g': {elems}}}
-                                   for i in generate_series(1, len(t) - {k - 1})]) AS w
+                                   for i in generate_series(1, len(t) - {SPAN_K - 1})]) AS w
                     FROM toks),
         tw_ids AS (SELECT doc_id, struct_extract(w, 'p') AS pos,
                           md5(struct_extract(w, 'g')) AS sid
@@ -1126,7 +1123,7 @@ def _trim_sql_ctes(k: int) -> str:
         tw_dup AS (SELECT sid FROM tw_ds GROUP BY sid HAVING COUNT(*) >= 2),
         tw_cov AS (SELECT DISTINCT doc_id, pos + j AS cov
                    FROM tw_ids JOIN tw_dup USING (sid)
-                   CROSS JOIN generate_series(0, {k - 1}) g(j)),
+                   CROSS JOIN generate_series(0, {SPAN_K - 1}) g(j)),
         tw_tokpos AS (SELECT doc_id,
                              unnest([{{'p': i, 'tok': t[i]}}
                                      for i in generate_series(1, len(t))]) AS w
@@ -1146,13 +1143,13 @@ def _trim_sql_ctes(k: int) -> str:
                      FROM toks b LEFT JOIN tw_kept w USING (doc_id))"""
 
 
-def duplicate_span_stats_sql(table: str = "documents", k: int = 8) -> str:
+def duplicate_span_stats_sql(table: str = "documents") -> str:
     frac = round_half_up_expr("CAST(n_dup_spans AS DOUBLE) / n_spans", 6)
     # the stats columns derive from the SAME window stream as the trim
     # (tw_ds / tw_dup), mirroring the shared Spark plan
     return f"""
         WITH toks AS ({_TOKS_NN_SQL.format(table=table)}),
-        {_trim_sql_ctes(k)},
+        {_trim_sql_ctes()},
         sp_per AS (SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS n_spans
                    FROM tw_ds GROUP BY 1),
         sp_dup AS (SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS n_dup_spans

@@ -162,7 +162,7 @@ def distinct_shingles_kmv_sql(table: str = "documents", k: int = KMV_K) -> str:
         2,
     )
     return f"""
-        {_ids_sql(table)},
+        WITH {_ids_sql(table)},
         h AS (SELECT DISTINCT sid AS h FROM ids),
         topk AS (SELECT h FROM h ORDER BY h LIMIT {k}),
         sk AS (SELECT MAX(h) AS kth_min_h, COUNT(*) AS k_used FROM topk),

@@ -248,9 +248,8 @@ def _esc(s: str) -> str:
     return s.replace("&", "&amp;").replace("<", "&lt;").replace(">", "&gt;")
 
 
-def render_html(spec: DocSpec, rng: random.Random | None = None,
-                encoding: str = "utf-8") -> bytes:
-    rng = rng or random.Random(f"pex2html:{spec.idx}")
+def render_html(spec: DocSpec, encoding: str = "utf-8") -> bytes:
+    rng = random.Random(f"pex2html:{spec.idx}")
     nav = "".join(
         f'<a href="/{w.lower()}">{w}</a> ' for w in rng.sample(_BOILER_LINKS, 6)
     )

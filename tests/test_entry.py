@@ -311,19 +311,21 @@ def test_every_package_definition_is_reached_from_an_entry_point():
     assert not unreached, unreached
 
 
-# Boolean switches no package or entry-point call sets on purpose, each
-# with its reason.
+# Switches (literal True/False/None defaults) no package or entry-point
+# call sets on purpose, each with its reason.
 SWITCHES_OK = {
     ("pdf_extractor2_spark.operators.dedup", "dedup_groups", "reliable_checkpoint"):
+        "cluster fault-recovery mode: safety code a local run never needs",
+    ("pdf_extractor2_spark.operators.dedup", "dedup_groups", "checkpoint_dir"):
         "cluster fault-recovery mode: safety code a local run never needs",
     ("pdf_extractor2_spark.streaming.stream_job", "stream_extract", "available_now"):
         "the stream entry point's trigger mode, a deployment setting",
 }
 
 
-def _bool_switches(fn):
+def _switches(fn):
     """{name: positional slot or None} of ``fn``'s parameters whose
-    default is a literal True or False."""
+    default is a literal True, False or None."""
     args = fn.args
     pos = args.posonlyargs + args.args
     pairs = [*zip(pos, [None] * (len(pos) - len(args.defaults)) + args.defaults),
@@ -331,19 +333,21 @@ def _bool_switches(fn):
     return {
         arg.arg: (i if i < len(pos) else None)
         for i, (arg, d) in enumerate(pairs)
-        if isinstance(d, ast.Constant) and isinstance(d.value, bool)
+        if isinstance(d, ast.Constant)
+        and (isinstance(d.value, bool) or d.value is None)
     }
 
 
 def test_every_boolean_switch_is_set_by_package_code():
     """A parameter of a top-level package function whose default is a
-    literal True/False is a switch.  Some call in package code or in an
+    literal True, False or None is a switch (a None default usually
+    selects a fallback branch).  Some call in package code or in an
     entry point must pass it, by keyword or by position; otherwise only
     tests reach its other branch — delete the branch and the parameter,
     or give it a reason in ``SWITCHES_OK``."""
     files, scopes = _package_scopes()
     switches = {
-        (m, name): _bool_switches(node)
+        (m, name): _switches(node)
         for m, (defs, _, _) in scopes.items() if m.startswith(PACKAGE)
         for name, node in defs.items()
         if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef))
