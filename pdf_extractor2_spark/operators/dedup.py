@@ -42,7 +42,7 @@ ROWS_PER_BAND = 4
 # from the similarity universe entirely (intersections AND set sizes), so
 # the semantics stay self-consistent and the DuckDB oracle mirrors exactly.
 MAX_SHINGLE_DF = 100
-# near-duplicate floor: a pair whose rounded shingle Jaccard reaches it
+# a pair is a near-duplicate when its rounded shingle Jaccard reaches this
 JACCARD_FLOOR = 0.5
 # window length, in tokens, of duplicate_span_stats
 SPAN_K = 8
