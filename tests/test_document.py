@@ -150,17 +150,16 @@ def test_text_fallback_parity(reference):
 # fuzz whole documents
 # ---------------------------------------------------------------------------
 
-_line = st.sampled_from(
-    [
-        "KONTAKTER", "PROJEKTER", "UDBUD", "OPLYSNINGER", "Kontakter",
-        "Navn Telefon Rolle", "Niels Bohr 12 34 56 78 Projektleder",
-        "Mette Hansen 87 65 43 21 Handled. Murer",
-        "Opførelse af huse 45 mio. kr maj 2024", "Renovering 2,5 mia",
-        "ByggeData A/S", "CVR: 12345678", "Telefon: 33 44 55 66",
-        "info@byggedata.dk", "https://x.dk", "Id nr: 9", "tom linje", "",
-        "Jens Madsen", "11 22 33 44", "Handled. Tagdækker", "arkiv",
-    ]
-)
+PAGE_LINES = [
+    "KONTAKTER", "PROJEKTER", "UDBUD", "OPLYSNINGER", "Kontakter",
+    "Navn Telefon Rolle", "Niels Bohr 12 34 56 78 Projektleder",
+    "Mette Hansen 87 65 43 21 Handled. Murer",
+    "Opførelse af huse 45 mio. kr maj 2024", "Renovering 2,5 mia",
+    "ByggeData A/S", "CVR: 12345678", "Telefon: 33 44 55 66",
+    "info@byggedata.dk", "https://x.dk", "Id nr: 9", "tom linje", "",
+    "Jens Madsen", "11 22 33 44", "Handled. Tagdækker", "arkiv",
+]
+_line = st.sampled_from(PAGE_LINES)
 _page = st.lists(_line, min_size=0, max_size=15).map("\n".join)
 
 from test_grids import _grid_strategy  # noqa: E402

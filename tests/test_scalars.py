@@ -137,15 +137,14 @@ def test_curated_parity(reference, ours, theirs):
 # property fuzz: Danish-ish text
 # ---------------------------------------------------------------------------
 
-_danish_words = st.sampled_from(
-    [
-        "Projektleder", "Totalentreprenør", "budget", "mio", "kr", "maj",
-        "2024", "12", "34", "56", "78", "Niels", "Bohr", "Hansen", "æble",
-        "ÅRHUS", "Sjælland", "Udbud", "arkiv", "telefon", "cvr", "Handled",
-        "contractor", "Steel", "leader", ".", "\n", "e@f.dk", "-", "+45",
-        "A/S", "opførelse", "✓", "bæredygtighed", "12345678", "20240101",
-    ]
-)
+DANISH_WORDS = [
+    "Projektleder", "Totalentreprenør", "budget", "mio", "kr", "maj",
+    "2024", "12", "34", "56", "78", "Niels", "Bohr", "Hansen", "æble",
+    "ÅRHUS", "Sjælland", "Udbud", "arkiv", "telefon", "cvr", "Handled",
+    "contractor", "Steel", "leader", ".", "\n", "e@f.dk", "-", "+45",
+    "A/S", "opførelse", "✓", "bæredygtighed", "12345678", "20240101",
+]
+_danish_words = st.sampled_from(DANISH_WORDS)
 
 _danish_text = st.lists(_danish_words, min_size=0, max_size=30).map(" ".join)
 
