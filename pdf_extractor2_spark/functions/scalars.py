@@ -41,11 +41,18 @@ __all__ = [
 # precompiled patterns
 # --------------------------------------------------------------------------
 
-_WS_RUN = re.compile(r"\s+")
 _SPACE_TAB_RUN = re.compile(r"[ \t]+")
 _BLANK_LINE = re.compile(r"\n\s*\n")
 
-_PHONE_GROUPED = re.compile(r"(?:\+45\s*)?(\d{2}[\s\-]?\d{2}[\s\-]?\d{2}[\s\-]?\d{2})")
+# sre skips ahead to a possible first character only when a pattern
+# opens with a plain character class, so the digit-led patterns below
+# spell a leading \d{2} or \d+ as \d\d or \d\d* (same strings, same
+# backtracking order)
+_PHONE_DIGITS = r"\d\d[\s\-]?\d\d[\s\-]?\d\d[\s\-]?\d\d"
+# every match of either phone pattern holds a _PHONE_ANY match, and
+# _PHONE_ANY is the only one of the three that can skip ahead
+_PHONE_ANY = re.compile(_PHONE_DIGITS)
+_PHONE_GROUPED = re.compile(r"(?:\+45\s*)?(" + _PHONE_DIGITS + ")")
 _PHONE_BARE = re.compile(r"\b(\d{8})\b")
 _PHONE_SEP = re.compile(r"[\s\-]")
 _PHONE_YEARLIKE = re.compile(r"(19|20)\d{2}")
@@ -60,19 +67,27 @@ _EMAIL_DOMAIN = re.compile(r"[A-Za-z0-9.-]+\.[A-Z|a-z]{2,}\b")
 _WORD_BOUNDARY = re.compile(r"\b")
 
 _BUDGET_PATTERNS = (
-    re.compile(r"(\d+(?:[,.]\d+)?\s*(?:mia|mio)\.?\s*(?:kr)?)", re.IGNORECASE),
-    re.compile(r"(\d+(?:[,.]\d+)?\s*billion)", re.IGNORECASE),
-    re.compile(r"(\d+(?:[,.]\d+)?\s*million)", re.IGNORECASE),
+    re.compile(r"(\d\d*(?:[,.]\d+)?\s*(?:mia|mio)\.?\s*(?:kr)?)", re.IGNORECASE),
+    re.compile(r"(\d\d*(?:[,.]\d+)?\s*billion)", re.IGNORECASE),
+    re.compile(r"(\d\d*(?:[,.]\d+)?\s*million)", re.IGNORECASE),
 )
 
-_DATE_MONTH_YEAR = re.compile(
-    r"(jan|feb|mar|apr|maj|jun|jul|aug|sep|okt|nov|dec)[a-z]*\.?\s+\d{4}", re.IGNORECASE
-)
+# jan|feb|mar|apr|maj|jun|jul|aug|sep|okt|nov|dec as a prefix tree:
+# under IGNORECASE sre cannot skip positions by first character, and
+# the tree tries 8 branches at each where the flat list tried 12 (same
+# three-letter stems, so every match is the same)
+_MONTHS = r"(?:a(?:pr|ug)|dec|feb|j(?:an|u[ln])|ma[jr]|nov|okt|sep)"
+_DATE_MONTH_YEAR = re.compile(r"(" + _MONTHS + r")[a-z]*\.?\s+\d{4}", re.IGNORECASE)
+# the same search over the lowercased text, which sre can skip through
+# by first character: IGNORECASE matches a character to an ASCII letter
+# exactly when its lowercase is that letter, save for these three, and
+# lowercasing keeps every other string's length, so spans carry over
+_DATE_MONTH_YEAR_LOWER = re.compile(r"(" + _MONTHS + r")[a-z]*\.?\s+\d{4}")
+_CASE_FOLD_ODD = ("İ", "ı", "ſ")
 _DATE_DAY_MONTH_YEAR = re.compile(
-    r"\d{1,2}\s+(?:jan|feb|mar|apr|maj|jun|jul|aug|sep|okt|nov|dec)[a-z]*\.?\s+\d{4}",
-    re.IGNORECASE,
+    r"\d\d?\s+" + _MONTHS + r"[a-z]*\.?\s+\d{4}", re.IGNORECASE
 )
-_DATE_NUMERIC = re.compile(r"\d{1,2}[-./]\d{1,2}[-./]\d{4}")
+_DATE_NUMERIC = re.compile(r"\d\d?[-./]\d{1,2}[-./]\d{4}")
 _DATE_BARE_YEAR = re.compile(r"\b(20\d{2})\b")
 
 _REGIONS = ("Hovedstaden", "Sjælland", "Syddanmark", "Midtjylland", "Nordjylland")
@@ -88,6 +103,7 @@ _STAGES = (
     "Procurement",
     "Projecting",
 )
+_STAGES_LOWER = tuple((stage.lower(), stage) for stage in _STAGES)
 
 _NAME_BLACKLIST = (
     "projekt", "kontakt", "entr", "entrepren", "rådgiver", "ingeniør",
@@ -108,6 +124,7 @@ _ROLE_PROJECT_PREFIXES = (
 )
 
 _ROLE_HANDLED_PREFIX = "handled"
+_ROLE_PREFIXES_AND_HANDLED = frozenset(_ROLE_PROJECT_PREFIXES + (_ROLE_HANDLED_PREFIX,))
 
 _ROLE_INDICATORS = (
     # English
@@ -138,29 +155,51 @@ _ROLE_INDICATORS = (
 
 _ROLE_DEFAULT_PROJECT_KWS = ("leader", "leder", "manager", "chef", "head")
 
-# single-pass alternations: `any(x in s for x in XS)` ≡ one regex search
-_NAME_BLACKLIST_RE = re.compile("|".join(map(re.escape, _NAME_BLACKLIST)))
-_ROLE_INDICATORS_RE = re.compile("|".join(map(re.escape, _ROLE_INDICATORS)))
-_ROLE_UNINTERESTING_RE = re.compile("|".join(map(re.escape, _ROLE_UNINTERESTING)))
-_ROLE_PROJECT_PREFIX_SUB_RE = re.compile(
-    "|".join(map(re.escape, _ROLE_PROJECT_PREFIXES))
-)
-_ROLE_DEFAULT_PROJECT_RE = re.compile(
-    "|".join(map(re.escape, _ROLE_DEFAULT_PROJECT_KWS))
-)
 
-_DANISH_PROJECT_ROLE_PATTERNS = (
-    re.compile(r"Projektleder[^.\n]*"),
-    re.compile(r"Byggeleder[^.\n]*"),
-    re.compile(r"Sagsansvarlig[^.\n]*"),
-    re.compile(r"Projektchef[^.\n]*"),
-    re.compile(r"Projekteringsleder[^.\n]*"),
+
+def _any_of(words) -> re.Pattern:
+    """``any(w in s for w in words)`` as one regex search.
+
+    The words go into a prefix tree first: at each position sre tries a
+    flat alternation's branches one by one, but the tree's branches by
+    their first character, which ran the 60-word role-indicator search
+    2-3x faster.  Callers test only whether it matches, which the tree
+    leaves as it was."""
+    tree: dict = {}
+    for word in words:
+        node = tree
+        for ch in word:
+            node = node.setdefault(ch, {})
+        node[""] = {}
+
+    def pattern(node: dict) -> str:
+        branches = [re.escape(ch) + pattern(sub) for ch, sub in sorted(node.items()) if ch]
+        if not branches:
+            return ""
+        body = branches[0] if len(branches) == 1 else "(?:" + "|".join(branches) + ")"
+        return "(?:" + body + ")?" if "" in node else body
+
+    return re.compile(pattern(tree))
+
+
+_NAME_BLACKLIST_RE = _any_of(_NAME_BLACKLIST)
+_ROLE_INDICATORS_RE = _any_of(_ROLE_INDICATORS)
+_ROLE_UNINTERESTING_RE = _any_of(_ROLE_UNINTERESTING)
+_ROLE_PROJECT_PREFIX_SUB_RE = _any_of(_ROLE_PROJECT_PREFIXES)
+_ROLE_DEFAULT_PROJECT_RE = _any_of(_ROLE_DEFAULT_PROJECT_KWS)
+
+# strategy 2's families, each pattern behind a literal stem every match
+# contains: a text without the stem skips the findall
+_DANISH_PROJECT_ROLE_PATTERNS = tuple(
+    (stem, re.compile(stem + r"[^.\n]*"))
+    for stem in ("Projektleder", "Byggeleder", "Sagsansvarlig", "Projektchef",
+                 "Projekteringsleder")
 )
 
 _DANISH_CONTRACTOR_PATTERNS = (
-    re.compile(r"Totalentreprenør"),
-    re.compile(r"Hovedentreprenør"),
-    re.compile(r"[A-ZÆØÅ][a-zæøå]+entreprenør"),
+    ("Totalentreprenør", re.compile(r"Totalentreprenør")),
+    ("Hovedentreprenør", re.compile(r"Hovedentreprenør")),
+    ("entreprenør", re.compile(r"[A-ZÆØÅ][a-zæøå]+entreprenør")),
 )
 
 
@@ -169,10 +208,14 @@ _DANISH_CONTRACTOR_PATTERNS = (
 # --------------------------------------------------------------------------
 
 def clean_text(text: str | None) -> str:
-    """Collapse all whitespace runs to single spaces (scraper.py:54-60)."""
+    """Collapse all whitespace runs to single spaces (scraper.py:54-60).
+
+    ``" ".join(s.split())`` is the reference's ``re.sub(r"\\s+", " ",
+    s.strip())``: ``\\s``, ``str.split`` and ``str.strip`` all take the
+    characters ``str.isspace`` accepts; it runs 3-5x faster."""
     if text is None or not text:
         return ""
-    return _WS_RUN.sub(" ", str(text).strip())
+    return " ".join(str(text).split())
 
 
 _CLEAN_MULTILINE_CACHE_MAX_CHARS = 2048
@@ -218,21 +261,31 @@ def fix_camelcase_boundaries(text: str) -> str:
     A space is inserted before position ``i`` iff ``text[i]`` is uppercase,
     ``text[i-1]`` is lowercase (Unicode-aware, so æøå count) and the
     character two back is not a plain ASCII space (or ``i == 1``).
-    Kept as a character loop: ``str.isupper`` has no stdlib-regex
-    equivalent and these strings are short (project names).
+
+    Both boundary characters are non-spaces, so a boundary lies inside
+    one space-separated token, and the two-back rule only bars it right
+    after a token's first character when a space precedes the token.
+    A token with no uppercase (``islower``), no lowercase (``isupper``)
+    or no uppercase right after a cased character (``istitle``) has no
+    boundary and is kept as is; only the others run the character loop.
+    Most words are lowercase or capitalised, so most tokens skip it.
     """
     if not text or len(text) < 2:
         return text
-    pieces: list[str] = []
-    prev = text[0]
-    pieces.append(prev)
-    for i in range(1, len(text)):
-        ch = text[i]
-        if ch.isupper() and prev.islower() and (i == 1 or text[i - 2] != " "):
-            pieces.append(" ")
-        pieces.append(ch)
-        prev = ch
-    return "".join(pieces)
+    tokens = text.split(" ")
+    for t, token in enumerate(tokens):
+        if len(token) < 2 or token.islower() or token.istitle() or token.isupper():
+            continue
+        pieces = [token[0]]
+        prev = token[0]
+        for k in range(1, len(token)):
+            ch = token[k]
+            if ch.isupper() and prev.islower() and (k > 1 or t == 0):
+                pieces.append(" ")
+            pieces.append(ch)
+            prev = ch
+        tokens[t] = "".join(pieces)
+    return " ".join(tokens)
 
 
 # --------------------------------------------------------------------------
@@ -255,6 +308,14 @@ def is_valid_person_name(text: str | None) -> bool:
     return _is_valid_person_name_core(text)
 
 
+def _count_person_names(cells: list[str]) -> int:
+    """How many of ``cells`` pass ``is_valid_person_name``: the length
+    test runs here and ``map`` calls the memoised core, so a cache hit
+    never enters a Python frame (the classifier checks every cell of a
+    grid's first 20 rows)."""
+    return sum(map(_is_valid_person_name_core, [c for c in cells if 3 <= len(c) <= 70]))
+
+
 @lru_cache(maxsize=65536)
 def _is_valid_person_name_core(text: str) -> bool:
     cleaned = clean_text(text)
@@ -269,17 +330,17 @@ def _is_valid_person_name_core(text: str) -> bool:
     if not 2 <= len(words) <= 4:
         return False
 
-    n_capitalized = sum(1 for w in words if w and w[0].isupper())
+    n_capitalized = sum(1 for w in words if w[0].isupper())
     if n_capitalized < 2:
         return False
 
-    if any(c.isdigit() for c in cleaned):
-        return False
-
+    # no digit anywhere, and at least 70% letters in each longer word: a
+    # word of letters only passes both, the others are counted
     for w in words:
-        if len(w) > 1:
-            n_alpha = sum(1 for c in w if c.isalpha())
-            if n_alpha < len(w) * 0.7:
+        if not w.isalpha():
+            if any(c.isdigit() for c in w):
+                return False
+            if len(w) > 1 and sum(1 for c in w if c.isalpha()) < len(w) * 0.7:
                 return False
 
     return True
@@ -304,6 +365,8 @@ def extract_phones(text: str | None) -> list[str]:
 
 @lru_cache(maxsize=65536)
 def _extract_phones_core(s: str) -> tuple[str, ...]:
+    if not _PHONE_ANY.search(s):
+        return ()
     found: dict[str, None] = {}
     for pat in (_PHONE_GROUPED, _PHONE_BARE):
         for m in pat.finditer(s):
@@ -367,12 +430,22 @@ def _scan_emails(s: str) -> list[str]:
 # P7-P10: budget / date / region / stage
 # --------------------------------------------------------------------------
 
+# P7-P11 normalise their input with clean_multiline and then search it;
+# each ``_<field>(s)`` below is that search alone, for a caller whose text
+# already is clean_multiline's output (the grid project and tender
+# extractors' row texts, space-joined normalised cells, are), so it skips
+# the cache lookups, one of them a miss, that each field would repeat
+
+
 def extract_budget(text: str | None) -> str | None:
     """First budget-like amount; mia/mio take precedence over
     billion/million (scraper.py:670-688)."""
     if text is None or not text:
         return None
-    s = clean_multiline(text)
+    return _budget(clean_multiline(text))
+
+
+def _budget(s: str) -> str | None:
     for pat in _BUDGET_PATTERNS:
         m = pat.search(s)
         if m:
@@ -386,10 +459,16 @@ def extract_date(text: str | None) -> str | None:
     Returns the matched text verbatim (never parsed to a date type)."""
     if text is None or not text:
         return None
-    s = clean_multiline(text)
-    m = _DATE_MONTH_YEAR.search(s)
+    return _date(clean_multiline(text))
+
+
+def _date(s: str) -> str | None:
+    if any(ch in s for ch in _CASE_FOLD_ODD):
+        m = _DATE_MONTH_YEAR.search(s)
+    else:
+        m = _DATE_MONTH_YEAR_LOWER.search(s.lower())
     if m:
-        return clean_text(m.group(0))
+        return clean_text(s[m.start() : m.end()])
     m = _DATE_DAY_MONTH_YEAR.search(s)
     if m:
         return clean_text(m.group(0))
@@ -407,7 +486,10 @@ def extract_region(text: str | None) -> str | None:
     substring (scraper.py:719-731)."""
     if text is None or not text:
         return None
-    s = clean_multiline(text)
+    return _region(clean_multiline(text))
+
+
+def _region(s: str) -> str | None:
     for region in _REGIONS:
         if region in s:
             return region
@@ -419,9 +501,13 @@ def extract_stage(text: str | None) -> str | None:
     returns the canonical casing (scraper.py:733-756)."""
     if text is None or not text:
         return None
-    lowered = clean_multiline(text).lower()
-    for stage in _STAGES:
-        if stage.lower() in lowered:
+    return _stage(clean_multiline(text))
+
+
+def _stage(s: str) -> str | None:
+    lowered = s.lower()
+    for stage_lower, stage in _STAGES_LOWER:
+        if stage_lower in lowered:
             return stage
     return None
 
@@ -430,14 +516,21 @@ def extract_stage(text: str | None) -> str | None:
 # P11: two-tier role categorizer
 # --------------------------------------------------------------------------
 
-def _segment_is_role(segment_lower: str, segment: str) -> bool:
-    if segment_lower in _ROLE_PROJECT_PREFIXES or segment_lower == _ROLE_HANDLED_PREFIX:
-        return False
-    if _ROLE_UNINTERESTING_RE.search(segment_lower):
-        return False
-    if not (3 < len(segment) < 100):
-        return False
-    return _ROLE_INDICATORS_RE.search(segment_lower) is not None
+@lru_cache(maxsize=65536)
+def _segment_is_role(segment: str) -> bool:
+    """Whether one '.'-separated piece of a line names a role.  Memoised
+    like the person-name check: half the segments the corpus feeds it
+    recur (role cells such as "Projektleder. Tømrer" repeat across
+    documents)."""
+    segment_lower = segment.lower()
+    # pure tests in any order: the cheap ones first, then the indicator
+    # search, which most segments fail
+    return (
+        3 < len(segment) < 100
+        and _ROLE_INDICATORS_RE.search(segment_lower) is not None
+        and segment_lower not in _ROLE_PREFIXES_AND_HANDLED
+        and not _ROLE_UNINTERESTING_RE.search(segment_lower)
+    )
 
 
 def extract_roles_from_text(text: str | None) -> dict[str, list[str]]:
@@ -453,8 +546,10 @@ def extract_roles_from_text(text: str | None) -> dict[str, list[str]]:
     """
     if text is None or not text:
         return {"project_roles": [], "handled_roles": []}
+    return _roles(clean_multiline(text))
 
-    normalized = clean_multiline(text)
+
+def _roles(normalized: str) -> dict[str, list[str]]:
     project_roles: list[str] = []
     handled_roles: list[str] = []
 
@@ -475,11 +570,10 @@ def extract_roles_from_text(text: str | None) -> dict[str, list[str]]:
         segments = [seg.strip() for seg in line.split(".") if seg.strip()]
 
         for i, segment in enumerate(segments):
-            segment_lower = segment.lower()
-            if not _segment_is_role(segment_lower, segment):
+            if not _segment_is_role(segment):
                 continue
 
-            role = _WS_RUN.sub(" ", segment).strip()
+            role = " ".join(segment.split())
 
             if i > 0:
                 prev = segments[i - 1].lower().strip()
@@ -500,7 +594,7 @@ def extract_roles_from_text(text: str | None) -> dict[str, list[str]]:
             elif line_is_handled:
                 if role and role not in handled_roles:
                     handled_roles.append(role)
-            elif _ROLE_DEFAULT_PROJECT_RE.search(segment_lower):
+            elif _ROLE_DEFAULT_PROJECT_RE.search(segment.lower()):
                 if role and role not in project_roles:
                     project_roles.append(role)
             else:
@@ -508,15 +602,17 @@ def extract_roles_from_text(text: str | None) -> dict[str, list[str]]:
                     handled_roles.append(role)
 
     if not project_roles and not handled_roles:
-        for pat in _DANISH_PROJECT_ROLE_PATTERNS:
-            for match in pat.findall(normalized):
-                role = clean_text(match)
-                if role and role not in project_roles:
-                    project_roles.append(role)
-        for pat in _DANISH_CONTRACTOR_PATTERNS:
-            for match in pat.findall(normalized):
-                role = clean_text(match)
-                if role and role not in handled_roles:
-                    handled_roles.append(role)
+        for stem, pat in _DANISH_PROJECT_ROLE_PATTERNS:
+            if stem in normalized:
+                for match in pat.findall(normalized):
+                    role = clean_text(match)
+                    if role and role not in project_roles:
+                        project_roles.append(role)
+        for stem, pat in _DANISH_CONTRACTOR_PATTERNS:
+            if stem in normalized:
+                for match in pat.findall(normalized):
+                    role = clean_text(match)
+                    if role and role not in handled_roles:
+                        handled_roles.append(role)
 
     return {"project_roles": project_roles[:5], "handled_roles": handled_roles[:10]}

@@ -20,7 +20,7 @@ import re
 from dataclasses import dataclass, field
 
 from ..functions.scalars import (
-    clean_text,
+    _any_of,
     extract_budget,
     extract_date,
     extract_emails,
@@ -56,6 +56,17 @@ _PROJECT_TERMINATORS = (
 )
 _PROJECT_TRIGGER_KWS = ("opførelse", "renovering", "ombygning", "etablering")
 _PROJECT_NAME_STOP_SUBSTRINGS = ("mio", "mia", "hovedstaden", "entr", "kr.")
+_COMPANY_PHONE_WORDS = ("telefon", "phone", "tlf", "mobil")
+
+
+_COMPANY_SUFFIX_RE = _any_of(_COMPANY_SUFFIXES)
+_COMPANY_PHONE_RE = _any_of(_COMPANY_PHONE_WORDS)
+_CONTACT_SECTION_RE = _any_of(_CONTACT_SECTION_MARKERS)
+_CONTACT_TERMINATOR_RE = _any_of(_CONTACT_TERMINATORS)
+_PROJECT_SECTION_RE = _any_of(_PROJECT_SECTION_MARKERS)
+_PROJECT_TERMINATOR_RE = _any_of(_PROJECT_TERMINATORS)
+_PROJECT_TRIGGER_RE = _any_of(_PROJECT_TRIGGER_KWS)
+_PROJECT_NAME_STOP_RE = _any_of(_PROJECT_NAME_STOP_SUBSTRINGS)
 
 
 @dataclass
@@ -119,14 +130,14 @@ def extract_company_info(page_texts: list[str]) -> dict:
                 info["website"] = m.group(1)
 
         if "phone" not in info:
-            if any(w in lowered for w in ("telefon", "phone", "tlf", "mobil")):
+            if _COMPANY_PHONE_RE.search(lowered):
                 if "cvr" not in lowered and "org nr" not in lowered:
                     phones = extract_phones(line)
                     if phones:
                         info["phone"] = phones[0]
 
         if "name" not in info:
-            if any(suffix in line for suffix in _COMPANY_SUFFIXES):
+            if _COMPANY_SUFFIX_RE.search(line):
                 if len(line) < 80 and not line.isupper():
                     info["name"] = line
 
@@ -137,19 +148,29 @@ def extract_company_info(page_texts: list[str]) -> dict:
 # text fallback (scraper.py:985-1154)
 # ---------------------------------------------------------------------------
 
+def _lines_from_first(text: str, marker: re.Pattern) -> list[str]:
+    """The lines of ``text`` from the first one that holds a ``marker``
+    match on, or [] without one: up to that line a section scanner only
+    looks for its marker, so one search over the page replaces a search
+    per line (no marker spans a line break)."""
+    m = marker.search(text)
+    if not m:
+        return []
+    return text[text.rfind("\n", 0, m.start()) + 1 :].split("\n")
+
+
 def _fallback_contacts_from_page(text: str, contacts: list[dict]) -> None:
-    lines = text.split("\n")
     in_section = False
     current: dict | None = None
 
-    for line in lines:
+    for line in _lines_from_first(text, _CONTACT_SECTION_RE):
         line_clean = line.strip()
 
-        if any(kw in line for kw in _CONTACT_SECTION_MARKERS):
+        if _CONTACT_SECTION_RE.search(line):
             in_section = True
             continue
 
-        if in_section and any(h in line for h in _CONTACT_TERMINATORS):
+        if in_section and _CONTACT_TERMINATOR_RE.search(line):
             # reference quirk (scraper.py:1009-1011 + 1087-1088): the
             # current contact is appended at the terminator AND again
             # after the loop — the duplicate only disappears in the
@@ -167,12 +188,17 @@ def _fallback_contacts_from_page(text: str, contacts: list[dict]) -> None:
         phones_in_line = extract_phones(line)
         if phones_in_line:
             words = line_clean.split()
+            # a person name has at least two capitalised words, so only
+            # the word runs that do reach the name check
+            caps = [w[0].isupper() for w in words]
             candidates: list[str] = []
             for j in range(len(words) - 1):
-                two = " ".join(words[j : j + 2])
-                if is_valid_person_name(two):
-                    candidates.append(two)
-                if j < len(words) - 2:
+                pair_caps = caps[j] + caps[j + 1]
+                if pair_caps == 2:
+                    two = words[j] + " " + words[j + 1]
+                    if is_valid_person_name(two):
+                        candidates.append(two)
+                if j < len(words) - 2 and pair_caps + caps[j + 2] >= 2:
                     three = " ".join(words[j : j + 3])
                     if is_valid_person_name(three):
                         candidates.append(three)
@@ -201,13 +227,8 @@ def _fallback_contacts_from_page(text: str, contacts: list[dict]) -> None:
             current = {"name": line_clean}
 
         elif current:
-            phones = extract_phones(line)
-            if phones and "phone" not in current:
-                if len(phones) == 1:
-                    current["phone"] = phones[0]
-                else:
-                    current["phones"] = phones
-                    current["phone"] = phones[0]
+            # the reference also takes this line's phones here, but the
+            # line reaches this branch only when it has none
             emails = extract_emails(line)
             if emails and "email" not in current:
                 current["email"] = emails[0]
@@ -223,25 +244,24 @@ def _fallback_contacts_from_page(text: str, contacts: list[dict]) -> None:
 
 def _fallback_projects_from_page(text: str, projects: list[dict]) -> None:
     in_section = False
-    for line in text.split("\n"):
-        if any(kw in line for kw in _PROJECT_SECTION_MARKERS):
+    for line in _lines_from_first(text, _PROJECT_SECTION_RE):
+        if _PROJECT_SECTION_RE.search(line):
             in_section = True
             continue
-        if in_section and any(h in line for h in _PROJECT_TERMINATORS):
+        if in_section and _PROJECT_TERMINATOR_RE.search(line):
             return
         if not in_section:
             continue
 
-        if extract_budget(line) or any(
-            kw in line.lower() for kw in _PROJECT_TRIGGER_KWS
-        ):
+        budget = extract_budget(line)
+        if budget or _PROJECT_TRIGGER_RE.search(line.lower()):
             line_fixed = fix_camelcase_boundaries(line)
             name_parts: list[str] = []
             for part in line_fixed.split():
                 if (
-                    not _DIGITS_ONLY_RE.match(part)
-                    and not any(x in part.lower() for x in _PROJECT_NAME_STOP_SUBSTRINGS)
-                    and len(part) > 2
+                    len(part) > 2
+                    and not _DIGITS_ONLY_RE.match(part)
+                    and not _PROJECT_NAME_STOP_RE.search(part.lower())
                 ):
                     name_parts.append(part)
                 elif name_parts:
@@ -251,7 +271,6 @@ def _fallback_projects_from_page(text: str, projects: list[dict]) -> None:
                 continue
 
             project: dict = {"name": " ".join(name_parts[:15])}
-            budget = extract_budget(line)
             if budget:
                 project["budget"] = budget
             date = extract_date(line)
@@ -279,10 +298,8 @@ def extract_from_text_fallback(page_texts: list[str]) -> dict:
     projects: list[dict] = []
     for text in page_texts:
         text = text or ""
-        if any(m in text for m in _CONTACT_SECTION_MARKERS):
-            _fallback_contacts_from_page(text, contacts)
-        if any(m in text for m in _PROJECT_SECTION_MARKERS):
-            _fallback_projects_from_page(text, projects)
+        _fallback_contacts_from_page(text, contacts)
+        _fallback_projects_from_page(text, projects)
     return {"contacts": contacts, "projects": projects}
 
 
@@ -308,16 +325,13 @@ def deduplicate_contacts(contacts: list[dict]) -> list[dict]:
     return unique
 
 
-_PROJ_KEY_WS = re.compile(r"\s+")
-
-
 def deduplicate_projects(projects: list[dict]) -> list[dict]:
     """First-wins dedup on whitespace-normalized lowercased name
     (scraper.py:1384-1397)."""
     seen: set = set()
     unique: list[dict] = []
     for project in projects:
-        key = _PROJ_KEY_WS.sub(" ", project.get("name", "").lower()).strip()
+        key = " ".join(project.get("name", "").lower().split())
         if key and key not in seen:
             seen.add(key)
             unique.append(project)

@@ -19,20 +19,23 @@ both are members of every exclusion list the reference checks, so mapping
 
 from __future__ import annotations
 
-from typing import Optional
+from itertools import chain
+from typing import Iterable, Optional
 
 from ..functions.scalars import (
-    _WS_RUN,
+    _any_of,
+    _budget,
+    _count_person_names,
+    _date,
+    _region,
+    _roles,
+    _stage,
     _DATE_DAY_MONTH_YEAR,
     clean_multiline,
     clean_text,
-    extract_budget,
-    extract_date,
     extract_emails,
     extract_phones,
-    extract_region,
     extract_roles_from_text,
-    extract_stage,
     fix_camelcase_boundaries,
     is_valid_person_name,
 )
@@ -44,13 +47,24 @@ Grid = list[list[Optional[str]]]
 _EMPTYISH = ("", "nan", "None")
 
 _PROJECT_NAME_BUDGET_RE = re.compile(r"^\d+\s+(mio|mia)")
+_PROJECT_NAME_STOP_RE = _any_of(("hovedstaden", "sjælland", "entr.", "totalentreprenør"))
 _PROJECT_NAME_DATE_RE = re.compile(r"^\d{1,2}\s+\w+\.?\s+\d{4}")
-_NEWLINE_WS_RE = re.compile(r"\s*\n\s*")
 
 
 def _s(cell: Optional[str]) -> str:
     """Unguarded ``str(cell)`` analogue: missing -> 'None'."""
     return "None" if cell is None else str(cell)
+
+
+def _lowered_text(cells: Iterable[Optional[str]]) -> str:
+    """The present cells, space-joined and lowercased: the text the
+    classifier and header skip search for keywords (the column finder
+    builds its column texts the same way).
+
+    Lowering the joined text in one call equals joining the lowered
+    cells for every keyword: ``str.lower`` maps characters one by one,
+    save for the Greek final sigma, which no keyword contains."""
+    return " ".join([cell for cell in cells if cell is not None]).lower()
 
 
 def normalize_grid(rows: list[list[Optional[str]]]) -> Grid:
@@ -79,14 +93,12 @@ def detect_table_type(grid: Grid) -> tuple[str, float]:
     if not grid or len(grid) < 2:
         return ("unknown", 0.0)
 
-    all_text = " ".join(
-        str(cell).lower() for row in grid for cell in row if cell is not None
-    )
+    all_text = _lowered_text(chain.from_iterable(grid))
 
     contact = 0.0
     if "navn" in all_text or "name" in all_text:
         contact += 2.0
-    if any(w in all_text for w in ("telefon", "phone", "mobil", "tlf")):
+    if "telefon" in all_text or "phone" in all_text or "mobil" in all_text or "tlf" in all_text:
         contact += 3.0
     if "email" in all_text or "e-mail" in all_text or "mail" in all_text:
         contact += 2.0
@@ -100,11 +112,7 @@ def detect_table_type(grid: Grid) -> tuple[str, float]:
     if "firma" in all_text or "company" in all_text:
         contact += 1.0
 
-    name_count = 0
-    for row in grid[:20]:
-        for cell in row:
-            if cell is not None and is_valid_person_name(str(cell)):
-                name_count += 1
+    name_count = _count_person_names([c for row in grid[:20] for c in row if c is not None])
     if name_count >= 5:
         contact += 3.0
     elif name_count >= 2:
@@ -113,13 +121,13 @@ def detect_table_type(grid: Grid) -> tuple[str, float]:
     project = 0.0
     if "projekt" in all_text:
         project += 3.0
-    if any(w in all_text for w in ("budget", "mio", "kr", "kr.")):
+    if "budget" in all_text or "mio" in all_text or "kr" in all_text:
         project += 3.0
-    if any(w in all_text for w in ("byggestart", "dato", "date", "start")):
+    if "dato" in all_text or "date" in all_text or "start" in all_text:
         project += 2.0
     if "region" in all_text or "hovedstaden" in all_text:
         project += 2.0
-    if any(w in all_text for w in ("stadie", "udførelse", "stage")):
+    if "stadie" in all_text or "udførelse" in all_text or "stage" in all_text:
         project += 2.0
     if "bæredygtighed" in all_text or "sustainability" in all_text:
         project += 2.0
@@ -153,15 +161,12 @@ def detect_table_type(grid: Grid) -> tuple[str, float]:
 def find_column_indices(grid: Grid, keywords: list[str]) -> list[int]:
     """Columns whose first ≤5 cells contain any keyword, case-insensitive
     (scraper.py:410-426). Schema-inference analogue of column resolution."""
+    kws = [kw.lower() for kw in keywords]
+    top = grid[:5]
     hits: list[int] = []
-    n_scan = min(5, len(grid))
     for col in range(grid_width(grid)):
-        col_text = " ".join(
-            str(grid[i][col]).lower()
-            for i in range(n_scan)
-            if grid[i][col] is not None
-        )
-        if any(kw.lower() in col_text for kw in keywords):
+        col_text = " ".join([c for row in top if (c := row[col]) is not None]).lower()
+        if any(kw in col_text for kw in kws):
             hits.append(col)
     return hits
 
@@ -240,15 +245,17 @@ def merge_multirow_entries(grid: Grid, boundary_cols: list[int]) -> Grid:
 # header-row skip (T5)
 # ---------------------------------------------------------------------------
 
-def _header_skip(grid: Grid, keywords: tuple[str, ...], scan: int) -> int:
+_CONTACT_HEADER_RE = _any_of(("navn", "name", "firma", "telefon", "rolle", "role"))
+_PROJECT_HEADER_RE = _any_of(("projekt", "budget", "region", "rolle", "byggestart"))
+_TENDER_HEADER_RE = _any_of(("udbud", "licitation"))
+
+
+def _header_skip(grid: Grid, keywords: re.Pattern, scan: int) -> int:
     """Row index after the *last* keyword-bearing row among the first
     ``scan`` rows (scraper.py:539-544, :766-771, :894-898)."""
     start = 0
     for i in range(min(scan, len(grid))):
-        row_text = " ".join(
-            str(cell).lower() for cell in grid[i] if cell is not None
-        )
-        if any(kw in row_text for kw in keywords):
+        if keywords.search(_lowered_text(grid[i])):
             start = i + 1
     return start
 
@@ -271,12 +278,7 @@ def extract_contacts_from_grid(grid: Grid) -> list[dict]:
     if not name_cols:
         counts = []
         for col in range(grid_width(grid)):
-            n = sum(
-                1
-                for i in range(len(grid))
-                if grid[i][col] is not None
-                and is_valid_person_name(str(grid[i][col]))
-            )
+            n = _count_person_names([row[col] for row in grid if row[col] is not None])
             counts.append((col, n))
         if counts:
             best_col, best_n = max(counts, key=lambda t: t[1])
@@ -288,9 +290,7 @@ def extract_contacts_from_grid(grid: Grid) -> list[dict]:
 
     grid = merge_multirow_entries(grid, name_cols)
     id_col = detect_id_column(grid)
-    start_row = _header_skip(
-        grid, ("navn", "name", "firma", "telefon", "rolle", "role"), 10
-    )
+    start_row = _header_skip(grid, _CONTACT_HEADER_RE, 10)
 
     contacts: list[dict] = []
     width = grid_width(grid)
@@ -312,24 +312,27 @@ def extract_contacts_from_grid(grid: Grid) -> list[dict]:
         if "name" not in contact:
             continue
 
-        all_phones: list[str] = []
-        for col in list(phone_cols) + list(range(width)):
-            if col < len(row) and row[col] is not None:
-                all_phones.extend(extract_phones(str(row[col])))
-        if all_phones:
-            unique_phones = list(dict.fromkeys(all_phones))
+        # the phone columns come first, then every column again: one
+        # extraction per cell, and first-seen order decides
+        present = row[:width]
+        phones = [extract_phones(str(c)) if c is not None else () for c in present]
+        unique_phones = list(dict.fromkeys(
+            [p for col in phone_cols if col < len(phones) for p in phones[col]]
+            + [p for ps in phones for p in ps]
+        ))
+        if unique_phones:
             if len(unique_phones) == 1:
                 contact["phone"] = unique_phones[0]
             else:
                 contact["phones"] = unique_phones
                 contact["phone"] = unique_phones[0]
 
-        all_emails: list[str] = []
-        for col in list(email_cols) + list(range(width)):
-            if col < len(row) and row[col] is not None:
-                all_emails.extend(extract_emails(str(row[col])))
-        if all_emails:
-            unique_emails = list(dict.fromkeys(all_emails))
+        emails = [extract_emails(str(c)) if c is not None else () for c in present]
+        unique_emails = list(dict.fromkeys(
+            [e for col in email_cols if col < len(emails) for e in emails[col]]
+            + [e for es in emails for e in es]
+        ))
+        if unique_emails:
             if len(unique_emails) == 1:
                 contact["email"] = unique_emails[0]
             else:
@@ -385,9 +388,7 @@ def extract_projects_from_grid(grid: Grid) -> list[dict]:
     ``last_updated`` keeps the *last* day-month-year match among cells that
     do not mention 'byggestart'.
     """
-    start_row = _header_skip(
-        grid, ("projekt", "budget", "region", "rolle", "byggestart"), 10
-    )
+    start_row = _header_skip(grid, _PROJECT_HEADER_RE, 10)
     data = grid[start_row:] if start_row < len(grid) else list(grid)
     data = merge_multirow_entries(data, [0])
     id_col = detect_id_column(data)
@@ -402,24 +403,22 @@ def extract_projects_from_grid(grid: Grid) -> list[dict]:
             if pid.isdigit():
                 project["id"] = pid
 
-        cells = [
-            clean_multiline(str(cell))
-            for cell in row
-            if cell is not None and str(cell).strip()
-        ]
+        # clean_multiline is empty exactly for blank cells
+        cells = [c for c in (clean_multiline(str(cell)) for cell in row if cell is not None) if c]
         if not cells:
             continue
+        lowered = [cell.lower() for cell in cells]
 
         name = None
-        for cell in cells:
-            if len(cell) > 15 and not _PROJECT_NAME_BUDGET_RE.match(cell.lower()):
-                if not any(
-                    w in cell.lower()
-                    for w in ("hovedstaden", "sjælland", "entr.", "totalentreprenør")
-                ):
-                    if not _PROJECT_NAME_DATE_RE.match(cell):
-                        name = cell
-                        break
+        for cell, low in zip(cells, lowered):
+            if (
+                len(cell) > 15
+                and not _PROJECT_NAME_BUDGET_RE.match(low)
+                and not _PROJECT_NAME_STOP_RE.search(low)
+                and not _PROJECT_NAME_DATE_RE.match(cell)
+            ):
+                name = cell
+                break
         if not name:
             for cell in cells:
                 if len(cell) > 10:
@@ -428,41 +427,41 @@ def extract_projects_from_grid(grid: Grid) -> list[dict]:
         if not name:
             continue
 
-        name = _NEWLINE_WS_RE.sub(" ", name)
-        name = _WS_RUN.sub(" ", name).strip()
-        project["name"] = fix_camelcase_boundaries(name)
+        project["name"] = fix_camelcase_boundaries(clean_text(name))
 
+        # normalised cells joined by single spaces: clean_multiline would
+        # return this text unchanged, so the field searches run on it as is
         all_text = " ".join(cells)
 
-        budget = extract_budget(all_text)
+        budget = _budget(all_text)
         if budget:
             project["budget"] = budget
-        date = extract_date(all_text)
+        date = _date(all_text)
         if date:
             project["start_date"] = date
-        region = extract_region(all_text)
+        region = _region(all_text)
         if region:
             project["region"] = region
-        stage = extract_stage(all_text)
+        stage = _stage(all_text)
         if stage:
             project["stage"] = stage
 
         update_date = None
-        for cell in cells:
-            if "byggestart" not in cell.lower():
+        for cell, low in zip(cells, lowered):
+            if "byggestart" not in low:
                 m = _DATE_DAY_MONTH_YEAR.search(cell)
                 if m:
                     update_date = clean_text(m.group(0))
         if update_date:
             project["last_updated"] = update_date
 
-        roles = extract_roles_from_text(all_text)
+        roles = _roles(all_text)
         if roles["project_roles"]:
             project["project_roles"] = roles["project_roles"][:3]
         if roles["handled_roles"]:
             project["handled_roles"] = roles["handled_roles"][:5]
 
-        if "✓" in all_text or "bæredygtighed" in all_text.lower():
+        if "✓" in all_text or any("bæredygtighed" in low for low in lowered):
             project["sustainability"] = True
 
         if len(project) >= 2:
@@ -484,16 +483,13 @@ def extract_projects_from_grid(grid: Grid) -> list[dict]:
 
 def extract_tenders_from_grid(grid: Grid) -> list[dict]:
     """Tender rows (scraper.py:887-942)."""
-    start_row = _header_skip(grid, ("udbud", "licitation"), 5)
+    start_row = _header_skip(grid, _TENDER_HEADER_RE, 5)
 
     tenders: list[dict] = []
     for row in grid[start_row:]:
         tender: dict = {}
-        cells = [
-            clean_text(str(cell))
-            for cell in row
-            if cell is not None and str(cell).strip()
-        ]
+        # clean_text is empty exactly for blank cells
+        cells = [c for c in (clean_text(str(cell)) for cell in row if cell is not None) if c]
         if not cells:
             continue
 
@@ -504,14 +500,16 @@ def extract_tenders_from_grid(grid: Grid) -> list[dict]:
         if "name" not in tender and cells:
             tender["name"] = cells[0]
 
+        # whitespace-collapsed cells joined by single spaces: already
+        # clean_multiline's output, as in the project extractor
         all_text = " ".join(cells)
-        roles = extract_roles_from_text(all_text)
+        roles = _roles(all_text)
         if roles["handled_roles"]:
             tender["trade"] = roles["handled_roles"][0]
         elif roles["project_roles"]:
             tender["trade"] = roles["project_roles"][0]
 
-        date = extract_date(all_text)
+        date = _date(all_text)
         if date:
             tender["date"] = date
         if "arkiv" in all_text.lower():

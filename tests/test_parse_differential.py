@@ -12,6 +12,7 @@ documents (HTML and PDF)."""
 from __future__ import annotations
 
 import random
+import re
 
 import pytest
 
@@ -52,7 +53,7 @@ def _text(rng: random.Random, max_pieces: int = 6) -> str:
         out += (rng.choice(_JOINS) if out else "") + p
     if rng.random() < 0.1:
         at = rng.randint(0, len(out))
-        out = out[:at] + rng.choice(" \n.@-0123456789æÅ") + out[at:]
+        out = out[:at] + rng.choice(" \n.@-0123456789æÅİıſK\u212aΣ") + out[at:]
     return out
 
 
@@ -154,6 +155,29 @@ def test_texts():
         _check_text(_text(rng, 12))
     for _ in range(500):
         _check_text(_page(rng))
+
+
+def test_month_search_case_folding():
+    """extract_date searches the lowercased text for month-year dates
+    unless it holds one of scalars._CASE_FOLD_ODD: the characters that
+    IGNORECASE matches to [a-z] or to an ASCII letter although their
+    lowercase is not that one letter."""
+    any_letter = re.compile("[a-z]", re.IGNORECASE)
+    odd = set()
+    for u in range(0x110000):
+        ch = chr(u)
+        low = ch.lower()
+        folds = bool(any_letter.fullmatch(ch))
+        if folds != (len(low) == 1 and "a" <= low <= "z"):
+            odd.add(ch)
+        elif folds and any(
+            bool(re.fullmatch(letter, ch, re.IGNORECASE)) != (low == letter)
+            for letter in "abcdefghijklmnopqrstuvwxyz"
+        ):
+            odd.add(ch)
+        elif len(low) != 1:
+            odd.add(ch)
+    assert odd == set(scalars._CASE_FOLD_ODD)
 
 
 def test_documents():
