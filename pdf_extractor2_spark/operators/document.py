@@ -44,8 +44,6 @@ _ANY_NUM_RE = re.compile(r"\b(\d+)\b")
 _URL_RE = re.compile(r"(https?://[^\s]+)")
 _DIGITS_ONLY_RE = re.compile(r"^\d+$")
 
-_COMPANY_SUFFIXES = (" A/S", " ApS", " A.S", " IVS", " I/S")
-
 _CONTACT_SECTION_MARKERS = ("KONTAKTER", "CONTACTS", "Kontakter")
 _CONTACT_TERMINATORS = (
     "PROJEKTER", "PROJECTS", "Projekter", "OPLYSNINGER", "Hubexo", "UDBUD", "Udbud",
@@ -56,11 +54,7 @@ _PROJECT_TERMINATORS = (
 )
 _PROJECT_TRIGGER_KWS = ("opførelse", "renovering", "ombygning", "etablering")
 _PROJECT_NAME_STOP_SUBSTRINGS = ("mio", "mia", "hovedstaden", "entr", "kr.")
-_COMPANY_PHONE_WORDS = ("telefon", "phone", "tlf", "mobil")
 
-
-_COMPANY_SUFFIX_RE = _any_of(_COMPANY_SUFFIXES)
-_COMPANY_PHONE_RE = _any_of(_COMPANY_PHONE_WORDS)
 _CONTACT_SECTION_RE = _any_of(_CONTACT_SECTION_MARKERS)
 _CONTACT_TERMINATOR_RE = _any_of(_CONTACT_TERMINATORS)
 _PROJECT_SECTION_RE = _any_of(_PROJECT_SECTION_MARKERS)
@@ -119,7 +113,7 @@ def extract_company_info(page_texts: list[str]) -> dict:
             if m:
                 info["id_nr"] = m.group(1)
 
-        if "email" not in info:
+        if "email" not in info and "@" in line:
             emails = extract_emails(line)
             if emails:
                 info["email"] = emails[0]
@@ -130,14 +124,16 @@ def extract_company_info(page_texts: list[str]) -> dict:
                 info["website"] = m.group(1)
 
         if "phone" not in info:
-            if _COMPANY_PHONE_RE.search(lowered):
+            if ("telefon" in lowered or "phone" in lowered or "tlf" in lowered
+                    or "mobil" in lowered):
                 if "cvr" not in lowered and "org nr" not in lowered:
                     phones = extract_phones(line)
                     if phones:
                         info["phone"] = phones[0]
 
         if "name" not in info:
-            if _COMPANY_SUFFIX_RE.search(line):
+            if (" A/S" in line or " ApS" in line or " A.S" in line or " IVS" in line
+                    or " I/S" in line):
                 if len(line) < 80 and not line.isupper():
                     info["name"] = line
 

@@ -175,12 +175,15 @@ def detect_id_column(grid: Grid) -> Optional[int]:
     """Find a small-integer ID column among the first three columns
     (scraper.py:428-443): ≥3 values of ≤3 digits in the first 10 rows,
     with max-min ≤ 2×count."""
+    top = grid[:10]
     for col in range(min(3, grid_width(grid))):
         numbers: list[int] = []
-        for i in range(min(10, len(grid))):
-            cell = _s(grid[i][col]).strip()
-            if cell.isdigit() and len(cell) <= 3:
-                numbers.append(int(cell))
+        for row in top:
+            cell = row[col]
+            if cell is not None:  # a missing cell reads 'None': no digits
+                cell = cell.strip()
+                if cell.isdigit() and len(cell) <= 3:
+                    numbers.append(int(cell))
         if len(numbers) >= 3:
             ordered = sorted(numbers)
             if ordered[-1] - ordered[0] <= len(numbers) * 2:
