@@ -364,10 +364,16 @@ def _gather_tables(ir: DocumentIR) -> list[CandidateTable]:
             best_tables = config_tables
 
     # duplicate elimination: list == is shape + cell-wise equality, the
-    # np.array_equal analogue (scraper.py:1229-1242)
+    # np.array_equal analogue (scraper.py:1229-1242); a set of the grids
+    # as tuples of tuples (equal exactly when the lists are) answers it
+    # per table, where comparing pairs grew with the square of a PDF's
+    # table count
+    seen = {tuple(map(tuple, t.grid)) for t in all_tables}
     for t in best_tables:
         if t.grid and len(t.grid) > 2:
-            if not any(existing.grid == t.grid for existing in all_tables):
+            key = tuple(map(tuple, t.grid))
+            if key not in seen:
+                seen.add(key)
                 all_tables.append(t)
 
     return all_tables

@@ -7,9 +7,11 @@ PDF shapes: a k x k ruled grid with one run per cell (lattice cell
 assignment), a long content stream of fast-tier operations, an array
 whose ``[`` never closes (generic tier from the first token), a long
 literal with no ``)``, and a number thousands of digits long that the
-fast tier reads and then rejects.  HTML shape: a paragraph of ``a.``
-runs ending in an ``@`` with no domain (every start in the run once
-scanned to the same ``@``)."""
+fast tier reads and then rejects, and a page of stream tables that
+differ only in their last cell (the kernel drops a stream table equal
+to one it already kept).  HTML shape: a paragraph of ``a.`` runs ending
+in an ``@`` with no domain (every start in the run once scanned to the
+same ``@``)."""
 
 from __future__ import annotations
 
@@ -30,6 +32,22 @@ def _fast_ops(n: int) -> bytes:
     ) + b"\nET"
 
 
+def _stream_tables(n: int) -> bytes:
+    """n three-row, two-column stream tables, each closed by a one-run
+    line at the left margin; 30 points between lines keeps every line
+    apart under all four row tolerances."""
+    ops, y = [b"BT"], 800
+    for t in range(n):
+        for r in range(3):
+            right = b"t%d" % t if r == 2 else b"bb"
+            ops.append(b"1 0 0 1 40 %d Tm (aa) Tj 1 0 0 1 240 %d Tm (%s) Tj" % (y, y, right))
+            y -= 30
+        ops.append(b"1 0 0 1 40 %d Tm (sep) Tj" % y)
+        y -= 30
+    ops.append(b"ET")
+    return one_page(b"\n".join(ops))
+
+
 SHAPES = {
     # size is the grid side k: the payload grows with k * k
     "ruled-grid": (20, lambda k: one_page(ruled_grid(k)), 2),
@@ -38,6 +56,9 @@ SHAPES = {
     "unclosed-literal": (4000, lambda n: one_page(b"BT 1 0 0 1 40 800 Tm (" + b"abc def " * n + b" Tj ET"), 4),
     "long-number": (5000, lambda n: one_page(b"BT 1 " + b"7" * n + b".. Td ET"), 4),
     "email-run": (2000, lambda n: b"<p>" + b"a." * n + b"@</p>", 4),
+    # size is the table count: 800 -> 3,200 tables read 11x with a
+    # pairwise duplicate check
+    "stream-tables": (800, _stream_tables, 4),
 }
 
 
