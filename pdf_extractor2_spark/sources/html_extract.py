@@ -4,11 +4,12 @@ The graft obligation beyond the reference (SURVEY.md §2.9): the reference
 reads only PDFs; Common-Crawl-style rows carry ``html: binary``.  This
 module is a from-scratch boilerplate stripper in the Readability /
 trafilatura family (text-density + link-density heuristics — public
-knowledge), built on ``html.parser`` only so executors need no native deps.
+knowledge), stdlib only so executors need no native deps.
 
 Pipeline per document:
-  1. parse into a flat list of text blocks, each tagged with its element
-     kind, ancestor chain, own-text length and link-text length;
+  1. scan (``_scan``, a ``str.find`` tag scanner) into a flat list of
+     text blocks, each tagged with its element kind, ancestor chain,
+     own-text length and link-text length;
   2. drop boilerplate: blocks inside nav/footer/aside/header/form, blocks
      with link density > 0.5, script/style/template content;
   3. main text = title + kept headings/paragraphs/list items, one block
@@ -30,7 +31,6 @@ from __future__ import annotations
 import re
 from dataclasses import dataclass, field
 from html import unescape
-from html.parser import HTMLParser
 
 from ..operators.document import CandidateTable, DocumentIR
 from ..operators.grids import Grid, normalize_grid
@@ -95,9 +95,15 @@ def _collapse(s: str) -> str:
     return " ".join(s.split())
 
 
-class _Extractor(HTMLParser):
+class _Extractor:
+    """The tag, text and block state one document's events build up.
+
+    Its three handlers take ``html.parser.HTMLParser``'s event interface,
+    so the stdlib parser can drive it as well as ``_scan`` does
+    (tests/oracle.py's HTMLParser driver is the oracle of
+    tests/test_html.py::test_scanner_equivalence)."""
+
     def __init__(self) -> None:
-        super().__init__(convert_charrefs=True)
         self.blocks: list[_Block] = []
         self.tables: list[Grid] = []
         self.title_parts: list[str] = []
@@ -225,13 +231,14 @@ _NO_ATTRS: tuple = ()  # shared empty attrs for attribute-free tags
 
 
 def _scan(html: str, h: "_Extractor") -> None:
-    """Fast tag scanner driving the same event interface as HTMLParser.
+    """Tag scanner driving the extractor's HTMLParser-style events.
 
-    HTMLParser's regex-per-token engine is ~40% of the HTML kernel cost;
+    HTMLParser's regex-per-token engine was ~40% of the HTML kernel cost;
     this direct `str.find` scanner emits the identical start/end/data
     events for the constructs the extractor consumes (tags, text,
     entities, comments, doctypes, raw-text elements). Equivalence with
-    the stdlib path is pinned by tests/test_html.py::test_scanner_equivalence.
+    HTMLParser driving the same extractor is pinned by
+    tests/test_html.py::test_scanner_equivalence.
     """
     # the lowercased copy is only needed to find a raw-text element's
     # close tag (script/style/...); computing it lazily saves a full
@@ -328,25 +335,24 @@ def decode_html_bytes(payload: bytes) -> str:
         return payload.decode("latin-1")
 
 
-def extract_html(payload: bytes | str, engine: str = "fast") -> tuple[DocumentIR, list[dict]]:
+def extract_html(payload: bytes | str) -> tuple[DocumentIR, list[dict]]:
     """Parse one HTML payload into the kernel IR (main text, table grids)
-    and the spans.
-
-    ``engine='fast'`` uses the direct scanner (hot path); ``'stdlib'``
-    drives html.parser.HTMLParser — kept for the equivalence test."""
+    and the spans."""
     if isinstance(payload, bytes):
         payload = decode_html_bytes(payload)
 
     parser = _Extractor()
     try:
-        if engine == "fast":
-            _scan(payload, parser)
-        else:
-            parser.feed(payload)
-            parser.close()
+        _scan(payload, parser)
     except Exception:
         # malformed markup: keep whatever was assembled before the error
         pass
+    return _assemble(parser)
+
+
+def _assemble(parser: _Extractor) -> tuple[DocumentIR, list[dict]]:
+    """The IR and spans of a scanned document: main text from the title
+    and the kept blocks, one lattice table per grid."""
     parser._flush()
 
     title = _collapse(" ".join(parser.title_parts))

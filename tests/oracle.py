@@ -838,6 +838,56 @@ def old_extract_pdf(payload: bytes) -> tuple[DocumentIR, list[dict]]:
 
 
 # ---------------------------------------------------------------------------
+# HTMLParser-driven HTML front-end
+#
+# The package scans HTML with its own str.find tag scanner
+# (html_extract._scan).  This drives the same event sink with the stdlib
+# html.parser.HTMLParser instead and assembles the IR the same way;
+# tests/test_html.py::test_scanner_equivalence holds the scanner to it.
+# ---------------------------------------------------------------------------
+
+from html.parser import HTMLParser  # noqa: E402
+
+from pdf_extractor2_spark.sources.html_extract import (  # noqa: E402
+    _assemble,
+    _Extractor,
+    decode_html_bytes,
+)
+
+
+class _HTMLParserDriver(HTMLParser):
+    """Forwards HTMLParser's start, end and data events to an _Extractor
+    (its default handle_startendtag calls the two overridden handlers)."""
+
+    def __init__(self, sink: _Extractor) -> None:
+        super().__init__(convert_charrefs=True)
+        self.sink = sink
+
+    def handle_starttag(self, tag, attrs) -> None:
+        self.sink.handle_starttag(tag, attrs)
+
+    def handle_endtag(self, tag) -> None:
+        self.sink.handle_endtag(tag)
+
+    def handle_data(self, data) -> None:
+        self.sink.handle_data(data)
+
+
+def stdlib_extract_html(payload: bytes | str):
+    """``html_extract.extract_html`` with HTMLParser in place of _scan."""
+    if isinstance(payload, bytes):
+        payload = decode_html_bytes(payload)
+    sink = _Extractor()
+    try:
+        driver = _HTMLParserDriver(sink)
+        driver.feed(payload)
+        driver.close()
+    except Exception:
+        # malformed markup: keep whatever was assembled before the error
+        pass
+    return _assemble(sink)
+
+# ---------------------------------------------------------------------------
 # Frozen parse layer
 #
 # functions/scalars.py, operators/grids.py and operators/document.py as

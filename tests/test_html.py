@@ -5,6 +5,8 @@ from __future__ import annotations
 
 from pdf_extractor2_spark.sources.html_extract import extract_html
 
+from oracle import stdlib_extract_html
+
 DOC = b"""<!DOCTYPE html><html><head><title>Byg &amp; Bo</title></head><body>
 <nav><a href="/a">Forside</a> <a href="/b">Nyheder</a> <a href="/c">Kontakt</a></nav>
 <article>
@@ -83,9 +85,9 @@ def test_br_preserves_multiline_cells():
 
 
 def test_scanner_equivalence():
-    """The fast scanner and the stdlib HTMLParser path must produce
-    identical (ir, spans) pairs over the whole corpus + adversarial
-    samples."""
+    """The package's tag scanner and HTMLParser driving the same
+    extractor (tests/oracle.py) must produce identical (ir, spans) pairs
+    over the whole corpus + adversarial samples."""
     from pdf_extractor2_spark.sources.corpus import make_doc_spec, render_html
 
     samples = [DOC]
@@ -104,19 +106,19 @@ def test_scanner_equivalence():
         b"<div><p>nested <b>bold</b> inline</p></div>",
     ]
     for payload in samples:
-        fast = extract_html(payload, engine="fast")
-        std = extract_html(payload, engine="stdlib")
+        fast = extract_html(payload)
+        std = stdlib_extract_html(payload)
         assert fast == std, payload[:80]
 
     # intentional divergence on pathological markup: HTMLParser leaks an
     # unterminated comment as text ('< !-- ...'); the fast scanner drops
     # it — the cleaner behavior is the engine's spec
     leaky = b"<p>x</p><!-- unterminated"
-    assert extract_html(leaky, engine="fast")[0].page_texts == [""]
+    assert extract_html(leaky)[0].page_texts == [""]
     # both paths must never raise on garbage
     for junk in [b"\x00\xff<", b"<", b"<>", b"</>", b"<p", b"&#xZZ;"]:
-        extract_html(junk, engine="fast")
-        extract_html(junk, engine="stdlib")
+        extract_html(junk)
+        stdlib_extract_html(junk)
 
 
 def test_role_attribute_boilerplate():
@@ -127,12 +129,12 @@ def test_role_attribute_boilerplate():
     <div role="contentinfo"><p>Copyright foo bar baz corp</p></div>
     <div role="main"><p>Mere rigtigt indhold der skal med.</p></div>
     </body></html>"""
-    for engine in ("fast", "stdlib"):
-        text = extract_html(doc, engine=engine)[0].page_texts[0]
-        assert "Menu punkt" not in text, engine
-        assert "Copyright" not in text, engine
-        assert "Rigtigt indhold" in text, engine
-        assert "Mere rigtigt indhold" in text, engine
+    for extract in (extract_html, stdlib_extract_html):
+        text = extract(doc)[0].page_texts[0]
+        assert "Menu punkt" not in text, extract.__name__
+        assert "Copyright" not in text, extract.__name__
+        assert "Rigtigt indhold" in text, extract.__name__
+        assert "Mere rigtigt indhold" in text, extract.__name__
 
 
 def test_two_row_tables_never_reach_the_classifiers():
