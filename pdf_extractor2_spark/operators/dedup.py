@@ -13,11 +13,13 @@ cross product anywhere, so the shapes scale:
   * simhash: 16-bit sign-aggregated projection, grouped by signature.
 
 One Jaccard pair-scoring path per engine: ``_sids`` turns a (doc_id,
-toks) frame into the (doc_id, sid) shingle stream and ``_jaccard_from``
-scores (doc_a, doc_b, jaccard) from it; in DuckDB ``_SIDS_SQL_CTES`` and
-``_jaccard_sql_ctes`` are the same two steps as WITH-list fragments.
-``jaccard_pairs``, ``dedup_groups`` and ``training_corpus_filter`` (and
-their oracle twins) all call them.
+toks) frame into the (doc_id, sid) k-token shingle stream and
+``_jaccard_from`` scores (doc_a, doc_b, jaccard) from it; in DuckDB
+``_sids_sql_ctes`` and ``_jaccard_sql_ctes`` are the same two steps as
+WITH-list fragments.  ``jaccard_pairs``, ``dedup_groups`` and
+``training_corpus_filter`` (and their oracle twins) all call them, and
+``webcorpus.benchmark_contamination`` builds its 8-token window ids
+through the same sid builders.
 
 Determinism note: shingle ids are NOT a dictionary (a global sort/
 row_number would serialize on one task at scale).  Each shingle hashes
@@ -44,6 +46,8 @@ ROWS_PER_BAND = 4
 MAX_SHINGLE_DF = 100
 # a pair is a near-duplicate when its rounded shingle Jaccard reaches this
 JACCARD_FLOOR = 0.5
+# window length, in tokens, of the near-duplicate shingles
+SHINGLE_K = 3
 # window length, in tokens, of duplicate_span_stats
 SPAN_K = 8
 # deterministic permutation constants, shared verbatim with the oracle SQL
@@ -148,12 +152,12 @@ def _spread(spark: SparkSession, df: DataFrame) -> DataFrame:
     return df
 
 
-def _sids(toks: DataFrame) -> DataFrame:
-    """(doc_id, toks) → (doc_id, sid): each distinct 3-token shingle
+def _sids(toks: DataFrame, k: int) -> DataFrame:
+    """(doc_id, toks) → (doc_id, sid): each distinct k-token shingle
     hashed inline to its 56-bit id — no vocabulary, no global sort, no
     join; the plan is explode → project."""
     return (
-        toks.select("doc_id", F.explode(F.expr(_kgram_spark(3))).alias("shingle"))
+        toks.select("doc_id", F.explode(F.expr(_kgram_spark(k))).alias("shingle"))
         .select("doc_id", F.expr(_SID_EXPR).alias("sid"))
     )
 
@@ -166,7 +170,8 @@ def _with_shingle_ids(spark: SparkSession, sf_dir: str) -> DataFrame:
     self-joins, so without it the tokenize + fold runs once per branch)."""
     return _sids(
         _spread(spark, _docs(spark, sf_dir).select("doc_id", "text"))
-        .select("doc_id", F.expr(_TOKS_EXPR).alias("toks"))
+        .select("doc_id", F.expr(_TOKS_EXPR).alias("toks")),
+        SHINGLE_K,
     )
 
 
@@ -660,19 +665,21 @@ def exact_dedup_summary_sql(table: str = "documents") -> str:
     """
 
 
-# ``_sids`` as a WITH-list fragment over an existing ``toks(doc_id, t)``
-# CTE, ending in ``ids(doc_id, sid)``
-_SIDS_SQL_CTES = f"""
-        ex AS (SELECT doc_id, unnest({_kgram_duck(3)}) AS shingle FROM toks),
+def _sids_sql_ctes(k: int) -> str:
+    """``_sids`` as a WITH-list fragment over an existing
+    ``toks(doc_id, t)`` CTE, ending in ``ids(doc_id, sid)``.  A text of
+    fewer than k tokens yields no shingle: the window series is empty."""
+    return f"""
+        ex AS (SELECT doc_id, unnest({_kgram_duck(k)}) AS shingle FROM toks),
         ids AS (SELECT doc_id, {_SID_SQL} AS sid FROM ex)"""
 
 
 def _ids_sql(table: str) -> str:
     """WITH-list fragment: ``toks`` over every row of ``table``, then
-    ``_SIDS_SQL_CTES`` (the ``_with_shingle_ids`` twin)."""
+    ``_sids_sql_ctes`` (the ``_with_shingle_ids`` twin)."""
     return f"""
         toks AS (SELECT doc_id, string_split(text, ' ') AS t FROM {table}),
-        {_SIDS_SQL_CTES}"""
+        {_sids_sql_ctes(SHINGLE_K)}"""
 
 
 def _jaccard_sql_ctes(threshold: float) -> str:
@@ -822,7 +829,7 @@ def training_corpus_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     survivors = _spread(spark, docs.join(exact_kept, "doc_id", "left_semi"))
     near_dropped = (
-        _jaccard_from(_sids(survivors), JACCARD_FLOOR)
+        _jaccard_from(_sids(survivors, SHINGLE_K), JACCARD_FLOOR)
         .select(F.col("doc_b").alias("doc_id")).distinct()
     )
 
@@ -915,7 +922,7 @@ def _tcf_kept_sql_ctes(table: str = "documents") -> str:
           FROM quality GROUP BY md5(text)),
         toks AS (SELECT doc_id, t FROM quality
                  WHERE doc_id IN (SELECT doc_id FROM exact_kept)),
-        {_SIDS_SQL_CTES},
+        {_sids_sql_ctes(SHINGLE_K)},
         {_jaccard_sql_ctes(JACCARD_FLOOR)},
         near_dropped AS (SELECT DISTINCT doc_b AS doc_id FROM pairs),
         {_ppx_sql_ctes("base")},

@@ -54,14 +54,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from .dedup import (
-    _SID_EXPR,
-    _SID_SQL,
     _TOKS_EXPR,
     _docs,
-    _kgram_duck,
-    _kgram_spark,
     _scoped_clear,
     _scoped_persist,
+    _sids,
+    _sids_sql_ctes,
     _spread,
     round_half_up_expr,
 )
@@ -880,9 +878,7 @@ def benchmark_contamination(
         _spread(spark, _docs(spark, sf_dir).select("doc_id", "text"))
     )
     raw = _scoped_persist(
-        base.select("doc_id", F.expr(_TOKS_EXPR).alias("toks"))
-        .select("doc_id", F.explode(F.expr(_kgram_spark(k))).alias("shingle"))
-        .select("doc_id", F.expr(_SID_EXPR).alias("sid"))
+        _sids(base.select("doc_id", F.expr(_TOKS_EXPR).alias("toks")), k)
     )
     is_bench = F.col("doc_id") % bench_mod == 0
     bench_sids = raw.where(is_bench).select("sid").distinct()
@@ -923,10 +919,7 @@ def benchmark_contamination_sql(
     frac = round_half_up_expr("CAST(n_overlap AS DOUBLE) / n_shingles", 6)
     return f"""
         WITH toks AS (SELECT doc_id, string_split(text, ' ') AS t FROM {table}),
-        ex AS (SELECT doc_id, unnest(CASE WHEN len(t) < {k} THEN []
-                                          ELSE {_kgram_duck(k)} END) AS shingle
-               FROM toks),
-        ids AS (SELECT doc_id, {_SID_SQL} AS sid FROM ex),
+        {_sids_sql_ctes(k)},
         bench_sids AS (SELECT DISTINCT sid FROM ids
                        WHERE doc_id % {bench_mod} = 0),
         corpus AS (SELECT * FROM ids WHERE doc_id % {bench_mod} != 0),
