@@ -15,7 +15,17 @@ Design notes vs the reference:
   * Unicode semantics (``str.isupper``/``islower``, ``\\s`` under
     ``re.UNICODE``) are preserved by staying in Python — Danish æøå are
     cased letters and JVM regex character classes differ, which is why
-    these kernels are NOT translated to Spark SQL expressions.
+    these kernels are NOT translated to Spark SQL expressions;
+  * memoised (lru_cache, 65,536 entries each) where inputs recur:
+    ``clean_multiline``, the person-name core, the phone core and the
+    role-segment test.  Over the 2,703 non-empty docs of
+    ``generate_rows(3000, seed=42)`` they see 80%, 77%, 37% and 56%
+    repeated inputs.  ``extract_roles_from_text`` and
+    ``fix_camelcase_boundaries`` are not memoised: their inputs are
+    unique per row;
+  * callers whose text already is ``clean_multiline``'s output call the
+    field searches ``_budget``/``_date``/``_region``/``_stage``/``_roles``
+    directly, without the normalising wrapper.
 """
 
 from __future__ import annotations
@@ -225,11 +235,11 @@ def clean_multiline(text: str | None) -> str:
     """Normalize intra-line whitespace, keep single newlines (scraper.py:62-69).
 
     Memoized like the other pure str kernels (same lru_cache precedent
-    as ``_is_valid_person_name_core``): profiled at 110k calls / 4k
-    docs with a 79% repeated-input rate — the classifier, name
-    inference and role extraction all re-normalize the same cell/line
-    strings within a document.  Returns an immutable str, so sharing
-    the cached object is safe.
+    as ``_is_valid_person_name_core``): 22 calls per document with an
+    80% repeated-input rate — the grid extractors normalise every cell
+    and role cell, and the text fallback each project line, and the
+    same cell and line strings recur within and across documents.
+    Returns an immutable str, so sharing the cached object is safe.
 
     Inputs over ``_CLEAN_MULTILINE_CACHE_MAX_CHARS`` skip the cache:
     whole-document text blocks are unique per document, and the entry
@@ -301,7 +311,9 @@ def is_valid_person_name(text: str | None) -> bool:
     ≥70% alphabetic for words longer than one char.
 
     Pure str→bool, so memoized: the same cell/line strings recur across
-    the classifier, name inference and role extraction within a document.
+    the classifier, name inference and role extraction within a document
+    (the classifier counts through ``_count_person_names``, which calls
+    the memoised core directly).
     """
     if not text or len(text) < 3 or len(text) > 70:
         return False

@@ -15,6 +15,14 @@ Missing-cell convention: wherever the reference calls ``str(cell)`` without
 a ``pd.notna`` guard, a missing cell stringifies to ``'None'``/``'nan'`` —
 both are members of every exclusion list the reference checks, so mapping
 ``None -> 'None'`` preserves behaviour exactly.
+
+Keyword tests search one lowered text per scope (``_lowered_text``): the
+whole grid for the classifier, a row for the header skip, a column's
+first five cells for the column finder.  The contact extractor extracts
+each cell's phones and e-mails once; the project and tender extractors
+hand their row text, already normalised, straight to the scalar field
+searches.  tests/test_parse_differential.py holds every function here to
+the frozen pre-change copy in tests/oracle.py.
 """
 
 from __future__ import annotations
