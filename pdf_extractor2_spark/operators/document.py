@@ -377,9 +377,10 @@ def _gather_tables(ir: DocumentIR) -> list[CandidateTable]:
     # as tuples of tuples (equal exactly when the lists are) answers it
     # per table, where comparing pairs grew with the square of a PDF's
     # table count
-    seen = {tuple(map(tuple, t.grid)) for t in all_tables}
-    for t in best_tables:
-        if t.grid and len(t.grid) > 2:
+    candidates = [t for t in best_tables if t.grid and len(t.grid) > 2]
+    if candidates:  # HTML documents have no stream tables
+        seen = {tuple(map(tuple, t.grid)) for t in all_tables}
+        for t in candidates:
             key = tuple(map(tuple, t.grid))
             if key not in seen:
                 seen.add(key)
