@@ -15,9 +15,9 @@ and the adaptive text fallback when tables yield <1 contact / <2 projects.
 Call structure, kept lean because per-call interpreter overhead is most
 of this layer's cost: each fallback scanner finds its page's first
 section marker with one search and walks the lines from there; a
-project line is normalised once for its five field searches; a contact
-line's words reach the person-name check only in runs with two
-capitals; duplicate tables are found through a set of grids.
+project line's budget is extracted once; a contact line's words reach
+the person-name check only in runs with two capitals; duplicate tables
+are found through a set of grids.
 tests/test_parse_differential.py holds all of it to the frozen
 pre-change copy in tests/oracle.py.
 """

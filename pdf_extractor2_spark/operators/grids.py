@@ -106,7 +106,8 @@ def detect_table_type(grid: Grid) -> tuple[str, float]:
     contact = 0.0
     if "navn" in all_text or "name" in all_text:
         contact += 2.0
-    if "telefon" in all_text or "phone" in all_text or "mobil" in all_text or "tlf" in all_text:
+    if ("telefon" in all_text or "phone" in all_text or "mobil" in all_text
+            or "tlf" in all_text):
         contact += 3.0
     if "email" in all_text or "e-mail" in all_text or "mail" in all_text:
         contact += 2.0
@@ -472,7 +473,7 @@ def extract_projects_from_grid(grid: Grid) -> list[dict]:
         if roles["handled_roles"]:
             project["handled_roles"] = roles["handled_roles"][:5]
 
-        if "✓" in all_text or any("bæredygtighed" in low for low in lowered):
+        if "✓" in all_text or "bæredygtighed" in all_text.lower():
             project["sustainability"] = True
 
         if len(project) >= 2:
