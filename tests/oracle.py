@@ -8,8 +8,9 @@ and ``extract_company_info`` — can be driven from in-memory page texts and
 candidate grids.  This makes the reference itself the in-process oracle for
 byte-identity tests (SURVEY.md §5): no golden files can go stale.
 Where the reference is not installed, every test that needs it skips
-(``skip_if_reference_absent``), and the committed kernel manifest
-(``tests/golden/kernel_manifest.txt``, see kernel_golden.py) is the
+(``skip_if_reference_absent``), and the committed kernel and parse
+manifests (``tests/golden/kernel_manifest.txt``, see kernel_golden.py;
+``tests/golden/parse_manifest.txt``, see parse_golden.py) are the
 byte-identity check instead.
 
 The fakes mimic only the API surface the reference touches:
@@ -44,7 +45,8 @@ def skip_if_reference_absent() -> None:
     if not os.path.exists(REFERENCE_PATH):
         pytest.skip(
             f"reference scraper absent ({REFERENCE_PATH} does not exist); "
-            "tests/golden/kernel_manifest.txt pins kernel output instead"
+            "tests/golden/kernel_manifest.txt and parse_manifest.txt pin "
+            "kernel output instead"
         )
 
 
