@@ -22,10 +22,7 @@ Design notes vs the reference:
     ``generate_rows(3000, seed=42)`` they see 80%, 77%, 37% and 56%
     repeated inputs.  ``extract_roles_from_text`` and
     ``fix_camelcase_boundaries`` are not memoised: their inputs are
-    unique per row;
-  * callers whose text already is ``clean_multiline``'s output call the
-    field searches ``_budget``/``_date``/``_region``/``_stage``/``_roles``
-    directly, without the normalising wrapper.
+    unique per row.
 """
 
 from __future__ import annotations
