@@ -171,13 +171,20 @@ def find_column_indices(grid: Grid, keywords: list[str]) -> list[int]:
     """Columns whose first ≤5 cells contain any keyword, case-insensitive
     (scraper.py:410-426). Schema-inference analogue of column resolution."""
     kws = [kw.lower() for kw in keywords]
+    return _columns_with(_column_texts(grid), kws)
+
+
+def _column_texts(grid: Grid) -> list[str]:
+    """Each column's first ≤5 non-None cells, joined and lowered: what
+    find_column_indices searches, built once for several keyword lists."""
     top = grid[:5]
-    hits: list[int] = []
-    for col in range(grid_width(grid)):
-        col_text = " ".join([c for row in top if (c := row[col]) is not None]).lower()
-        if any(kw in col_text for kw in kws):
-            hits.append(col)
-    return hits
+    return [" ".join([c for row in top if (c := row[col]) is not None]).lower()
+            for col in range(grid_width(grid))]
+
+
+def _columns_with(col_texts: list[str], kws: list[str]) -> list[int]:
+    """The columns whose text holds any of the lowercase keywords kws."""
+    return [col for col, text in enumerate(col_texts) if any(kw in text for kw in kws)]
 
 
 def detect_id_column(grid: Grid) -> Optional[int]:
@@ -282,10 +289,11 @@ def extract_contacts_from_grid(grid: Grid) -> list[dict]:
     Corpus-level shape: projection + filter + in-doc dedup, exploded to
     one row per contact by the kernel's nested-array output + F.explode.
     """
-    name_cols = find_column_indices(grid, ["navn", "name"])
-    phone_cols = find_column_indices(grid, ["telefon", "phone", "mobil", "phones"])
-    email_cols = find_column_indices(grid, ["email", "e-mail", "mail"])
-    role_cols = find_column_indices(grid, ["rolle", "role", "position", "titel", "title"])
+    col_texts = _column_texts(grid)
+    name_cols = _columns_with(col_texts, ["navn", "name"])
+    phone_cols = _columns_with(col_texts, ["telefon", "phone", "mobil", "phones"])
+    email_cols = _columns_with(col_texts, ["email", "e-mail", "mail"])
+    role_cols = _columns_with(col_texts, ["rolle", "role", "position", "titel", "title"])
 
     if not name_cols:
         counts = []

@@ -28,12 +28,21 @@ Scale notes (100 TB / 10^12 docs):
     launch-to-first-line gap from 0.20-0.33 s to 0.02-0.04 s per task
     (median, 4-core host); tasks must still be large enough to amortize
     what is left;
+  * and after each task a reused worker's daemon runs a full
+    ``gc.collect()``, which walks the whole heap: pandas, pyarrow, the
+    kernel's lru caches.  The kernel collects once and ``gc.freeze()``s
+    once per worker process, in its first task, so the daemon's later
+    collections walk only what later tasks allocate: a median 29 ms of
+    CPU per task before, 0.33 ms after (4-core host, 1,200 PDFs, 8 tasks
+    a pass).  Nothing is frozen per task, so a task's cyclic garbage is
+    still collected;
   * no driver-side collection anywhere, and no shuffle: the kernel runs
     straight on the scan splits, so the html payload never moves.
 """
 
 from __future__ import annotations
 
+import gc
 import json
 import time
 from typing import Iterable, Iterator
@@ -144,11 +153,22 @@ def _extract_one(url: str, payload, bucket) -> dict:
         }
 
 
+def _freeze_heap() -> None:
+    """Collect, then move every object that survives into the permanent
+    generation, once per process (while nothing is frozen yet): the full
+    collection a reused worker's daemon runs after each task then skips
+    them (scale notes above)."""
+    if gc.get_freeze_count() == 0:
+        gc.collect()
+        gc.freeze()
+
+
 def extraction_kernel(batches: Iterable[pd.DataFrame]) -> Iterator[pd.DataFrame]:
     """mapInPandas kernel: Arrow batch of (url, html, bucket) pages →
     batch of result rows.  Every plan that runs it supplies ``bucket``:
     ``run_extract`` and the stream job via ``with_bucket``, the resumable
     job from its file manifest."""
+    _freeze_heap()
     for pdf in batches:
         rows = [
             _extract_one(url, payload, bucket)

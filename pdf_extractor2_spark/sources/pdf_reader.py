@@ -3,29 +3,39 @@
 lines/blocks").
 
 No pdf library: this module implements, with the stdlib only,
-  1. object-level parsing — one compiled alternation tokenises PDF
-     syntax (dicts, arrays, names, numbers, literal/hex strings, streams),
-     and a value reads an ``N G R`` reference in one match;
+  1. object-level parsing — compiled alternations over PDF syntax (dicts,
+     arrays, names, numbers, literal/hex strings, streams): a value, an
+     ``N G R`` reference included, in one match, a dict entry (key and
+     the start of its value) in one match, an ``N G obj`` header in one
+     match, and an object stream's header in one ``findall``;
   2. cross-reference walking — classic ``xref`` tables AND cross-reference
-     streams (/Type/XRef, W-field decoding) with /ObjStm object streams;
+     streams (/Type/XRef, W-field decoding) with /ObjStm object streams,
+     whose objects are all parsed when the first is asked for;
   3. FlateDecode and ASCIIHexDecode stream filters;
   4. a two-tier content-stream interpreter for the text operators
      BT/ET, Tf, TL, Td, TD, Tm, T*, Tj, TJ, ' and the path operators
      m/l/S (ruling lines), producing positioned text runs per page:
-       * fast tier: one compiled match per complete common operation —
-         ``a b c d x y Tm``, ``dx dy Td``/``TD``, a plain literal or hex
-         string shown by ``Tj`` or ``'``, ``[...] TJ`` over plain strings
-         and numbers, ``x y m x y l S``;
-       * generic tier: anything else, one token at a time.  Both tiers
-         leave the same runs, segments and text state;
+       * fast tier: one compiled match per operation in the form the
+         fixture writer emits it (single spaces between operands): a
+         ``Tm``, ``Td``/``TD`` or ``m l S`` together with the string
+         shown right after it, if any; a plain literal or hex string
+         shown by ``Tj`` or ``'``, or as ``[string number] TJ``; ``TL``,
+         ``Tf``, ``BT`` and ``ET``.  Numbers are checked by ``float()``
+         before any state changes;
+       * generic tier: anything else, one token at a time, until the
+         next operation boundary.  Both tiers leave the same runs,
+         segments and text state;
   5. positional clustering:
        * lines: runs sorted once per page top-down, then grouped by y
-         (tolerance-chained) per distinct row tolerance, sorted by x;
+         (tolerance-chained) per distinct row tolerance, sorted by x; a
+         wider tolerance that joins no lines shares the narrower list;
        * page text and spans: the row-tolerance-2.0 lines top-to-bottom,
          runs joined with single spaces;
        * "stream" table profile: whitespace-aligned column clustering at
-         the reference's four tolerance configs (scraper.py:1192-1197) —
-         the model-selection score picks the best config downstream;
+         the reference's four tolerance configs (scraper.py:1192-1197),
+         one region pass per distinct line list, a grid shared by the
+         configs that assign every run alike — the model-selection score
+         picks the best config downstream;
        * "lattice" table profile: cell grids bounded by drawn rulings.
 
 ``extract_pdf`` returns the kernel's ``DocumentIR`` and the text spans.
@@ -41,6 +51,7 @@ import re
 import zlib
 from bisect import bisect_left, bisect_right
 from dataclasses import dataclass
+from itertools import groupby
 
 from ..operators.document import CandidateTable, DocumentIR
 from ..operators.grids import Grid
@@ -78,153 +89,195 @@ _REGULAR = rb"[^\x00\t\n\x0c\r ()<>\[\]{}/%]"
 # always skips all there is
 _SKIP = rb"[\x00\t\n\x0c\r ]*(?:%[^\r\n]*(?![^\r\n])[\x00\t\n\x0c\r ]*)*"
 _TOKEN_END = rb"(?!" + _REGULAR + rb")"
-_TOKEN_ALT = rb"(<<|>>|[\[\]<>(){}]|/" + _REGULAR + rb"*|" + _REGULAR + rb"+)"
 _SKIP_RE = re.compile(_SKIP)
+_TOKEN_ALT = rb"(<<|>>|[\[\]<>(){}]|/" + _REGULAR + rb"*|" + _REGULAR + rb"+)"
 _TOKEN = re.compile(_SKIP + _TOKEN_ALT)
-# one value: an `N G R` reference (groups 1 and 2) or one token (group 3)
+# the three tokens _TOKEN reads one after the other (`N G obj` in an
+# object header), each None past the end of the data
+_THREE_TOKENS = re.compile((rb"(?:" + _SKIP + _TOKEN_ALT + rb")?") * 3)
+# one value, by group: an `N G R` reference (1, 2), a name (3, without
+# its `/`), an integer (4), a real (5) or any other token (6)
 _VALUE_ALT = (
     rb"(?:([+-]?\d+)" + _TOKEN_END + _SKIP + rb"([+-]?\d+)" + _TOKEN_END + _SKIP
-    + rb"R" + _TOKEN_END + rb"|" + _TOKEN_ALT + rb")"
+    + rb"R" + _TOKEN_END
+    + rb"|/(" + _REGULAR + rb"*)"
+    + rb"|([+-]?\d+)" + _TOKEN_END
+    + rb"|([+-]?(?:\d+\.\d*|\.\d+))" + _TOKEN_END
+    + rb"|(<<|>>|[\[\]<>(){}]|" + _REGULAR + rb"+))"
 )
 _VALUE = re.compile(_SKIP + _VALUE_ALT)
-_HEX_WS = re.compile(rb"\s")
+# one dict entry: a key (1) and the start of its value (2-7 as in
+# _VALUE), or else the single token _TOKEN reads there (8): ``>>``, a
+# key whose value does not start, or a token that is no key
+_ENTRY = re.compile(
+    _SKIP + rb"(?:/(" + _REGULAR + rb"*)" + _TOKEN_END + _SKIP + _VALUE_ALT + rb"|" + _TOKEN_ALT + rb")"
+)
+_HEX_WS = b" \t\n\r\x0b\x0c"  # what a hex string may hold between digits
 
 
 def _unhex(hexpart: bytes) -> bytes:
     """Hex digits to bytes, whitespace ignored, an odd last digit padded
     with 0 (hex strings and ASCIIHexDecode alike)."""
-    hexpart = _HEX_WS.sub(b"", hexpart)
+    hexpart = hexpart.translate(None, _HEX_WS)
     if len(hexpart) % 2:
         hexpart += b"0"
     return bytes.fromhex(hexpart.decode("ascii"))
 
 
-class _Lexer:
-    def __init__(self, data: bytes, pos: int = 0):
-        self.data = data
-        self.pos = pos
+def _token(data: bytes, pos: int) -> tuple[bytes, int]:
+    """The token at pos and the position after it."""
+    m = _TOKEN.match(data, pos)
+    if m is None:
+        raise PdfError("eof")
+    return m[1], m.end()
 
-    def skip_ws(self) -> None:
-        self.pos = _SKIP_RE.match(self.data, self.pos).end()
 
-    def peek_bytes(self, k: int) -> bytes:
-        return self.data[self.pos : self.pos + k]
+def _object_header(head: re.Match, num: int | None, bad: str) -> int:
+    """The position after the ``N G obj`` whose _THREE_TOKENS match is
+    head.  Raises as reading the tokens one at a time would: when N is
+    not ``num`` (None: any integer), and with message ``bad`` when the
+    third token is not ``obj``."""
+    onum, gen, kw = head.groups()
+    if onum is None:
+        raise PdfError("eof")
+    if int(onum) != num and num is not None:
+        raise PdfError(f"xref mismatch for {num}")
+    if gen is None:
+        raise PdfError("eof")
+    int(gen)
+    if kw is None:
+        raise PdfError("eof")
+    if kw != b"obj":
+        raise PdfError(bad)
+    return head.end()
 
-    def read_token(self) -> bytes:
-        m = _TOKEN.match(self.data, self.pos)
-        if m is None:
-            raise PdfError("eof")
-        self.pos = m.end()
-        return m.group(1)
 
-    def read_literal_string(self) -> bytes:
-        # called with pos just after '('
-        d, n = self.data, len(self.data)
-        out = bytearray()
-        depth = 1
-        while self.pos < n:
-            c = d[self.pos]
-            self.pos += 1
-            if c == 0x5C:  # backslash
-                e = d[self.pos]
-                self.pos += 1
-                mapped = {
-                    0x6E: 0x0A, 0x72: 0x0D, 0x74: 0x09, 0x62: 0x08,
-                    0x66: 0x0C, 0x28: 0x28, 0x29: 0x29, 0x5C: 0x5C,
-                }.get(e)
-                if mapped is not None:
-                    out.append(mapped)
-                elif 0x30 <= e <= 0x37:  # octal
-                    oct_digits = chr(e)
-                    while len(oct_digits) < 3 and 0x30 <= d[self.pos] <= 0x37:
-                        oct_digits += chr(d[self.pos])
-                        self.pos += 1
-                    out.append(int(oct_digits, 8) & 0xFF)
-                elif e in (0x0A, 0x0D):  # line continuation
-                    if e == 0x0D and d[self.pos] == 0x0A:
-                        self.pos += 1
-                else:
-                    out.append(e)
-            elif c == 0x28:
-                depth += 1
-                out.append(c)
-            elif c == 0x29:
-                depth -= 1
-                if depth == 0:
-                    return bytes(out)
-                out.append(c)
+_ESCAPES = {
+    0x6E: 0x0A, 0x72: 0x0D, 0x74: 0x09, 0x62: 0x08,
+    0x66: 0x0C, 0x28: 0x28, 0x29: 0x29, 0x5C: 0x5C,
+}
+_LITERAL_RUN = re.compile(rb"[^\\()]*")
+
+
+def _literal(d: bytes, pos: int) -> tuple[bytes, int]:
+    """The literal string whose ``(`` ends just before pos, and the
+    position after its ``)``."""
+    n = len(d)
+    out = bytearray()
+    depth = 1
+    while pos < n:
+        run = _LITERAL_RUN.match(d, pos)
+        out += run[0]
+        pos = run.end()
+        if pos == n:
+            break
+        c = d[pos]
+        pos += 1
+        if c == 0x5C:  # backslash
+            e = d[pos]
+            pos += 1
+            mapped = _ESCAPES.get(e)
+            if mapped is not None:
+                out.append(mapped)
+            elif 0x30 <= e <= 0x37:  # octal
+                oct_digits = chr(e)
+                while len(oct_digits) < 3 and 0x30 <= d[pos] <= 0x37:
+                    oct_digits += chr(d[pos])
+                    pos += 1
+                out.append(int(oct_digits, 8) & 0xFF)
+            elif e in (0x0A, 0x0D):  # line continuation
+                if e == 0x0D and d[pos] == 0x0A:
+                    pos += 1
             else:
-                out.append(c)
-        raise PdfError("unterminated string")
+                out.append(e)
+        elif c == 0x28:
+            depth += 1
+            out.append(c)
+        else:  # 0x29
+            depth -= 1
+            if depth == 0:
+                return bytes(out), pos
+            out.append(c)
+    raise PdfError("unterminated string")
 
-    def read_hex_string(self) -> bytes:
-        # called with pos just after '<'
-        end = self.data.index(b">", self.pos)
-        hexpart = self.data[self.pos : end]
-        self.pos = end + 1
-        return _unhex(hexpart)
 
-
-@dataclass(frozen=True)
+@dataclass(slots=True, unsafe_hash=True)
 class Ref:
     num: int
     gen: int
 
 
-_NUM_RE = re.compile(rb"^[+-]?(\d+\.?\d*|\.\d+)$")
-_NUM_START = b"+-.0123456789"
-
-
-def _read_value(lx: _Lexer) -> re.Match:
-    """Match one value at lx (an `N G R` reference or one token) and
-    move past it."""
-    m = _VALUE.match(lx.data, lx.pos)
+def _parse(data: bytes, pos: int):
+    """The value at pos and the position after it."""
+    m = _VALUE.match(data, pos)
     if m is None:
         raise PdfError("eof")
-    lx.pos = m.end()
-    return m
+    return _value(data, m)
 
 
-def _parse_value(lx: _Lexer):
-    return _value(lx, _read_value(lx))
+def _value(data: bytes, m: re.Match):
+    """The value a _VALUE match starts and the position after it."""
+    kind = m.lastindex
+    if kind == 3:
+        return ("name", m[3].decode("latin-1")), m.end()
+    if kind == 2:
+        return Ref(int(m[1]), int(m[2])), m.end()
+    if kind == 4:
+        return int(m[4]), m.end()
+    if kind == 5:
+        return float(m[5]), m.end()
+    return _opened(data, m[6], m.end())
 
 
-def _value(lx: _Lexer, m: re.Match):
-    """The value a _VALUE match starts: the reference, or what its token
-    opens, read on from lx."""
-    tok = m.group(3)
-    if tok is None:
-        return Ref(int(m.group(1)), int(m.group(2)))
-    c = tok[0]
-    if c == 0x2F:  # name
-        return ("name", tok[1:].decode("latin-1"))
-    if c in _NUM_START and _NUM_RE.match(tok):
-        # an integer here is not a reference: _VALUE tried `N G R` first
-        return float(tok) if b"." in tok else int(tok)
+def _opened(data: bytes, tok: bytes, pos: int):
+    """The value token ``tok`` opens (read on from pos for a container
+    or a string) and the position after it."""
     if tok == b"<<":
         d = {}
         while True:
-            key = lx.read_token()
-            if key == b">>":
-                return d
-            if not key.startswith(b"/"):
-                raise PdfError(f"bad dict key {key!r}")
-            d[key[1:].decode("latin-1")] = _parse_value(lx)
+            m = _ENTRY.match(data, pos)
+            if m is None:
+                raise PdfError("eof")
+            kind = m.lastindex
+            if kind == 8:
+                tok = m[8]
+                if tok == b">>":
+                    return d, m.end()
+                if tok[0] != 0x2F:
+                    raise PdfError(f"bad dict key {tok!r}")
+                _parse(data, m.end())  # no value starts here: raises
+            key = m[1].decode("latin-1")
+            if kind == 4:
+                d[key] = ("name", m[4].decode("latin-1"))
+            elif kind == 3:
+                d[key] = Ref(int(m[2]), int(m[3]))
+            elif kind == 5:
+                d[key] = int(m[5])
+            elif kind == 6:
+                d[key] = float(m[6])
+            else:
+                d[key], pos = _opened(data, m[7], m.end())
+                continue
+            pos = m.end()
     if tok == b"[":
         arr = []
         while True:
-            m = _read_value(lx)
-            if m.group(3) == b"]":
-                return arr
-            arr.append(_value(lx, m))
+            m = _VALUE.match(data, pos)
+            if m is None:
+                raise PdfError("eof")
+            if m[6] == b"]":
+                return arr, m.end()
+            value, pos = _value(data, m)
+            arr.append(value)
     if tok == b"(":
-        return lx.read_literal_string()
+        return _literal(data, pos)
     if tok == b"<":
-        return lx.read_hex_string()
+        end = data.index(b">", pos)
+        return _unhex(data[pos:end]), end + 1
     if tok in (b"true", b"false"):
-        return tok == b"true"
+        return tok == b"true", pos
     if tok == b"null":
-        return None
+        return None, pos
     raise PdfError(f"unexpected token {tok!r}")
 
 
@@ -264,96 +317,84 @@ class PdfDocument:
             pos = prev
 
     def _load_xref_section(self, pos: int):
-        lx = _Lexer(self.data, pos)
-        tok = lx.read_token()
-        if tok == b"xref":
+        data, xref = self.data, self._xref
+        head = _THREE_TOKENS.match(data, pos)
+        if head[1] == b"xref":
             # classic table
+            pos = head.end(1)
             while True:
-                tok = lx.read_token()
+                tok, pos = _token(data, pos)
                 if tok == b"trailer":
-                    trailer = _parse_value(lx)
+                    trailer, _ = _parse(data, pos)
                     for k, v in trailer.items():
                         self.trailer.setdefault(k, v)
                     return trailer.get("Prev")
                 first = int(tok)
-                count = max(int(lx.read_token()), 0)
-                lx.skip_ws()
+                tok, pos = _token(data, pos)
+                count = max(int(tok), 0)
                 # 20-byte entries.  Those past the end of the data are empty
                 # and change nothing, so a forged count cannot spin the loop;
                 # pos still moves past the whole subsection
-                start = lx.pos
-                for i in range(min(count, -(-(len(self.data) - start) // 20))):
-                    entry = self.data[start + 20 * i : start + 20 * i + 20]
-                    offset, kind = entry[:10], entry[17:18]
+                start = _SKIP_RE.match(data, pos).end()
+                for i in range(min(count, -(-(len(data) - start) // 20))):
+                    at = start + 20 * i
                     num = first + i
-                    if kind == b"n" and num not in self._xref:
-                        self._xref[num] = ("direct", int(offset))
-                lx.pos = start + 20 * count
-        else:
-            # xref stream: tok is the object number
-            num = int(tok)
-            int(lx.read_token())  # gen
-            if lx.read_token() != b"obj":
-                raise PdfError("bad xref stream object")
-            d, raw = self._read_stream_obj(lx)
-            for k, v in d.items():
-                if k not in ("Type", "W", "Index", "Length", "Filter", "Size"):
-                    self.trailer.setdefault(k, v)
-            if "Size" in d:
-                self.trailer.setdefault("Size", d["Size"])
-            w = [int(x) for x in d["W"]]
-            size = int(d["Size"])
-            index = d.get("Index", [0, size])
-            rw = sum(w)
-            entries = [raw[i : i + rw] for i in range(0, len(raw), rw)]
-            ei = 0
-            for s in range(0, len(index), 2):
-                start, cnt = int(index[s]), int(index[s + 1])
-                for num2 in range(start, start + cnt):
-                    if ei >= len(entries):
-                        break
-                    e = entries[ei]
-                    ei += 1
-                    fields = []
-                    off = 0
-                    for width in w:
-                        fields.append(
-                            int.from_bytes(e[off : off + width], "big") if width else 1
-                        )
-                        off += width
-                    t, f2, f3 = fields
-                    if num2 in self._xref:
-                        continue
-                    if t == 1:
-                        self._xref[num2] = ("direct", f2)
-                    elif t == 2:
-                        self._xref[num2] = ("objstm", f2, f3)
-            return d.get("Prev")
+                    if data[at + 17 : at + 18] == b"n" and num not in xref:
+                        xref[num] = ("direct", int(data[at : at + 10]))
+                pos = start + 20 * count
+        # xref stream
+        d, pos = _parse(data, _object_header(head, None, "bad xref stream object"))
+        if not isinstance(d, dict):
+            raise PdfError("stream without dict")
+        raw = self._stream_data(pos, d)
+        for k, v in d.items():
+            if k not in ("Type", "W", "Index", "Length", "Filter", "Size"):
+                self.trailer.setdefault(k, v)
+        if "Size" in d:
+            self.trailer.setdefault("Size", d["Size"])
+        w = [int(x) for x in d["W"]]
+        size = int(d["Size"])
+        index = d.get("Index", [0, size])
+        rw = sum(w)
+        entries = [raw[i : i + rw] for i in range(0, len(raw), rw)]
+        fields, off = [], 0  # (start, end) of each field, None for an absent one
+        for width in w:
+            fields.append((off, off + width) if width else None)
+            off += width
+        ei = 0
+        for s in range(0, len(index), 2):
+            start, cnt = int(index[s]), int(index[s + 1])
+            for num in range(start, start + cnt):
+                if ei >= len(entries):
+                    break
+                e = entries[ei]
+                ei += 1
+                t, f2, f3 = [1 if f is None else int.from_bytes(e[f[0] : f[1]], "big")
+                             for f in fields]
+                if num in xref:
+                    continue
+                if t == 1:
+                    xref[num] = ("direct", f2)
+                elif t == 2:
+                    xref[num] = ("objstm", f2, f3)
+        return d.get("Prev")
 
     # -- object resolution ----------------------------------------------------
 
-    def _read_stream_obj(self, lx: _Lexer):
-        """Parse a stream object at lx (dict already next); returns
-        (dict, decoded_bytes)."""
-        d = _parse_value(lx)
-        if not isinstance(d, dict):
-            raise PdfError("stream without dict")
-        return d, self._stream_data(lx, d)
-
-    def _stream_data(self, lx: _Lexer, d: dict):
-        """The decoded data of the stream whose dict ``d`` lx has just
-        read; None when no ``stream`` keyword follows."""
-        lx.skip_ws()
-        if lx.peek_bytes(6) != b"stream":
+    def _stream_data(self, pos: int, d: dict):
+        """The decoded data of the stream whose dict ``d`` ends at pos;
+        None when no ``stream`` keyword follows."""
+        data = self.data
+        pos = _SKIP_RE.match(data, pos).end()
+        if data[pos : pos + 6] != b"stream":
             return None
-        lx.pos += 6
-        if self.data[lx.pos : lx.pos + 2] == b"\r\n":
-            lx.pos += 2
-        elif self.data[lx.pos : lx.pos + 1] == b"\n":
-            lx.pos += 1
-        length = self.resolve(d["Length"])
-        raw = self.data[lx.pos : lx.pos + int(length)]
-        lx.pos += int(length)
+        pos += 6
+        if data[pos : pos + 2] == b"\r\n":
+            pos += 2
+        elif data[pos : pos + 1] == b"\n":
+            pos += 1
+        length = int(self.resolve(d["Length"]))
+        raw = data[pos : pos + length]
         filt = d.get("Filter")
         if filt is not None:
             names = [filt] if not isinstance(filt, list) else filt
@@ -378,18 +419,13 @@ class PdfDocument:
         if entry is None:
             raise PdfError(f"missing object {num}")
         if entry[0] == "direct":
-            lx = _Lexer(self.data, entry[1])
-            onum = int(lx.read_token())
-            if onum != num:
-                raise PdfError(f"xref mismatch for {num}")
-            int(lx.read_token())
-            if lx.read_token() != b"obj":
-                raise PdfError("bad obj header")
-            value = _parse_value(lx)
+            data = self.data
+            head = _THREE_TOKENS.match(data, entry[1])
+            value, pos = _parse(data, _object_header(head, num, "bad obj header"))
             if isinstance(value, dict):
-                data = self._stream_data(lx, value)
-                if data is not None:
-                    value = (value, data)
+                stream = self._stream_data(pos, value)
+                if stream is not None:
+                    value = (value, stream)
         else:
             _, stm_num, idx = entry
             value = self._objstm_objects(stm_num)[idx]
@@ -401,15 +437,16 @@ class PdfDocument:
             return self._objstm_cache[stm_num]
         d, raw = self.get_object(stm_num)
         n, first = int(self.resolve(d["N"])), int(self.resolve(d["First"]))
-        header = _Lexer(raw[:first])
-        pairs = []
-        for _ in range(n):
-            onum = int(header.read_token())
-            off = int(header.read_token())
-            pairs.append((onum, off))
-        objs = []
-        for _, off in pairs:
-            objs.append(_parse_value(_Lexer(raw, first + off)))
+        header = _TOKEN.findall(raw[:first])  # every token, as read one by one
+        offsets = []
+        for i in range(0, 2 * n, 2):
+            if i >= len(header):
+                raise PdfError("eof")
+            int(header[i])  # the object number
+            if i + 1 >= len(header):
+                raise PdfError("eof")
+            offsets.append(int(header[i + 1]))
+        objs = [_parse(raw, first + off)[0] for off in offsets]
         self._objstm_cache[stm_num] = objs
         return objs
 
@@ -478,51 +515,56 @@ _CONTENT_TOK = re.compile(
     re.DOTALL,
 )
 
-# fast tier: one compiled match per complete common operation.  Each
-# piece lexes exactly as _CONTENT_TOK would from the same position:
-# whitespace is the same class (content streams have no comments here)
-# and no piece starts with it, a number may not run on into a digit or
-# `.` so `12` never splits into `1 2` (`1.5.3` goes to the generic tier),
-# an operator may not run on into more operator characters, and a
-# literal takes this path only without `\` or nested parentheses
-# (read_literal_string handles those, and any error they raise).  So
-# each piece matches in one way only, and a failed match backtracks in
-# linear time
-_W = rb"[\x00\t\n\x0c\r ]*"
-_NUM = rb"[+-]?(?:\d+(?:\.\d*)?|\.\d+)(?![\d.])"
-_OP_END = rb"(?![A-Za-z'\"*])"
-_PLAIN_LIT = rb"\(([^\\()]*)\)"
-_HEX_STR = rb"<([0-9A-Fa-f\s]*)>"
-# (the operation is named by the group that closes last: m.lastgroup)
+# fast tier: one compiled match per operation, in the form the fixture
+# writer emits it: operands and operator separated by single spaces, the
+# operation preceded by any whitespace and ended like an operator token.
+# An operand run of [0-9.+-] lexes, in the generic tier too, into numbers
+# and stray characters without reaching past its ends; where the
+# operator reads a run as a number, float() must accept it, which on
+# these characters it does exactly when the run is one number token
+# (no exponent, `inf` or `_` can appear).  A run float() rejects sends
+# the operation to the generic tier before it changes any state.  A
+# literal takes this path only without `\` or nested parentheses, a hex
+# string only without whitespace.  Each piece matches in one way only,
+# so a failed match backtracks in linear time.
+_R = rb"([\d.+-]+)"
+
+
+def _show(first: int) -> bytes:
+    """A string shown by Tj or ', or the one string of a [string number]
+    TJ array, as groups first (``[``), +1 (literal), +2 (hex) and +3 (Tj
+    or ', absent for TJ)."""
+    return (rb"(\[)?(?:\(([^\\()]*)\)|<([0-9A-Fa-f]*)>)"
+            rb"(?(%d) [\d.+-]+\] TJ| (Tj|'))" % first)
+
+
 _FAST_OP = re.compile(
-    _W + rb"(?:"
-    # (string) Tj | <hex> Tj | (string) ' | <hex> '
-    rb"(?P<show>(?:\((?P<lit>[^\\()]*)\)|<(?P<hex>[0-9A-Fa-f\s]*)>)" + _W
-    + rb"(?:Tj|(?P<quote>')))"
-    # [ strings and numbers ] TJ
-    rb"|(?P<tj>\[(?P<parts>(?:" + _W + rb"(?:" + _NUM + rb"|\([^\\()]*\)|<[0-9A-Fa-f\s]*>))*)"
-    + _W + rb"\]" + _W + rb"TJ)"
-    # two numbers a b, then: Td | TD | m x1 y1 l S | c d x y Tm
-    rb"|(?P<a>" + _NUM + rb")" + _W + rb"(?P<b>" + _NUM + rb")" + _W + rb"(?:"
-    rb"(?P<td>T(?:d|(?P<TD>D)))"
-    rb"|(?P<rule>m" + _OP_END + _W + rb"(?P<x1>" + _NUM + rb")" + _W + rb"(?P<y1>" + _NUM + rb")"
-    + _W + rb"l" + _OP_END + _W + rb"S)"
-    rb"|(?P<tm>" + (_NUM + _W) * 2
-    + rb"(?P<tx>" + _NUM + rb")" + _W + rb"(?P<ty>" + _NUM + rb")" + _W + rb"Tm)"
-    rb"))" + _OP_END
+    rb"[\x00\t\n\x0c\r ]*(?:"
+    # 1 a 2 b, then 3 Td | TD, or m 4 x1 5 y1 l 6 S, or c d 7 tx 8 ty 9 Tm;
+    # then, after whitespace, maybe a show (10-13)
+    + _R + rb" " + _R + rb" (?:T([dD])"
+    rb"|m " + _R + rb" " + _R + rb" l (S)"
+    rb"|[\d.+-]+ [\d.+-]+ " + _R + rb" " + _R + rb" T(m))"
+    rb"(?:[\x00\t\n\x0c\r ]+" + _show(10) + rb")?"
+    # a show alone (14-17)
+    rb"|" + _show(14)
+    # 18 leading, 19 TL | a font and size, 20 Tf | 21 BT, ET
+    + rb"|" + _R + rb" (TL)"
+    rb"|/[0-9A-Za-z]+ [\d.+-]+ (Tf)"
+    rb"|(BT|ET)"
+    rb")(?![A-Za-z'\"*])"
 )
-# the strings of a fast-tier TJ array, in order
-_TJ_STRING = re.compile(_PLAIN_LIT + rb"|" + _HEX_STR)
 
 
 def interpret_content(content: bytes) -> tuple[list[TextRun], list[Segment]]:
     """Walk one content stream; return positioned text runs and stroked
     line segments (for ruling detection).
 
-    At each operation boundary (no operand pending, no ``[`` open) one
-    _FAST_OP match tries to take the whole operation; otherwise the
-    generic loop reads one token and acts on operators as it meets them.
-    A fast operation leaves exactly the state its tokens would."""
+    At each operation boundary (no operand pending, no ``[`` open) the
+    fast tier takes operation after operation, one _FAST_OP match each;
+    where it cannot, the generic loop reads one token and acts on
+    operators as it meets them.  A fast operation leaves exactly the
+    state its tokens would."""
     runs: list[TextRun] = []
     segments: list[Segment] = []
     stack: list = []
@@ -532,47 +574,49 @@ def interpret_content(content: bytes) -> tuple[list[TextRun], list[Segment]]:
     path: list[tuple[float, float]] = []
     pending_segments: list[Segment] = []
 
-    def shown(text_bytes: bytes) -> None:
-        text = text_bytes.decode("utf-8", errors="replace")
-        if text:
-            runs.append(TextRun(line_x, line_y, text))
-
     pos, n = 0, len(content)
     arrays: list[list] = []  # nesting stack for [...] operands
     match = _CONTENT_TOK.match
 
     while pos < n:
         if not stack and not arrays:
-            # fast tier: operation after operation, until one does not match
             for m in iter(_FAST_OP.scanner(content, pos).match, None):
+                op = m.lastindex
+                try:
+                    show = 0  # the first group of a string shown, if any
+                    if op <= 13:  # Tm, Td | TD, or a b m x1 y1 l S; maybe a show
+                        if m[9]:
+                            line_x, line_y = float(m[7]), float(m[8])
+                        elif m[3]:
+                            dx, dy = float(m[1]), float(m[2])
+                            line_x += dx
+                            line_y += dy
+                            if m[3] == b"D":
+                                leading = -dy
+                        else:
+                            segment = Segment(float(m[1]), float(m[2]), float(m[4]), float(m[5]))
+                            pending_segments.append(segment)
+                            segments.extend(pending_segments)
+                            pending_segments = []
+                            path = []
+                        if op >= 10:
+                            show = 10
+                    elif op <= 17:
+                        show = 14
+                    elif op == 19:  # TL
+                        leading = float(m[18])
+                    elif op == 21 and m[21] == b"BT":
+                        line_x = line_y = 0.0
+                    if show:
+                        lit, h, quote = m.group(show + 1, show + 2, show + 3)
+                        if quote == b"'":
+                            line_y -= leading
+                        text = (lit if h is None else _unhex(h)).decode("utf-8", "replace")
+                        if text:
+                            runs.append(TextRun(line_x, line_y, text))
+                except ValueError:  # a number run float() rejects
+                    break
                 pos = m.end()
-                kind = m.lastgroup
-                if kind == "show":
-                    s, h, quote = m.group("lit", "hex", "quote")
-                    if quote:
-                        line_y -= leading
-                    shown(_unhex(h) if s is None else s)
-                elif kind == "tm":
-                    line_x, line_y = float(m.group("tx")), float(m.group("ty"))
-                elif kind == "td":
-                    dy = float(m.group("b"))
-                    line_x += float(m.group("a"))
-                    line_y += dy
-                    if m.group("TD"):
-                        leading = -dy
-                elif kind == "tj":
-                    shown(b"".join(
-                        t.group(1) if t.lastindex == 1 else _unhex(t.group(2))
-                        for t in _TJ_STRING.finditer(m.group("parts"))
-                    ))
-                else:  # rule: a b m x1 y1 l S
-                    pending_segments.append(Segment(
-                        float(m.group("a")), float(m.group("b")),
-                        float(m.group("x1")), float(m.group("y1")),
-                    ))
-                    segments.extend(pending_segments)
-                    pending_segments = []
-                    path = []
             if pos >= n:
                 break
         m = match(content, pos)
@@ -585,9 +629,7 @@ def interpret_content(content: bytes) -> tuple[list[TextRun], list[Segment]]:
             (arrays[-1] if arrays else stack).append(value)
             continue
         if kind == "lparen":
-            lx = _Lexer(content, pos)
-            s = lx.read_literal_string()
-            pos = lx.pos
+            s, pos = _literal(content, pos)
             (arrays[-1] if arrays else stack).append(s)
             continue
         if kind == "hex":
@@ -609,6 +651,7 @@ def interpret_content(content: bytes) -> tuple[list[TextRun], list[Segment]]:
             continue
 
         op = m.group("op")
+        show = None
         if op == b"Tm":
             line_x, line_y = float(stack[-2]), float(stack[-1])
         elif op == b"Td":
@@ -623,13 +666,12 @@ def interpret_content(content: bytes) -> tuple[list[TextRun], list[Segment]]:
         elif op == b"T*":
             line_y -= leading
         elif op == b"Tj":
-            shown(stack[-1])
+            show = stack[-1]
         elif op == b"'":
             line_y -= leading
-            shown(stack[-1])
+            show = stack[-1]
         elif op == b"TJ":
-            parts = [e for e in stack[-1] if isinstance(e, bytes)]
-            shown(b"".join(parts))
+            show = b"".join([e for e in stack[-1] if isinstance(e, bytes)])
         elif op == b"BT":
             line_x = line_y = 0.0
         elif op == b"m":
@@ -644,6 +686,10 @@ def interpret_content(content: bytes) -> tuple[list[TextRun], list[Segment]]:
             pending_segments = []
             path = []
         stack.clear()
+        if show is not None:
+            text = show.decode("utf-8", "replace")
+            if text:
+                runs.append(TextRun(line_x, line_y, text))
 
     return runs, segments
 
@@ -661,19 +707,27 @@ def cluster_lines(runs: list[TextRun], row_tols) -> dict[float, list[list[TextRu
     descending (then x), a new line wherever y drops by more than the
     tolerance from the previous run, each line sorted by x.
 
-    The runs are sorted once.  A drop within a narrower tolerance is
-    within every wider one, so each wider tolerance only joins adjacent
-    lines of the previous one and sorts again only the lines it joined.
-    Lines are shared between tolerances; callers must not mutate them."""
+    The runs are sorted once.  With every coordinate finite, a line
+    whose first and last runs share y is all at that y, and so already
+    in x order.  A drop within a narrower tolerance is within every
+    wider one, so each wider tolerance only joins adjacent lines of the
+    previous one and sorts again only the lines it joined; one that
+    joins none maps to the previous tolerance's list itself.  Lines are
+    shared between tolerances; callers must not mutate them."""
     ordered = sorted(runs, key=lambda r: (-r.y, r.x))
     tols = sorted(set(row_tols))
     lines: list[list[TextRun]] = []  # the current tolerance's lines, in run order
+    total = 0.0  # inf or nan if any coordinate is
     for run in ordered:
+        total += run.x + run.y
         if lines and lines[-1][-1].y - run.y <= tols[0]:
             lines[-1].append(run)
         else:
             lines.append([run])
-    by_x = [_by_x(line) for line in lines]
+    if total - total == 0:
+        by_x = [line if line[0].y == line[-1].y else _by_x(line) for line in lines]
+    else:
+        by_x = [_by_x(line) for line in lines]
     out = {tols[0]: by_x}
     for tol in tols[1:]:
         joined: list[list[TextRun]] = []
@@ -685,59 +739,112 @@ def cluster_lines(runs: list[TextRun], row_tols) -> dict[float, list[list[TextRu
             else:
                 joined.append(line)
                 joined_by_x.append(line_by_x)
-        lines = joined
-        by_x = [_by_x(line) if bx is None else bx for line, bx in zip(joined, joined_by_x)]
+        if len(joined) < len(lines):
+            lines = joined
+            by_x = [_by_x(line) if bx is None else bx for line, bx in zip(joined, joined_by_x)]
         out[tol] = by_x
     return out
 
 
-def _cluster_positions(xs: list[float], tol: float) -> list[float]:
+def page_spans(lines: list[list[TextRun]], page_start: int) -> tuple[str, list[dict]]:
+    """A page's text, its lines (the row-tolerance-2.0 lines, runs joined
+    with single spaces) top to bottom, and one span per non-empty line,
+    its offsets counted from ``page_start``.  Kind taxonomy per
+    FIXTURES.md §4: heading = short ALL-CAPS line (KONTAKTER-style
+    section headers), table_field = line with ≥2 positioned runs (the
+    stream profile's table-row criterion), paragraph otherwise."""
+    texts: list[str] = []
+    spans: list[dict] = []
+    offset = page_start
+    for line_runs in lines:
+        line = line_runs[0].text if len(line_runs) == 1 else " ".join([r.text for r in line_runs])
+        if line:
+            if len(line) < 40 and line.isupper():
+                kind = "heading"
+            elif len(line_runs) >= 2:
+                kind = "table_field"
+            else:
+                kind = "paragraph"
+            spans.append({"kind": kind, "start": offset, "end": offset + len(line), "text": line})
+        texts.append(line)
+        offset += len(line) + 1
+    return "\n".join(texts), spans
+
+
+def stream_tables(lines: list[list[TextRun]], col_tols) -> list[list[Grid]]:
+    """Whitespace-alignment table detection (camelot-stream profile) over
+    one page's clustered lines, once per column tolerance: consecutive
+    multi-run lines form a region; columns are x clusters.  Single-run
+    lines indented past the page's left margin are treated as
+    continuation lines (multi-line cells) and stay inside the region.
+
+    The regions and their distinct x positions do not depend on the
+    column tolerance and are found once.  A run goes to the rightmost
+    column whose first member, less the tolerance, is at or left of it
+    (a bisect over those thresholds, once per distinct position).  A
+    tolerance that gives every run of a region the same column as the
+    tolerance before it shares that grid."""
+    left_margin = min([r.x for line in lines for r in line], default=0.0)
+    regions: list[list[list[TextRun]]] = []
+    region: list[list[TextRun]] = []
+    for line in lines:
+        if len(line) >= 2 or (region and len(line) == 1 and line[0].x > left_margin + 1):
+            region.append(line)
+        elif region:
+            if len(region) >= 2:
+                regions.append(region)
+            region = []
+    if len(region) >= 2:
+        regions.append(region)
+
+    tables: list[list[Grid]] = [[] for _ in col_tols]
+    for region in regions:
+        xs = [r.x for line in region for r in line]
+        # the distinct positions in order: a repeat never starts a
+        # cluster (centers only grow) and lands in its first's column
+        positions = list(dict.fromkeys(sorted(xs)))
+        assigned = grid = None
+        for config_tables, col_tol in zip(tables, col_tols):
+            cols = _cluster_positions(positions, col_tol)
+            thresholds = [cx - col_tol for cx in cols]
+            columns = (len(cols), {x: bisect_right(thresholds, x) - 1 for x in positions})
+            if columns != assigned:
+                assigned = columns
+                grid = _fill_grid(region, *columns)
+            config_tables.append(grid)
+    return tables
+
+
+def _cluster_positions(sorted_xs: list[float], tol: float) -> list[float]:
     """Cluster sorted x positions; returns cluster centers (first member)."""
     centers: list[float] = []
-    for x in sorted(xs):
+    for x in sorted_xs:
         if not centers or x - centers[-1] > tol:
             centers.append(x)
     return centers
 
 
-def stream_tables(lines: list[list[TextRun]], col_tol: float) -> list[Grid]:
-    """Whitespace-alignment table detection (camelot-stream profile) over
-    one page's clustered lines: consecutive multi-run lines form a
-    region; columns are x clusters.  Single-run lines indented past the
-    page's left margin are treated as continuation lines (multi-line
-    cells) and stay inside the region."""
-    left_margin = min([r.x for line in lines for r in line], default=0.0)
-    tables: list[Grid] = []
-    region: list[list[TextRun]] = []
+def _fill_grid(region: list[list[TextRun]], n_cols: int, column: dict[float, int]) -> Grid:
+    """One row per line of the region; a run goes to the column of its
+    x, a second run in a cell on a new line."""
+    grid: Grid = []
+    for line in region:
+        row = [""] * n_cols
+        for r in line:
+            ci = column[r.x]
+            row[ci] = (row[ci] + "\n" + r.text) if row[ci] else r.text
+        grid.append(row)
+    return grid
 
-    def flush():
-        nonlocal region
-        if len(region) >= 2:
-            xs = [r.x for line in region for r in line]
-            cols = _cluster_positions(xs, col_tol)
-            # rightmost column with r.x >= cx - col_tol, as a bisect over
-            # the precomputed thresholds: cols is ascending, x ↦ x - tol
-            # is monotone, and the comparison floats are the IDENTICAL
-            # `cx - col_tol` values the former max-genexpr computed — so
-            # this is bit-equivalent, not merely "close" (the per-run
-            # linear scan was the hottest line of the stream profile)
-            thresholds = [cx - col_tol for cx in cols]
-            grid: Grid = []
-            for line in region:
-                row = [""] * len(cols)
-                for r in line:
-                    ci = bisect_right(thresholds, r.x) - 1
-                    row[ci] = (row[ci] + "\n" + r.text) if row[ci] else r.text
-                grid.append(row)
-            tables.append(grid)
-        region = []
 
-    for line in lines:
-        if len(line) >= 2 or (region and len(line) == 1 and line[0].x > left_margin + 1):
-            region.append(line)
-        elif region:
-            flush()
-    flush()
+def stream_tables_by_config(lines_by_tol: dict[float, list[list[TextRun]]]) -> list[list[Grid]]:
+    """The stream tables of each of STREAM_CONFIGS, in order, from
+    cluster_lines' output; configs whose row tolerances gave the same
+    list share one stream_tables pass."""
+    tables: list[list[Grid]] = []
+    for _, configs in groupby(STREAM_CONFIGS, key=lambda config: id(lines_by_tol[config[0]])):
+        configs = list(configs)
+        tables += stream_tables(lines_by_tol[configs[0][0]], [col_tol for _, col_tol in configs])
     return tables
 
 
@@ -781,24 +888,25 @@ def lattice_tables(runs: list[TextRun], segments: list[Segment]) -> list[Grid]:
         # or above y, so row n_rows - k; y on the bottom rung (k == 0) and x
         # on the right rule (j == n_cols) fall in no cell
         ys_up = ys[::-1]
-        for r in runs:
-            if not (xs[0] <= r.x <= xs[-1] and ys[-1] <= r.y <= ys[0]):
-                continue
+        x_lo, x_hi, y_lo, y_hi = xs[0], xs[-1], ys[-1], ys[0]
+        for r in [r for r in runs if x_lo <= r.x <= x_hi and y_lo <= r.y <= y_hi]:
             k = bisect_left(ys_up, r.y)
             ci = bisect_right(xs, r.x) - 1
             if k and ci < n_cols:
                 cells[n_rows - k][ci].append(r)
-        grid: Grid = []
-        for cell_row in cells:
-            row = []
-            for parts in cell_row:
-                if len(parts) > 1:
-                    parts = sorted(parts, key=lambda t: (-t.y, t.x))
-                row.append("\n".join([p.text for p in parts]))
-            grid.append(row)
-        if any(any(c for c in row) for row in grid):
+        grid: Grid = [
+            [_cell_text(parts) if parts else "" for parts in cell_row] for cell_row in cells
+        ]
+        if any(map(any, grid)):
             tables.append(grid)
     return tables
+
+
+def _cell_text(parts: list[TextRun]) -> str:
+    """A lattice cell's runs top-down, then left to right, one a line."""
+    if len(parts) == 1:
+        return parts[0].text
+    return "\n".join([p.text for p in sorted(parts, key=lambda t: (-t.y, t.x))])
 
 
 # ---------------------------------------------------------------------------
@@ -806,54 +914,43 @@ def lattice_tables(runs: list[TextRun], segments: list[Segment]) -> list[Grid]:
 # ---------------------------------------------------------------------------
 
 def _accuracy(grid: Grid) -> float:
-    total = sum(len(r) for r in grid)
-    filled = sum(1 for r in grid for c in r if c)
+    total = sum(map(len, grid))
+    filled = total - sum([row.count("") for row in grid])  # cells are str
     return round(100.0 * filled / total, 2) if total else 0.0
+
+
+ROW_TOLS = [row_tol for row_tol, _ in STREAM_CONFIGS]
 
 
 def extract_pdf(payload: bytes) -> tuple[DocumentIR, list[dict]]:
     """Parse one PDF payload into the kernel IR and its text spans.
 
-    Spans: one per non-empty text line, offsets into the page texts
-    joined by '\\n\\f\\n' (the result table's main_text).  Kind taxonomy
-    per FIXTURES.md §4: heading = short ALL-CAPS line (KONTAKTER-style
-    section headers), table_field = line with ≥2 positioned runs (the
-    stream profile's table-row criterion), paragraph otherwise."""
+    Spans: one per non-empty text line (page_spans), offsets into the
+    page texts joined by '\\n\\f\\n' (the result table's main_text)."""
     doc = PdfDocument(payload)
     ir = DocumentIR(stream_tables_by_config=[[] for _ in STREAM_CONFIGS])
     spans: list[dict] = []
     page_start = 0
     for pno, page in enumerate(doc.pages(), start=1):
         runs, segments = interpret_content(doc.page_content(page))
-        lines_by_tol = cluster_lines(runs, [tol for tol, _ in STREAM_CONFIGS])
+        lines_by_tol = cluster_lines(runs, ROW_TOLS)
 
         # page text and spans use config 0's row tolerance (2.0)
-        texts: list[str] = []
-        offset = page_start
-        for line_runs in lines_by_tol[2.0]:
-            line = " ".join([r.text for r in line_runs])
-            if line:
-                if len(line) < 40 and line.isupper():
-                    kind = "heading"
-                elif len(line_runs) >= 2:
-                    kind = "table_field"
-                else:
-                    kind = "paragraph"
-                spans.append(
-                    {"kind": kind, "start": offset, "end": offset + len(line), "text": line}
-                )
-            texts.append(line)
-            offset += len(line) + 1
-        ir.page_texts.append("\n".join(texts))
-        page_start += len(ir.page_texts[-1]) + 3  # the '\n\f\n' page separator
+        text, page_spans_ = page_spans(lines_by_tol[2.0], page_start)
+        ir.page_texts.append(text)
+        spans += page_spans_
+        page_start += len(text) + 3  # the '\n\f\n' page separator
 
         for grid in lattice_tables(runs, segments):
             ir.lattice_tables.append(
                 CandidateTable(grid=grid, page=pno, method="lattice", accuracy=_accuracy(grid))
             )
-        for (row_tol, col_tol), config_tables in zip(STREAM_CONFIGS, ir.stream_tables_by_config):
-            for grid in stream_tables(lines_by_tol[row_tol], col_tol):
-                config_tables.append(
-                    CandidateTable(grid=grid, page=pno, method="stream", accuracy=_accuracy(grid))
-                )
+        accuracy: dict[int, float] = {}  # configs may share a grid
+        for config_tables, grids in zip(ir.stream_tables_by_config,
+                                        stream_tables_by_config(lines_by_tol)):
+            for grid in grids:
+                if id(grid) not in accuracy:
+                    accuracy[id(grid)] = _accuracy(grid)
+                config_tables.append(CandidateTable(
+                    grid=grid, page=pno, method="stream", accuracy=accuracy[id(grid)]))
     return ir, spans

@@ -211,11 +211,13 @@ def run_reference_subprocess(
 # pdf_reader's object lexer and parser, content interpreter, per-tolerance
 # line clustering and lattice cell scan as they stood before the one-match-
 # per-operation rewrite: a character-loop lexer, a content loop that runs
-# once per token, a sort per row tolerance and two linear scans per run.
-# tests/test_pdf_differential.py holds the rewrite to these outputs, or to
-# their exception type and message.  Test oracle only: package code never
-# imports it.  Types and helpers the rewrite did not change (Ref, PdfError,
-# TextRun, Segment, stream_tables, ...) come from the package, so results
+# once per token, a sort per row tolerance and two linear scans per run;
+# and its stream-table detection and table accuracy as they stood before
+# the column tolerances shared one pass (one pass per config, a bisect per
+# run).  tests/test_pdf_differential.py holds the package to these
+# outputs, or to their exception type and message.  Test oracle only:
+# package code never imports it.  Types and helpers no rewrite changed
+# (Ref, PdfError, TextRun, Segment, ...) come from the package, so results
 # compare with ``==``.
 # ---------------------------------------------------------------------------
 
@@ -231,9 +233,7 @@ from pdf_extractor2_spark.sources.pdf_reader import (  # noqa: E402
     Ref,
     Segment,
     TextRun,
-    _accuracy,
     _bounded_inflate,
-    stream_tables,
 )
 
 _OLD_WS = b"\x00\t\n\x0c\r "
@@ -791,6 +791,58 @@ def old_lattice_tables(runs: list[TextRun], segments: list[Segment]) -> list[Gri
     return tables
 
 
+def _old_cluster_positions(xs: list[float], tol: float) -> list[float]:
+    """Cluster sorted x positions; returns cluster centers (first member)."""
+    centers: list[float] = []
+    for x in sorted(xs):
+        if not centers or x - centers[-1] > tol:
+            centers.append(x)
+    return centers
+
+
+def old_stream_tables(lines: list[list[TextRun]], col_tol: float) -> list[Grid]:
+    """Whitespace-alignment table detection (camelot-stream profile) over
+    one page's clustered lines: consecutive multi-run lines form a
+    region; columns are x clusters.  Single-run lines indented past the
+    page's left margin are treated as continuation lines (multi-line
+    cells) and stay inside the region."""
+    from bisect import bisect_right
+
+    left_margin = min([r.x for line in lines for r in line], default=0.0)
+    tables: list[Grid] = []
+    region: list[list[TextRun]] = []
+
+    def flush():
+        nonlocal region
+        if len(region) >= 2:
+            xs = [r.x for line in region for r in line]
+            cols = _old_cluster_positions(xs, col_tol)
+            thresholds = [cx - col_tol for cx in cols]
+            grid: Grid = []
+            for line in region:
+                row = [""] * len(cols)
+                for r in line:
+                    ci = bisect_right(thresholds, r.x) - 1
+                    row[ci] = (row[ci] + "\n" + r.text) if row[ci] else r.text
+                grid.append(row)
+            tables.append(grid)
+        region = []
+
+    for line in lines:
+        if len(line) >= 2 or (region and len(line) == 1 and line[0].x > left_margin + 1):
+            region.append(line)
+        elif region:
+            flush()
+    flush()
+    return tables
+
+
+def _accuracy(grid: Grid) -> float:
+    total = sum(len(r) for r in grid)
+    filled = sum(1 for r in grid for c in r if c)
+    return round(100.0 * filled / total, 2) if total else 0.0
+
+
 def old_extract_pdf(payload: bytes) -> tuple[DocumentIR, list[dict]]:
     """Parse one PDF payload into the kernel IR and its text spans.
 
@@ -832,7 +884,7 @@ def old_extract_pdf(payload: bytes) -> tuple[DocumentIR, list[dict]]:
                 CandidateTable(grid=grid, page=pno, method="lattice", accuracy=_accuracy(grid))
             )
         for (row_tol, col_tol), config_tables in zip(STREAM_CONFIGS, ir.stream_tables_by_config):
-            for grid in stream_tables(lines_by_tol[row_tol], col_tol):
+            for grid in old_stream_tables(lines_by_tol[row_tol], col_tol):
                 config_tables.append(
                     CandidateTable(grid=grid, page=pno, method="stream", accuracy=_accuracy(grid))
                 )

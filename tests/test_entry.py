@@ -191,6 +191,9 @@ def test_every_package_module_is_reached_from_an_entry_point():
 UNREACHED_OK = {
     ("pdf_extractor2_spark.functions.scalars", "_EMAIL"):
         "the reference pattern test_scalars' differential test compares against",
+    ("pdf_extractor2_spark.operators.grids", "find_column_indices"):
+        "the reference's column finder test_grids, the parse manifest and "
+        "test_parse_differential call with a grid (the contact extractor calls its split)",
     ("pdf_extractor2_spark.sources.corpus", "generate_rows"):
         "generates the corpus tests/kernel_golden.py pins",
     ("pdf_extractor2_spark.serve", "serve_background"):

@@ -1,8 +1,9 @@
-"""The PDF front-end against its frozen token-at-a-time predecessor
-(``oracle.old_*``): the one-match-per-operation content interpreter,
-the regex object lexer, the line clustering shared by the row
-tolerances and the bisect lattice assignment must return what the old
-code returned, or raise the same exception type with the same message.
+"""The PDF front-end against its frozen predecessors (``oracle.old_*``):
+the content interpreter's fast tier, the regex object parser, the line
+clustering shared by the row tolerances, the bisect lattice assignment,
+the stream-table pass shared by the configs of one row tolerance and
+the table accuracy must return what the old code returned, or raise the
+same exception type with the same message.
 
 Inputs: every page of the benchmark pool's 1,622 PDFs, 20,000 seeded
 mutations of content streams and 5,000 seeded mutations of whole
@@ -16,16 +17,18 @@ import pytest
 
 from pdf_extractor2_spark.sources.corpus import make_doc_spec, render_payload
 from pdf_extractor2_spark.sources.pdf_reader import (
+    ROW_TOLS,
     STREAM_CONFIGS,
     PdfDocument,
     Segment,
     TextRun,
-    _Lexer,
-    _parse_value,
+    _accuracy,
+    _parse,
     cluster_lines,
     extract_pdf,
     interpret_content,
     lattice_tables,
+    stream_tables_by_config,
 )
 
 import oracle
@@ -173,7 +176,7 @@ def test_object_values_cut_at_every_byte(pool_pdfs):
     for body in bodies:
         for cut in range(len(body) + 1):
             data = body[:cut]
-            new = _outcome(lambda: _parse_value(_Lexer(data)))
+            new = _outcome(lambda: _parse(data, 0)[0])
             old = _outcome(lambda: oracle.old_parse_value(oracle.OldLexer(data)))
             assert new == old, data
 
@@ -227,3 +230,29 @@ def test_shared_clustering_matches_per_tolerance_clustering():
         assert sorted(got) == sorted(set(tols)), i
         for tol in tols:
             assert got[tol] == oracle.old_cluster_lines(runs, tol), i
+
+
+def test_stream_pass_per_row_tolerance_matches_per_config():
+    # rows on a 14-point pitch and columns at a few x positions, so lines
+    # join at the wider row tolerances and regions form; some columns
+    # within a column tolerance of each other, some runs off-grid or at
+    # an infinite or NaN coordinate
+    rng = random.Random("pdf-differential:stream")
+    cols = [40.0, 40.4, 44.0, 90.0, 98.0, 240.0, 252.0, 330.0]
+    odd = [float("inf"), float("-inf"), float("nan"), 0.0, -0.0]
+    for i in range(3000):
+        runs = []
+        for _ in range(rng.randint(0, 40)):
+            x = rng.choice(cols) if rng.random() < 0.8 else rng.uniform(0, 600)
+            y = 800.0 - 14.0 * rng.randint(0, 12) + rng.choice([0.0, 0.0, 0.0, 1.5, -3.0])
+            if rng.random() < 0.02:
+                x, y = rng.choice([(rng.choice(odd), y), (x, rng.choice(odd))])
+            runs.append(TextRun(x, y, rng.choice(["a", "b", "Navn", "12 34"])))
+        lines_by_tol = cluster_lines(runs, ROW_TOLS)
+        got = stream_tables_by_config(lines_by_tol)
+        want = [oracle.old_stream_tables(oracle.old_cluster_lines(runs, row_tol), col_tol)
+                for row_tol, col_tol in STREAM_CONFIGS]
+        assert repr(got) == repr(want), i
+        for grids in got:
+            for grid in grids:
+                assert _accuracy(grid) == oracle._accuracy(grid), i

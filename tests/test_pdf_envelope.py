@@ -4,14 +4,18 @@ time on a payload grown 4x must grow less than 8x (linear reads about
 in-process, best of 3.
 
 PDF shapes: a k x k ruled grid with one run per cell (lattice cell
-assignment), a long content stream of fast-tier operations, an array
-whose ``[`` never closes (generic tier from the first token), a long
-literal with no ``)``, and a number thousands of digits long that the
-fast tier reads and then rejects, and a page of stream tables that
-differ only in their last cell (the kernel drops a stream table equal
-to one it already kept).  HTML shape: a paragraph of ``a.`` runs ending
-in an ``@`` with no domain (every start in the run once scanned to the
-same ``@``)."""
+assignment), a long content stream of fast-tier operations, one of
+operations that each miss the fast tier at their last byte or token (the
+generic tier takes each), an array whose ``[`` never closes (generic
+tier from the first token), a long literal with no ``)``, a number
+thousands of digits long that the fast tier reads and then rejects, a
+page of stream tables that differ only in their last cell (the kernel
+drops a stream table equal to one it already kept), an object stream
+holding many objects (its header read in one pass, every object
+parsed), and an array of number pairs that each read as the start of an
+``N G R`` reference until the ``R`` is missing.  HTML shape: a paragraph
+of ``a.`` runs ending in an ``@`` with no domain (every start in the run
+once scanned to the same ``@``)."""
 
 from __future__ import annotations
 
@@ -22,7 +26,7 @@ import pytest
 from pdf_extractor2_spark.plans.extract_job import _extract_one
 from pdf_extractor2_spark.sources.pdf_reader import PdfError, extract_pdf
 
-from pdf_golden import one_page, ruled_grid
+from pdf_golden import classic_pdf, one_page, page_objs, ruled_grid, xref_stream_pdf
 
 
 def _fast_ops(n: int) -> bytes:
@@ -30,6 +34,34 @@ def _fast_ops(n: int) -> bytes:
         b"1 0 0 1 40 %d Tm (run %d) Tj 2 -3 Td <4142> ' [(a) -20 (b)] TJ 1 2 m 3 4 l S"
         % (800 - i % 700, i) for i in range(n)
     ) + b"\nET"
+
+
+# fast-tier operations, each spoiled at its last byte or token
+_NEAR_MISSES = [
+    b"1 0 0 1 40 %d Tmx", b"1 0 0 1 40 %d Tm (run) Tjj", b"(run %d) Tj*", b"<41> ''",
+    b"[(a %d) -20] TJj", b"1 %d Tdd", b"3 %d TDx", b"1 %d m 3 4 l Ss", b"%d TLx",
+    b"/F1 %d Tff", b"BTx", b"1 %d 0 1 2 3 Tm [(a) -20] TJ*",
+]
+
+
+def _near_misses(n: int) -> bytes:
+    return b"BT\n" + b"\n".join(
+        _NEAR_MISSES[i % len(_NEAR_MISSES)].replace(b"%d", b"%d" % i) for i in range(n)
+    ) + b"\nET"
+
+
+def _objstm_objects(n: int) -> bytes:
+    """A page whose object stream holds n more font objects."""
+    objs = page_objs([b"BT (a) Tj ET"])
+    extra = {6 + i: b"<< /Type /Font /Subtype /Type1 /BaseFont /F%d >>" % i for i in range(n)}
+    return xref_stream_pdf({**objs, **extra}, packed=[1, 2, 3, 4, *extra])
+
+
+def _ref_lookalikes(n: int) -> bytes:
+    """A page whose /MediaBox holds 2n numbers, `1 0` over and over."""
+    objs = page_objs([b"BT (a) Tj ET"])
+    objs[4] = objs[4].replace(b"/Type /Page", b"/Type /Page /MediaBox [ " + b"1 0 " * n + b"]")
+    return classic_pdf(objs)
 
 
 def _stream_tables(n: int) -> bytes:
@@ -52,6 +84,9 @@ SHAPES = {
     # size is the grid side k: the payload grows with k * k
     "ruled-grid": (20, lambda k: one_page(ruled_grid(k)), 2),
     "fast-ops": (400, lambda n: one_page(_fast_ops(n)), 4),
+    "near-miss-ops": (1200, lambda n: one_page(_near_misses(n)), 4),
+    "objstm-objects": (500, _objstm_objects, 4),
+    "ref-lookalikes": (2000, _ref_lookalikes, 4),
     "unclosed-array": (2000, lambda n: one_page(b"BT [ " + b"(a) 12 <41> " * n + b"TJ ET"), 4),
     "unclosed-literal": (4000, lambda n: one_page(b"BT 1 0 0 1 40 800 Tm (" + b"abc def " * n + b" Tj ET"), 4),
     "long-number": (5000, lambda n: one_page(b"BT 1 " + b"7" * n + b".. Td ET"), 4),
