@@ -1,8 +1,9 @@
 """In-process A/B of the PDF reader: the live ``sources/pdf_reader.py``
-against the same file as it was at a git ref (default ``HEAD``, the
-parent of an uncommitted change), loaded from ``git show``, over the
-1,622 PDFs of the benchmark pool (``make_doc_spec(i, seed=42)`` for
-i < 8192, the pool perfbench draws its corpora from).
+against the same file as it was at a git ref (default ``HEAD~1``, the
+parent of the last commit; pass ``HEAD`` to time uncommitted edits),
+loaded from ``git show``, over the 1,622 PDFs of the benchmark pool
+(``make_doc_spec(i, seed=42)`` for i < 8192, the pool perfbench draws
+its corpora from).
 
     PYTHONHASHSEED=0 python BENCH/pdf_ab.py [REF] [ROUNDS]
 
@@ -133,7 +134,7 @@ def _round(sides, payloads, timed) -> dict[str, dict[str, float]]:
 
 
 def main(argv: list[str]) -> int:
-    ref = argv[1] if len(argv) > 1 else "HEAD"
+    ref = argv[1] if len(argv) > 1 else "HEAD~1"
     rounds = int(argv[2]) if len(argv) > 2 else 5
     sides = {ref: reader_at(ref), "live": pdf_reader}
     payloads = []

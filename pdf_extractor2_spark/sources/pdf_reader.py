@@ -110,7 +110,8 @@ _VALUE = re.compile(_SKIP + _VALUE_ALT)
 # _VALUE), or else the single token _TOKEN reads there (8): ``>>``, a
 # key whose value does not start, or a token that is no key
 _ENTRY = re.compile(
-    _SKIP + rb"(?:/(" + _REGULAR + rb"*)" + _TOKEN_END + _SKIP + _VALUE_ALT + rb"|" + _TOKEN_ALT + rb")"
+    _SKIP + rb"(?:/(" + _REGULAR + rb"*)" + _TOKEN_END + _SKIP + _VALUE_ALT
+    + rb"|" + _TOKEN_ALT + rb")"
 )
 _HEX_WS = b" \t\n\r\x0b\x0c"  # what a hex string may hold between digits
 
@@ -945,12 +946,12 @@ def extract_pdf(payload: bytes) -> tuple[DocumentIR, list[dict]]:
             ir.lattice_tables.append(
                 CandidateTable(grid=grid, page=pno, method="lattice", accuracy=_accuracy(grid))
             )
-        accuracy: dict[int, float] = {}  # configs may share a grid
+        tables: dict[int, CandidateTable] = {}  # configs may share a grid
         for config_tables, grids in zip(ir.stream_tables_by_config,
                                         stream_tables_by_config(lines_by_tol)):
             for grid in grids:
-                if id(grid) not in accuracy:
-                    accuracy[id(grid)] = _accuracy(grid)
-                config_tables.append(CandidateTable(
-                    grid=grid, page=pno, method="stream", accuracy=accuracy[id(grid)]))
+                if id(grid) not in tables:
+                    tables[id(grid)] = CandidateTable(
+                        grid=grid, page=pno, method="stream", accuracy=_accuracy(grid))
+                config_tables.append(tables[id(grid)])
     return ir, spans

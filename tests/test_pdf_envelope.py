@@ -1,7 +1,9 @@
 """Time envelope of the kernel on shapes that stress it: the kernel's
 time on a payload grown 4x must grow less than 8x (linear reads about
 4, quadratic 16; a ratio cancels the host's speed).  Each size is timed
-in-process, best of 3.
+in-process, best of 3, with the heap the process had before frozen, as
+a Python worker runs the kernel (``extract_job._freeze_heap``): a full
+collection then walks the kernel's own objects, not the test process's.
 
 PDF shapes: a k x k ruled grid with one run per cell (lattice cell
 assignment), a long content stream of fast-tier operations, one of
@@ -19,11 +21,12 @@ once scanned to the same ``@``)."""
 
 from __future__ import annotations
 
+import gc
 import time
 
 import pytest
 
-from pdf_extractor2_spark.plans.extract_job import _extract_one
+from pdf_extractor2_spark.plans.extract_job import _extract_one, _freeze_heap
 from pdf_extractor2_spark.sources.pdf_reader import PdfError, extract_pdf
 
 from pdf_golden import classic_pdf, one_page, page_objs, ruled_grid, xref_stream_pdf
@@ -95,6 +98,13 @@ SHAPES = {
     # pairwise duplicate check
     "stream-tables": (800, _stream_tables, 4),
 }
+
+
+@pytest.fixture(scope="module", autouse=True)
+def worker_heap():
+    _freeze_heap()
+    yield
+    gc.unfreeze()
 
 
 def _best_of_3(payload: bytes) -> float:
