@@ -892,21 +892,361 @@ def old_extract_pdf(payload: bytes) -> tuple[DocumentIR, list[dict]]:
 
 
 # ---------------------------------------------------------------------------
-# HTMLParser-driven HTML front-end
+# Frozen HTML front-end, and its HTMLParser driver
 #
-# The package scans HTML with its own str.find tag scanner
-# (html_extract._scan).  This drives the same event sink with the stdlib
-# html.parser.HTMLParser instead and assembles the IR the same way;
-# tests/test_html.py::test_scanner_equivalence holds the scanner to it.
+# sources/html_extract.py as it stood before its scanner and event sink
+# became one function: the tag-flag table, the ``_Extractor`` event sink
+# with its three HTMLParser-style handlers, the ``str.find`` tag scanner
+# ``_scan`` that drives it, and ``_assemble``.  Copied verbatim.
+# ``normalize_grid`` resolves to the frozen parse layer's copy below,
+# the same function.  ``old_extract_html`` is the old ``extract_html``;
+# tests/test_html_differential.py holds the live front-end to it.
+# ``stdlib_extract_html`` drives the same sink with the stdlib
+# html.parser.HTMLParser instead; tests/test_html.py::
+# test_scanner_equivalence holds the live front-end to that too.
+# Test oracle only: package code never imports it.
 # ---------------------------------------------------------------------------
 
+from html import unescape  # noqa: E402
 from html.parser import HTMLParser  # noqa: E402
 
-from pdf_extractor2_spark.sources.html_extract import (  # noqa: E402
-    _assemble,
-    _Extractor,
-    decode_html_bytes,
+from pdf_extractor2_spark.sources.html_extract import decode_html_bytes  # noqa: E402
+
+_BLOCK_TAGS = frozenset(
+    "p h1 h2 h3 h4 h5 h6 li td th caption blockquote pre dt dd figcaption".split()
 )
+_BOILERPLATE_TAGS = frozenset("nav footer aside header form".split())
+# ARIA landmark roles that mark boilerplate containers on real pages
+# (divs standing in for nav/footer/aside)
+_BOILERPLATE_ROLES = frozenset(
+    "navigation banner contentinfo search complementary menubar".split()
+)
+_ROLE_ATTR_RE = re.compile(r"""\brole\s*=\s*["']?\s*([A-Za-z\-]+)""", re.IGNORECASE)
+_SKIP_TAGS = frozenset("script style template noscript svg".split())
+_HEADING_TAGS = frozenset("h1 h2 h3 h4 h5 h6".split())
+
+_LINK_DENSITY_MAX = 0.5
+_MIN_BLOCK_CHARS = 3
+
+# one-dict tag dispatch for the handler hot path: the handlers run once
+# per tag event (~170/doc), and chained frozenset membership tests were
+# ~6 lookups per event; a single flag-word lookup with an early return
+# for unflagged tags (div/span — the majority on real pages) replaces
+# them.  Semantics are IDENTICAL to the former chained tests (pinned by
+# test_scanner_equivalence + the live-reference oracle e2e).
+_F_SKIP, _F_BOILER, _F_A, _F_TITLE, _F_TABLE = 1, 2, 4, 8, 16
+_F_TR, _F_CELL, _F_BLOCK, _F_HEADING, _F_BR = 32, 64, 128, 256, 512
+_TAG_FLAGS: dict[str, int] = {}
+for _t in _SKIP_TAGS:
+    _TAG_FLAGS[_t] = _TAG_FLAGS.get(_t, 0) | _F_SKIP
+for _t in _BOILERPLATE_TAGS:
+    _TAG_FLAGS[_t] = _TAG_FLAGS.get(_t, 0) | _F_BOILER
+for _t in _BLOCK_TAGS:
+    _TAG_FLAGS[_t] = _TAG_FLAGS.get(_t, 0) | _F_BLOCK
+for _t in _HEADING_TAGS:
+    _TAG_FLAGS[_t] = _TAG_FLAGS.get(_t, 0) | _F_HEADING
+for _t, _f in (("a", _F_A), ("title", _F_TITLE), ("table", _F_TABLE),
+               ("tr", _F_TR), ("td", _F_CELL), ("th", _F_CELL),
+               ("br", _F_BR)):
+    _TAG_FLAGS[_t] = _TAG_FLAGS.get(_t, 0) | _f
+del _t, _f
+
+
+@dataclass
+class _Block:
+    kind: str  # title | heading | paragraph | table_field
+    text_parts: list[str] = field(default_factory=list)
+    link_chars: int = 0
+    in_boilerplate: bool = False
+    in_table: bool = False
+
+    def text(self) -> str:
+        return _collapse(" ".join(self.text_parts))
+
+    def link_density(self) -> float:
+        total = sum(len(p) for p in self.text_parts)
+        return self.link_chars / total if total else 0.0
+
+
+def _collapse(s: str) -> str:
+    return " ".join(s.split())
+
+
+class _Extractor:
+    """The tag, text and block state one document's events build up.
+
+    Its three handlers take ``html.parser.HTMLParser``'s event interface,
+    so the stdlib parser can drive it as well as ``_scan`` does
+    (tests/oracle.py's HTMLParser driver is the oracle of
+    tests/test_html.py::test_scanner_equivalence)."""
+
+    def __init__(self) -> None:
+        self.blocks: list[_Block] = []
+        self.tables: list[Grid] = []
+        self.title_parts: list[str] = []
+
+        self._skip_depth = 0
+        self._boiler_depth = 0
+        self._role_boiler_open: dict[str, int] = {}
+        self._link_depth = 0
+        self._in_title = False
+        self._current: _Block | None = None
+
+        # table assembly state: a stack to tolerate (rare) nested tables
+        self._table_stack: list[list[list[str]]] = []
+        self._row_stack: list[list[str]] = []
+        self._cell_depth = 0
+
+    # -- tag events ---------------------------------------------------------
+
+    def handle_starttag(self, tag: str, attrs) -> None:
+        flags = _TAG_FLAGS.get(tag, 0)
+        if attrs and not (flags & _F_BOILER):
+            role = next((v for k, v in attrs if k == "role" and v), None)
+            if role and role.strip().lower() in _BOILERPLATE_ROLES:
+                self._boiler_depth += 1
+                self._role_boiler_open[tag] = self._role_boiler_open.get(tag, 0) + 1
+        if not flags:
+            return
+        if flags & _F_SKIP:
+            self._skip_depth += 1
+        if flags & _F_BOILER:
+            self._boiler_depth += 1
+        if flags & _F_A:
+            self._link_depth += 1
+        if flags & _F_TITLE:
+            self._in_title = True
+        if flags & _F_TABLE:
+            self._table_stack.append([])
+        if flags & _F_TR and self._table_stack:
+            self._row_stack.append([])
+        if flags & _F_CELL and self._row_stack:
+            self._cell_depth += 1
+
+        if flags & _F_BLOCK:
+            self._flush()
+            kind = "heading" if flags & _F_HEADING else (
+                "table_field" if flags & _F_CELL else "paragraph"
+            )
+            self._current = _Block(
+                kind=kind,
+                in_boilerplate=self._boiler_depth > 0,
+                in_table=bool(self._table_stack) and tag != "caption",
+            )
+        elif flags & _F_BR and self._current is not None:
+            self._current.text_parts.append("\n")
+
+    def handle_endtag(self, tag: str) -> None:
+        # NOTE: no open-tag stack is kept — every piece of observable
+        # state (skip/boilerplate depths, table/row/cell assembly, block
+        # flushing) is keyed on the end-tag event itself, so a matching
+        # stack would be dead state (profiled at ~7% of the HTML kernel:
+        # an O(depth) membership scan per close tag).
+        flags = _TAG_FLAGS.get(tag, 0)
+        if flags & _F_BOILER:
+            if self._boiler_depth:
+                self._boiler_depth -= 1
+        elif (self._role_boiler_open
+              and self._role_boiler_open.get(tag, 0) > 0 and self._boiler_depth):
+            self._role_boiler_open[tag] -= 1
+            self._boiler_depth -= 1
+        if not flags:
+            return
+        if flags & _F_SKIP and self._skip_depth:
+            self._skip_depth -= 1
+        if flags & _F_A and self._link_depth:
+            self._link_depth -= 1
+        if flags & _F_TITLE:
+            self._in_title = False
+
+        if flags & _F_CELL and self._cell_depth:
+            self._cell_depth -= 1
+            if self._current is not None and self._row_stack:
+                self._row_stack[-1].append(self._current.text())
+        if flags & _F_TR and self._row_stack:
+            row = self._row_stack.pop()
+            if self._table_stack:
+                self._table_stack[-1].append(row)
+        if flags & _F_TABLE and self._table_stack:
+            rows = self._table_stack.pop()
+            if rows:
+                self.tables.append(normalize_grid(rows))
+
+        if flags & _F_BLOCK:
+            self._flush()
+
+    def handle_data(self, data: str) -> None:
+        if self._skip_depth:
+            return
+        if self._in_title:
+            self.title_parts.append(data)
+            return
+        if not data or data.isspace():  # == `not data.strip()`, no copy
+            return
+        if self._current is None:
+            # bare text outside any block element: treat as a paragraph
+            self._current = _Block(
+                kind="paragraph",
+                in_boilerplate=self._boiler_depth > 0,
+                in_table=bool(self._table_stack),
+            )
+        self._current.text_parts.append(data)
+        if self._link_depth:
+            self._current.link_chars += len(data)
+
+    # -- assembly -----------------------------------------------------------
+
+    def _flush(self) -> None:
+        if self._current is not None and self._current.text_parts:
+            self.blocks.append(self._current)
+        self._current = None
+
+
+_TAG_NAME_RE = re.compile(r"[a-zA-Z][a-zA-Z0-9\-]*")
+_RAW_TEXT_TAGS = ("script", "style", "template", "noscript")
+_NO_ATTRS: tuple = ()  # shared empty attrs for attribute-free tags
+
+
+def _scan(html: str, h: "_Extractor") -> None:
+    """Tag scanner driving the extractor's HTMLParser-style events.
+
+    HTMLParser's regex-per-token engine was ~40% of the HTML kernel cost;
+    this direct `str.find` scanner emits the identical start/end/data
+    events for the constructs the extractor consumes (tags, text,
+    entities, comments, doctypes, raw-text elements). Equivalence with
+    HTMLParser driving the same extractor is pinned by
+    tests/test_html.py::test_scanner_equivalence.
+    """
+    # the lowercased copy is only needed to find a raw-text element's
+    # close tag (script/style/...); computing it lazily saves a full
+    # O(n) pass + allocation on every script-free document
+    lower: str | None = None
+    i, n = 0, len(html)
+    find = html.find
+    while i < n:
+        lt = find("<", i)
+        if lt < 0:
+            chunk = html[i:]
+            # whitespace-only chunks are dropped by every handler path
+            # (handle_data's blank check; title collapse) — skipping the
+            # call is observationally identical and avoids the dispatch
+            if not chunk.isspace():
+                h.handle_data(unescape(chunk) if "&" in chunk else chunk)
+            break
+        if lt > i:
+            chunk = html[i:lt]
+            if not chunk.isspace():
+                h.handle_data(unescape(chunk) if "&" in chunk else chunk)
+        # one char test dispatches comments/doctypes/PIs; the
+        # startswith("<!--") only runs on the rare '!' branch (round 6:
+        # this check used to run on EVERY tag)
+        if lt + 1 < n and html[lt + 1] in "!?":
+            if html.startswith("<!--", lt):
+                end = find("-->", lt + 4)
+                i = end + 3 if end >= 0 else n
+                continue
+            gt = find(">", lt)
+            i = gt + 1 if gt >= 0 else n
+            continue
+        gt = find(">", lt)
+        if gt < 0:
+            h.handle_data(html[lt:])
+            break
+        inner = html[lt + 1 : gt]
+        closing = inner.startswith("/")
+        m = _TAG_NAME_RE.match(inner[1:] if closing else inner)
+        if not m:
+            i = gt + 1  # malformed tag: dropped (HTMLParser also swallows)
+            continue
+        name = m.group(0).lower()
+        i = gt + 1
+        if closing:
+            h.handle_endtag(name)
+        else:
+            attrs = _NO_ATTRS  # shared and immutable
+            # m.end() == len(inner) ⇔ the tag carries no attribute text
+            # at all — skip the three role-substring scans entirely
+            if m.end() < len(inner) and (
+                "role" in inner or "ROLE" in inner or "Role" in inner
+            ):
+                m_role = _ROLE_ATTR_RE.search(inner)
+                if m_role:
+                    attrs = [("role", m_role.group(1))]
+            h.handle_starttag(name, attrs)
+            if name in _RAW_TEXT_TAGS and not inner.endswith("/"):
+                if lower is None:
+                    lower = html.lower()
+                close = lower.find("</" + name, i)
+                if close < 0:
+                    break
+                gt2 = find(">", close)
+                h.handle_endtag(name)
+                i = gt2 + 1 if gt2 >= 0 else n
+
+
+
+
+def _assemble(parser: _Extractor) -> tuple[DocumentIR, list[dict]]:
+    """The IR and spans of a scanned document: main text from the title
+    and the kept blocks, one lattice table per grid."""
+    parser._flush()
+
+    title = _collapse(" ".join(parser.title_parts))
+
+    pieces: list[str] = []
+    spans: list[dict] = []
+    offset = 0
+
+    def _emit(kind: str, text: str) -> None:
+        nonlocal offset
+        if not text:
+            return
+        spans.append({"kind": kind, "start": offset, "end": offset + len(text), "text": text})
+        pieces.append(text)
+        offset += len(text) + 1  # joined with '\n'
+
+    if title:
+        _emit("title", title)
+
+    for block in parser.blocks:
+        if block.in_boilerplate or block.in_table:
+            continue
+        text = block.text()
+        if len(text) < _MIN_BLOCK_CHARS:
+            continue
+        if block.link_density() > _LINK_DENSITY_MAX:
+            continue
+        _emit(block.kind, text)
+
+    # table cells appear as table_field spans (content only, not layout)
+    for grid in parser.tables:
+        for row in grid:
+            for cell in row:
+                if cell:
+                    _emit("table_field", cell)
+
+    ir = DocumentIR(
+        page_texts=["\n".join(pieces)],
+        lattice_tables=[
+            CandidateTable(grid=grid, page=1, method="lattice", accuracy=100.0)
+            for grid in parser.tables
+        ],
+    )
+    return ir, spans
+
+
+def old_extract_html(payload: bytes | str) -> tuple[DocumentIR, list[dict]]:
+    """``html_extract.extract_html`` as it stood, on the frozen scanner."""
+    if isinstance(payload, bytes):
+        payload = decode_html_bytes(payload)
+
+    parser = _Extractor()
+    try:
+        _scan(payload, parser)
+    except Exception:
+        # malformed markup: keep whatever was assembled before the error
+        pass
+    return _assemble(parser)
 
 
 class _HTMLParserDriver(HTMLParser):
@@ -928,7 +1268,7 @@ class _HTMLParserDriver(HTMLParser):
 
 
 def stdlib_extract_html(payload: bytes | str):
-    """``html_extract.extract_html`` with HTMLParser in place of _scan."""
+    """``old_extract_html`` with HTMLParser in place of _scan."""
     if isinstance(payload, bytes):
         payload = decode_html_bytes(payload)
     sink = _Extractor()
