@@ -41,16 +41,18 @@ READER = "pdf_extractor2_spark/sources/pdf_reader.py"
 STAGES = ("objects", "interpret", "cluster", "lattice", "stream", "spans")
 
 
-def reader_at(ref: str):
-    """pdf_reader.py as it was at ``ref``, as a module of the live
-    package (its relative imports resolve to the live modules)."""
-    source = subprocess.run(["git", "-C", ROOT, "show", f"{ref}:{READER}"],
+def module_at(ref: str, path: str):
+    """The package module at ``path`` as it was at ``ref``, as a module
+    of the live package (its relative imports resolve to the live
+    modules)."""
+    source = subprocess.run(["git", "-C", ROOT, "show", f"{ref}:{path}"],
                             check=True, capture_output=True).stdout
-    name = "pdf_extractor2_spark.sources._pdf_reader_at_ref"
+    stem = os.path.splitext(os.path.basename(path))[0]
+    name = f"pdf_extractor2_spark.sources._{stem}_at_ref"
     module = importlib.util.module_from_spec(importlib.util.spec_from_loader(name, loader=None))
     module.__package__ = "pdf_extractor2_spark.sources"
     sys.modules[name] = module
-    exec(compile(source, f"{ref}:{READER}", "exec"), module.__dict__)
+    exec(compile(source, f"{ref}:{path}", "exec"), module.__dict__)
     return module
 
 
@@ -136,7 +138,7 @@ def _round(sides, payloads, timed) -> dict[str, dict[str, float]]:
 def main(argv: list[str]) -> int:
     ref = argv[1] if len(argv) > 1 else "HEAD~1"
     rounds = int(argv[2]) if len(argv) > 2 else 5
-    sides = {ref: reader_at(ref), "live": pdf_reader}
+    sides = {ref: module_at(ref, READER), "live": pdf_reader}
     payloads = []
     for i in range(POOL_DOCS):
         spec = make_doc_spec(i, seed=POOL_SEED)

@@ -7,11 +7,19 @@ trafilatura family (text-density + link-density heuristics — public
 knowledge), stdlib only so executors need no native deps.
 
 Pipeline per document:
-  1. scan (``_scan``, a ``str.find`` tag scanner) into a flat list of
-     text blocks, each tagged with its element kind, ancestor chain,
-     own-text length and link-text length;
-  2. drop boilerplate: blocks inside nav/footer/aside/header/form, blocks
-     with link density > 0.5, script/style/template content;
+  1. scan (``_scan``): one ``str.find`` tag scanner that keeps the tag,
+     text and block state in local variables.  It has two tiers, as the
+     PDF reader's content interpreter does: a fast tier takes a whole
+     table cell in its one simple form, ``<td>text</td>``, in one
+     compiled match; every other form goes through the generic tag
+     path, the one semantic fallback.  The event sink it replaced
+     (``_Extractor``, three HTMLParser-style handlers driven by the old
+     scanner) lives on in tests/oracle.py as the frozen oracle of
+     tests/test_html_differential.py and, driven by
+     ``html.parser.HTMLParser``, of test_scanner_equivalence;
+  2. drop boilerplate: blocks inside nav/footer/aside/header/form or a
+     role-boilerplate container, blocks with link density > 0.5,
+     script/style/template content;
   3. main text = title + kept headings/paragraphs/list items, one block
      per line (deterministic, byte-stable);
   4. spans = [{kind, start, end, text}] offsets into the main text;
@@ -29,7 +37,6 @@ Everything here is called from inside the Arrow UDF batch loop
 from __future__ import annotations
 
 import re
-from dataclasses import dataclass, field
 from html import unescape
 
 from ..operators.document import CandidateTable, DocumentIR
@@ -46,265 +53,245 @@ _BOILERPLATE_ROLES = frozenset(
 )
 _ROLE_ATTR_RE = re.compile(r"""\brole\s*=\s*["']?\s*([A-Za-z\-]+)""", re.IGNORECASE)
 _SKIP_TAGS = frozenset("script style template noscript svg".split())
+_RAW_TEXT_TAGS = frozenset("script style template noscript".split())
 _HEADING_TAGS = frozenset("h1 h2 h3 h4 h5 h6".split())
 
 _LINK_DENSITY_MAX = 0.5
 _MIN_BLOCK_CHARS = 3
 
-# one-dict tag dispatch for the handler hot path: the handlers run once
-# per tag event (~170/doc), and chained frozenset membership tests were
-# ~6 lookups per event; a single flag-word lookup with an early return
-# for unflagged tags (div/span — the majority on real pages) replaces
-# them.  Semantics are IDENTICAL to the former chained tests (pinned by
-# test_scanner_equivalence + the live-reference oracle e2e).
+# one flag word per tag name: the scanner's generic path makes one
+# lookup per tag and returns early for unflagged tags (div/span, the
+# majority on real pages)
 _F_SKIP, _F_BOILER, _F_A, _F_TITLE, _F_TABLE = 1, 2, 4, 8, 16
-_F_TR, _F_CELL, _F_BLOCK, _F_HEADING, _F_BR = 32, 64, 128, 256, 512
+_F_TR, _F_CELL, _F_BLOCK, _F_HEADING, _F_BR, _F_RAW = 32, 64, 128, 256, 512, 1024
 _TAG_FLAGS: dict[str, int] = {}
-for _t in _SKIP_TAGS:
-    _TAG_FLAGS[_t] = _TAG_FLAGS.get(_t, 0) | _F_SKIP
-for _t in _BOILERPLATE_TAGS:
-    _TAG_FLAGS[_t] = _TAG_FLAGS.get(_t, 0) | _F_BOILER
-for _t in _BLOCK_TAGS:
-    _TAG_FLAGS[_t] = _TAG_FLAGS.get(_t, 0) | _F_BLOCK
-for _t in _HEADING_TAGS:
-    _TAG_FLAGS[_t] = _TAG_FLAGS.get(_t, 0) | _F_HEADING
-for _t, _f in (("a", _F_A), ("title", _F_TITLE), ("table", _F_TABLE),
-               ("tr", _F_TR), ("td", _F_CELL), ("th", _F_CELL),
-               ("br", _F_BR)):
-    _TAG_FLAGS[_t] = _TAG_FLAGS.get(_t, 0) | _f
-del _t, _f
-
-
-@dataclass
-class _Block:
-    kind: str  # title | heading | paragraph | table_field
-    text_parts: list[str] = field(default_factory=list)
-    link_chars: int = 0
-    in_boilerplate: bool = False
-    in_table: bool = False
-
-    def text(self) -> str:
-        return _collapse(" ".join(self.text_parts))
-
-    def link_density(self) -> float:
-        total = sum(len(p) for p in self.text_parts)
-        return self.link_chars / total if total else 0.0
+for _tags, _f in ((_SKIP_TAGS, _F_SKIP), (_RAW_TEXT_TAGS, _F_RAW), (_BOILERPLATE_TAGS, _F_BOILER),
+                  (_BLOCK_TAGS, _F_BLOCK), (_HEADING_TAGS, _F_HEADING), (("a",), _F_A),
+                  (("title",), _F_TITLE), (("table",), _F_TABLE), (("tr",), _F_TR),
+                  (("td", "th"), _F_CELL), (("br",), _F_BR)):
+    for _t in _tags:
+        _TAG_FLAGS[_t] = _TAG_FLAGS.get(_t, 0) | _f
+del _tags, _t, _f
 
 
 def _collapse(s: str) -> str:
     return " ".join(s.split())
 
 
-class _Extractor:
-    """The tag, text and block state one document's events build up.
-
-    Its three handlers take ``html.parser.HTMLParser``'s event interface,
-    so the stdlib parser can drive it as well as ``_scan`` does
-    (tests/oracle.py's HTMLParser driver is the oracle of
-    tests/test_html.py::test_scanner_equivalence)."""
-
-    def __init__(self) -> None:
-        self.blocks: list[_Block] = []
-        self.tables: list[Grid] = []
-        self.title_parts: list[str] = []
-
-        self._skip_depth = 0
-        self._boiler_depth = 0
-        self._role_boiler_open: dict[str, int] = {}
-        self._link_depth = 0
-        self._in_title = False
-        self._current: _Block | None = None
-
-        # table assembly state: a stack to tolerate (rare) nested tables
-        self._table_stack: list[list[list[str]]] = []
-        self._row_stack: list[list[str]] = []
-        self._cell_depth = 0
-
-    # -- tag events ---------------------------------------------------------
-
-    def handle_starttag(self, tag: str, attrs) -> None:
-        flags = _TAG_FLAGS.get(tag, 0)
-        if attrs and not (flags & _F_BOILER):
-            role = next((v for k, v in attrs if k == "role" and v), None)
-            if role and role.strip().lower() in _BOILERPLATE_ROLES:
-                self._boiler_depth += 1
-                self._role_boiler_open[tag] = self._role_boiler_open.get(tag, 0) + 1
-        if not flags:
-            return
-        if flags & _F_SKIP:
-            self._skip_depth += 1
-        if flags & _F_BOILER:
-            self._boiler_depth += 1
-        if flags & _F_A:
-            self._link_depth += 1
-        if flags & _F_TITLE:
-            self._in_title = True
-        if flags & _F_TABLE:
-            self._table_stack.append([])
-        if flags & _F_TR and self._table_stack:
-            self._row_stack.append([])
-        if flags & _F_CELL and self._row_stack:
-            self._cell_depth += 1
-
-        if flags & _F_BLOCK:
-            self._flush()
-            kind = "heading" if flags & _F_HEADING else (
-                "table_field" if flags & _F_CELL else "paragraph"
-            )
-            self._current = _Block(
-                kind=kind,
-                in_boilerplate=self._boiler_depth > 0,
-                in_table=bool(self._table_stack) and tag != "caption",
-            )
-        elif flags & _F_BR and self._current is not None:
-            self._current.text_parts.append("\n")
-
-    def handle_endtag(self, tag: str) -> None:
-        # NOTE: no open-tag stack is kept — every piece of observable
-        # state (skip/boilerplate depths, table/row/cell assembly, block
-        # flushing) is keyed on the end-tag event itself, so a matching
-        # stack would be dead state (profiled at ~7% of the HTML kernel:
-        # an O(depth) membership scan per close tag).
-        flags = _TAG_FLAGS.get(tag, 0)
-        if flags & _F_BOILER:
-            if self._boiler_depth:
-                self._boiler_depth -= 1
-        elif (self._role_boiler_open
-              and self._role_boiler_open.get(tag, 0) > 0 and self._boiler_depth):
-            self._role_boiler_open[tag] -= 1
-            self._boiler_depth -= 1
-        if not flags:
-            return
-        if flags & _F_SKIP and self._skip_depth:
-            self._skip_depth -= 1
-        if flags & _F_A and self._link_depth:
-            self._link_depth -= 1
-        if flags & _F_TITLE:
-            self._in_title = False
-
-        if flags & _F_CELL and self._cell_depth:
-            self._cell_depth -= 1
-            if self._current is not None and self._row_stack:
-                self._row_stack[-1].append(self._current.text())
-        if flags & _F_TR and self._row_stack:
-            row = self._row_stack.pop()
-            if self._table_stack:
-                self._table_stack[-1].append(row)
-        if flags & _F_TABLE and self._table_stack:
-            rows = self._table_stack.pop()
-            if rows:
-                self.tables.append(normalize_grid(rows))
-
-        if flags & _F_BLOCK:
-            self._flush()
-
-    def handle_data(self, data: str) -> None:
-        if self._skip_depth:
-            return
-        if self._in_title:
-            self.title_parts.append(data)
-            return
-        if not data or data.isspace():  # == `not data.strip()`, no copy
-            return
-        if self._current is None:
-            # bare text outside any block element: treat as a paragraph
-            self._current = _Block(
-                kind="paragraph",
-                in_boilerplate=self._boiler_depth > 0,
-                in_table=bool(self._table_stack),
-            )
-        self._current.text_parts.append(data)
-        if self._link_depth:
-            self._current.link_chars += len(data)
-
-    # -- assembly -----------------------------------------------------------
-
-    def _flush(self) -> None:
-        if self._current is not None and self._current.text_parts:
-            self.blocks.append(self._current)
-        self._current = None
+def _keep_block(blocks: list[tuple[str, str]], kind: str, parts: list[str],
+                link_chars: int) -> None:
+    """Keep a finished main-text candidate (outside boilerplate and
+    tables) as ``(kind, text)`` unless it is too short or mostly links."""
+    text = _collapse(" ".join(parts))
+    if len(text) >= _MIN_BLOCK_CHARS and not (
+        link_chars / sum(map(len, parts)) > _LINK_DENSITY_MAX
+    ):
+        blocks.append((kind, text))
 
 
 _TAG_NAME_RE = re.compile(r"[a-zA-Z][a-zA-Z0-9\-]*")
-_RAW_TEXT_TAGS = ("script", "style", "template", "noscript")
-_NO_ATTRS: tuple = ()  # shared empty attrs for attribute-free tags
+# the tag text of a start or end tag written as its bare lower-case name
+# ("p", "/p") -> (closing, name, flags): one lookup in place of the name
+# regex for the flagged tags and the common containers
+_BARE_TAGS = {
+    text: (text[0] == "/", name, _TAG_FLAGS.get(name, 0))
+    for name in [*_TAG_FLAGS, *"html head body div span article section main ul ol".split()]
+    for text in (name, "/" + name)
+}
+# the fast tier: a whole table cell in its one simple form, with no
+# attributes, no markup inside and a lower-case name
+_CELL_RE = re.compile(r"<td>([^<]*)</td>")
 
 
-def _scan(html: str, h: "_Extractor") -> None:
-    """Tag scanner driving the extractor's HTMLParser-style events.
+def _scan(html: str) -> tuple[list[str], list[tuple[str, str]], list[Grid]]:
+    """One pass over the page: its title parts, the kept main-text blocks
+    as ``(kind, text)`` and the table grids.
 
-    HTMLParser's regex-per-token engine was ~40% of the HTML kernel cost;
-    this direct `str.find` scanner emits the identical start/end/data
-    events for the constructs the extractor consumes (tags, text,
-    entities, comments, doctypes, raw-text elements). Equivalence with
-    HTMLParser driving the same extractor is pinned by
-    tests/test_html.py::test_scanner_equivalence.
-    """
-    # the lowercased copy is only needed to find a raw-text element's
-    # close tag (script/style/...); computing it lazily saves a full
-    # O(n) pass + allocation on every script-free document
+    A ``str.find`` tag scanner with the tag, text and block state in
+    local variables.  Each tag goes through the generic path, which
+    handles every form, unless it opens a cell the fast tier takes whole
+    (``_CELL_RE``, inside an open row, outside title, skipped and
+    role-boilerplate ``td`` content), which leaves the state exactly as
+    the generic path's three events would.  Tags and text are read as
+    ``html.parser.HTMLParser`` reads them (test_scanner_equivalence)."""
+    title_parts: list[str] = []
+    blocks: list[tuple[str, str]] = []
+    tables: list[Grid] = []
+    skip = boiler = link = cell_depth = 0
+    in_title = False
+    role_open: dict[str, int] = {}  # open role-boilerplate tags by name
+    table_stack: list[list[list[str]]] = []  # a stack: tables may nest
+    row_stack: list[list[str]] = []
+    # the open block: kind (None when there is none), text parts, link
+    # text length, and whether it is a main-text candidate
+    kind: str | None = None
+    parts: list[str] = []
+    link_chars = 0
+    keep = False
+    # lowercased only to find a raw-text element's close tag
     lower: str | None = None
+    tail: str | None = None  # an unterminated tag and what follows it
     i, n = 0, len(html)
-    find = html.find
-    while i < n:
-        lt = find("<", i)
-        if lt < 0:
-            chunk = html[i:]
-            # whitespace-only chunks are dropped by every handler path
-            # (handle_data's blank check; title collapse) — skipping the
-            # call is observationally identical and avoids the dispatch
-            if not chunk.isspace():
-                h.handle_data(unescape(chunk) if "&" in chunk else chunk)
-            break
-        if lt > i:
-            chunk = html[i:lt]
-            if not chunk.isspace():
-                h.handle_data(unescape(chunk) if "&" in chunk else chunk)
-        # one char test dispatches comments/doctypes/PIs; the
-        # startswith("<!--") only runs on the rare '!' branch (round 6:
-        # this check used to run on EVERY tag)
-        if lt + 1 < n and html[lt + 1] in "!?":
-            if html.startswith("<!--", lt):
-                end = find("-->", lt + 4)
-                i = end + 3 if end >= 0 else n
+    find, cell, bare_tag = html.find, _CELL_RE.match, _BARE_TAGS.get
+    tag_name, flags_of = _TAG_NAME_RE.match, _TAG_FLAGS.get
+    try:
+        while i < n:
+            lt = find("<", i)
+            if lt < 0:
+                lt = n
+            if lt > i:
+                chunk = html[i:lt]
+                # a blank chunk changes nothing on any path
+                if not chunk.isspace():
+                    data = unescape(chunk) if "&" in chunk else chunk
+                    if skip:
+                        pass
+                    elif in_title:
+                        title_parts.append(data)
+                    elif data and not data.isspace():
+                        if kind is None:  # bare text outside a block
+                            kind, parts, link_chars = "paragraph", [], 0
+                            keep = not boiler and not table_stack
+                        parts.append(data)
+                        if link:
+                            link_chars += len(data)
+                if lt == n:
+                    break
+            if (html.startswith("<td>", lt) and row_stack and not skip and not in_title
+                    and not role_open.get("td")):
+                m = cell(html, lt)
+                if m:
+                    if kind is not None and parts and keep:
+                        _keep_block(blocks, kind, parts, link_chars)
+                    kind = None
+                    data = m.group(1)
+                    if "&" in data:
+                        data = unescape(data)
+                    row_stack[-1].append(" ".join(data.split()))
+                    if not boiler and not table_stack and data and not data.isspace():
+                        _keep_block(blocks, "table_field", [data], len(data) if link else 0)
+                    i = m.end()
+                    continue
+            # comments, doctypes and processing instructions are dropped
+            if lt + 1 < n and html[lt + 1] in "!?":
+                if html.startswith("<!--", lt):
+                    end = find("-->", lt + 4)
+                    i = end + 3 if end >= 0 else n
+                    continue
+                gt = find(">", lt)
+                i = gt + 1 if gt >= 0 else n
                 continue
             gt = find(">", lt)
-            i = gt + 1 if gt >= 0 else n
-            continue
-        gt = find(">", lt)
-        if gt < 0:
-            h.handle_data(html[lt:])
-            break
-        inner = html[lt + 1 : gt]
-        closing = inner.startswith("/")
-        m = _TAG_NAME_RE.match(inner[1:] if closing else inner)
-        if not m:
-            i = gt + 1  # malformed tag: dropped (HTMLParser also swallows)
-            continue
-        name = m.group(0).lower()
-        i = gt + 1
-        if closing:
-            h.handle_endtag(name)
-        else:
-            attrs = _NO_ATTRS  # shared and immutable
-            # m.end() == len(inner) ⇔ the tag carries no attribute text
-            # at all — skip the three role-substring scans entirely
-            if m.end() < len(inner) and (
-                "role" in inner or "ROLE" in inner or "Role" in inner
-            ):
-                m_role = _ROLE_ATTR_RE.search(inner)
-                if m_role:
-                    attrs = [("role", m_role.group(1))]
-            h.handle_starttag(name, attrs)
-            if name in _RAW_TEXT_TAGS and not inner.endswith("/"):
+            if gt < 0:
+                tail = html[lt:]
+                break
+            i = gt + 1
+            bare = bare_tag(html[lt + 1 : gt])
+            if bare is not None:
+                closing, name, flags = bare
+            else:
+                closing = html[lt + 1] == "/"
+                m = tag_name(html, lt + 1 + closing, gt)
+                if not m:
+                    continue  # malformed tag: dropped (HTMLParser also swallows)
+                name = m.group().lower()
+                flags = flags_of(name, 0)
+            if closing:
+                if flags & _F_BOILER:
+                    if boiler:
+                        boiler -= 1
+                elif role_open and role_open.get(name, 0) > 0 and boiler:
+                    role_open[name] -= 1
+                    boiler -= 1
+                if not flags:
+                    continue
+                if flags & _F_SKIP and skip:
+                    skip -= 1
+                if flags & _F_A and link:
+                    link -= 1
+                if flags & _F_TITLE:
+                    in_title = False
+                if flags & _F_CELL and cell_depth:
+                    cell_depth -= 1
+                    if kind is not None and row_stack:
+                        row_stack[-1].append(_collapse(" ".join(parts)))
+                if flags & _F_TR and row_stack:
+                    row = row_stack.pop()
+                    if table_stack:
+                        table_stack[-1].append(row)
+                if flags & _F_TABLE and table_stack:
+                    rows = table_stack.pop()
+                    if rows:
+                        tables.append(normalize_grid(rows))
+                if flags & _F_BLOCK:
+                    if kind is not None and parts and keep:
+                        _keep_block(blocks, kind, parts, link_chars)
+                    kind = None
+                continue
+            # a bare tag, or m.end() == gt: no attribute text, so no role
+            if bare is None and m.end() < gt and not flags & _F_BOILER:
+                inner = html[lt + 1 : gt]
+                if "role" in inner or "ROLE" in inner or "Role" in inner:
+                    m_role = _ROLE_ATTR_RE.search(inner)
+                    if m_role and m_role.group(1).lower() in _BOILERPLATE_ROLES:
+                        boiler += 1
+                        role_open[name] = role_open.get(name, 0) + 1
+            if not flags:
+                continue
+            if flags & _F_SKIP:
+                skip += 1
+            if flags & _F_BOILER:
+                boiler += 1
+            if flags & _F_A:
+                link += 1
+            if flags & _F_TITLE:
+                in_title = True
+            if flags & _F_TABLE:
+                table_stack.append([])
+            if flags & _F_TR and table_stack:
+                row_stack.append([])
+            if flags & _F_CELL and row_stack:
+                cell_depth += 1
+            if flags & _F_BLOCK:
+                if kind is not None and parts and keep:
+                    _keep_block(blocks, kind, parts, link_chars)
+                kind = "heading" if flags & _F_HEADING else (
+                    "table_field" if flags & _F_CELL else "paragraph"
+                )
+                parts, link_chars = [], 0
+                keep = not boiler and not (table_stack and name != "caption")
+            elif flags & _F_BR and kind is not None:
+                parts.append("\n")
+            if flags & _F_RAW and html[gt - 1] != "/":
+                # a raw-text element: its content is skipped up to its
+                # close tag, which closes it as the generic path would
                 if lower is None:
                     lower = html.lower()
                 close = lower.find("</" + name, i)
                 if close < 0:
                     break
-                gt2 = find(">", close)
-                h.handle_endtag(name)
-                i = gt2 + 1 if gt2 >= 0 else n
+                if role_open.get(name, 0) > 0 and boiler:
+                    role_open[name] -= 1
+                    boiler -= 1
+                skip -= 1
+                gt = find(">", close)
+                i = gt + 1 if gt >= 0 else n
+        if tail is not None and not skip:  # kept as text, not unescaped
+            if in_title:
+                title_parts.append(tail)
+            else:
+                if kind is None:
+                    kind, parts, link_chars = "paragraph", [], 0
+                    keep = not boiler and not table_stack
+                parts.append(tail)
+                if link:
+                    link_chars += len(tail)
+    except Exception:
+        # malformed markup: keep whatever was assembled before the error
+        pass
+    if kind is not None and parts and keep:
+        _keep_block(blocks, kind, parts, link_chars)
+    return title_parts, blocks, tables
 
 
 _CHARSET_RE = re.compile(
@@ -340,60 +327,29 @@ def extract_html(payload: bytes | str) -> tuple[DocumentIR, list[dict]]:
     and the spans."""
     if isinstance(payload, bytes):
         payload = decode_html_bytes(payload)
-
-    parser = _Extractor()
-    try:
-        _scan(payload, parser)
-    except Exception:
-        # malformed markup: keep whatever was assembled before the error
-        pass
-    return _assemble(parser)
+    return _assemble(*_scan(payload))
 
 
-def _assemble(parser: _Extractor) -> tuple[DocumentIR, list[dict]]:
-    """The IR and spans of a scanned document: main text from the title
-    and the kept blocks, one lattice table per grid."""
-    parser._flush()
-
-    title = _collapse(" ".join(parser.title_parts))
-
-    pieces: list[str] = []
+def _assemble(title_parts: list[str], blocks: list[tuple[str, str]],
+              tables: list[Grid]) -> tuple[DocumentIR, list[dict]]:
+    """The IR and spans of a scanned document: main text from the title,
+    the kept blocks and the table cells, one line each, and one lattice
+    table per grid."""
+    title = _collapse(" ".join(title_parts))
+    lines = [("title", title)] if title else []
+    lines += blocks
+    # table cells appear as table_field spans (content only, not layout)
+    lines += [("table_field", c) for grid in tables for row in grid for c in row if c]
     spans: list[dict] = []
     offset = 0
-
-    def _emit(kind: str, text: str) -> None:
-        nonlocal offset
-        if not text:
-            return
+    for kind, text in lines:
         spans.append({"kind": kind, "start": offset, "end": offset + len(text), "text": text})
-        pieces.append(text)
         offset += len(text) + 1  # joined with '\n'
-
-    if title:
-        _emit("title", title)
-
-    for block in parser.blocks:
-        if block.in_boilerplate or block.in_table:
-            continue
-        text = block.text()
-        if len(text) < _MIN_BLOCK_CHARS:
-            continue
-        if block.link_density() > _LINK_DENSITY_MAX:
-            continue
-        _emit(block.kind, text)
-
-    # table cells appear as table_field spans (content only, not layout)
-    for grid in parser.tables:
-        for row in grid:
-            for cell in row:
-                if cell:
-                    _emit("table_field", cell)
-
     ir = DocumentIR(
-        page_texts=["\n".join(pieces)],
+        page_texts=["\n".join([text for _, text in lines])],
         lattice_tables=[
             CandidateTable(grid=grid, page=1, method="lattice", accuracy=100.0)
-            for grid in parser.tables
+            for grid in tables
         ],
     )
     return ir, spans

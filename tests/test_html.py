@@ -85,8 +85,8 @@ def test_br_preserves_multiline_cells():
 
 
 def test_scanner_equivalence():
-    """The package's tag scanner and HTMLParser driving the same
-    extractor (tests/oracle.py) must produce identical (ir, spans) pairs
+    """The package's scanner and HTMLParser driving the frozen event
+    sink (tests/oracle.py) must produce identical (ir, spans) pairs
     over the whole corpus + adversarial samples."""
     from pdf_extractor2_spark.sources.corpus import make_doc_spec, render_html
 

@@ -15,9 +15,13 @@ page of stream tables that differ only in their last cell (the kernel
 drops a stream table equal to one it already kept), an object stream
 holding many objects (its header read in one pass, every object
 parsed), and an array of number pairs that each read as the start of an
-``N G R`` reference until the ``R`` is missing.  HTML shape: a paragraph
+``N G R`` reference until the ``R`` is missing.  HTML shapes: a paragraph
 of ``a.`` runs ending in an ``@`` with no domain (every start in the run
-once scanned to the same ``@``)."""
+once scanned to the same ``@``); a table of N cells the scanner's fast
+tier takes whole; the same table with each cell's close tag spoiled at
+its last byte (``</td `` , so the generic path takes every tag); one
+``<td>`` followed by N characters and no close; and N ``<td>`` opens
+with no close."""
 
 from __future__ import annotations
 
@@ -26,6 +30,7 @@ import time
 
 import pytest
 
+from pdf_extractor2_spark.plans import extract_job
 from pdf_extractor2_spark.plans.extract_job import _extract_one, _freeze_heap
 from pdf_extractor2_spark.sources.pdf_reader import PdfError, extract_pdf
 
@@ -83,6 +88,14 @@ def _stream_tables(n: int) -> bytes:
     return one_page(b"\n".join(ops))
 
 
+def _cells(n: int, close: bytes) -> bytes:
+    """A table of n cells, four to a row, each closed by ``close``."""
+    return b"<table>" + b"".join(
+        b"<tr>" + b"".join(b"<td>cell %d</td>" % (r * 4 + c) for c in range(4)).replace(b"</td>", close)
+        + b"</tr>" for r in range(n // 4)
+    ) + b"</table>"
+
+
 SHAPES = {
     # size is the grid side k: the payload grows with k * k
     "ruled-grid": (20, lambda k: one_page(ruled_grid(k)), 2),
@@ -94,6 +107,10 @@ SHAPES = {
     "unclosed-literal": (4000, lambda n: one_page(b"BT 1 0 0 1 40 800 Tm (" + b"abc def " * n + b" Tj ET"), 4),
     "long-number": (5000, lambda n: one_page(b"BT 1 " + b"7" * n + b".. Td ET"), 4),
     "email-run": (2000, lambda n: b"<p>" + b"a." * n + b"@</p>", 4),
+    "html-cells": (1000, lambda n: _cells(n, b"</td>"), 4),
+    "html-near-miss-cells": (1000, lambda n: _cells(n, b"</td "), 4),
+    "html-unclosed-cell": (20000, lambda n: b"<table><tr><td>" + b"abc def " * n, 4),
+    "html-unclosed-opens": (2000, lambda n: b"<table><tr>" + b"".join(b"<td>c%d " % i for i in range(n)), 4),
     # size is the table count: 800 -> 3,200 tables read 11x with a
     # pairwise duplicate check
     "stream-tables": (800, _stream_tables, 4),
@@ -102,9 +119,12 @@ SHAPES = {
 
 @pytest.fixture(scope="module", autouse=True)
 def worker_heap():
+    extract_job._heap_frozen = False  # freeze now, whatever ran before
     _freeze_heap()
+    assert gc.get_freeze_count() > 0
     yield
     gc.unfreeze()
+    extract_job._heap_frozen = False
 
 
 def _best_of_3(payload: bytes) -> float:

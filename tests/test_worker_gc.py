@@ -3,9 +3,10 @@
 A reused PySpark worker's daemon runs a full ``gc.collect()`` after
 every task.  The kernel collects and ``gc.freeze()``s once per worker
 process, so that collection skips the heap the worker had after its
-first task began.  It must freeze once, not per call, every task that
-runs the kernel must run frozen, and cyclic garbage made after the
-freeze must still be collected.
+first task began.  It must freeze once, not per call, a later call
+must not walk the frozen heap to find that out, every task that runs
+the kernel must run frozen, and cyclic garbage made after the freeze
+must still be collected.
 """
 
 from __future__ import annotations
@@ -35,9 +36,11 @@ def fresh_process_state(monkeypatch):
         real_freeze()
 
     gc.unfreeze()
+    extract_job._heap_frozen = False
     monkeypatch.setattr(gc, "freeze", counting_freeze)
     yield calls
     gc.unfreeze()
+    extract_job._heap_frozen = False
 
 
 def _batch(n: int) -> pd.DataFrame:
@@ -67,6 +70,29 @@ def test_freeze_once_and_cycles_still_collected(fresh_process_state, monkeypatch
     assert len(made) == 36
     gc.collect()
     assert all(ref() is None for ref in made)
+
+
+def test_later_calls_skip_the_heap_walk(fresh_process_state, monkeypatch):
+    """Only the first kernel call of a process collects, and none asks
+    gc.get_freeze_count(), which walks the whole permanent generation."""
+    list(extract_job.extraction_kernel([_batch(2)]))
+    assert len(fresh_process_state) == 1
+    walks = []
+
+    def counting(name):
+        real = getattr(gc, name)
+
+        def call(*args):
+            walks.append(name)
+            return real(*args)
+        return call
+
+    monkeypatch.setattr(gc, "get_freeze_count", counting("get_freeze_count"))
+    monkeypatch.setattr(gc, "collect", counting("collect"))
+    out = list(extract_job.extraction_kernel([_batch(2), _batch(3)]))
+    assert [len(df) for df in out] == [2, 3]
+    assert walks == []
+    assert len(fresh_process_state) == 1
 
 
 def test_every_kernel_task_runs_frozen(spark):
