@@ -81,7 +81,8 @@ def _collapse(s: str) -> str:
 def _keep_block(blocks: list[tuple[str, str]], kind: str, parts: list[str],
                 link_chars: int) -> None:
     """Keep a finished main-text candidate (outside boilerplate and
-    tables) as ``(kind, text)`` unless it is too short or mostly links."""
+    tables) as ``(kind, text)`` unless it is too short (empty included)
+    or mostly links."""
     text = _collapse(" ".join(parts))
     if len(text) >= _MIN_BLOCK_CHARS and not (
         link_chars / sum(map(len, parts)) > _LINK_DENSITY_MAX
@@ -123,7 +124,8 @@ def _scan(html: str) -> tuple[list[str], list[tuple[str, str]], list[Grid]]:
     table_stack: list[list[list[str]]] = []  # a stack: tables may nest
     row_stack: list[list[str]] = []
     # the open block: kind (None when there is none), text parts, link
-    # text length, and whether it is a main-text candidate
+    # text length, and whether it is a main-text candidate (never when
+    # no block is open)
     kind: str | None = None
     parts: list[str] = []
     link_chars = 0
@@ -161,9 +163,9 @@ def _scan(html: str) -> tuple[list[str], list[tuple[str, str]], list[Grid]]:
                     and not role_open.get("td")):
                 m = cell(html, lt)
                 if m:
-                    if kind is not None and parts and keep:
+                    if keep:
                         _keep_block(blocks, kind, parts, link_chars)
-                    kind = None
+                    kind, keep = None, False
                     data = m.group(1)
                     if "&" in data:
                         data = unescape(data)
@@ -224,9 +226,9 @@ def _scan(html: str) -> tuple[list[str], list[tuple[str, str]], list[Grid]]:
                     if rows:
                         tables.append(normalize_grid(rows))
                 if flags & _F_BLOCK:
-                    if kind is not None and parts and keep:
+                    if keep:
                         _keep_block(blocks, kind, parts, link_chars)
-                    kind = None
+                    kind, keep = None, False
                 continue
             # a bare tag, or m.end() == gt: no attribute text, so no role
             if bare is None and m.end() < gt and not flags & _F_BOILER:
@@ -253,7 +255,7 @@ def _scan(html: str) -> tuple[list[str], list[tuple[str, str]], list[Grid]]:
             if flags & _F_CELL and row_stack:
                 cell_depth += 1
             if flags & _F_BLOCK:
-                if kind is not None and parts and keep:
+                if keep:
                     _keep_block(blocks, kind, parts, link_chars)
                 kind = "heading" if flags & _F_HEADING else (
                     "table_field" if flags & _F_CELL else "paragraph"
@@ -289,7 +291,7 @@ def _scan(html: str) -> tuple[list[str], list[tuple[str, str]], list[Grid]]:
     except Exception:
         # malformed markup: keep whatever was assembled before the error
         pass
-    if kind is not None and parts and keep:
+    if keep:
         _keep_block(blocks, kind, parts, link_chars)
     return title_parts, blocks, tables
 
