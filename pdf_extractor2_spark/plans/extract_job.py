@@ -35,11 +35,12 @@ Scale notes (100 TB / 10^12 docs):
     collections walk only what later tasks allocate: a median 29 ms of
     CPU per task before, 0.33 ms after (4-core host, 1,200 PDFs, 8 tasks
     a pass).  Nothing is frozen per task, so a task's cyclic garbage is
-    still collected.  Whether the process has frozen is a module flag:
-    ``gc.get_freeze_count()``, which the guard asked on every task
-    before, walks the whole permanent generation (73,252 objects in a
-    perfbench worker: 7.7 ms of CPU and 16 ms of wall time per task,
-    median over 88 tasks);
+    still collected.  Whether the process has frozen is a module flag,
+    an O(1) test: ``gc.get_freeze_count()``, which the guard used to ask
+    on every task, counts by walking the whole permanent generation
+    (73,252 objects in a perfbench worker: a median 7.7 ms of CPU and
+    16 ms of wall time per task over 88 tasks; 2.2 ms of CPU for 73,142
+    objects in one process, 4-core host);
   * no driver-side collection anywhere, and no shuffle: the kernel runs
     straight on the scan splits, so the html payload never moves.
 """

@@ -60,6 +60,7 @@ CELLS = [
     "<td><!-- c -->{}</td>", "<td>{}<!-- c --></td>", "<td><a href=x>{}</a></td>",
     "<td>{}<a href=x>{}</a></td>", "<td>{}<td>{}</td>", "<td>{}</tdx>", "<tdx>{}</td>",
     "<td>{}</td>{}", "<td><p>{}</p></td>", "<td>{}<b>{}</b></td>", "<caption>{}</caption>",
+    "<td role=navigation>{}",
 ]
 
 STRUCTURE = [
@@ -73,6 +74,7 @@ CONTEXT = [
     "</div>", "<svg>", "</svg>", "<a href=x>", "</a>", "<p>", "</p>", "<h2>", "</h2>",
     "<li>", "<br>", "<!-- c -->", "<!doctype html>", "text between tags", " ", "\n",
     "<span>", "</span>", "<noscript>", "</noscript>", "<template>", "</template>",
+    "<style role=navigation>", "<div role=navigation>text in a role div</div>",
 ]
 
 
@@ -104,6 +106,7 @@ EDGE_CASES = [
     # the tag's form
     "<table><tr><TD>a b c</TD><Td>d e f</td></tr></table>",
     "<table><tr><td class=x>a b c</td><td role=navigation>nav cell</td><td>after</td></tr></table><p>body text</p>",
+    "<table><tr><td role=navigation>nav cell<td>closes the nav</td></tr></table><p>body text</p>",
     "<table><tr><td>a b c</td ><td>d</td></tr></table>",
     # cell contents
     "<table><tr><td>a &amp; b</td><td>x&#32;y</td><td>&#32;</td><td>&#1;</td></tr></table>",
@@ -120,6 +123,7 @@ EDGE_CASES = [
     # context
     "<title><table><tr><td>in the title</td></tr></table></title><p>body</p>",
     "<script><table><tr><td>in a script</td></tr></table></script><p>body</p>",
+    "<script role=navigation>var x = 1;</script><p>body text</p>",
     "<nav><table><tr><td>in the nav</td></tr></table></nav><p>body</p>",
     "<div role=navigation><table><tr><td>role nav</td></tr></table></div><td>after</td>",
     "<svg><table><tr><td>in an svg</td></tr></table></svg><p>body</p>",
