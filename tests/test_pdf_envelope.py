@@ -19,7 +19,7 @@ parsed), and an array of number pairs that each read as the start of an
 of ``a.`` runs ending in an ``@`` with no domain (every start in the run
 once scanned to the same ``@``); a table of N cells the scanner's fast
 tier takes whole; the same table with each cell's close tag spoiled at
-its last byte (``</td `` , so the generic path takes every tag); one
+its last byte (``</td ``, so the generic path takes every tag); one
 ``<td>`` followed by N characters and no close; and N ``<td>`` opens
 with no close."""
 
@@ -90,10 +90,9 @@ def _stream_tables(n: int) -> bytes:
 
 def _cells(n: int, close: bytes) -> bytes:
     """A table of n cells, four to a row, each closed by ``close``."""
-    return b"<table>" + b"".join(
-        b"<tr>" + b"".join(b"<td>cell %d</td>" % (r * 4 + c) for c in range(4)).replace(b"</td>", close)
-        + b"</tr>" for r in range(n // 4)
-    ) + b"</table>"
+    rows = (b"<tr>" + b"".join(b"<td>cell %d%s" % (r * 4 + c, close) for c in range(4)) + b"</tr>"
+            for r in range(n // 4))
+    return b"<table>" + b"".join(rows) + b"</table>"
 
 
 SHAPES = {
