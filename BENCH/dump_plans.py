@@ -1,48 +1,67 @@
-"""Dump ``explain("formatted")`` for every benched query to
-``plans/r06/<query>_<tag>.txt``, a git-ignored directory (guide §1:
-capture the plan shape — Exchange count, join strategy,
-PushedFilters/ReadSchema, codegen spans — before and after each
-optimization).
+"""Dump every graded row's static plan and oracle text into
+``plans/<tag>/``, a git-ignored directory: ``<query>.txt`` holds
+``explain("formatted")`` with adaptive execution off, the ``#NNN``
+expression ids (and ``plan_id=NNN`` exchange ids) numbered from zero and
+the checkout's own path (the IVF index lives under it) as ``<repo>``;
+``<query>.sql`` holds the row's ``oracle_sql()`` text.  A change that
+claims "same plans, same SQL" shows it as one ``diff -r plans/before
+plans/after`` between dumps of the two trees on the same data.
 
 Usage: PYTHONHASHSEED=0 python BENCH/dump_plans.py <tag> [query ...]
-  tag      'before' or 'after' (file suffix)
-  query    optional subset; default = every query in bench.GENERIC_QUERIES
-           plus extract_pipeline
+  tag      directory name under plans/, e.g. 'before' or 'after'
+  query    optional subset; default = all queries() rows
+The data directory is ``$SPARK_GRAFT_SF_DIR`` (default: bench.py's).
 """
 
 from __future__ import annotations
 
 import os
+import re
 import sys
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 import bench  # noqa: E402
 import __spark_entry__ as em  # noqa: E402
 from pdf_extractor2_spark.session import get_spark  # noqa: E402
 
+_IDS = re.compile(r"(#|plan_id=)(\d+)")
+
+
+def normalise(plan: str) -> str:
+    """Renumber expression and exchange ids in order of first use and
+    drop the checkout path, so two dumps differ only where the plans do."""
+    seen: dict[tuple[str, str], int] = {}
+
+    def sub(m: re.Match) -> str:
+        key = (m.group(1), m.group(2))
+        return f"{m.group(1)}{seen.setdefault(key, len(seen))}"
+
+    return _IDS.sub(sub, plan.replace(REPO, "<repo>"))
+
 
 def main() -> None:
     tag = sys.argv[1] if len(sys.argv) > 1 else "before"
-    subset = sys.argv[2:] or bench.GENERIC_QUERIES + ["extract_pipeline"]
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    out_dir = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-        "plans", "r06",
-    )
+    queries, oracle = em.queries(), em.oracle_sql()
+    subset = sys.argv[2:] or list(queries)
+    out_dir = os.path.join(REPO, "plans", tag)
     os.makedirs(out_dir, exist_ok=True)
     spark = get_spark(app_name="pex2-plan-dump")
-    queries = em.queries()
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
     for name in subset:
         spark.sparkContext.setJobDescription(f"plan-dump: {name}")
-        df = queries[name](spark, sf_dir)
+        df = queries[name](spark, bench.DEFAULT_SF_DIR)
         plan = df._sc._jvm.PythonSQLUtils.explainString(
             df._jdf.queryExecution(), "formatted"
         )
-        path = os.path.join(out_dir, f"{name}_{tag}.txt")
-        with open(path, "w") as f:
-            f.write(plan)
-        print(f"wrote {path} ({len(plan)} bytes)")
+        with open(os.path.join(out_dir, f"{name}.txt"), "w") as f:
+            f.write(normalise(plan))
+        if name in oracle:
+            with open(os.path.join(out_dir, f"{name}.sql"), "w") as f:
+                f.write(oracle[name])
+        print(f"{name}: {len(plan)} plan bytes", flush=True)
+    spark.stop()
 
 
 if __name__ == "__main__":

@@ -87,7 +87,7 @@ _TOKS_EXPR = "split(text, ' ')"
 # textstats._docs_nn/_BASE_SQL
 _TOKS_NN_EXPR = "split(coalesce(text, ''), ' ')"
 _TOKS_NN_SQL = (
-    "SELECT doc_id, string_split(coalesce(text, ''), ' ') AS t FROM {table}"
+    "SELECT doc_id, string_split(coalesce(text, ''), ' ') AS t FROM documents"
 )
 
 
@@ -632,12 +632,11 @@ def dedup_groups(spark: SparkSession, sf_dir: str,
         free_pending()
 
 
-def dedup_groups_sql(table: str = "documents",
-                     threshold: float = JACCARD_FLOOR) -> str:
+def dedup_groups_sql(threshold: float = JACCARD_FLOOR) -> str:
     """Recursive-CTE transitive closure, min per reachable set — the
     exact fixpoint the propagation loop converges to."""
     return f"""
-        WITH RECURSIVE {_ids_sql(table)},
+        WITH RECURSIVE {_ids_sql()},
         {_jaccard_sql_ctes(threshold)},
         edges AS (SELECT doc_a AS s, doc_b AS d FROM pairs
                   UNION ALL SELECT doc_b, doc_a FROM pairs),
@@ -654,9 +653,9 @@ def dedup_groups_sql(table: str = "documents",
 # DuckDB oracle texts (constants inlined so both engines share arithmetic)
 # ---------------------------------------------------------------------------
 
-def exact_dedup_summary_sql(table: str = "documents") -> str:
-    return f"""
-        WITH g AS (SELECT md5(text) AS digest, COUNT(*) AS n FROM {table} GROUP BY 1)
+def exact_dedup_summary_sql() -> str:
+    return """
+        WITH g AS (SELECT md5(text) AS digest, COUNT(*) AS n FROM documents GROUP BY 1)
         SELECT CAST(SUM(n) AS BIGINT) AS n_docs,
                COUNT(*) AS n_distinct_texts,
                CAST(SUM(n - 1) AS BIGINT) AS n_dup_docs,
@@ -674,11 +673,11 @@ def _sids_sql_ctes(k: int) -> str:
         ids AS (SELECT doc_id, {_SID_SQL} AS sid FROM ex)"""
 
 
-def _ids_sql(table: str) -> str:
-    """WITH-list fragment: ``toks`` over every row of ``table``, then
+def _ids_sql() -> str:
+    """WITH-list fragment: ``toks`` over every row of ``documents``, then
     ``_sids_sql_ctes`` (the ``_with_shingle_ids`` twin)."""
     return f"""
-        toks AS (SELECT doc_id, string_split(text, ' ') AS t FROM {table}),
+        toks AS (SELECT doc_id, string_split(text, ' ') AS t FROM documents),
         {_sids_sql_ctes(SHINGLE_K)}"""
 
 
@@ -703,16 +702,15 @@ def _jaccard_sql_ctes(threshold: float) -> str:
           WHERE {jac} >= {threshold})"""
 
 
-def jaccard_pairs_sql(table: str = "documents",
-                      threshold: float = JACCARD_FLOOR) -> str:
+def jaccard_pairs_sql(threshold: float = JACCARD_FLOOR) -> str:
     return f"""
-        WITH {_ids_sql(table)},
+        WITH {_ids_sql()},
         {_jaccard_sql_ctes(threshold)}
         SELECT doc_a, doc_b, jaccard FROM pairs
     """
 
 
-def minhash_lsh_pairs_sql(table: str = "documents") -> str:
+def minhash_lsh_pairs_sql() -> str:
     mins = ",\n".join(
         f"MIN(({HASH_A[i]} * (sid % {P31}) + {HASH_B[i]}) % {P31}) AS m{i}"
         for i in range(N_HASHES)
@@ -728,7 +726,7 @@ def minhash_lsh_pairs_sql(table: str = "documents") -> str:
         for j in range(N_BANDS)
     )
     return f"""
-        WITH {_ids_sql(table)},
+        WITH {_ids_sql()},
         sig AS (SELECT doc_id, {mins} FROM ids GROUP BY doc_id),
         bands AS ({band_selects})
         SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, CAST(COUNT(*) AS BIGINT) AS n_bands
@@ -738,13 +736,13 @@ def minhash_lsh_pairs_sql(table: str = "documents") -> str:
     """
 
 
-def simhash_sql(table: str = "documents") -> str:
+def simhash_sql() -> str:
     sums = ",\n".join(
         f"SUM(((h >> {k}) & 1) * 2 - 1) AS s{k}" for k in range(16)
     )
     sig = " + ".join(f"CASE WHEN s{k} >= 0 THEN {2**k} ELSE 0 END" for k in range(16))
     return f"""
-        WITH {_ids_sql(table)},
+        WITH {_ids_sql()},
         hs AS (SELECT doc_id, ({HASH_A[0]} * (sid % {P31}) + {HASH_B[0]}) % {P31} AS h FROM ids),
         bits AS (SELECT doc_id, {sums} FROM hs GROUP BY doc_id)
         SELECT doc_id, CAST({sig} AS BIGINT) AS simhash FROM bits
@@ -902,9 +900,9 @@ def training_corpus_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _tcf_kept_sql_ctes(table: str = "documents") -> str:
+def _tcf_kept_sql_ctes() -> str:
     """Stages 1-4 of ``training_corpus_filter`` as a WITH-list fragment
-    over ``table``: ``exact_kept`` (stage 2), ``near_dropped`` (stage 3,
+    over ``documents``: ``exact_kept`` (stage 2), ``near_dropped`` (stage 3,
     the ``doc_b`` side of ``_jaccard_sql_ctes``' pairs) and
     ``ppx_banded`` (stage 4's scores), ending with
     ``tcf_kept(doc_id, n_exact_dups, log_ppx, ppx_band)``."""
@@ -913,7 +911,7 @@ def _tcf_kept_sql_ctes(table: str = "documents") -> str:
     )
 
     return f"""
-        base AS ({_BASE_SQL.format(table=table)}),
+        base AS ({_BASE_SQL}),
         quality AS (
           SELECT doc_id, text, t FROM base
           WHERE length(text) >= 200 AND len(t) >= 40),
@@ -936,14 +934,14 @@ def _tcf_kept_sql_ctes(table: str = "documents") -> str:
             AND p.ppx_band <> 'tail')"""
 
 
-def training_corpus_filter_sql(table: str = "documents") -> str:
+def training_corpus_filter_sql() -> str:
     from .similarity import _semdedup_parts_sql_ctes
 
     # stage 5 (survivor-aware, mirrors the Spark plan): a kept doc is
     # dropped only when some LOWER-id KEPT doc shares a prune pair
     return f"""
-        WITH {_tcf_kept_sql_ctes(table)},
-        {_semdedup_parts_sql_ctes("embeddings")},
+        WITH {_tcf_kept_sql_ctes()},
+        {_semdedup_parts_sql_ctes()},
         sd_drop AS (
           SELECT DISTINCT p.vec_b AS doc_id FROM sd_pairs p
           WHERE p.vec_a IN (SELECT doc_id FROM tcf_kept))
@@ -1150,12 +1148,12 @@ def _trim_sql_ctes() -> str:
                      FROM toks b LEFT JOIN tw_kept w USING (doc_id))"""
 
 
-def duplicate_span_stats_sql(table: str = "documents") -> str:
+def duplicate_span_stats_sql() -> str:
     frac = round_half_up_expr("CAST(n_dup_spans AS DOUBLE) / n_spans", 6)
     # the stats columns derive from the SAME window stream as the trim
     # (tw_ds / tw_dup), mirroring the shared Spark plan
     return f"""
-        WITH toks AS ({_TOKS_NN_SQL.format(table=table)}),
+        WITH toks AS ({_TOKS_NN_SQL}),
         {_trim_sql_ctes()},
         sp_per AS (SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS n_spans
                    FROM tw_ds GROUP BY 1),

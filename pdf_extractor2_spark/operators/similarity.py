@@ -23,6 +23,14 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from .dedup import round_half_up_expr
 
+# The graded rows' values, each read by a Spark function and its DuckDB twin.
+QUERY_VEC_ID = 0       # the query of ann_cosine_topk and ann_ivf
+COSINE_TOPK_K = 10
+IVF_TOPK_K = 5
+KNN_QUERIES = 10       # ann_knn_join: the query set is the lowest vec_ids
+KNN_K = 5
+KNN_BUCKETS = 32       # ann_knn_join: phase-1 buckets per query
+
 
 def _r6(x: str) -> str:
     """Round-half-up to 6 decimals (one flipped 6th-decimal centroid
@@ -62,9 +70,9 @@ def _emb(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spark.read.parquet(f"{sf_dir}/embeddings.parquet")
 
 
-def _with_query(spark: SparkSession, sf_dir: str, query_vec_id: int) -> DataFrame:
+def _with_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = _emb(spark, sf_dir)
-    q = emb.where(F.col("vec_id") == query_vec_id).select(
+    q = emb.where(F.col("vec_id") == QUERY_VEC_ID).select(
         F.col("embedding").alias("q"), F.col("label").alias("q_label"),
         F.expr(_NRM_EXPR).alias("qn"),  # query norm: once, not per row
     )
@@ -79,16 +87,14 @@ def _cosine(df: DataFrame) -> DataFrame:
     )
 
 
-def ann_cosine_topk(
-    spark: SparkSession, sf_dir: str, query_vec_id: int = 0, k: int = 10
-) -> DataFrame:
+def ann_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact brute-force cosine top-k against one query vector."""
     return (
-        _cosine(_with_query(spark, sf_dir, query_vec_id))
-        .where(F.col("vec_id") != query_vec_id)
+        _cosine(_with_query(spark, sf_dir))
+        .where(F.col("vec_id") != QUERY_VEC_ID)
         .select("vec_id", "label", "cos_sim")
         .orderBy(F.desc("cos_sim"), F.asc("vec_id"))
-        .limit(k)
+        .limit(COSINE_TOPK_K)
     )
 
 
@@ -131,10 +137,8 @@ def _assign_cells(emb: DataFrame, cents: DataFrame) -> DataFrame:
     )
 
 
-def _ivf_model(
-    spark: SparkSession, sf_dir: str, n_cells: int = N_IVF_CELLS
-) -> tuple[DataFrame, DataFrame]:
-    return _ivf_model_from(_emb(spark, sf_dir), n_cells)
+def _ivf_model(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]:
+    return _ivf_model_from(_emb(spark, sf_dir))
 
 
 def _ivf_model_from(
@@ -179,19 +183,17 @@ def _ivf_model_from(
     return _assign_cells(emb, cents), cents
 
 
-def build_ivf_index(
-    spark: SparkSession, sf_dir: str, n_cells: int = N_IVF_CELLS
-) -> str:
+def build_ivf_index(spark: SparkSession, sf_dir: str) -> str:
     """Write embeddings PARTITIONED BY the quantizer cell — the storage
     layout that lets a query scan only its probe cells (partition
     pruning), which is what makes IVF a *pruned-scan* structure rather
     than a full-scan filter — plus the centroid table next to it (the
     probe-ranking model).  Idempotent per (dataset CONTENT, quantizer
-    version, n_cells): the cache key fingerprints the source file's
+    version, N_IVF_CELLS): the cache key fingerprints the source file's
     mtime_ns+size (nanosecond mtime — an in-place same-size rewrite
     within one second cannot serve a stale index) and the quantizer code
     version.  Before a rebuild, stale entries for the same (dataset,
-    n_cells) — older fingerprints and older quantizer versions — are
+    N_IVF_CELLS) — older fingerprints and older quantizer versions — are
     pruned, so the cache never accumulates unboundedly."""
     import os
     import shutil
@@ -201,15 +203,15 @@ def build_ivf_index(
     fingerprint = f"{st.st_mtime_ns}_{st.st_size}"
     key = sf_dir.strip("/").replace("/", "_")
     root = _ivf_index_root()
-    entry = f"{key}_c{n_cells}_v{_IVF_VERSION}_{fingerprint}"
+    entry = f"{key}_c{N_IVF_CELLS}_v{_IVF_VERSION}_{fingerprint}"
     path = os.path.join(root, entry)
     if not os.path.exists(f"{path}/_SUCCESS"):
         if os.path.isdir(root):
-            stale_prefix = f"{key}_c{n_cells}_"
+            stale_prefix = f"{key}_c{N_IVF_CELLS}_"
             for name in os.listdir(root):
                 if name.startswith(stale_prefix) and not name.startswith(entry):
                     shutil.rmtree(os.path.join(root, name), ignore_errors=True)
-        cells, cents = _ivf_model(spark, sf_dir, n_cells)
+        cells, cents = _ivf_model(spark, sf_dir)
         cents.write.mode("overwrite").parquet(f"{path}_centroids")
         (
             _emb(spark, sf_dir).join(cells, "vec_id")
@@ -218,21 +220,18 @@ def build_ivf_index(
     return path
 
 
-def ann_ivf_topk(
-    spark: SparkSession, sf_dir: str, query_vec_id: int = 0, k: int = 5,
-    n_cells: int = N_IVF_CELLS, n_probe: int = 1,
-) -> DataFrame:
+def ann_ivf_topk(spark: SparkSession, sf_dir: str, n_probe: int = 1) -> DataFrame:
     """IVF search: rank cells by centroid distance to the query, read
     ONLY the top ``n_probe`` cell partitions from the cell-partitioned
     index (the scan's PartitionFilters prune every other cell) → exact
     cosine top-k inside the probed cells.  ``n_probe`` is the
-    recall/cost knob (n_probe == n_cells ⇒ exact brute force).  The
+    recall/cost knob (n_probe == N_IVF_CELLS ⇒ exact brute force).  The
     only driver-side values are the probe cell ids — O(n_probe) query
     parameters, like the query vector itself."""
-    path = build_ivf_index(spark, sf_dir, n_cells)
+    path = build_ivf_index(spark, sf_dir)
     idx = spark.read.parquet(path)
     q = (
-        idx.where(F.col("vec_id") == query_vec_id)
+        idx.where(F.col("vec_id") == QUERY_VEC_ID)
         .select(F.col("embedding").alias("q"), F.expr(_NRM_EXPR).alias("qn"))
     )
 
@@ -254,15 +253,14 @@ def ann_ivf_topk(
     return (
         cell_rows.crossJoin(F.broadcast(q))
         .withColumn("cos_sim", F.expr(_r4(f"({dot}) / (sqrt({na}) * qn)")))
-        .where(F.col("vec_id") != query_vec_id)
+        .where(F.col("vec_id") != QUERY_VEC_ID)
         .select("vec_id", F.col("cell").cast("int").alias("cell"), "cos_sim")
         .orderBy(F.desc("cos_sim"), F.asc("vec_id"))
-        .limit(k)
+        .limit(IVF_TOPK_K)
     )
 
 
-def ann_ivf(spark: SparkSession, sf_dir: str, query_vec_id: int = 0,
-            k: int = 5) -> DataFrame:
+def ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The IVF search at BOTH probe settings as one driver row —
     ``n_probe`` is the recall/cost knob, and grading the two settings
     together pins that widening the probe set genuinely changes (and
@@ -270,12 +268,8 @@ def ann_ivf(spark: SparkSession, sf_dir: str, query_vec_id: int = 0,
     same cached cell-partitioned index (``build_ivf_index`` is
     idempotent per dataset fingerprint), so the union costs one index
     build + two pruned scans."""
-    a = ann_ivf_topk(
-        spark, sf_dir, query_vec_id=query_vec_id, k=k, n_probe=1
-    ).withColumn("n_probe", F.lit(1))
-    b = ann_ivf_topk(
-        spark, sf_dir, query_vec_id=query_vec_id, k=k, n_probe=3
-    ).withColumn("n_probe", F.lit(3))
+    a = ann_ivf_topk(spark, sf_dir, n_probe=1).withColumn("n_probe", F.lit(1))
+    b = ann_ivf_topk(spark, sf_dir, n_probe=3).withColumn("n_probe", F.lit(3))
     return a.unionByName(b)
 
 
@@ -530,13 +524,13 @@ def embedding_near_dup_labeled(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def embedding_near_dup_pairs_sql(table: str = "embeddings") -> str:
+def embedding_near_dup_pairs_sql() -> str:
     band_selects = "\nUNION ALL\n".join(
         f"""SELECT vec_id, {j} AS band,
                list_aggregate([CASE WHEN embedding[i] >= 0 THEN '1' ELSE '0' END
                                for i in generate_series({j * BAND_DIMS + 1}, {(j + 1) * BAND_DIMS})],
                               'string_agg', '') AS key
-            FROM {table}"""
+            FROM embeddings"""
         for j in range(N_SIG_BANDS)
     )
     dot = _DOT_SQL.format(a="ea.embedding", b="eb.embedding")
@@ -559,8 +553,8 @@ def embedding_near_dup_pairs_sql(table: str = "embeddings") -> str:
         SELECT vec_a, vec_b,
                {_r4(f"({dot}) / (sqrt({na}) * sqrt({nb}))")} AS cos_sim
         FROM cand
-        JOIN {table} ea ON ea.vec_id = vec_a
-        JOIN {table} eb ON eb.vec_id = vec_b
+        JOIN embeddings ea ON ea.vec_id = vec_a
+        JOIN embeddings eb ON eb.vec_id = vec_b
         WHERE {_r4(f"({dot}) / (sqrt({na}) * sqrt({nb}))")} >= {NEAR_DUP_COS}
     """
 
@@ -572,29 +566,29 @@ def embedding_near_dup_pairs_sql(table: str = "embeddings") -> str:
 _DOT_SQL = "list_dot_product(CAST({a} AS DOUBLE[]), CAST({b} AS DOUBLE[]))"
 
 
-def _cos_sql(table: str, query_vec_id: int) -> str:
+def _cos_sql() -> str:
     dot = _DOT_SQL.format(a="e.embedding", b="q.embedding")
     na = _DOT_SQL.format(a="e.embedding", b="e.embedding")
     nb = _DOT_SQL.format(a="q.embedding", b="q.embedding")
     return f"""
-        WITH q AS (SELECT embedding, label FROM {table} WHERE vec_id = {query_vec_id}),
+        WITH q AS (SELECT embedding, label FROM embeddings WHERE vec_id = {QUERY_VEC_ID}),
         scored AS (
           SELECT e.vec_id, e.label, q.label AS q_label,
                  {_r4(f"({dot}) / (sqrt({na}) * sqrt({nb}))")} AS cos_sim
-          FROM {table} e, q)
+          FROM embeddings e, q)
     """
 
 
-def ann_cosine_topk_sql(table: str = "embeddings", query_vec_id: int = 0, k: int = 10) -> str:
+def ann_cosine_topk_sql() -> str:
     return f"""
-        {_cos_sql(table, query_vec_id)}
+        {_cos_sql()}
         SELECT vec_id, label, cos_sim FROM scored
-        WHERE vec_id != {query_vec_id}
-        ORDER BY cos_sim DESC, vec_id ASC LIMIT {k}
+        WHERE vec_id != {QUERY_VEC_ID}
+        ORDER BY cos_sim DESC, vec_id ASC LIMIT {COSINE_TOPK_K}
     """
 
 
-def _ivf_model_ctes_sql(table: str, n_cells: int, dims: int) -> str:
+def _ivf_model_ctes_sql() -> str:
     """The deterministic one-Lloyd-step quantizer as a CTE chain (ends
     at ``a2`` = final (vec_id, cell) and ``cvecs`` = final centroids —
     stable names every composer references), shared by the IVF search
@@ -614,23 +608,20 @@ def _ivf_model_ctes_sql(table: str, n_cells: int, dims: int) -> str:
                  FROM (SELECT vec_id, cell, {score} AS score
                        FROM e CROSS JOIN {cents})) WHERE rn = 1)"""
 
-    return f"""e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM {table}),
+    return f"""e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
         it_seeds AS (SELECT CAST(vec_id AS INT) AS cell, v AS cvec FROM e
-                     WHERE vec_id < {n_cells}),
+                     WHERE vec_id < {N_IVF_CELLS}),
         it_a AS {nearest("it_seeds")},
         it_cent AS (SELECT cell, i, {_r6('AVG(v[i])')} AS cval
                  FROM it_a JOIN e USING (vec_id)
-                 CROSS JOIN generate_series(1, {dims}) t(i)
+                 CROSS JOIN generate_series(1, {EMB_DIMS}) t(i)
                  GROUP BY cell, i),
         cvecs AS (SELECT cell, list(cval ORDER BY i) AS cvec
                   FROM it_cent GROUP BY cell),
         a2 AS {nearest("cvecs")}"""
 
 
-def _semdedup_parts_sql_ctes(table: str = "embeddings",
-                             tau: float = SEMDEDUP_TAU,
-                             n_cells: int = N_IVF_CELLS,
-                             dims: int = EMB_DIMS) -> str:
+def _semdedup_parts_sql_ctes() -> str:
     """Quantizer CTEs + the distinct within-cell prune-candidate pairs
     (``sd_pairs``) — the SQL twin of ``_semdedup_parts_from``, composed
     by both the standalone verdict oracle and the corpus filter's
@@ -640,21 +631,20 @@ def _semdedup_parts_sql_ctes(table: str = "embeddings",
         " / (sqrt(list_dot_product(x.v, x.v))"
         " * sqrt(list_dot_product(y.v, y.v)))"
     )
-    return f"""{_ivf_model_ctes_sql(table, n_cells, dims)},
+    return f"""{_ivf_model_ctes_sql()},
         sda AS (SELECT a2.vec_id, a2.cell, e.v FROM a2 JOIN e USING (vec_id)),
         sd_pairs AS (
           SELECT DISTINCT x.vec_id AS vec_a, y.vec_id AS vec_b
           FROM sda x JOIN sda y ON x.cell = y.cell AND x.vec_id < y.vec_id
-          WHERE {cos} >= {tau})"""
+          WHERE {cos} >= {SEMDEDUP_TAU})"""
 
 
-def semdedup_sql(table: str = "embeddings", tau: float = SEMDEDUP_TAU,
-                 n_cells: int = N_IVF_CELLS, dims: int = EMB_DIMS) -> str:
+def semdedup_sql() -> str:
     """DuckDB twin of ``_semdedup_from``: identical quantizer CTEs
     (``_ivf_model_ctes_sql``), identical rounded-cosine prune predicate,
     identical lowest-id-wins keep rule."""
     return f"""
-        WITH {_semdedup_parts_sql_ctes(table, tau, n_cells, dims)},
+        WITH {_semdedup_parts_sql_ctes()},
         sdpruned AS (SELECT DISTINCT vec_b AS vec_id FROM sd_pairs)
         SELECT a2.vec_id, a2.cell,
                CASE WHEN p.vec_id IS NULL THEN 1 ELSE 0 END AS sd_keep
@@ -662,16 +652,14 @@ def semdedup_sql(table: str = "embeddings", tau: float = SEMDEDUP_TAU,
     """
 
 
-def ann_ivf_topk_sql(table: str = "embeddings", query_vec_id: int = 0, k: int = 5,
-                     n_cells: int = N_IVF_CELLS, dims: int = EMB_DIMS,
-                     n_probe: int = 1) -> str:
+def ann_ivf_topk_sql(n_probe: int) -> str:
     """Mirrors the deterministic one-Lloyd-step quantizer exactly (CTE
     chain shared with the SemDeDup oracle) plus the probe-cell ranking —
     so the cell partitioning (and therefore the pruned search result)
     is identical across engines."""
     return f"""
-        WITH {_ivf_model_ctes_sql(table, n_cells, dims)},
-        q AS (SELECT v AS qv FROM e WHERE vec_id = {query_vec_id}),
+        WITH {_ivf_model_ctes_sql()},
+        q AS (SELECT v AS qv FROM e WHERE vec_id = {QUERY_VEC_ID}),
         probe AS (SELECT cell FROM (
                     SELECT c.cell,
                            {_r6('list_dot_product(c.cvec, c.cvec) - 2 * list_dot_product(q.qv, c.cvec)')} AS score
@@ -682,32 +670,31 @@ def ann_ivf_topk_sql(table: str = "embeddings", query_vec_id: int = 0, k: int = 
                     " / (sqrt(list_dot_product(e.v, e.v))"
                     " * sqrt(list_dot_product(q.qv, q.qv)))")} AS cos_sim
         FROM e JOIN a2 USING (vec_id) CROSS JOIN q
-        WHERE a2.cell IN (SELECT cell FROM probe) AND e.vec_id != {query_vec_id}
-        ORDER BY cos_sim DESC, vec_id ASC LIMIT {k}
+        WHERE a2.cell IN (SELECT cell FROM probe) AND e.vec_id != {QUERY_VEC_ID}
+        ORDER BY cos_sim DESC, vec_id ASC LIMIT {IVF_TOPK_K}
     """
 
 
-def ann_ivf_sql(table: str = "embeddings", query_vec_id: int = 0,
-                k: int = 5) -> str:
+def ann_ivf_sql() -> str:
     return f"""
         SELECT CAST(1 AS INTEGER) AS n_probe, s.* FROM (
-          {ann_ivf_topk_sql(table, query_vec_id, k, n_probe=1)}
+          {ann_ivf_topk_sql(n_probe=1)}
         ) s
         UNION ALL
         SELECT CAST(3 AS INTEGER) AS n_probe, s.* FROM (
-          {ann_ivf_topk_sql(table, query_vec_id, k, n_probe=3)}
+          {ann_ivf_topk_sql(n_probe=3)}
         ) s
     """
 
 
-def embedding_near_dup_labeled_sql(table: str = "embeddings") -> str:
-    pairs = embedding_near_dup_pairs_sql(table)
-    norms = label_centroid_norms_sql(table)
+def embedding_near_dup_labeled_sql() -> str:
+    pairs = embedding_near_dup_pairs_sql()
+    norms = label_centroid_norms_sql()
     # sd bound ONCE as a named CTE — inlining the derived table twice
     # would make DuckDB evaluate the quantizer + quadratic prune twice
     # (no CSE across derived tables)
     return f"""
-        WITH sd AS ({semdedup_sql(table)})
+        WITH sd AS ({semdedup_sql()})
         SELECT p.vec_a, p.vec_b, p.cos_sim,
                la.label AS label_a, lb.label AS label_b,
                na.n_vecs AS n_vecs_a, na.mean_norm AS mean_norm_a,
@@ -715,8 +702,8 @@ def embedding_near_dup_labeled_sql(table: str = "embeddings") -> str:
                sa.cell AS cell_a, sa.sd_keep AS sd_keep_a,
                sb.cell AS cell_b, sb.sd_keep AS sd_keep_b
         FROM ({pairs}) p
-        JOIN {table} la ON la.vec_id = p.vec_a
-        JOIN {table} lb ON lb.vec_id = p.vec_b
+        JOIN embeddings la ON la.vec_id = p.vec_a
+        JOIN embeddings lb ON lb.vec_id = p.vec_b
         JOIN ({norms}) na ON na.label = la.label
         JOIN ({norms}) nb ON nb.label = lb.label
         JOIN sd sa ON sa.vec_id = p.vec_a
@@ -724,28 +711,26 @@ def embedding_near_dup_labeled_sql(table: str = "embeddings") -> str:
     """
 
 
-def label_centroid_norms_sql(table: str = "embeddings") -> str:
+def label_centroid_norms_sql() -> str:
     norm = _DOT_SQL.format(a="embedding", b="embedding")
     return f"""
         SELECT label, COUNT(*) AS n_vecs,
                {_r4(f"AVG(sqrt({norm}))")} AS mean_norm
-        FROM {table} GROUP BY label
+        FROM embeddings GROUP BY label
     """
 
 
-def ann_knn_join(spark: SparkSession, sf_dir: str,
-                 n_queries: int = 10, k: int = 5,
-                 n_buckets: int = 32) -> DataFrame:
-    """Batch KNN join: the top-k cosine neighbors for EVERY query in a
-    query set (here the ``n_queries`` lowest vec_ids), as ONE plan —
+def ann_knn_join(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Batch KNN join: the top-``KNN_K`` cosine neighbors for EVERY query
+    in a query set (here the ``KNN_QUERIES`` lowest vec_ids), as ONE plan —
     similarity search as a relational join, not a per-query loop.
 
     Skew-safe hierarchical top-k instead of a per-query window: a
     window/sort partitioned by q_id would sort all n corpus rows on one
-    reducer per query.  Phase 1 groups by (q_id, vec_id % n_buckets)
+    reducer per query.  Phase 1 groups by (q_id, vec_id % KNN_BUCKETS)
     and keeps each bucket's top-k as a bounded sorted array (collect
-    input per key is n/n_buckets rows — the knob that bounds reducer
-    memory); phase 2 merges n_buckets arrays of ≤k per query (bounded)
+    input per key is n/KNN_BUCKETS rows — the knob that bounds reducer
+    memory); phase 2 merges KNN_BUCKETS arrays of ≤k per query (bounded)
     and explodes the final ranking.  Struct sort key (-cos, vec_id)
     gives cosine-descending with deterministic tie-break in both
     phases.  The query set rides as a broadcast; dot products are the
@@ -753,7 +738,7 @@ def ann_knn_join(spark: SparkSession, sf_dir: str,
     row_number window — same result, different physical plan) hashes
     identically."""
     emb = _emb(spark, sf_dir)
-    q = emb.where(F.col("vec_id") < n_queries).select(
+    q = emb.where(F.col("vec_id") < KNN_QUERIES).select(
         F.col("vec_id").alias("q_id"), F.col("embedding").alias("q"),
         F.expr(_NRM_EXPR).alias("qn"),  # query norms: once per query
     )
@@ -775,11 +760,11 @@ def ann_knn_join(spark: SparkSession, sf_dir: str,
         )
     )
     part = (
-        scored.groupBy("q_id", (F.col("vec_id") % F.lit(n_buckets)).alias("b"))
+        scored.groupBy("q_id", (F.col("vec_id") % F.lit(KNN_BUCKETS)).alias("b"))
         .agg(
             F.expr(
                 f"slice(array_sort(collect_list(named_struct("
-                f"'nc', -cos_sim, 'vec_id', vec_id))), 1, {k})"
+                f"'nc', -cos_sim, 'vec_id', vec_id))), 1, {KNN_K})"
             ).alias("topk")
         )
     )
@@ -787,7 +772,7 @@ def ann_knn_join(spark: SparkSession, sf_dir: str,
         part.groupBy("q_id")
         .agg(
             F.expr(
-                f"slice(array_sort(flatten(collect_list(topk))), 1, {k})"
+                f"slice(array_sort(flatten(collect_list(topk))), 1, {KNN_K})"
             ).alias("topk")
         )
         .select("q_id", F.posexplode("topk").alias("pos", "s"))
@@ -800,8 +785,7 @@ def ann_knn_join(spark: SparkSession, sf_dir: str,
     )
 
 
-def ann_knn_join_sql(table: str = "embeddings", n_queries: int = 10,
-                     k: int = 5) -> str:
+def ann_knn_join_sql() -> str:
     dot = _DOT_SQL.format(a="e.embedding", b="q.embedding")
     na = _DOT_SQL.format(a="e.embedding", b="e.embedding")
     nb = _DOT_SQL.format(a="q.embedding", b="q.embedding")
@@ -810,12 +794,12 @@ def ann_knn_join_sql(table: str = "embeddings", n_queries: int = 10,
         WITH scored AS (
           SELECT q.vec_id AS q_id, e.vec_id,
                  {cos} AS cos_sim
-          FROM {table} e JOIN {table} q
-            ON q.vec_id < {n_queries} AND e.vec_id != q.vec_id),
+          FROM embeddings e JOIN embeddings q
+            ON q.vec_id < {KNN_QUERIES} AND e.vec_id != q.vec_id),
         ranked AS (
           SELECT q_id, vec_id, cos_sim,
                  CAST(row_number() OVER (PARTITION BY q_id
                       ORDER BY cos_sim DESC, vec_id ASC) AS INTEGER) AS rank
           FROM scored)
-        SELECT q_id, rank, vec_id, cos_sim FROM ranked WHERE rank <= {k}
+        SELECT q_id, rank, vec_id, cos_sim FROM ranked WHERE rank <= {KNN_K}
     """

@@ -17,6 +17,8 @@ from .dedup import round_half_up_expr
 MOD = 1_000_000_007
 P56 = 72_057_594_037_927_931  # shared 56-bit fold modulus (operators/dedup.py)
 KMV_K = 256
+TOP_TOKENS_GLOBAL = 30   # top_tokens_combined: global heavy hitters
+TOP_TOKENS_PER_LANG = 5  # top_tokens_combined: per-language heavy hitters
 
 # ---------------------------------------------------------------------------
 # shared per-row expression fragments — SINGLE source for the fused
@@ -82,7 +84,7 @@ def _docs_nn(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _BASE_SQL = (
     "SELECT doc_id, lang, coalesce(text, '') AS text,"
-    " string_split(coalesce(text, ''), ' ') AS t FROM {table}"
+    " string_split(coalesce(text, ''), ' ') AS t FROM documents"
 )
 
 
@@ -104,17 +106,17 @@ def lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
 _BPE_PATTERN = "[A-Za-z]+|[0-9]+|[^A-Za-z0-9 ]"
 
 
-def lang_id_sql(table: str = "documents") -> str:
+def lang_id_sql() -> str:
     return f"""
         SELECT doc_id, lang,
                CASE WHEN len(list_filter(t, x -> x IN ('the', 'a', 'of'))) * 10
                          >= len(t)
                     THEN 'en' ELSE 'und' END AS pred_lang
-        FROM ({_BASE_SQL.format(table=table)})
+        FROM ({_BASE_SQL})
     """
 
 
-def distinct_shingles_kmv(spark: SparkSession, sf_dir: str, k: int = KMV_K) -> DataFrame:
+def distinct_shingles_kmv(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Corpus-wide distinct 3-gram-shingle cardinality via a
     K-Minimum-Values sketch — the sketch family (à la HLL) done
     DETERMINISTICALLY so a second engine reproduces the estimate
@@ -138,12 +140,12 @@ def distinct_shingles_kmv(spark: SparkSession, sf_dir: str, k: int = KMV_K) -> D
     dh = _scoped_persist(
         _with_shingle_ids(spark, sf_dir).select(F.col("sid").alias("h")).distinct()
     )
-    sketch = dh.orderBy("h").limit(k).agg(
+    sketch = dh.orderBy("h").limit(KMV_K).agg(
         F.max("h").alias("kth_min_h"), F.count("*").alias("k_used")
     )
     exact = dh.agg(F.count("*").alias("n_exact_distinct"))
     est = round_half_up_expr(
-        f"case when k_used < {k} then cast(n_exact_distinct as double)"
+        f"case when k_used < {KMV_K} then cast(n_exact_distinct as double)"
         f" else ((k_used - 1) * {P56}.0D) / kth_min_h end",
         2,
     )
@@ -153,18 +155,18 @@ def distinct_shingles_kmv(spark: SparkSession, sf_dir: str, k: int = KMV_K) -> D
     )
 
 
-def distinct_shingles_kmv_sql(table: str = "documents", k: int = KMV_K) -> str:
+def distinct_shingles_kmv_sql() -> str:
     from .dedup import _ids_sql
 
     est = round_half_up_expr(
-        f"CASE WHEN k_used < {k} THEN CAST(n_exact_distinct AS DOUBLE)"
+        f"CASE WHEN k_used < {KMV_K} THEN CAST(n_exact_distinct AS DOUBLE)"
         f" ELSE ((k_used - 1) * CAST({P56} AS DOUBLE)) / kth_min_h END",
         2,
     )
     return f"""
-        WITH {_ids_sql(table)},
+        WITH {_ids_sql()},
         h AS (SELECT DISTINCT sid AS h FROM ids),
-        topk AS (SELECT h FROM h ORDER BY h LIMIT {k}),
+        topk AS (SELECT h FROM h ORDER BY h LIMIT {KMV_K}),
         sk AS (SELECT MAX(h) AS kth_min_h, COUNT(*) AS k_used FROM topk),
         exact_ct AS (SELECT COUNT(*) AS n_exact_distinct FROM h)
         SELECT n_exact_distinct, k_used, kth_min_h,
@@ -515,7 +517,7 @@ def doc_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     return fused.join(_ppx_scores(base), "doc_id")
 
 
-def doc_profile_sql(table: str = "documents") -> str:
+def doc_profile_sql() -> str:
     sw = _f6(
         "CAST(len(list_filter(t, x -> x IN ('the', 'a'))) AS DOUBLE) / len(t)"
     )
@@ -524,7 +526,7 @@ def doc_profile_sql(table: str = "documents") -> str:
     )
     top_frac = _f6("CAST(top_c AS DOUBLE) / n_tokens")
     return f"""
-        WITH base AS ({_BASE_SQL.format(table=table)}),
+        WITH base AS ({_BASE_SQL}),
         s1 AS (
           SELECT doc_id, lang, text, t,
                  {ML_SQL} AS ml,
@@ -578,15 +580,13 @@ def doc_profile_sql(table: str = "documents") -> str:
     """
 
 
-def top_tokens_combined(
-    spark: SparkSession, sf_dir: str, k_global: int = 30, k_lang: int = 5
-) -> DataFrame:
+def top_tokens_combined(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Corpus heavy hitters, global AND per-language, from ONE persisted
     (lang, token) frequency aggregate — the global counts are the
     per-lang counts re-aggregated, so the corpus scans once.  Global
     rows carry ``lang = '*'``.  The per-lang ranking windows over
     |vocab per lang| aggregated rows; the global ranking windows over
-    an already-TakeOrdered ``k_global``-row set (never a full sort of
+    an already-TakeOrdered ``TOP_TOKENS_GLOBAL``-row set (never a full sort of
     the vocabulary)."""
     from pyspark.sql import Window
 
@@ -606,7 +606,7 @@ def top_tokens_combined(
     w = Window.partitionBy("lang").orderBy(F.desc("n"), F.asc("token"))
     by_lang = (
         freq.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k_lang)
+        .where(F.col("rank") <= TOP_TOKENS_PER_LANG)
         .select(
             "lang", "token",
             F.col("n").cast("long").alias("n"),
@@ -617,7 +617,7 @@ def top_tokens_combined(
         freq.groupBy("token")
         .agg(F.sum("n").cast("long").alias("n"))
         .orderBy(F.desc("n"), F.asc("token"))
-        .limit(k_global)
+        .limit(TOP_TOKENS_GLOBAL)
     )
     wg = Window.orderBy(F.desc("n"), F.asc("token"))
     glob = (
@@ -627,15 +627,13 @@ def top_tokens_combined(
     return by_lang.unionByName(glob)
 
 
-def top_tokens_combined_sql(
-    table: str = "documents", k_global: int = 30, k_lang: int = 5
-) -> str:
+def top_tokens_combined_sql() -> str:
     return f"""
         WITH freq AS (
           SELECT lang, token, COUNT(*) AS n
           FROM (SELECT lang, unnest(string_split(coalesce(text, ''), ' '))
                          AS token
-                FROM {table})
+                FROM documents)
           WHERE length(token) > 1
           GROUP BY 1, 2),
         by_lang AS (
@@ -651,7 +649,7 @@ def top_tokens_combined_sql(
                  CAST(row_number() OVER (ORDER BY n DESC, token ASC)
                       AS INTEGER) AS rank
           FROM gtot)
-        SELECT lang, token, n, rank FROM by_lang WHERE rank <= {k_lang}
+        SELECT lang, token, n, rank FROM by_lang WHERE rank <= {TOP_TOKENS_PER_LANG}
         UNION ALL
-        SELECT lang, token, n, rank FROM glob_ranked WHERE rank <= {k_global}
+        SELECT lang, token, n, rank FROM glob_ranked WHERE rank <= {TOP_TOKENS_GLOBAL}
     """

@@ -75,6 +75,9 @@ N_PATHS = 25
 EPOCH0 = 1_700_000_000
 TS_STEP = 37
 BENCH_MOD = 83
+CONTAM_K = 8       # benchmark_contamination: tokens per shared window
+HOST_QUOTA = 10    # crawl_corpus_snapshot: urls a host keeps, about
+MIN_CHARS = 20     # crawl_corpus_snapshot: the minimum extracted length
 
 
 # ---------------------------------------------------------------------------
@@ -108,11 +111,10 @@ def _web(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _web_sql(table: str = "documents") -> str:
-    return (
-        f"SELECT doc_id, text, lang, n_chars, {_URL_SQL} AS url,"
-        f" {_HOST_SQL} AS host, {_WARC_SQL} AS warc_epoch FROM {table}"
-    )
+_WEB_SQL = (
+    f"SELECT doc_id, text, lang, n_chars, {_URL_SQL} AS url,"
+    f" {_HOST_SQL} AS host, {_WARC_SQL} AS warc_epoch FROM documents"
+)
 
 
 # ---------------------------------------------------------------------------
@@ -140,14 +142,14 @@ def latest_page_version(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def latest_page_version_sql(table: str = "documents") -> str:
+def latest_page_version_sql() -> str:
     return f"""
         SELECT url,
                CAST(COUNT(*) AS BIGINT) AS n_versions,
                CAST(MAX(warc_epoch) AS BIGINT) AS latest_warc_epoch,
                CAST(arg_max(doc_id, warc_epoch) AS BIGINT) AS latest_doc_id,
                CAST(arg_max(n_chars, warc_epoch) AS BIGINT) AS latest_n_chars
-        FROM ({_web_sql(table)})
+        FROM ({_WEB_SQL})
         GROUP BY url
     """
 
@@ -202,9 +204,9 @@ def pii_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def pii_stats_sql(table: str = "documents") -> str:
+def pii_stats_sql() -> str:
     return f"""
-        WITH pii AS (SELECT doc_id, {_PII_TEXT_SQL} AS pii_text FROM {table})
+        WITH pii AS (SELECT doc_id, {_PII_TEXT_SQL} AS pii_text FROM documents)
         SELECT doc_id,
                CAST(len(regexp_extract_all(pii_text, '{EMAIL_RE}')) AS BIGINT)
                  AS n_emails,
@@ -249,12 +251,12 @@ def lang_confusion(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def lang_confusion_sql(table: str = "documents") -> str:
+def lang_confusion_sql() -> str:
     from .textstats import lang_id_sql
 
     share = round_half_up_expr("CAST(n_docs AS DOUBLE) / lang_total", 6)
     return f"""
-        WITH pred AS ({lang_id_sql(table)}),
+        WITH pred AS ({lang_id_sql()}),
         cells AS (SELECT lang, pred_lang, CAST(COUNT(*) AS BIGINT) AS n_docs
                   FROM pred GROUP BY lang, pred_lang),
         per_lang AS (SELECT lang, CAST(COUNT(*) AS DOUBLE) AS lang_total
@@ -289,9 +291,9 @@ def _pr_edges_sql():
     return src, dst
 
 
-def _pagerank_ranks(docs: DataFrame, n_iters: int = PR_ITERS) -> DataFrame:
+def _pagerank_ranks(docs: DataFrame) -> DataFrame:
     """Host-graph PageRank — the crawl-prioritization signal (which
-    hosts does the rest of the web point at): ``n_iters`` power
+    hosts does the rest of the web point at): ``PR_ITERS`` power
     iterations over the document-derived host link graph, returned as
     (host, pagerank_e9).
 
@@ -349,7 +351,7 @@ def _pagerank_ranks(docs: DataFrame, n_iters: int = PR_ITERS) -> DataFrame:
     # ranks are bit-identical (same per-row arithmetic, same node set).
     nb = nodes.crossJoin(F.broadcast(n_nodes))
     r = nb.select("h", F.expr(f"{PR_SCALE} div n_nodes").alias("rank"))
-    for _ in range(n_iters):
+    for _ in range(PR_ITERS):
         contrib = (
             ew.join(r.select(F.col("h").alias("src"), "rank"), "src")
             .select("dst", F.expr("rank * w div outw").alias("c"))
@@ -372,15 +374,14 @@ def _pagerank_ranks(docs: DataFrame, n_iters: int = PR_ITERS) -> DataFrame:
     )
 
 
-def host_pagerank_sql(table: str = "documents",
-                      n_iters: int = PR_ITERS) -> str:
+def host_pagerank_sql() -> str:
     """DuckDB twin: the same integer recurrence, unrolled as one CTE
     pair (contribution, rank) per iteration."""
     src, dst = _pr_edges_sql()
     base_total = (PR_ALPHA_DEN - PR_ALPHA_NUM) * PR_SCALE // PR_ALPHA_DEN
     ctes = [f"""
         pr_web AS (SELECT CAST({src} AS BIGINT) AS src,
-                          CAST({dst} AS BIGINT) AS dst FROM {table}),
+                          CAST({dst} AS BIGINT) AS dst FROM documents),
         pr_edges AS (SELECT src, dst, COUNT(*) AS w FROM pr_web
                      WHERE src <> dst GROUP BY src, dst),
         pr_outw AS (SELECT src, SUM(w) AS outw FROM pr_edges GROUP BY src),
@@ -393,7 +394,7 @@ def host_pagerank_sql(table: str = "documents",
         pr_r0 AS (SELECT h, {PR_SCALE} // n_nodes AS rank
                   FROM pr_nodes CROSS JOIN pr_n)"""]
     prev = "pr_r0"
-    for i in range(1, n_iters + 1):
+    for i in range(1, PR_ITERS + 1):
         ctes.append(f"""
         pr_c{i} AS (SELECT e.dst, SUM(r.rank * e.w // e.outw) AS in_rank
                     FROM pr_ew e JOIN {prev} r ON r.h = e.src
@@ -472,7 +473,7 @@ def host_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def host_profile_sql(table: str = "documents") -> str:
+def host_profile_sql() -> str:
     from .textstats import KEPT_SQL, ML_SQL
 
     share = round_half_up_expr("CAST(n_docs AS DOUBLE) / corpus_docs", 6)
@@ -483,7 +484,7 @@ def host_profile_sql(table: str = "documents") -> str:
           SELECT doc_id, n_chars, {_HOST_SQL} AS host, {_URL_SQL} AS url,
                  coalesce(text, '') AS text,
                  string_split(coalesce(text, ''), ' ') AS t
-          FROM {table}),
+          FROM documents),
         s1 AS (
           SELECT host, url, n_chars, text, t,
                  {ML_SQL} AS ml
@@ -507,7 +508,7 @@ def host_profile_sql(table: str = "documents") -> str:
                n_kept, {rate} AS kept_rate, {mean_words} AS mean_words,
                pr.pagerank_e9
         FROM per_host CROSS JOIN total
-        JOIN ({host_pagerank_sql(table)}) pr USING (host)
+        JOIN ({host_pagerank_sql()}) pr USING (host)
     """
 
 
@@ -574,8 +575,7 @@ def _blocked_expr(entries: tuple[str, ...], engine: str) -> str:
     )
 
 
-def url_normalize(spark: SparkSession, sf_dir: str,
-                  blocklist: tuple[str, ...] = URL_BLOCKLIST) -> DataFrame:
+def url_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
     """URL canonicalization — the step every crawl pipeline runs before
     url-keyed dedup (a url arrives in many spellings; without
     canonicalization, recrawl dedup silently treats them as distinct
@@ -638,15 +638,14 @@ def url_normalize(spark: SparkSession, sf_dir: str,
     return canon.join(forms, "canon_url").select(
         "doc_id", "raw_url", "canon_url",
         F.col("n_raw_forms").cast("long").alias("n_raw_forms"),
-        F.expr(_blocked_expr(blocklist, "spark")).alias("blocked"),
+        F.expr(_blocked_expr(URL_BLOCKLIST, "spark")).alias("blocked"),
     )
 
 
-def url_normalize_sql(table: str = "documents",
-                      blocklist: tuple[str, ...] = URL_BLOCKLIST) -> str:
-    blocked = _blocked_expr(blocklist, "duck")
+def url_normalize_sql() -> str:
+    blocked = _blocked_expr(URL_BLOCKLIST, "duck")
     return f"""
-        WITH raw AS (SELECT doc_id, {_RAW_URL_SQL} AS raw_url FROM {table}),
+        WITH raw AS (SELECT doc_id, {_RAW_URL_SQL} AS raw_url FROM documents),
         step AS (SELECT doc_id, raw_url,
                         regexp_replace(raw_url, '#.*$', '') AS u
                  FROM raw),
@@ -748,12 +747,12 @@ def snapshot_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def snapshot_diff_sql(table: str = "documents") -> str:
+def snapshot_diff_sql() -> str:
     return f"""
         WITH web AS (
           SELECT doc_id, text, {_URL_SQL} AS url, {_WARC_SQL} AS warc_epoch,
                  doc_id % 2 AS era
-          FROM {table}),
+          FROM documents),
         latest AS (
           SELECT era, url,
                  arg_max(md5(text), warc_epoch) AS digest,
@@ -778,13 +777,11 @@ def snapshot_diff_sql(table: str = "documents") -> str:
 # composed snapshot policy
 # ---------------------------------------------------------------------------
 
-def crawl_corpus_snapshot(
-    spark: SparkSession, sf_dir: str, host_quota: int = 10, min_chars: int = 20
-) -> DataFrame:
+def crawl_corpus_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The composed Common-Crawl ingest policy as ONE declarative plan:
     recrawl dedup (newest capture per url) → quality gate (minimum
     extracted length) → host-aware deterministic downsampling (an
-    over-represented host is thinned to ~``host_quota`` urls).
+    over-represented host is thinned to ~``HOST_QUOTA`` urls).
 
     The downsample is INTEGER-ONLY and windowless: a url survives iff
     its host has ≤ quota urls, or ``lcg(doc_id) % n_urls < quota``
@@ -813,15 +810,15 @@ def crawl_corpus_snapshot(
             F.expr("max_by(doc_id, warc_epoch)").alias("doc_id"),
             F.expr("max_by(n_chars, warc_epoch)").alias("n_chars"),
         )
-        .where(F.col("n_chars") >= min_chars)
+        .where(F.col("n_chars") >= MIN_CHARS)
     )
     host_sizes = latest.groupBy("host").agg(F.count("*").alias("n_host_urls"))
     lcg = (F.col("doc_id") * F.lit(1103515245) + F.lit(12345)) % F.lit(2147483647)
     return (
         latest.join(host_sizes, "host")
         .where(
-            (F.col("n_host_urls") <= host_quota)
-            | (lcg % F.col("n_host_urls") < host_quota)
+            (F.col("n_host_urls") <= HOST_QUOTA)
+            | (lcg % F.col("n_host_urls") < HOST_QUOTA)
         )
         .select(
             "url",
@@ -832,25 +829,23 @@ def crawl_corpus_snapshot(
     )
 
 
-def crawl_corpus_snapshot_sql(
-    table: str = "documents", host_quota: int = 10, min_chars: int = 20
-) -> str:
+def crawl_corpus_snapshot_sql() -> str:
     return f"""
-        WITH web AS ({_web_sql(table)}),
+        WITH web AS ({_WEB_SQL}),
         latest AS (
           SELECT host, url,
                  arg_max(doc_id, warc_epoch) AS doc_id,
                  arg_max(n_chars, warc_epoch) AS n_chars
           FROM web GROUP BY host, url),
-        gated AS (SELECT * FROM latest WHERE n_chars >= {min_chars}),
+        gated AS (SELECT * FROM latest WHERE n_chars >= {MIN_CHARS}),
         host_sizes AS (SELECT host, COUNT(*) AS n_host_urls
                        FROM gated GROUP BY host)
         SELECT url, host, CAST(doc_id AS BIGINT) AS doc_id,
                CAST(n_chars AS BIGINT) AS n_chars
         FROM gated JOIN host_sizes USING (host)
-        WHERE n_host_urls <= {host_quota}
+        WHERE n_host_urls <= {HOST_QUOTA}
            OR ((doc_id * 1103515245 + 12345) % 2147483647) % n_host_urls
-              < {host_quota}
+              < {HOST_QUOTA}
     """
 
 
@@ -858,11 +853,9 @@ def crawl_corpus_snapshot_sql(
 # benchmark decontamination
 # ---------------------------------------------------------------------------
 
-def benchmark_contamination(
-    spark: SparkSession, sf_dir: str, k: int = 8, bench_mod: int = BENCH_MOD
-) -> DataFrame:
-    """Which corpus documents share a verbatim k-token window with the
-    benchmark set (``doc_id % bench_mod == 0``)?  One row per
+def benchmark_contamination(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Which corpus documents share a verbatim ``CONTAM_K``-token window
+    with the benchmark set (``doc_id % BENCH_MOD == 0``)?  One row per
     NON-benchmark document: its distinct window count, how many of
     those windows appear in any benchmark document, the contaminated
     fraction, and the drop flag.
@@ -878,9 +871,9 @@ def benchmark_contamination(
         _spread(spark, _docs(spark, sf_dir).select("doc_id", "text"))
     )
     raw = _scoped_persist(
-        _sids(base.select("doc_id", F.expr(_TOKS_EXPR).alias("toks")), k)
+        _sids(base.select("doc_id", F.expr(_TOKS_EXPR).alias("toks")), CONTAM_K)
     )
-    is_bench = F.col("doc_id") % bench_mod == 0
+    is_bench = F.col("doc_id") % BENCH_MOD == 0
     bench_sids = raw.where(is_bench).select("sid").distinct()
     corpus = raw.where(~is_bench)
     # per-doc window ids are already distinct (the k-gram projection
@@ -913,16 +906,14 @@ def benchmark_contamination(
     )
 
 
-def benchmark_contamination_sql(
-    table: str = "documents", k: int = 8, bench_mod: int = BENCH_MOD
-) -> str:
+def benchmark_contamination_sql() -> str:
     frac = round_half_up_expr("CAST(n_overlap AS DOUBLE) / n_shingles", 6)
     return f"""
-        WITH toks AS (SELECT doc_id, string_split(text, ' ') AS t FROM {table}),
-        {_sids_sql_ctes(k)},
+        WITH toks AS (SELECT doc_id, string_split(text, ' ') AS t FROM documents),
+        {_sids_sql_ctes(CONTAM_K)},
         bench_sids AS (SELECT DISTINCT sid FROM ids
-                       WHERE doc_id % {bench_mod} = 0),
-        corpus AS (SELECT * FROM ids WHERE doc_id % {bench_mod} != 0),
+                       WHERE doc_id % {BENCH_MOD} = 0),
+        corpus AS (SELECT * FROM ids WHERE doc_id % {BENCH_MOD} != 0),
         per_doc AS (SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS n_shingles
                     FROM corpus GROUP BY 1),
         overlap AS (SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS n_overlap
@@ -934,8 +925,8 @@ def benchmark_contamination_sql(
         FROM (SELECT b.doc_id,
                      COALESCE(p.n_shingles, 0) AS n_shingles,
                      COALESCE(o.n_overlap, 0) AS n_overlap
-              FROM (SELECT doc_id FROM {table}
-                    WHERE doc_id % {bench_mod} != 0) b
+              FROM (SELECT doc_id FROM documents
+                    WHERE doc_id % {BENCH_MOD} != 0) b
               LEFT JOIN per_doc p USING (doc_id)
               LEFT JOIN overlap o USING (doc_id))
     """

@@ -14,6 +14,15 @@ from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from ..operators.dedup import round_half_up_expr
 
+# The graded rows' values, each read by a Spark function and its DuckDB twin.
+TOP_ORDERS_PER_CUSTOMER_K = 3
+SESSION_GAP_S = 1800     # sessionize_events: the inactivity gap
+TOP_ORDERS_K = 20
+NEARBY_WINDOW_S = 300    # range_join_nearby_events: the ± band
+SAMPLE_PER_LANG = 20     # stratified_sample
+N_SALTS = 8              # salted_join_user_segments
+MIN_ACCTBAL = 5000.0     # bloom_semi_join_orders: c_acctbal > this
+
 
 def _r2(x: str) -> str:
     """Cross-engine round-half-up to 2 decimals — every rounded-double
@@ -133,31 +142,31 @@ def parts_by_brand_sql() -> str:
 
 # -- windows ------------------------------------------------------------------
 
-def top_orders_per_customer(spark: SparkSession, sf_dir: str, k: int = 3) -> DataFrame:
+def top_orders_per_customer(spark: SparkSession, sf_dir: str) -> DataFrame:
     w = Window.partitionBy("o_custkey").orderBy(
         F.desc("o_totalprice"), F.asc("o_orderkey")
     )
     return (
         _t(spark, sf_dir, "orders")
         .withColumn("rn", F.row_number().over(w))
-        .where(F.col("rn") <= k)
+        .where(F.col("rn") <= TOP_ORDERS_PER_CUSTOMER_K)
         .select("o_custkey", "o_orderkey",
                 F.expr(_r2("o_totalprice")).alias("o_totalprice"), "rn")
     )
 
 
-def top_orders_per_customer_sql(k: int = 3) -> str:
+def top_orders_per_customer_sql() -> str:
     return f"""
         SELECT o_custkey, o_orderkey, {_r2("o_totalprice")} AS o_totalprice, rn
         FROM (SELECT o_custkey, o_orderkey, o_totalprice,
                      row_number() OVER (PARTITION BY o_custkey
                                         ORDER BY o_totalprice DESC, o_orderkey ASC) AS rn
               FROM orders)
-        WHERE rn <= {k}
+        WHERE rn <= {TOP_ORDERS_PER_CUSTOMER_K}
     """
 
 
-def sessionize_events(spark: SparkSession, sf_dir: str, gap_s: int = 1800) -> DataFrame:
+def sessionize_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Session assignment by inactivity gap — the corpus-scale rewrite of
     the reference's stateful multi-row merge (T4, SURVEY.md §2.8):
     is_new = gap > threshold; session = running sum of is_new."""
@@ -168,7 +177,7 @@ def sessionize_events(spark: SparkSession, sf_dir: str, gap_s: int = 1800) -> Da
     epoch = F.col("ts").cast("timestamp").cast("double")
     with_flag = events.withColumn(
         "is_new",
-        (epoch - F.lag(epoch).over(w) > F.lit(float(gap_s))).cast("int"),
+        (epoch - F.lag(epoch).over(w) > F.lit(float(SESSION_GAP_S))).cast("int"),
     ).withColumn(
         "session_id",
         F.sum(F.coalesce(F.col("is_new"), F.lit(1))).over(
@@ -184,11 +193,11 @@ def sessionize_events(spark: SparkSession, sf_dir: str, gap_s: int = 1800) -> Da
     )
 
 
-def sessionize_events_sql(gap_s: int = 1800) -> str:
+def sessionize_events_sql() -> str:
     return f"""
         WITH flagged AS (
           SELECT user_id, ts, event_id,
-                 CASE WHEN epoch(ts) - lag(epoch(ts)) OVER w > {gap_s}.0
+                 CASE WHEN epoch(ts) - lag(epoch(ts)) OVER w > {SESSION_GAP_S}.0
                       THEN 1
                       WHEN lag(epoch(ts)) OVER w IS NULL THEN 1
                       ELSE 0 END AS is_new
@@ -207,20 +216,20 @@ def sessionize_events_sql(gap_s: int = 1800) -> str:
 
 # -- sort / limit / distinct / semi-structured --------------------------------
 
-def top_orders(spark: SparkSession, sf_dir: str, k: int = 20) -> DataFrame:
+def top_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         _t(spark, sf_dir, "orders")
         .orderBy(F.desc("o_totalprice"), F.asc("o_orderkey"))
-        .limit(k)
+        .limit(TOP_ORDERS_K)
         .select("o_orderkey", "o_custkey",
                 F.expr(_r2("o_totalprice")).alias("o_totalprice"))
     )
 
 
-def top_orders_sql(k: int = 20) -> str:
+def top_orders_sql() -> str:
     return f"""
         SELECT o_orderkey, o_custkey, {_r2("o_totalprice")} AS o_totalprice
-        FROM orders ORDER BY o_totalprice DESC, o_orderkey ASC LIMIT {k}
+        FROM orders ORDER BY o_totalprice DESC, o_orderkey ASC LIMIT {TOP_ORDERS_K}
     """
 
 
@@ -511,16 +520,15 @@ def _nearby_event_counts(ev: DataFrame, window_s: int) -> DataFrame:
     return joined.groupBy("purchase_id").agg(F.count("*").alias("n_nearby"))
 
 
-def range_join_nearby_events(spark: SparkSession, sf_dir: str,
-                             window_s: int = 300) -> DataFrame:
+def range_join_nearby_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Range join: per purchase, how many other events by the same user
-    fall within ±window_s seconds.
+    fall within ±``NEARBY_WINDOW_S`` seconds.
 
     Skew guard: the join key is (user_id, coarse time bucket of size
-    window_s), not user_id alone — a bot user with 10^6 events would
-    make the bare user_id key per-user quadratic; bucketing bounds each
-    join group to the events of ONE user in ONE window-sized slice of
-    time.  Each event lands in exactly one bucket and a purchase's
+    ``NEARBY_WINDOW_S``), not user_id alone — a bot user with 10^6
+    events would make the bare user_id key per-user quadratic; bucketing
+    bounds each join group to the events of ONE user in ONE window-sized
+    slice of time.  Each event lands in exactly one bucket and a purchase's
     ±window band overlaps exactly 3 buckets, so the purchase side is
     replicated 3× (events ≫ purchases — the cheap side) and every
     qualifying pair is matched exactly once.  The exact band predicate
@@ -531,10 +539,10 @@ def range_join_nearby_events(spark: SparkSession, sf_dir: str,
         F.col("ts").cast("timestamp").cast("double").alias("epoch"),
         "event_type",
     )
-    return _nearby_event_counts(ev, window_s)
+    return _nearby_event_counts(ev, NEARBY_WINDOW_S)
 
 
-def range_join_nearby_events_sql(window_s: int = 300) -> str:
+def range_join_nearby_events_sql() -> str:
     return f"""
         WITH p AS (SELECT user_id, event_id AS purchase_id, epoch(ts) AS p_epoch
                    FROM events WHERE event_type = 'purchase')
@@ -542,7 +550,7 @@ def range_join_nearby_events_sql(window_s: int = 300) -> str:
         FROM p JOIN events e
           ON p.user_id = e.user_id
          AND e.event_id != p.purchase_id
-         AND abs(epoch(e.ts) - p_epoch) <= {window_s}
+         AND abs(epoch(e.ts) - p_epoch) <= {NEARBY_WINDOW_S}
         GROUP BY purchase_id
     """
 
@@ -677,8 +685,8 @@ def price_percentiles_sql() -> str:
     """
 
 
-def stratified_sample(spark: SparkSession, sf_dir: str, per_lang: int = 20) -> DataFrame:
-    """Deterministic stratified sampling: the first ``per_lang``
+def stratified_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Deterministic stratified sampling: the first ``SAMPLE_PER_LANG``
     documents per language in pseudo-random hash order — reproducible
     across engines and runs (no RNG state), the sampling primitive a
     training-data pipeline needs for eval splits.  One window per
@@ -691,19 +699,19 @@ def stratified_sample(spark: SparkSession, sf_dir: str, per_lang: int = 20) -> D
     return (
         docs.select("doc_id", "lang", h.alias("h"))
         .withColumn("rn", F.row_number().over(w))
-        .where(F.col("rn") <= per_lang)
+        .where(F.col("rn") <= SAMPLE_PER_LANG)
         .select("doc_id", "lang")
     )
 
 
-def stratified_sample_sql(per_lang: int = 20) -> str:
+def stratified_sample_sql() -> str:
     return f"""
         SELECT doc_id, lang FROM (
           SELECT doc_id, lang,
                  row_number() OVER (PARTITION BY lang
                      ORDER BY (doc_id * 1103515245 + 12345) % 2147483647, doc_id) AS rn
           FROM documents)
-        WHERE rn <= {per_lang}
+        WHERE rn <= {SAMPLE_PER_LANG}
     """
 
 
@@ -819,9 +827,12 @@ MIX_WEIGHTS: dict[str, int] = {"en": 4, "fr": 2, "es": 2, "de": 1, "zh": 1}
 # where each selected document starts in the packed sequence stream
 SEQ_LEN = 512
 
+# hash buckets each language's budget is split over (the cumulative-sum
+# window partitions by (lang, bucket))
+BUDGET_BUCKETS = 8
 
-def _bucket_budget_case(weights: dict[str, int], budget_tokens: int,
-                        n_buckets: int) -> str:
+
+def _bucket_budget_case(weights: dict[str, int], budget_tokens: int) -> str:
     """Shared CASE-expression text (identical in Spark and DuckDB) that
     maps ``lang`` to its per-(lang, bucket) token budget.  All division
     happens HERE, in Python, so the engines only ever see integer
@@ -831,7 +842,7 @@ def _bucket_budget_case(weights: dict[str, int], budget_tokens: int,
     total = sum(weights.values())
     whens = " ".join(
         f"WHEN lang = '{lang}' THEN "
-        f"CAST({(budget_tokens * w // total) // n_buckets} AS BIGINT)"
+        f"CAST({(budget_tokens * w // total) // BUDGET_BUCKETS} AS BIGINT)"
         for lang, w in sorted(weights.items())
     )
     return f"CASE {whens} END"
@@ -839,7 +850,6 @@ def _bucket_budget_case(weights: dict[str, int], budget_tokens: int,
 
 def token_budget_sample(spark: SparkSession, sf_dir: str,
                         budget_tokens: int = 12_000,
-                        n_buckets: int = 8,
                         weights: dict[str, int] = MIX_WEIGHTS) -> DataFrame:
     """Deterministic token-budget sampling (the "data mixing" primitive:
     build a training mix by taking documents per language until a token
@@ -863,14 +873,14 @@ def token_budget_sample(spark: SparkSession, sf_dir: str,
     against its target.
 
     Skew-aware by construction: each language's budget is split evenly
-    over ``n_buckets`` hash buckets and the cumulative-sum window
+    over ``BUDGET_BUCKETS`` hash buckets and the cumulative-sum window
     partitions by (lang, bucket) — no task ever sorts more than
-    1/n_buckets of one language, where a naive per-lang window would
+    1/BUDGET_BUCKETS of one language, where a naive per-lang window would
     serialize a dominant language (English ≈ half the web) onto one
-    reducer.  At larger scale, raise n_buckets; selection stays
+    reducer.  At larger scale, raise BUDGET_BUCKETS; selection stays
     deterministic because bucket assignment and order are both pure
     functions of doc_id."""
-    case = _bucket_budget_case(weights, budget_tokens, n_buckets)
+    case = _bucket_budget_case(weights, budget_tokens)
     # coalesce(text, '') before split: non-ANSI sessions return -1 from
     # size(split(NULL)) (legacy.sizeOfNull) while DuckDB len(NULL) is
     # NULL — the guard keeps parity independent of the ANSI flag
@@ -890,7 +900,7 @@ def token_budget_sample(spark: SparkSession, sf_dir: str,
         # zero-weight languages leave the pipeline BEFORE the window —
         # at scale the dropped share never shuffles
         .where(F.col("bucket_budget").isNotNull())
-        .withColumn("bucket", F.col("doc_id") % F.lit(n_buckets))
+        .withColumn("bucket", F.col("doc_id") % F.lit(BUDGET_BUCKETS))
         .withColumn("h", h)
         .withColumn("cum_tokens", F.sum("n_tokens").over(w))
         .where(F.col("cum_tokens") <= F.col("bucket_budget"))
@@ -906,9 +916,8 @@ def token_budget_sample(spark: SparkSession, sf_dir: str,
     )
 
 
-def token_budget_sample_sql(budget_tokens: int = 12_000, n_buckets: int = 8,
-                            weights: dict[str, int] = MIX_WEIGHTS) -> str:
-    case = _bucket_budget_case(weights, budget_tokens, n_buckets)
+def token_budget_sample_sql(budget_tokens: int = 12_000) -> str:
+    case = _bucket_budget_case(MIX_WEIGHTS, budget_tokens)
     _sl = SEQ_LEN
     return f"""
         SELECT doc_id, lang, bucket, n_tokens, cum_tokens, bucket_budget,
@@ -921,7 +930,7 @@ def token_budget_sample_sql(budget_tokens: int = 12_000, n_buckets: int = 8,
                    ORDER BY (doc_id * 1103515245 + 12345) % 2147483647, doc_id
                    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT)
                    AS cum_tokens
-          FROM (SELECT doc_id, lang, doc_id % {n_buckets} AS bucket,
+          FROM (SELECT doc_id, lang, doc_id % {BUDGET_BUCKETS} AS bucket,
                        CAST(len(string_split(coalesce(text, ''), ' ')) AS BIGINT)
                          AS n_tokens,
                        {case} AS bucket_budget
@@ -931,13 +940,12 @@ def token_budget_sample_sql(budget_tokens: int = 12_000, n_buckets: int = 8,
     """
 
 
-def salted_join_user_segments(spark: SparkSession, sf_dir: str,
-                              n_salts: int = 8) -> DataFrame:
+def salted_join_user_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Skew-salted shuffle join, made explicit (north_rule: "partitioning
     / shuffle / skew handled explicitly"): the fact side (events) gets a
-    deterministic salt so one hot user_id spreads over ``n_salts``
+    deterministic salt so one hot user_id spreads over ``N_SALTS``
     shuffle keys; the dimension side is replicated once per salt value
-    (explode of a literal sequence — n_salts× the SMALL side, never the
+    (explode of a literal sequence — N_SALTS× the SMALL side, never the
     fact side).  The join result is provably identical to the unsalted
     join, so the DuckDB oracle is simply the plain join — salting is a
     physical rewrite, not a semantic one.  The merge hint forces a
@@ -945,12 +953,12 @@ def salted_join_user_segments(spark: SparkSession, sf_dir: str,
     scale the dim is too big to broadcast, which is when salting
     matters)."""
     ev = _t(spark, sf_dir, "events").withColumn(
-        "salt", F.pmod(F.xxhash64("event_id"), F.lit(n_salts)).cast("int")
+        "salt", F.pmod(F.xxhash64("event_id"), F.lit(N_SALTS)).cast("int")
     )
     cust = (
         _t(spark, sf_dir, "customer")
         .select("c_custkey", "c_mktsegment")
-        .withColumn("salt", F.explode(F.sequence(F.lit(0), F.lit(n_salts - 1))))
+        .withColumn("salt", F.explode(F.sequence(F.lit(0), F.lit(N_SALTS - 1))))
         .hint("merge")
     )
     return (
@@ -1014,8 +1022,7 @@ def _bloom_probe(fact: DataFrame, bf: DataFrame, col: str) -> DataFrame:
     return probe.where(cond).drop("bf")
 
 
-def bloom_semi_join_orders(spark: SparkSession, sf_dir: str,
-                           min_acctbal: float = 5000.0) -> DataFrame:
+def bloom_semi_join_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Semi join with a hand-built Bloom-filter runtime prefilter:
     orders of high-balance customers, where the fact scan first probes a
     broadcast Bloom filter (built from the dimension's keys as a map of
@@ -1027,7 +1034,7 @@ def bloom_semi_join_orders(spark: SparkSession, sf_dir: str,
     and tunable (BLOOM_BITS/BLOOM_K).  At scale this cuts the shuffle
     to ~|matching| rows instead of |fact| rows."""
     cust = _t(spark, sf_dir, "customer")
-    high = cust.where(F.col("c_acctbal") > min_acctbal).select("c_custkey")
+    high = cust.where(F.col("c_acctbal") > MIN_ACCTBAL).select("c_custkey")
 
     bf = _bloom_build(high, "c_custkey")
     orders = _t(spark, sf_dir, "orders")
@@ -1043,12 +1050,12 @@ def bloom_semi_join_orders(spark: SparkSession, sf_dir: str,
     )
 
 
-def bloom_semi_join_orders_sql(min_acctbal: float = 5000.0) -> str:
+def bloom_semi_join_orders_sql() -> str:
     return f"""
         SELECT o_orderstatus, COUNT(*) AS n_orders,
                {_r2("SUM(o_totalprice)")} AS revenue
         FROM orders
         WHERE EXISTS (SELECT 1 FROM customer
-                      WHERE c_custkey = o_custkey AND c_acctbal > {min_acctbal})
+                      WHERE c_custkey = o_custkey AND c_acctbal > {MIN_ACCTBAL})
         GROUP BY o_orderstatus
     """

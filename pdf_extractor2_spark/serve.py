@@ -22,7 +22,6 @@ distributed batch runner (plans.extract_job) — same kernel, same rows.
 from __future__ import annotations
 
 import json
-import threading
 from email.parser import BytesParser
 from email.policy import HTTP
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
@@ -111,13 +110,6 @@ class _Handler(BaseHTTPRequestHandler):
 def make_server(host: str = "127.0.0.1", port: int = 0) -> ThreadingHTTPServer:
     """Bound but not yet serving; ``.server_address[1]`` is the port."""
     return ThreadingHTTPServer((host, port), _Handler)
-
-
-def serve_background(host: str = "127.0.0.1", port: int = 0) -> tuple[ThreadingHTTPServer, threading.Thread]:
-    srv = make_server(host, port)
-    t = threading.Thread(target=srv.serve_forever, daemon=True)
-    t.start()
-    return srv, t
 
 
 if __name__ == "__main__":

@@ -306,10 +306,10 @@ def render_payload(spec: DocSpec) -> bytes | None:
     return render_html(spec)
 
 
-def generate_rows(n: int, seed: int = 42, pdf_share: float = 0.2):
+def generate_rows(n: int, seed: int = 42):
     """Yield (url, warc_ts, html, text, lang) tuples for n documents."""
     for i in range(n):
-        spec = make_doc_spec(i, seed=seed, pdf_share=pdf_share)
+        spec = make_doc_spec(i, seed=seed)
         yield (spec.url, spec.warc_ts, render_payload(spec), render_text(spec), spec.lang)
 
 

@@ -1,5 +1,5 @@
 """View-to-purchase interval join: which purchases by the same user
-happened within ``horizon`` AFTER a view (the attribution primitive:
+happened within ``HORIZON_S`` seconds AFTER a view (the attribution primitive:
 ad-click → buy, crawl-fetch → parse-success, …).
 
 ``batch_view_purchase_join`` is the graded ``view_purchase_attribution``
@@ -83,21 +83,23 @@ def _bucketed_interval_join(
     )
 
 
-def batch_view_purchase_join(
-    spark: SparkSession, sf_dir: str, horizon_s: int = 7200
-) -> DataFrame:
+# the attribution horizon, shared by both engines' texts
+HORIZON_S = 7200
+
+
+def batch_view_purchase_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Views joined to the same user's purchases in (view_ts, view_ts +
-    horizon], bucketized against hot-user skew (see
+    HORIZON_S], bucketized against hot-user skew (see
     ``_bucketed_interval_join``)."""
     events = spark.read.parquet(f"{sf_dir}/events.parquet").select(
         "event_id", F.col("ts").cast("timestamp").alias("ts"),
         "user_id", "event_type", "value",
     )
     views, purchases = _sides(events)
-    return _bucketed_interval_join(views, purchases, horizon_s)
+    return _bucketed_interval_join(views, purchases, HORIZON_S)
 
 
-def view_purchase_attribution_sql(horizon_hours: int = 2) -> str:
+def view_purchase_attribution_sql() -> str:
     """DuckDB twin of the batch interval join (driver oracle)."""
     return f"""
         WITH e AS (SELECT event_id, CAST(ts AS TIMESTAMP) AS ts, user_id,
@@ -112,5 +114,5 @@ def view_purchase_attribution_sql(horizon_hours: int = 2) -> str:
                purchase_value
         FROM v JOIN p ON v_user = p_user
                       AND purchase_ts > view_ts
-                      AND purchase_ts <= view_ts + INTERVAL {horizon_hours} HOUR
+                      AND purchase_ts <= view_ts + INTERVAL {HORIZON_S // 3600} HOUR
     """

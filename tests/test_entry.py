@@ -196,8 +196,6 @@ UNREACHED_OK = {
         "test_parse_differential call with a grid (the contact extractor calls its split)",
     ("pdf_extractor2_spark.sources.corpus", "generate_rows"):
         "generates the corpus tests/kernel_golden.py pins",
-    ("pdf_extractor2_spark.serve", "serve_background"):
-        "starts the server test_serve drives",
 }
 ROOT_DEFINITIONS = [("pdf_extractor2_spark.streaming.stream_job", "stream_extract")]
 
@@ -314,21 +312,54 @@ def test_every_package_definition_is_reached_from_an_entry_point():
     assert not unreached, unreached
 
 
-# Switches (literal True/False/None defaults) no package or entry-point
-# call sets on purpose, each with its reason.
-SWITCHES_OK = {
-    ("pdf_extractor2_spark.operators.dedup", "dedup_groups", "reliable_checkpoint"):
+# Parameter defaults no package or entry-point call sets on purpose, each
+# with its reason: a test drives behaviour the graded value cannot reach,
+# or the parameter is a deployment or fault-recovery setting.
+_DEDUP = "pdf_extractor2_spark.operators.dedup"
+_CHAIN = "test_dedup_cap's 0.1-threshold chain"
+DEFAULTS_OK = {
+    (_DEDUP, "dedup_groups", "threshold"):
+        f"{_CHAIN} is what drives the pointer-jumping shortcut",
+    (_DEDUP, "dedup_groups", "max_iters"):
+        f"{_CHAIN} raises at an 8-sweep budget and converges at 18",
+    (_DEDUP, "dedup_groups", "checkpoint_every"):
+        f"{_CHAIN} exercises the reliable-checkpoint cadence every 3rd sweep",
+    (_DEDUP, "dedup_groups", "reliable_checkpoint"):
         "cluster fault-recovery mode: safety code a local run never needs",
-    ("pdf_extractor2_spark.operators.dedup", "dedup_groups", "checkpoint_dir"):
+    (_DEDUP, "dedup_groups", "checkpoint_dir"):
         "cluster fault-recovery mode: safety code a local run never needs",
+    (_DEDUP, "dedup_groups_sql", "threshold"):
+        f"the DuckDB fixpoint of {_CHAIN}",
+    (_DEDUP, "jaccard_pairs_sql", "threshold"):
+        "the DuckDB side of the 0.1 and 0.4 pair-threshold parity tests",
+    ("pdf_extractor2_spark.operators.similarity", "_semdedup_from", "tau"):
+        "test_semdedup's hand-computed 6-vector fixture prunes at tau 0.9",
+    ("pdf_extractor2_spark.operators.similarity", "_semdedup_from", "n_cells"):
+        "test_semdedup's hand-computed fixture has 2 clusters; 8 cells would "
+        "give each of its 6 vectors its own cell",
+    ("pdf_extractor2_spark.plans.relational", "token_budget_sample", "budget_tokens"):
+        "test_textstats_edge's 160-token budget truncates a bucket of the "
+        "edge corpus, which 12,000 takes whole",
+    ("pdf_extractor2_spark.plans.relational", "token_budget_sample_sql", "budget_tokens"):
+        "the DuckDB side of test_textstats_edge's 160-token budget",
+    ("pdf_extractor2_spark.plans.relational", "token_budget_sample", "weights"):
+        "test_mixture drops a language outside the mix; every language of "
+        "the graded data is in MIX_WEIGHTS",
+    ("pdf_extractor2_spark.sources.corpus", "generate_rows", "seed"):
+        "the corpus seed tests/kernel_golden.py names in its manifest",
+    ("pdf_extractor2_spark.streaming.stream_job", "stream_extract", "run_id"):
+        "the stream entry point's run label, a deployment setting",
+    ("pdf_extractor2_spark.streaming.stream_job", "stream_extract", "num_buckets"):
+        "the stream entry point's output bucket count, a deployment setting",
     ("pdf_extractor2_spark.streaming.stream_job", "stream_extract", "available_now"):
         "the stream entry point's trigger mode, a deployment setting",
 }
 
 
-def _switches(fn):
-    """{name: positional slot or None} of ``fn``'s parameters whose
-    default is a literal True, False or None."""
+def _defaults(fn):
+    """{name: positional slot or None} of every parameter of ``fn`` that
+    has a default: a literal (number, string, negative number, True,
+    False, None), a module constant, or any other expression."""
     args = fn.args
     pos = args.posonlyargs + args.args
     pairs = [*zip(pos, [None] * (len(pos) - len(args.defaults)) + args.defaults),
@@ -336,26 +367,39 @@ def _switches(fn):
     return {
         arg.arg: (i if i < len(pos) else None)
         for i, (arg, d) in enumerate(pairs)
-        if isinstance(d, ast.Constant)
-        and (isinstance(d.value, bool) or d.value is None)
+        if d is not None
     }
 
 
-def test_every_boolean_switch_is_set_by_package_code():
-    """A parameter of a top-level package function whose default is a
-    literal True, False or None is a switch (a None default usually
-    selects a fallback branch).  Some call in package code or in an
-    entry point must pass it, by keyword or by position; otherwise only
-    tests reach its other branch — delete the branch and the parameter,
-    or give it a reason in ``SWITCHES_OK``."""
+def test_default_classifier_sees_every_form():
+    """The sweep below is only as good as ``_defaults``: pin that it sees
+    each form of default, positional and keyword-only, and no required
+    parameter."""
+    fn = ast.parse(
+        "def f(a, b=3, c=0.5, d='documents', e=-1, f=KMV_K, g=mod.K,\n"
+        "      h=True, i=False, j=None, *, k, m=(1, 2)): pass"
+    ).body[0]
+    assert _defaults(fn) == {
+        "b": 1, "c": 2, "d": 3, "e": 4, "f": 5, "g": 6,
+        "h": 7, "i": 8, "j": 9, "m": None,
+    }
+
+
+def test_every_parameter_default_is_set_by_package_code():
+    """A parameter default of a top-level package function is an option:
+    some call in package code or in an entry point must pass it, by
+    keyword or by position.  Otherwise only its default value ever runs
+    outside tests: make the value a module constant (shared by a graded
+    row's Spark function and its DuckDB twin) and delete the parameter,
+    or give it a reason in ``DEFAULTS_OK``."""
     files, scopes = _package_scopes()
-    switches = {
-        (m, name): _switches(node)
+    params = {
+        (m, name): _defaults(node)
         for m, (defs, _, _) in scopes.items() if m.startswith(PACKAGE)
         for name, node in defs.items()
         if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef))
     }
-    switches = {k: v for k, v in switches.items() if v}
+    params = {k: v for k, v in params.items() if v}
     passed = set()
     for m, path in files.items():
         defs, _, binds = scopes[m]
@@ -364,18 +408,19 @@ def test_every_boolean_switch_is_set_by_package_code():
                 continue
             target = _resolve(m, call.func, defs, binds)
             target = _follow(scopes, target) if isinstance(target, tuple) else None
-            if target not in switches:
+            if target not in params:
                 continue
             starred = any(isinstance(a, ast.Starred) for a in call.args)
             kws = {k.arg for k in call.keywords}
-            for name, slot in switches[target].items():
+            for name, slot in params[target].items():
                 if (name in kws or None in kws or starred
                         or (slot is not None and slot < len(call.args))):
                     passed.add((*target, name))
 
-    found = {(*k, name) for k, v in switches.items() for name in v}
-    assert set(SWITCHES_OK) <= found, set(SWITCHES_OK) - found
+    found = {(*k, name) for k, v in params.items() for name in v}
+    assert set(DEFAULTS_OK) <= found, set(DEFAULTS_OK) - found
+    assert not set(DEFAULTS_OK) & passed, set(DEFAULTS_OK) & passed
     unset = sorted(f"{m}.{fn}({name}=)" for m, fn, name in found - passed
-                   if (m, fn, name) not in SWITCHES_OK)
+                   if (m, fn, name) not in DEFAULTS_OK)
     assert found
     assert not unset, unset

@@ -18,7 +18,7 @@ SF_DIR = "/root/testdata/sf0.001"
 
 
 def test_ivf_probe_scan_is_partition_pruned(spark):
-    df = similarity.ann_ivf_topk(spark, SF_DIR, query_vec_id=0, k=5)
+    df = similarity.ann_ivf_topk(spark, SF_DIR)
     plan = df._jdf.queryExecution().executedPlan().toString()
     pf_lines = [l for l in plan.splitlines() if "PartitionFilters" in l]
     assert pf_lines, plan
@@ -37,26 +37,30 @@ def test_ivf_index_build_is_idempotent(spark):
     assert os.path.getmtime(marker) == mtime  # no rewrite on reuse
 
 
+def _brute_top_k(spark):
+    """The exact top-IVF_TOPK_K: a prefix of ann_cosine_topk's ranking."""
+    k = similarity.IVF_TOPK_K
+    assert k <= similarity.COSINE_TOPK_K
+    return similarity.ann_cosine_topk(spark, SF_DIR).collect()[:k]
+
+
 def test_ivf_full_probe_equals_brute_force(spark):
-    """n_probe == n_cells must reproduce exact brute-force top-k — the
-    recall knob's endpoint is exactness."""
+    """n_probe == N_IVF_CELLS must reproduce exact brute-force top-k —
+    the recall knob's endpoint is exactness."""
     ivf_all = similarity.ann_ivf_topk(
-        spark, SF_DIR, query_vec_id=0, k=5, n_probe=similarity.N_IVF_CELLS
+        spark, SF_DIR, n_probe=similarity.N_IVF_CELLS
     ).collect()
-    brute = similarity.ann_cosine_topk(spark, SF_DIR, query_vec_id=0, k=5).collect()
+    brute = _brute_top_k(spark)
     assert [(r["vec_id"], r["cos_sim"]) for r in ivf_all] == [
         (r["vec_id"], r["cos_sim"]) for r in brute
     ]
 
 
 def test_ivf_multiprobe_recall_at_least_single_probe(spark):
-    brute = {r["vec_id"] for r in
-             similarity.ann_cosine_topk(spark, SF_DIR, query_vec_id=0, k=5).collect()}
-    one = {r["vec_id"] for r in
-           similarity.ann_ivf_topk(spark, SF_DIR, query_vec_id=0, k=5).collect()}
+    brute = {r["vec_id"] for r in _brute_top_k(spark)}
+    one = {r["vec_id"] for r in similarity.ann_ivf_topk(spark, SF_DIR).collect()}
     three = {r["vec_id"] for r in
-             similarity.ann_ivf_topk(spark, SF_DIR, query_vec_id=0, k=5,
-                                     n_probe=3).collect()}
+             similarity.ann_ivf_topk(spark, SF_DIR, n_probe=3).collect()}
     assert len(three & brute) >= len(one & brute)
 
 
@@ -87,6 +91,6 @@ def test_multi_iteration_quantizer_parity_and_exactness(spark):
                 f"read_parquet('{SF_DIR}/embeddings.parquet')")
     got = sorted(tuple(r) for r in S._ivf_model_from(emb)[0].collect())
     want = sorted(con.execute(
-        f"WITH {S._ivf_model_ctes_sql('embeddings', S.N_IVF_CELLS, S.EMB_DIMS)} "
+        f"WITH {S._ivf_model_ctes_sql()} "
         "SELECT vec_id, cell FROM a2").fetchall())
     assert got == want and got

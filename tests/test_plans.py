@@ -131,10 +131,11 @@ def test_bloom_prefilter_prunes_but_never_changes_results(spark):
     from pdf_extractor2_spark.plans.relational import bloom_semi_join_orders
 
     sf = "/root/testdata/sf0.001"
-    got = sorted(tuple(r) for r in bloom_semi_join_orders(spark, sf, 9000.0).collect())
+    got = sorted(tuple(r) for r in bloom_semi_join_orders(spark, sf).collect())
 
     orders = spark.read.parquet(f"{sf}/orders.parquet")
-    cust = spark.read.parquet(f"{sf}/customer.parquet").where(F.col("c_acctbal") > 9000.0)
+    customer = spark.read.parquet(f"{sf}/customer.parquet")
+    cust = customer.where(F.col("c_acctbal") > relational.MIN_ACCTBAL)
     plain = (
         orders.join(cust, orders.o_custkey == cust.c_custkey, "left_semi")
         .groupBy("o_orderstatus")
@@ -145,6 +146,7 @@ def test_bloom_prefilter_prunes_but_never_changes_results(spark):
     assert got == want and got
 
     # pruning: probe survivors ≈ true matches + false positives ≪ |orders|
+    cust = customer.where(F.col("c_acctbal") > 9000.0)
     n_orders = orders.count()
     n_true = orders.join(
         cust.select("c_custkey"), orders.o_custkey == cust.c_custkey, "left_semi"

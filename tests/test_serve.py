@@ -9,6 +9,7 @@ reference (400 invalid type on /extract, per-file error rows in batch).
 from __future__ import annotations
 
 import json
+import threading
 import urllib.error
 import urllib.request
 import uuid
@@ -16,7 +17,7 @@ import uuid
 import pytest
 
 from pdf_extractor2_spark.plans.batch_api import extract_batch, extract_single
-from pdf_extractor2_spark.serve import serve_background
+from pdf_extractor2_spark.serve import make_server
 
 HTML_DOC = (
     b"<!DOCTYPE html><html><head><title>t</title></head>"
@@ -26,7 +27,8 @@ HTML_DOC = (
 
 @pytest.fixture(scope="module")
 def base_url():
-    srv, _ = serve_background()
+    srv = make_server()
+    threading.Thread(target=srv.serve_forever, daemon=True).start()
     host, port = srv.server_address
     yield f"http://{host}:{port}"
     srv.shutdown()

@@ -177,20 +177,16 @@ def test_crawl_snapshot_policy(spark, tmp_path):
         + [(2, "tiny")]
     )
     _write_docs(tmp_path, rows)
-    out = webcorpus.crawl_corpus_snapshot(
-        spark, str(tmp_path), host_quota=10, min_chars=20
-    ).collect()
+    out = webcorpus.crawl_corpus_snapshot(spark, str(tmp_path)).collect()
     by_url = {r["url"]: r for r in out}
     # newest capture won and carried its own n_chars
     assert by_url["https://host0.example/p0"]["doc_id"] == 350
-    # host1's five distinct urls all fit within quota 10
+    # host1's five distinct urls all fit within HOST_QUOTA (10)
     assert sum(1 for r in out if r["host"] == "host1.example") == 5
     # the short page is gone
     assert not any(r["doc_id"] == 2 for r in out)
 
-    again = webcorpus.crawl_corpus_snapshot(
-        spark, str(tmp_path), host_quota=10, min_chars=20
-    ).collect()
+    again = webcorpus.crawl_corpus_snapshot(spark, str(tmp_path)).collect()
     assert sorted(map(tuple, out)) == sorted(map(tuple, again))
 
     _parity(
@@ -207,17 +203,15 @@ def test_crawl_snapshot_quota_thins_hot_host(spark, tmp_path):
     # 40 distinct urls on host 0: doc_ids ≡ 0 mod 7, spread mod 25
     rows = [(7 * i, "y" * 40) for i in range(40)]
     _write_docs(tmp_path, rows)
-    out = webcorpus.crawl_corpus_snapshot(
-        spark, str(tmp_path), host_quota=5, min_chars=20
-    ).collect()
+    out = webcorpus.crawl_corpus_snapshot(spark, str(tmp_path)).collect()
     n_urls = len({r[0] % 175 for r in rows})  # distinct (host,path) combos
     kept = len(out)
     assert 0 < kept < n_urls, (kept, n_urls)
 
     _parity(
-        webcorpus.crawl_corpus_snapshot(spark, str(tmp_path), host_quota=5),
+        webcorpus.crawl_corpus_snapshot(spark, str(tmp_path)),
         _duck(tmp_path),
-        webcorpus.crawl_corpus_snapshot_sql(host_quota=5),
+        webcorpus.crawl_corpus_snapshot_sql(),
     )
 
 
