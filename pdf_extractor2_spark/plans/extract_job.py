@@ -53,6 +53,7 @@ import time
 from typing import Iterable, Iterator
 
 import pandas as pd
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
 
 from ..operators.document import DocumentIR, parse_document, result_with_raw_json
@@ -323,8 +324,13 @@ def run_resumable_by_file(
     try:
         prior = spark.read.parquet(metrics_path).where(F.col("run_id") == run_id)
         completed = {r["file_name"] for r in prior.select("file_name").collect()}
-    except Exception:
-        pass
+    except AnalysisException as e:
+        # only "no metrics yet" (a missing path, or a directory with no
+        # parquet file) means nothing completed; any other read failure
+        # must stop the run, or it would re-extract every file and append
+        # a second metrics row per file for this run_id
+        if e.getCondition() not in ("PATH_NOT_FOUND", "UNABLE_TO_INFER_SCHEMA"):
+            raise
 
     pending = [p for p in all_files if posixpath.basename(p) not in completed]
     if not pending:

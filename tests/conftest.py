@@ -18,11 +18,10 @@ import sys
 # oracle subprocesses inherit a pinned seed; does not (and need not)
 # change this interpreter's own hashing.
 os.environ.setdefault("PYTHONHASHSEED", "0")
-# The test inputs are MB-sized, so the driver gets 4 GB, not get_spark's
-# 8 GB default (the local-mode JVM grew into that on a shared host).
-# Below 4 GB, test_dedup_cap::test_reliable_checkpoint_matches_default
-# runs out of heap rendering its plan string (2 GB and 3 GB both fail).
-os.environ.setdefault("PEX2_DRIVER_MEM", "4g")
+# The test inputs are MB-sized, so the driver gets 2 GB, perfbench's
+# value, not get_spark's 8 GB default (the local-mode JVM grew into
+# that on a shared host).
+os.environ.setdefault("PEX2_DRIVER_MEM", "2g")
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))

@@ -169,13 +169,16 @@ def path_chain_dir(tmp_path_factory):
     40-node PATH: doc i = c_i c_i c_i c_{i+1} c_{i+1} c_{i+1}, so
     consecutive docs share exactly the (c_{i+1})³ shingle (jaccard 1/7
     ≈ 0.142857) and non-consecutive docs share nothing."""
-    d = tmp_path_factory.mktemp("chaindocs")
-    rows = [
-        (i, " ".join([f"c{i}"] * 3 + [f"c{i + 1}"] * 3)) for i in range(CHAIN_N)
-    ]
+    return _write_chain(tmp_path_factory.mktemp("chaindocs"), CHAIN_N)
+
+
+def _write_chain(d, n: int) -> str:
     table = pa.table({
-        "doc_id": pa.array([r[0] for r in rows], pa.int64()),
-        "text": pa.array([r[1] for r in rows], pa.string()),
+        "doc_id": pa.array(range(n), pa.int64()),
+        "text": pa.array(
+            [" ".join([f"c{i}"] * 3 + [f"c{i + 1}"] * 3) for i in range(n)],
+            pa.string(),
+        ),
     })
     pq.write_table(table, str(d / "documents.parquet"))
     return str(d)
@@ -210,6 +213,16 @@ def test_pointer_jumping_converges_where_plain_cannot(spark, path_chain_dir):
     assert got == {i: 0 for i in range(CHAIN_N)}
 
 
+def _duck_groups(d: str, threshold: float) -> list[tuple]:
+    con = duckdb.connect()
+    con.execute(
+        f"CREATE VIEW documents AS SELECT * FROM read_parquet('{d}/documents.parquet')"
+    )
+    return sorted(
+        tuple(r) for r in con.execute(dedup.dedup_groups_sql(threshold)).fetchall()
+    )
+
+
 def test_auto_pointer_jumping_converges_under_default_entrypoint(
     spark, path_chain_dir
 ):
@@ -223,31 +236,20 @@ def test_auto_pointer_jumping_converges_under_default_entrypoint(
             spark, path_chain_dir, threshold=0.1, max_iters=18
         ).collect()
     )
-    con = duckdb.connect()
-    con.execute(
-        "CREATE VIEW documents AS SELECT * FROM "
-        f"read_parquet('{path_chain_dir}/documents.parquet')"
-    )
-    want = sorted(
-        tuple(r) for r in con.execute(dedup.dedup_groups_sql(threshold=0.1)).fetchall()
-    )
-    assert got == want
+    assert got == _duck_groups(path_chain_dir, 0.1)
 
 
 def test_reliable_checkpoint_matches_default(spark, path_chain_dir, tmp_path):
-    """VERDICT r4 "What's wrong #1": the cluster-grade variant —
-    reliable ``DataFrame.checkpoint`` every k-th sweep, plain persist
-    (lineage kept) between cadence points — must produce identical
-    labels to the localCheckpoint default, and must actually write
-    checkpoint files to the configured directory (that is what
-    survives an executor loss)."""
-    ckdir = str(tmp_path / "ckpt")
+    """The cluster-grade mode — ``checkpoint_dir`` given, so every sweep
+    is a reliable ``DataFrame.checkpoint`` written there — must produce
+    the labels of the localCheckpoint default and of the DuckDB
+    fixpoint, and must actually write checkpoint files to the directory
+    (that is what survives an executor loss)."""
+    ckdir = tmp_path / "ckpt"
     a = sorted(
         tuple(r)
         for r in dedup.dedup_groups(
-            spark, path_chain_dir, threshold=0.1,
-            reliable_checkpoint=True, checkpoint_every=3,
-            checkpoint_dir=ckdir,
+            spark, path_chain_dir, threshold=0.1, checkpoint_dir=str(ckdir)
         ).collect()
     )
     b = sorted(
@@ -256,35 +258,100 @@ def test_reliable_checkpoint_matches_default(spark, path_chain_dir, tmp_path):
             spark, path_chain_dir, threshold=0.1
         ).collect()
     )
-    assert a == b and a == [(i, 0) for i in range(CHAIN_N)]
-
-    import pathlib
-
-    written = list(pathlib.Path(ckdir).rglob("rdd-*"))
-    assert written, "reliable mode must write rdd checkpoint dirs"
-    # round-5 review fix: superseded cadence checkpoints are deleted as
-    # each new one materializes — ONLY the returned frame's files may
-    # remain (the chain corpus runs ≥ 2 cadence points at every=3, so
-    # without the cleanup this would be ≥ 3 dirs)
+    assert a == b == _duck_groups(path_chain_dir, 0.1)
+    assert a == [(i, 0) for i in range(CHAIN_N)]
+    # each superseded sweep's files are deleted as its successor
+    # materializes: only the returned frame's own directory remains
+    written = list(ckdir.rglob("rdd-*"))
     assert len(written) == 1, written
 
 
-def test_dedup_groups_frees_sweep_checkpoints(spark, path_chain_dir):
-    """Every sweep's label snapshot is localCheckpoint'ed (lineage
-    truncation) and must be freed deterministically once superseded —
-    ``DataFrame.unpersist()`` is a no-op on checkpointed frames, so a
-    leak here leaves up to max_iters label snapshots in executor
-    storage.  Only the returned result's own checkpoint may remain.
-    The 18-sweep budget runs both plain and shortcut sweeps (the
-    shortcut also persists an intermediate frame per sweep)."""
-    from pdf_extractor2_spark.operators.dedup import _persistent_rdd_ids
+def _persistent_rdd_ids(spark) -> set[int]:
+    return set(spark.sparkContext._jsc.getPersistentRDDs().keySet().toArray())
 
+
+_MODES = pytest.mark.parametrize("reliable", [False, True], ids=["local", "reliable"])
+
+
+@_MODES
+def test_dedup_groups_frees_sweep_checkpoints(spark, path_chain_dir, tmp_path, reliable):
+    """Every sweep's label table is checkpointed (lineage truncation)
+    and must be freed deterministically once superseded —
+    ``DataFrame.unpersist()`` is a no-op on checkpointed frames, so a
+    leak here leaves up to max_iters label tables in executor storage
+    or on the checkpoint store.  After a converged call only the
+    returned frame's own checkpoint may remain: its blocks in local
+    mode, its ``rdd-*`` directory in reliable mode.  A call that raises
+    (max_iters=8) leaves nothing at all: its label tables are no
+    restart point.  The 18-sweep budget runs both plain and shortcut
+    sweeps (the shortcut also persists an intermediate frame per
+    sweep)."""
+    ckdir = tmp_path / "ckpt"
+    kw = {"checkpoint_dir": str(ckdir)} if reliable else {}
     before = _persistent_rdd_ids(spark)
-    out = dedup.dedup_groups(spark, path_chain_dir, threshold=0.1, max_iters=18)
+
+    def left_behind():
+        # the scoped jaccard caches legitimately outlive the call
+        # (released on the NEXT dedup query's entry) — release them
+        # before measuring, so only sweep leaks would remain
+        dedup._scoped_clear()
+        files = sorted(p.name for p in ckdir.rglob("rdd-*"))
+        return _persistent_rdd_ids(spark) - before, files
+
+    out = dedup.dedup_groups(spark, path_chain_dir, threshold=0.1, max_iters=18, **kw)
     assert out.count() == CHAIN_N
-    # the scoped jaccard caches legitimately outlive the call (released
-    # on the NEXT dedup query's entry) — release them before measuring,
-    # so only sweep-checkpoint leaks would remain
-    dedup._scoped_clear()
-    leaked = _persistent_rdd_ids(spark) - before
-    assert len(leaked) <= 1, leaked
+    rid = out._jdf.queryExecution().analyzed().child().rdd().id()
+    blocks, files = left_behind()
+    if reliable:
+        assert (blocks, files) == (set(), [f"rdd-{rid}"])
+    else:
+        assert (blocks, files) == ({rid}, [])
+
+    with pytest.raises(RuntimeError, match="did not reach a fixpoint"):
+        dedup.dedup_groups(spark, path_chain_dir, threshold=0.1, max_iters=8, **kw)
+    assert left_behind() == (blocks, files)
+    assert out.count() == CHAIN_N  # the first result is untouched
+
+
+LONG_CHAIN_N = 6000
+
+
+@pytest.fixture(scope="module")
+def long_chain_dir(tmp_path_factory):
+    """The path-chain corpus at 6,000 documents: after 8 plain sweeps
+    pointer jumping doubles reach per sweep (8, 18, 38, … 10,238), so
+    the loop runs sweeps 0-18 (sweep 17 still changes labels; sweep 18
+    converges).  The 40-node chain converges at sweep 11."""
+    return _write_chain(tmp_path_factory.mktemp("longchain"), LONG_CHAIN_N)
+
+
+@_MODES
+def test_dedup_groups_plan_stays_flat(spark, long_chain_dir, tmp_path, monkeypatch, reliable):
+    """Each sweep truncates a plan of the same size, however many sweeps
+    ran before it: the logical plan sweep 18 checkpoints is within 2x of
+    sweep 8's, the first pointer-jumping sweep (a sweep reads the
+    previous label table twice, so an untruncated sweep doubles the
+    plan).  In reliable mode every truncation is a reliable
+    ``checkpoint``; in the default mode every one is a
+    ``localCheckpoint``.  The converged sweep's checkpoint is the
+    returned frame: nothing is checkpointed after the loop."""
+    frame_cls = type(spark.range(0))  # the session's concrete DataFrame
+    calls = []
+    for name in ("checkpoint", "localCheckpoint"):
+        def record(self, *args, _orig=getattr(frame_cls, name), _name=name, **kwargs):
+            calls.append((_name, len(self._jdf.queryExecution().logical().toString())))
+            return _orig(self, *args, **kwargs)
+
+        monkeypatch.setattr(frame_cls, name, record)
+
+    kw = {"checkpoint_dir": str(tmp_path / "ckpt")} if reliable else {}
+    out = dedup.dedup_groups(spark, long_chain_dir, threshold=0.1, max_iters=19, **kw)
+    assert out.where("group_id != 0").count() == 0
+    assert out.count() == LONG_CHAIN_N
+
+    kinds = {k for k, _ in calls}
+    assert kinds == {"checkpoint" if reliable else "localCheckpoint"}
+    # the initial label table, then one truncation per sweep 0-18
+    sweeps = [n for _, n in calls[1:]]
+    assert len(sweeps) == 19, sweeps
+    assert sweeps[18] <= 2 * sweeps[8], sweeps

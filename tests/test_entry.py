@@ -322,12 +322,9 @@ DEFAULTS_OK = {
         f"{_CHAIN} is what drives the pointer-jumping shortcut",
     (_DEDUP, "dedup_groups", "max_iters"):
         f"{_CHAIN} raises at an 8-sweep budget and converges at 18",
-    (_DEDUP, "dedup_groups", "checkpoint_every"):
-        f"{_CHAIN} exercises the reliable-checkpoint cadence every 3rd sweep",
-    (_DEDUP, "dedup_groups", "reliable_checkpoint"):
-        "cluster fault-recovery mode: safety code a local run never needs",
     (_DEDUP, "dedup_groups", "checkpoint_dir"):
-        "cluster fault-recovery mode: safety code a local run never needs",
+        "a deployment path that selects cluster fault-recovery mode: "
+        "safety code a local run never needs",
     (_DEDUP, "dedup_groups_sql", "threshold"):
         f"the DuckDB fixpoint of {_CHAIN}",
     (_DEDUP, "jaccard_pairs_sql", "threshold"):

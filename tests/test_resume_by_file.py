@@ -6,7 +6,9 @@ metrics table holds exactly one row per file and sums to the corpus."""
 from __future__ import annotations
 
 import posixpath
+import shutil
 
+import pytest
 from pyspark.sql import functions as F
 
 from pdf_extractor2_spark.plans.extract_job import (
@@ -41,8 +43,6 @@ def test_resume_by_file(spark, tmp_path):
 
     # simulate a crash: drop the lineage rows for half the files and
     # delete their result partitions — resume must restore exactly them
-    import shutil
-
     kept_files = sorted(r["file_name"] for r in m.select("file_name").collect())
     lost = kept_files[: len(kept_files) // 2]
     m.where(~F.col("file_name").isin(lost)).write.mode("overwrite").parquet(
@@ -66,6 +66,35 @@ def test_resume_by_file(spark, tmp_path):
     a = sorted((r["url"], r["raw_json"]) for r in resumed.select("url", "raw_json").collect())
     b = sorted((r["url"], r["raw_json"]) for r in full.select("url", "raw_json").collect())
     assert a == b
+
+
+def test_unreadable_metrics_raise_and_leave_output_alone(spark, tmp_path):
+    """Only "no metrics yet" — a missing path, or an empty directory —
+    means nothing completed.  A metrics path that exists but cannot be
+    read (a corrupt or foreign file, a storage error) must stop the run
+    before it writes anything: read as "nothing completed", it would
+    re-extract every file and append a second metrics row per file for
+    the same run_id."""
+    pages = corpus_df(spark, 20, seed=31, pdf_share=0.0, num_partitions=2)
+    inp = str(tmp_path / "pages")
+    pages.write.parquet(inp)
+    out = tmp_path / "out"
+    metrics = tmp_path / "metrics"
+    metrics.mkdir()  # empty: a fresh run
+    run_resumable_by_file(spark, inp, str(out), str(metrics), run_id="r1")
+    _assert_one_metrics_row_per_file(spark, str(metrics), 20)
+
+    def snapshot():
+        return {p: p.read_bytes() for p in sorted(out.rglob("*")) if p.is_file()}
+
+    before = snapshot()
+    shutil.rmtree(metrics)
+    metrics.mkdir()
+    (metrics / "part-00000.parquet").write_bytes(b"not a parquet file\n" * 8)
+    with pytest.raises(Exception, match="part-00000.parquet"):
+        run_resumable_by_file(spark, inp, str(out), str(metrics), run_id="r1")
+    assert snapshot() == before
+    assert [p.name for p in metrics.iterdir()] == ["part-00000.parquet"]
 
 
 def test_file_lineage_plan_size_independent_of_file_count(spark, tmp_path):
@@ -155,8 +184,6 @@ def test_resume_by_file_iceberg_branch_end_to_end(spark, tmp_path):
 
     # partial-completion crash: lose the lineage rows and result
     # partitions of half the files
-    import shutil
-
     m = spark.read.parquet(metrics)
     names = sorted(r["file_name"] for r in m.select("file_name").collect())
     lost = names[: len(names) // 2]
